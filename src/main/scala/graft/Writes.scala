@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Write-layout helpers shared by every partitioned layer writer. */
+/** Layer I/O helpers shared by every layer reader and writer. */
 object Writes {
 
   /** Cluster rows by the write-partition key(s) before a
@@ -36,4 +38,97 @@ object Writes {
     // are rejected as "can not be recognized")
     df.hint("rebalance",
       cols.map(org.apache.spark.sql.functions.col): _*)
+
+  /** `spark.read.parquet(paths*)` for a layer the engine wrote
+    * itself, without the schema-inference job.
+    *
+    * Plain inference starts a one-task Spark job to read ONE footer:
+    * a summary file if the listing holds one, else the first data
+    * file in path order. On a maintenance cycle that job is pure
+    * orchestration (a dozen per cycle, each a driver round trip), so
+    * this reads the same footer on the driver instead and hands its
+    * schema — Spark's own row-metadata JSON, the exact value
+    * inference would return — to the reader. Partition columns are
+    * not in a file footer, so they are still discovered from the
+    * paths with the same inferred types.
+    *
+    * Falls back to the plain read (and whatever it raises — a missing
+    * path or a dir with no data file keeps its `AnalysisException`)
+    * when no data file is found, when the footer carries no Spark
+    * schema (a foreign writer: inference converts the parquet schema
+    * under session settings), or when session `mergeSchema` is on
+    * (inference then reads every footer). */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  // Spark's listing rule for hidden names (HadoopFSUtils): `_` and
+  // `.` prefixes are skipped unless the name is a partition
+  // directory (`_x=1`) or a summary file
+  private def hiddenName(n: String): Boolean =
+    ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")) &&
+      !(n.startsWith("_common_metadata") || n.startsWith("_metadata"))
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String])
+      : Option[StructType] = {
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+        .toBoolean) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    def leaves(fs: FileSystem, st: FileStatus): Iterator[FileStatus] =
+      if (!st.isDirectory) Iterator(st)
+      else fs.listStatus(st.getPath).iterator
+        .filterNot(c => hiddenName(c.getPath.getName))
+        .flatMap(leaves(fs, _))
+    scala.util.Try {
+      val files = paths.flatMap { p =>
+        val path = new Path(p)
+        val fs = path.getFileSystem(conf)
+        leaves(fs, fs.getFileStatus(path))
+      }.sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      summaries.flatMap(n => files.find(_.getPath.getName == n))
+        .headOption
+        .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+        .map { f =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromStatus(f, conf))
+          try reader.getFooter.getFileMetaData.getKeyValueMetaData
+            .get(org.apache.spark.sql.execution.datasources.parquet
+              .ParquetReadSupport.SPARK_METADATA_KEY)
+          finally reader.close()
+        }
+        .collect { case json: String => DataType.fromJson(json) }
+        .collect { case s: StructType => s }
+    }.toOption.flatten
+  }
+
+  /** Whole-file UTF-8 read of a small protocol file (commit markers,
+    * staged sidecars, model sidecars). */
+  def readUtf8(fs: FileSystem, path: Path): String = {
+    val in = fs.open(path)
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
+      buf.toString("UTF-8")
+    } finally in.close()
+  }
+
+  /** Run independent Spark actions as CONCURRENT jobs on one session
+    * and return their results in order. Every step runs to
+    * COMPLETION before the first failure is rethrown: failing fast
+    * would leave sibling jobs writing into temp dirs that a caller's
+    * retry deletes and recreates, where an orphan writer could land
+    * stale files the retry then commits. */
+  private[graft] def inParallel[A](steps: (() => A)*): Seq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val outs = Await.result(Future.sequence(
+        steps.map(st => Future(st()).transform(scala.util.Success(_)))),
+      scala.concurrent.duration.Duration.Inf)
+    outs.map(_.get)
+  }
 }

@@ -1081,11 +1081,19 @@ object Dedup {
             }
           // reliable mode: point the context at the caller's dir once
           // and swap every per-round truncation to checkpoint() —
-          // same lineage shape, storage-backed recovery
+          // same lineage shape, storage-backed recovery.
+          // setCheckpointDir(d) sets a fresh `d/<uuid>` subdir, so
+          // the context already points at d exactly when that
+          // subdir's qualified parent IS d (a substring test would
+          // take a sibling `d2/<uuid>` for d)
           checkpointDir.foreach { d =>
-            if (spark.sparkContext.getCheckpointDir.isEmpty ||
-                spark.sparkContext.getCheckpointDir.exists(
-                  !_.contains(d)))
+            val conf = spark.sparkContext.hadoopConfiguration
+            def qualified(p: org.apache.hadoop.fs.Path) =
+              p.getFileSystem(conf).makeQualified(p)
+            val want = qualified(new org.apache.hadoop.fs.Path(d))
+            if (!spark.sparkContext.getCheckpointDir.exists(c =>
+                qualified(new org.apache.hadoop.fs.Path(c)).getParent ==
+                  want))
               spark.sparkContext.setCheckpointDir(d)
           }
           def truncate(df: DataFrame): DataFrame =

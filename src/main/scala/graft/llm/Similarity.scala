@@ -788,13 +788,8 @@ object Similarity {
       : Option[Seq[(Int, Long, Seq[Double])]] =
     if (!fs.exists(path)) None
     else {
-      val in = fs.open(path)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-        buf.toString("UTF-8")
-      } finally in.close()
-      Some(text.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+      Some(graft.Writes.readUtf8(fs, path).split("\n").iterator
+        .map(_.trim).filter(_.nonEmpty)
         .map { line =>
           val parts = line.split(" ")
           (parts(0).toInt, parts(1).toLong,
@@ -878,7 +873,7 @@ object Similarity {
         new org.apache.hadoop.fs.Path(root, DeltaDirName)),
       s"ivfPatchIndex: $indexDir has a standing $DeltaDirName " +
         "segment — run ivfCompactDelta first, then patch")
-    val idx = spark.read.parquet(indexDir)
+    val idx = graft.Writes.readParquet(spark, indexDir)
     // every stored column rides the rewrite (attribute-carrying
     // layouts — see ivfWriteIndex's attrCols — must not lose their
     // filter columns in patched partitions)
@@ -985,13 +980,8 @@ object Similarity {
     // replay from crash recovery like the cell swaps above)
     val staged = new org.apache.hadoop.fs.Path(tmp, SidecarStaged)
     if (fs.exists(staged)) {
-      val in = fs.open(staged)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-        buf.toString("UTF-8")
-      } finally in.close()
-      val (name, payload) = text.span(_ != '\n')
+      val (name, payload) =
+        graft.Writes.readUtf8(fs, staged).span(_ != '\n')
       val out = fs.create(
         new org.apache.hadoop.fs.Path(root, name.trim), true)
       try out.write(payload.drop(1).getBytes("UTF-8"))
@@ -1027,13 +1017,8 @@ object Similarity {
     if (!fs.exists(tmp)) return
     val marker = new org.apache.hadoop.fs.Path(tmp, PatchMarkerName)
     if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-        buf.toString("UTF-8")
-      } finally in.close()
-      val cells = text.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+      val cells = graft.Writes.readUtf8(fs, marker).split("\n").iterator
+        .map(_.trim).filter(_.nonEmpty)
         .map { line =>
           val Array(c, f) = line.split(" ")
           c.toLong -> (f == "1")
@@ -1074,7 +1059,7 @@ object Similarity {
   private def probedIndexFrame(spark: org.apache.spark.sql.SparkSession,
                                indexDir: String,
                                probedCells: Seq[Long]): DataFrame = {
-    val main = spark.read.parquet(indexDir)
+    val main = graft.Writes.readParquet(spark, indexDir)
       .filter(col("cell_id").isin(probedCells: _*))
     val mainCols = main.columns.toSeq
     def norm(df: DataFrame) = df.select(mainCols.map(c =>
@@ -1087,7 +1072,7 @@ object Similarity {
       .exists(_.getPath.getName.startsWith("ingest_batch="))
     if (!hasDelta) norm(main)
     else norm(main).unionByName(
-      norm(spark.read.parquet(deltaPath.toString)
+      norm(graft.Writes.readParquet(spark, deltaPath.toString)
         .filter(col("cell_id").isin(probedCells: _*))
         .drop("ingest_batch")))
   }
@@ -1126,7 +1111,7 @@ object Similarity {
     // (id, vector, any attributes) must ride every delta row, so a
     // later compaction unions cleanly and filtered search sees its
     // attribute on both sides
-    val carried = spark.read.parquet(indexDir).columns
+    val carried = graft.Writes.readParquet(spark, indexDir).columns
       .filterNot(_ == "cell_id").toSeq
     val dest = s"$indexDir/$DeltaDirName/ingest_batch=$batchId"
     rows.select(carried.map(col) :+
@@ -1134,7 +1119,7 @@ object Similarity {
           .as("cell_id"): _*)
       .write.mode("overwrite").parquet(dest)
     spark.catalog.refreshByPath(indexDir)
-    spark.read.parquet(dest).count()
+    graft.Writes.readParquet(spark, dest).count()
   }
 
   /** Fold the `_delta` side segment into the main `cell_id=`
@@ -1174,13 +1159,17 @@ object Similarity {
       if (fs.exists(deltaPath)) fs.delete(deltaPath, true)
       return (0L, 0L)
     }
-    val delta = spark.read.parquet(deltaPath.toString)
+    val delta = graft.Writes.readParquet(spark, deltaPath.toString)
       .drop("ingest_batch")
-    val merged = delta.count()
+    // row count and affected-partition set in ONE action (the
+    // collect_set is |partitions|-bounded driver state)
+    val probe = delta.agg(count(lit(1)),
+        collect_set(col(partCol).cast("long")))
+      .collect()(0)
+    val merged = probe.getLong(0)
     if (merged == 0L) { fs.delete(deltaPath, true); return (0L, 0L) }
-    val affected = delta.select(col(partCol).cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    val main = spark.read.parquet(indexDir)
+    val affected = probe.getSeq[Long](1).sorted
+    val main = graft.Writes.readParquet(spark, indexDir)
     val mainCols = main.columns.toSeq
     def norm(df: DataFrame) = df.select(mainCols.map(c =>
       if (c == partCol) col(c).cast("long").as(c) else col(c)): _*)
@@ -2015,7 +2004,7 @@ object Similarity {
     // down, or never appended) must not resurrect into an affected
     // bucket's rewrite — semi-join the diff frame to the index's ids
     // (a narrow id-only scan of the code table)
-    val idxIds = spark.read.parquet(indexDir)
+    val idxIds = graft.Writes.readParquet(spark, indexDir)
       .select(col(idCol), col("pq_bucket").cast("long").as("_ib"))
     val re = corpus.select(col(idCol),
         pmod(col(idCol), lit(nBuckets.toLong)).as("pq_bucket"),
@@ -2091,7 +2080,7 @@ object Similarity {
     * pruning to preserve, unlike the IVF probed-cell frame). */
   private def pqIndexFrame(spark: org.apache.spark.sql.SparkSession,
                            indexDir: String): DataFrame = {
-    val main = spark.read.parquet(indexDir)
+    val main = graft.Writes.readParquet(spark, indexDir)
     val mainCols = main.columns.toSeq
     def norm(df: DataFrame) = df.select(mainCols.map(c =>
       if (c == "pq_bucket") col(c).cast("long").as(c) else col(c)): _*)
@@ -2103,7 +2092,7 @@ object Similarity {
       .exists(_.getPath.getName.startsWith("ingest_batch="))
     if (!hasDelta) norm(main)
     else norm(main).unionByName(
-      norm(spark.read.parquet(deltaPath.toString)
+      norm(graft.Writes.readParquet(spark, deltaPath.toString)
         .drop("ingest_batch")))
   }
 
@@ -2133,7 +2122,7 @@ object Similarity {
       .withColumn("pq_bucket", pmod(col(idCol), lit(nBuckets.toLong)))
       .write.mode("overwrite").parquet(dest)
     spark.catalog.refreshByPath(indexDir)
-    spark.read.parquet(dest).count()
+    graft.Writes.readParquet(spark, dest).count()
   }
 
   /** Fold a [[pqAppendBatch]] `_delta` segment into its `pq_bucket=`

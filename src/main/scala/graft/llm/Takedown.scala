@@ -59,10 +59,12 @@ object Takedown {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Normalize a caller id frame to one broadcastable distinct
-    * column named `idCol` (first column wins). */
+  /** Normalize a caller id frame to one broadcastable column named
+    * `idCol` (first column wins). Duplicates are kept: every consumer
+    * is a semi- or anti-join, which a repeated id cannot multiply, and
+    * a `distinct` here would cost a shuffle job per broadcast. */
   private def idFrame(ids: DataFrame, idCol: String): DataFrame =
-    broadcast(ids.select(col(ids.columns.head).as(idCol)).distinct())
+    broadcast(ids.select(col(ids.columns.head).as(idCol)))
 
   // ---------------------------------------------------------------
   // The shared swap protocol
@@ -113,14 +115,8 @@ object Takedown {
     if (!fs.exists(tmp)) return
     val marker = new Path(tmp, MarkerName)
     if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-        buf.toString("UTF-8")
-      } finally in.close()
-      val entries = text.split("\n").iterator.map(_.trim)
-        .filter(_.nonEmpty).map { line =>
+      val entries = graft.Writes.readUtf8(fs, marker).split("\n")
+        .iterator.map(_.trim).filter(_.nonEmpty).map { line =>
           val (flag, rel) = line.span(_ != ' ')
           (rel.drop(1), flag == "1")
         }.toSeq
@@ -263,8 +259,10 @@ object Takedown {
   def takedownPreview(spark: SparkSession, layerDir: String,
                       ids: DataFrame, idCol: String,
                       partCol: String = "ingest_batch"): DataFrame = {
-    val idsB = idFrame(ids, idCol)
-    spark.read.parquet(layerDir)
+    // the left join counts matches, so a repeated id must not
+    // double-count its row
+    val idsB = idFrame(ids, idCol).distinct()
+    graft.Writes.readParquet(spark, layerDir)
       .join(idsB.withColumn("_m", lit(1L)), Seq(idCol), "left")
       .groupBy(col(partCol).cast("long").as(partCol))
       .agg(sum(coalesce(col("_m"), lit(0L))).as("n_removed"),
@@ -289,7 +287,7 @@ object Takedown {
     if (!fs.exists(root)) return (0L, 0L)
     completePending(spark, layerDir)
     val idsB = idFrame(ids, idCol)
-    val layer = spark.read.parquet(layerDir)
+    val layer = graft.Writes.readParquet(spark, layerDir)
     // partition-inference types the key as INT when values fit —
     // normalize to long so compacted layers' negative ids and the
     // dense indexes' long keys land in one code path
@@ -329,25 +327,8 @@ object Takedown {
     * `_patch_tmp` would later swap pre-takedown content back in —
     * taken-down rows must never resurrect). */
   def ivfTakedown(spark: SparkSession, indexDir: String,
-                  ids: DataFrame, idCol: String = "vec_id"): Audit = {
-    val root = new Path(indexDir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return (0L, 0L)
-    Similarity.completePendingPatch(spark, fs, root, "cell_id")
-    // the `_delta` side segment ([[Similarity.ivfAppendBatch]]) is
-    // invisible to the main read — scrub it separately (batch-keyed,
-    // like any ingest layer) so appended-then-taken-down vectors
-    // cannot survive in the serving union
-    val deltaDir = s"$indexDir/${Similarity.DeltaDirName}"
-    val d =
-      if (fs.exists(new Path(deltaDir)))
-        layerTakedown(spark, deltaDir, ids, idCol,
-          partCol = "ingest_batch")
-      else (0L, 0L)
-    val m = layerTakedown(spark, indexDir, ids, idCol,
-      partCol = "cell_id")
-    (d._1 + m._1, d._2 + m._2)
-  }
+                  ids: DataFrame, idCol: String = "vec_id"): Audit =
+    denseTakedown(spark, indexDir, ids, idCol, "cell_id")
 
   /** [[layerTakedown]] over a [[Similarity.pqWriteIndex]] layout
     * (`pq_bucket=` partitions of (id, codes)); codebooks untouched,
@@ -355,22 +336,34 @@ object Takedown {
     * PQ patch first, for the same resurrection reason as
     * [[ivfTakedown]]. */
   def pqTakedown(spark: SparkSession, indexDir: String,
-                 ids: DataFrame, idCol: String = "vec_id"): Audit = {
+                 ids: DataFrame, idCol: String = "vec_id"): Audit =
+    denseTakedown(spark, indexDir, ids, idCol, "pq_bucket")
+
+  /** [[ivfTakedown]] / [[pqTakedown]] shared body: scrub the main
+    * `partCol=` partitions AND the `_delta` side segment
+    * ([[Similarity.ivfAppendBatch]]) — invisible to the main read, so
+    * appended-then-taken-down vectors would otherwise survive in the
+    * serving union. The two scrubs run as concurrent jobs: each swaps
+    * under its own root's `_takedown_tmp`, and the main listing skips
+    * the underscore delta dir. Every ROOT-level pending swap lands
+    * before the fork — a committed compaction marker at the root
+    * deletes `_delta` as its last entry, which must not race the
+    * delta scrub. */
+  private def denseTakedown(spark: SparkSession, indexDir: String,
+                            ids: DataFrame, idCol: String,
+                            partCol: String): Audit = {
     val root = new Path(indexDir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
-    Similarity.completePendingPatch(spark, fs, root, "pq_bucket")
-    // scrub the `_delta` segment ([[Similarity.pqAppendBatch]]) too —
-    // same reasoning as [[ivfTakedown]]'s dual-face scrub
+    Similarity.completePendingPatch(spark, fs, root, partCol)
+    completePending(spark, indexDir)
     val deltaDir = s"$indexDir/${Similarity.DeltaDirName}"
-    val d =
-      if (fs.exists(new Path(deltaDir)))
-        layerTakedown(spark, deltaDir, ids, idCol,
-          partCol = "ingest_batch")
-      else (0L, 0L)
-    val m = layerTakedown(spark, indexDir, ids, idCol,
-      partCol = "pq_bucket")
-    (d._1 + m._1, d._2 + m._2)
+    val scrubs = Seq(deltaDir -> "ingest_batch", indexDir -> partCol)
+      .filter { case (dir, _) => fs.exists(new Path(dir)) }
+      .map { case (dir, p) =>
+        () => layerTakedown(spark, dir, ids, idCol, partCol = p) }
+    val audits = graft.Writes.inParallel(scrubs: _*)
+    (audits.map(_._1).sum, audits.map(_._2).sum)
   }
 
   // ---------------------------------------------------------------
@@ -414,7 +407,7 @@ object Takedown {
     val postDir = s"$indexDir/postings"
     if (!fs.exists(new Path(postDir))) return (0L, 0L)
     val idsB = idFrame(ids, idCol)
-    val post = spark.read.parquet(postDir)
+    val post = graft.Writes.readParquet(spark, postDir)
     // the removed docs' postings rows, computed ONCE and persisted:
     // takedown-batch-sized by construction (|removed docs| x their
     // terms), it feeds BOTH the per-batch debit rollup and the
@@ -459,11 +452,9 @@ object Takedown {
     // marker still lands only after ALL of them complete — the crash
     // protocol is unchanged, an uncommitted tmp is recovered by
     // completePending either way.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     // fresh postings for every affected batch: ONE partition-keyed
     // anti-join write (an emptied batch writes no dir -> flag 0)
-    val postJob = Future {
+    val postJob = () => {
       graft.Writes.clusterByPartitions(
           post.filter(col("ingest_batch").cast("long")
               .isin(batches: _*))
@@ -476,8 +467,8 @@ object Takedown {
     val debitRows = debits.map { case (b, _, n, dl) => (b, n, dl) }
     import spark.implicits._
     val debitDf = debitRows.toSeq.toDF("_b", "_n_rm", "_dl_rm")
-    val statsJob = Future {
-      spark.read.parquet(s"$indexDir/stats")
+    val statsJob = () => {
+      graft.Writes.readParquet(spark, s"$indexDir/stats")
         .filter(col("ingest_batch").cast("long").isin(batches: _*))
         .groupBy(col("ingest_batch").cast("long").as("_b"))
         .agg(sum(col("n_docs")).as("_n"), sum(col("sum_dl")).as("_s"))
@@ -499,7 +490,7 @@ object Takedown {
     // serve's cost routing toward always-full-scan on churned layers.
     val tdBatches = batches.filter(b =>
       fs.exists(new Path(root, s"termdf/ingest_batch=$b")))
-    val termdfJob = Future {
+    val termdfJob = () => {
       if (tdBatches.nonEmpty) {
         // from the persisted removed-rows subset — no second postings
         // scan (one postings row per (doc, term), so count IS the df
@@ -513,7 +504,7 @@ object Takedown {
         // several additive rows — joining the debit row-wise would
         // apply it once per row
         graft.Writes.clusterByPartitions(
-            spark.read.parquet(s"$indexDir/termdf")
+            graft.Writes.readParquet(spark, s"$indexDir/termdf")
               .filter(col("ingest_batch").cast("long")
                 .isin(tdBatches: _*))
               .groupBy(col("ingest_batch").cast("long").as("_b"),
@@ -529,18 +520,11 @@ object Takedown {
           .parquet(new Path(tmp, "termdf").toString)
       }
     }
-    // await COMPLETION of all three writes before surfacing any
-    // failure: Future.sequence fails fast on the first error while
-    // sibling jobs keep writing into tmp, and a retried takedown
-    // deletes tmp at the top — the orphan could then resurrect stale
-    // subdirs under the retry's tmp that the marker commits. Lifting
-    // each outcome into Success makes the barrier unconditional; the
-    // first real failure is rethrown only after every job finished.
-    val outcomes = Await.result(Future.sequence(
-      Seq(postJob, statsJob, termdfJob)
-        .map(_.transform(scala.util.Success(_)))),
-      scala.concurrent.duration.Duration.Inf)
-    outcomes.foreach(_.get)
+    // every write COMPLETES before any failure surfaces: a retried
+    // takedown deletes tmp at the top, and an orphan writer could
+    // otherwise land stale subdirs under the retry's tmp that its
+    // marker then commits
+    graft.Writes.inParallel(postJob, statsJob, termdfJob)
     val entries = batches.map { b =>
       (s"postings/ingest_batch=$b",
         fs.exists(new Path(tmp, s"postings/ingest_batch=$b")))
@@ -595,7 +579,7 @@ object Takedown {
     val root = new Path(sketchDir)
     val fs = fsOf(spark, root)
     val idsB = idFrame(ids, idCol)
-    val removedDocs = spark.read.parquet(corpusDir)
+    val removedDocs = graft.Writes.readParquet(spark, corpusDir)
       .join(idsB, Seq(idCol), "left_semi")
     val nRemoved = removedDocs.count()
     if (nRemoved == 0L) return 0L

@@ -386,9 +386,9 @@ object TextAnalysis {
   private def bm25LayerFrames(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String, idCol: String)
       : (DataFrame, DataFrame) = (
-    spark.read.parquet(s"$indexDir/postings")
+    graft.Writes.readParquet(spark, s"$indexDir/postings")
       .select(col(idCol), col("term"), col("tf"), col("dl")),
-    spark.read.parquet(s"$indexDir/stats")
+    graft.Writes.readParquet(spark, s"$indexDir/stats")
       .agg(sum(col("n_docs")).as("_n"),
         sum(col("sum_dl")).as("_sumdl")))
 
@@ -722,7 +722,7 @@ object TextAnalysis {
     val dfQ =
       if (termdfPath.getFileSystem(
           spark.sparkContext.hadoopConfiguration).exists(termdfPath))
-        spark.read.parquet(s"$indexDir/termdf")
+        graft.Writes.readParquet(spark, s"$indexDir/termdf")
           .join(broadcast(qterms), Seq("term"))
           .groupBy(col("term")).agg(sum(col("df")).as("df"))
       else

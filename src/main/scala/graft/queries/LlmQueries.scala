@@ -99,24 +99,6 @@ object LlmQueries {
     }
   }
 
-  /** Run independent layer-publish steps as CONCURRENT Spark jobs
-    * (the guide's overlap-independent-jobs rule: actions are only
-    * sequential because driver code calls them sequentially; each
-    * step here writes its own partition dir, so the later step's
-    * tasks back-fill executors the earlier step's tail leaves idle).
-    * Failure contract matches the library writers: every step runs
-    * to COMPLETION before the first failure is rethrown, so no
-    * in-flight writer survives into a caller's retry. */
-  private def inParallel(steps: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = steps.map(st => Future(st()))
-    val outs = Await.result(
-      Future.sequence(fs.map(_.transform(scala.util.Success(_)))),
-      scala.concurrent.duration.Duration.Inf)
-    outs.foreach(_.get)
-  }
-
   private def standingLayer(s: SparkSession, base: String,
                             srcPaths: Seq[String],
                             layout: String = "v1")(build: => Unit)
@@ -2634,7 +2616,7 @@ object LlmQueries {
         new java.io.File(idxDir))
       // the two doc-disjoint batch publishes write disjoint
       // ingest_batch partitions — concurrent jobs, not sequential
-      inParallel(
+      graft.Writes.inParallel(
         () => TextAnalysis.bm25PostingsBatch(
           corpus.filter(col("doc_id") % 2 === 0), idxDir,
           batchId = 0L),
@@ -2779,7 +2761,7 @@ object LlmQueries {
       // as the two filtered writes); the two batch sketches are
       // doc-disjoint aggregates over their own partition dirs and
       // run as concurrent jobs alongside it
-      inParallel(
+      graft.Writes.inParallel(
         () => graft.Writes.clusterByPartitions(
             docs.select(col("doc_id"), col("text"),
               (col("doc_id") % 2).as("ingest_batch")), "ingest_batch")
@@ -2923,7 +2905,7 @@ object LlmQueries {
         new java.io.File(idxDir))
       // the two doc-disjoint batch publishes write disjoint
       // ingest_batch partitions — concurrent jobs, not sequential
-      inParallel(
+      graft.Writes.inParallel(
         () => TextAnalysis.bm25PostingsBatch(
           corpus.filter(col("doc_id") % 2 === 0), idxDir,
           batchId = 0L),
@@ -3032,7 +3014,7 @@ object LlmQueries {
         // disjoint dirs/inputs — build the standing layers as
         // concurrent jobs (one-time cost, but the single-shot
         // column pays it)
-        inParallel(
+        graft.Writes.inParallel(
           () => TextAnalysis.bm25PostingsBatch(
             corpus.filter(col("doc_id") % 2 === 0), bmDir,
             batchId = 0L),

@@ -135,7 +135,7 @@ object IngestStream {
     * top level) are recognized too. */
   private def layerReadable(spark: org.apache.spark.sql.SparkSession,
                             dir: String): Option[DataFrame] =
-    try Some(spark.read.parquet(dir))
+    try Some(graft.Writes.readParquet(spark, dir))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
   /** One ingest step (batch semantics — unit-testable; the streaming
@@ -573,7 +573,8 @@ object IngestStream {
                   trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery = {
     val spark = docs.sparkSession
-    val w = spark.read.parquet(weightsDir).orderBy(col("bucket"))
+    val w = graft.Writes.readParquet(spark, weightsDir)
+      .orderBy(col("bucket"))
       .collect().map(_.getDouble(1))
     require(w.length >= 2,
       s"$weightsDir is not a gate-weights layer (need dim+1 " +
@@ -1100,7 +1101,8 @@ object IngestStream {
       // them — the marker must describe exactly what was consumed
       val sourceSigs = sources.map(p =>
         p.getName -> fileSig(fs, p)).toIndexedSeq
-      fold(spark.read.parquet(sources.map(_.toString).toIndexedSeq: _*))
+      fold(graft.Writes.readParquet(spark,
+          sources.map(_.toString).toIndexedSeq: _*))
         .write.parquet(tmp.toString)
       writeSourcesMarker(fs, tmp, sourceSigs)
       require(fs.rename(tmp, target),

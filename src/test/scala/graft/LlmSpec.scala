@@ -273,6 +273,36 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
+  test("connectedComponents reliable mode checkpoints into exactly " +
+       "the caller's dir, not a sibling sharing its prefix") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-cc-sib").toString
+    val sc = spark.sparkContext
+    val before = sc.getCheckpointDir
+    try {
+      def parent = sc.getCheckpointDir
+        .map(c => new org.apache.hadoop.fs.Path(c).getParent.toUri.getPath)
+      // the context already points at `ck2/<uuid>`; a run asking for
+      // `ck` must move it, though "ck2/..." contains "ck"
+      sc.setCheckpointDir(s"$root/ck2")
+      Dedup.connectedComponents(pairs, driverThreshold = 0L,
+        checkpointDir = Some(s"$root/ck")).collect()
+      assert(parent.contains(s"$root/ck"), s"checkpoint dir: $parent")
+      // and a run asking for the current dir keeps it
+      val current = sc.getCheckpointDir
+      Dedup.connectedComponents(pairs, driverThreshold = 0L,
+        checkpointDir = Some(s"$root/ck/")).collect()
+      assert(sc.getCheckpointDir == current)
+    } finally {
+      before.foreach(d => sc.setCheckpointDir(
+        new org.apache.hadoop.fs.Path(d).getParent.toString))
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(root)); ()
+    }
+  }
+
   test("nearDupDedup keeps one representative per duplicate cluster") {
     import spark.implicits._
     val base = (0 until 60).map(i => s"tok$i").mkString(" ")

@@ -522,4 +522,163 @@ class TakedownSpec extends AnyFunSuite {
       "failed patch must leave the index byte-identical")
     assert(spark.read.parquet(base).count() == 3L)
   }
+
+  /** (has a SQL execution id, stage names) of every job started while
+    * `body` runs. Listener delivery is asynchronous but ordered, so
+    * once a trailing fence job's start has arrived, so has every
+    * earlier job's. */
+  private def jobsDuring(body: => Unit): Seq[(Boolean, Seq[String])] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Boolean, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        seen.add((props.map(_.getProperty("graft.spec.fence")).orNull,
+          props.exists(_.getProperty("spark.sql.execution.id") != null),
+          e.stageInfos.map(_.name)))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      val fence = java.util.UUID.randomUUID().toString
+      sc.setLocalProperty("graft.spec.fence", fence)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.fence", null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_._1 == fence) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(_._1 == fence), "fence job never seen")
+      seen.asScala.toSeq.filter(_._1 != fence).map(t => (t._2, t._3))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Jobs outside any SQL execution whose stage is a parquet read:
+    * schema-inference jobs. */
+  private def inferenceJobs(jobs: Seq[(Boolean, Seq[String])]) =
+    jobs.filter { case (sql, stages) =>
+      !sql && stages.exists(_.startsWith("parquet at "))
+    }
+
+  test("ivfTakedown and bm25Takedown start no parquet schema-" +
+       "inference job") {
+    import spark.implicits._
+    val base = scratch("jobs_ivf")
+    def pad(v: Seq[Double]) = v.padTo(8, 0.0)
+    val cents = Seq(pad(Seq(0.0, 0.0)), pad(Seq(10.0, 0.0)))
+    def pts(ids: Seq[Long]) = ids.map(i =>
+      (i, Seq((i % 11).toFloat, 0.0f).padTo(8, 0.0f)))
+      .toDF("vec_id", "embedding")
+    Similarity.ivfWriteIndex(pts(1L to 6L), cents, base)
+    Similarity.ivfAppendBatch(spark, base, pts(7L to 9L), batchId = 0L)
+    // the guard can see an inference job when one runs
+    assert(inferenceJobs(jobsDuring(spark.read.parquet(base))).nonEmpty,
+      "a plain schema-less read must show up as an inference job")
+    val ivfJobs = jobsDuring {
+      assert(Takedown.ivfTakedown(spark, base,
+        idsDf(Seq(2L, 8L), "vec_id")) == ((2L, 2L)))
+    }
+    assert(ivfJobs.nonEmpty && inferenceJobs(ivfJobs).isEmpty,
+      s"ivfTakedown inference jobs: ${inferenceJobs(ivfJobs)}")
+    val bm25 = scratch("jobs_bm25")
+    val corpus = docs.filter(col("doc_id") < 60)
+    TextAnalysis.bm25PostingsBatch(
+      corpus.filter(col("doc_id") % 2 === 0), bm25, batchId = 0L)
+    TextAnalysis.bm25PostingsBatch(
+      corpus.filter(col("doc_id") % 2 =!= 0), bm25, batchId = 1L)
+    val bm25Jobs = jobsDuring {
+      val (n, parts) = Takedown.bm25Takedown(spark, bm25,
+        corpus.filter(col("doc_id") % 7 === 3).select("doc_id"))
+      assert(n > 0L && parts == 2L, s"audit $n/$parts")
+    }
+    assert(bm25Jobs.nonEmpty && inferenceJobs(bm25Jobs).isEmpty,
+      s"bm25Takedown inference jobs: ${inferenceJobs(bm25Jobs)}")
+  }
+
+  test("duplicated takedown ids: each row is removed once and " +
+       "takedownPreview counts it once") {
+    import spark.implicits._
+    val dir = scratch("dup_ids")
+    Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/ingest_batch=0")
+    Seq((3L, "c"), (4L, "d")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/ingest_batch=1")
+    val ids = idsDf(Seq(2L, 2L, 3L, 3L, 3L, 999L), "doc_id")
+    val preview = Takedown.takedownPreview(spark, dir, ids, "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    assert(preview == Set((0L, 1L, 1L), (1L, 1L, 1L)),
+      s"preview must count each removed row once: $preview")
+    assert(Takedown.layerTakedown(spark, dir, ids, "doc_id") ==
+      ((2L, 2L)))
+    val left = spark.read.parquet(dir).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(left == Seq(1L, 4L), s"left: $left")
+    val base = scratch("dup_ids_ivf")
+    def pad(v: Seq[Double]) = v.padTo(8, 0.0)
+    val cents = Seq(pad(Seq(0.0, 0.0)), pad(Seq(10.0, 0.0)))
+    val pts = (1L to 4L).map(i =>
+      (i, Seq((i * 3).toFloat, 0.0f).padTo(8, 0.0f)))
+      .toDF("vec_id", "embedding")
+    Similarity.ivfWriteIndex(pts, cents, base)
+    assert(Takedown.ivfTakedown(spark, base,
+      idsDf(Seq(4L, 4L, 4L), "vec_id")) == ((1L, 1L)))
+    assert(spark.read.parquet(base).count() == 3L)
+  }
+
+  test("ivfTakedown over a COMMITTED root compaction swap (its " +
+       "marker deletes _delta last): recovery lands before the " +
+       "concurrent scrubs; the layer equals a rebuild over corpus " +
+       "MINUS ids with no leftovers") {
+    import spark.implicits._
+    val base = scratch("crash_compact")
+    val twin = scratch("crash_compact_twin")
+    def pad(v: Seq[Double]) = v.padTo(8, 0.0)
+    val cents = Seq(pad(Seq(0.0, 0.0)), pad(Seq(10.0, 0.0)),
+      pad(Seq(100.0, 100.0)))
+    def pts(ids: Seq[Long]) = ids.map(i =>
+      (i, Seq((i % 12).toFloat, 0.0f).padTo(8, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val mainIds = 1L to 8L
+    val deltaIds = 9L to 12L
+    Seq(base, twin).foreach { d =>
+      Similarity.ivfWriteIndex(pts(mainIds), cents, d)
+      Similarity.ivfAppendBatch(spark, d, pts(deltaIds), batchId = 0L)
+    }
+    // the state a compaction crash leaves between its commit marker
+    // and its swap: every fresh cell staged under the root
+    // `_takedown_tmp`, the marker's last entry deleting `_delta`
+    assert(Similarity.ivfCompactDelta(spark, twin)._1 == 4L)
+    val cells = new java.io.File(twin).list()
+      .filter(_.startsWith("cell_id=")).sorted.toSeq
+    val tmp = s"$base/_takedown_tmp"
+    cells.foreach { c =>
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$twin/$c"), new java.io.File(s"$tmp/$c"))
+    }
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(tmp, "_TAKEDOWN_COMMIT"),
+      (cells.map(c => s"1 $c") :+ s"0 _delta")
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    // one id taken down from main, one from the (absorbed) delta
+    val ids = Seq(3L, 10L)
+    val (rows, _) = Takedown.ivfTakedown(spark, base,
+      idsDf(ids, "vec_id"))
+    assert(rows == 2L, s"rows removed: $rows")
+    val rebuilt = scratch("crash_compact_rebuilt")
+    Similarity.ivfWriteIndex(
+      pts((mainIds ++ deltaIds).filterNot(ids.contains)), cents, rebuilt)
+    def content(d: String) = spark.read.parquet(d)
+      .select(col("vec_id"), col("cell_id").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(content(base) == content(rebuilt),
+      s"${content(base)} vs ${content(rebuilt)}")
+    val findings = Takedown.layerDoctor(spark, base).collect()
+      .map(_.getString(0)).toSet
+    assert(findings == Set("ivf-cells", "centroid-sidecar"),
+      s"leftovers: $findings")
+  }
 }
