@@ -39,14 +39,17 @@ object Writes {
     df.hint("rebalance",
       cols.map(org.apache.spark.sql.functions.col): _*)
 
-  /** `spark.read.parquet(paths*)` for a layer the engine wrote
-    * itself, without the schema-inference job.
+  /** `spark.read.parquet(paths*)` without the schema-inference job
+    * when Spark wrote the files: every layer and memo entry the engine
+    * writes, and any Spark-written parquet source.
     *
     * Plain inference starts a one-task Spark job to read ONE footer:
-    * a summary file if the listing holds one, else the first data
-    * file in path order. On a maintenance cycle that job is pure
-    * orchestration (a dozen per cycle, each a driver round trip), so
-    * this reads the same footer on the driver instead and hands its
+    * a summary file if the listing holds one, else a data file. On a
+    * maintenance cycle that job is pure orchestration (a dozen per
+    * cycle, each a driver round trip), so this reads a footer on the
+    * driver instead — a summary file in a directory on the way, else
+    * the first data file in name order, depth first, listing only the
+    * directories on the way to it — and hands its
     * schema — Spark's own row-metadata JSON, the exact value
     * inference would return — to the reader. Partition columns are
     * not in a file footer, so they are still discovered from the
@@ -77,21 +80,25 @@ object Writes {
     if (spark.conf.get("spark.sql.parquet.mergeSchema", "false")
         .toBoolean) return None
     val conf = spark.sparkContext.hadoopConfiguration
-    def leaves(fs: FileSystem, st: FileStatus): Iterator[FileStatus] =
-      if (!st.isDirectory) Iterator(st)
-      else fs.listStatus(st.getPath).iterator
-        .filterNot(c => hiddenName(c.getPath.getName))
-        .flatMap(leaves(fs, _))
+    val summaries = Seq("_common_metadata", "_metadata")
+    // depth first in name order, listing only the directories on the
+    // way: the read itself lists the whole tree again
+    def footerFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+      if (!st.isDirectory) Some(st)
+      else {
+        val kids = fs.listStatus(st.getPath)
+          .filterNot(c => hiddenName(c.getPath.getName))
+          .sortBy(_.getPath.getName)
+        summaries.flatMap(n => kids.find(_.getPath.getName == n))
+          .headOption
+          .orElse(kids.iterator.flatMap(footerFile(fs, _)).nextOption())
+      }
     scala.util.Try {
-      val files = paths.flatMap { p =>
+      paths.sorted.iterator.flatMap { p =>
         val path = new Path(p)
         val fs = path.getFileSystem(conf)
-        leaves(fs, fs.getFileStatus(path))
-      }.sortBy(_.getPath.toString)
-      val summaries = Seq("_common_metadata", "_metadata")
-      summaries.flatMap(n => files.find(_.getPath.getName == n))
-        .headOption
-        .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+        footerFile(fs, fs.getFileStatus(path))
+      }.nextOption()
         .map { f =>
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile
@@ -115,20 +122,5 @@ object Writes {
       org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
       buf.toString("UTF-8")
     } finally in.close()
-  }
-
-  /** Run independent Spark actions as CONCURRENT jobs on one session
-    * and return their results in order. Every step runs to
-    * COMPLETION before the first failure is rethrown: failing fast
-    * would leave sibling jobs writing into temp dirs that a caller's
-    * retry deletes and recreates, where an orphan writer could land
-    * stale files the retry then commits. */
-  private[graft] def inParallel[A](steps: (() => A)*): Seq[A] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val outs = Await.result(Future.sequence(
-        steps.map(st => Future(st()).transform(scala.util.Success(_)))),
-      scala.concurrent.duration.Duration.Inf)
-    outs.map(_.get)
   }
 }

@@ -57,10 +57,13 @@ final case class Memo(spark: SparkSession, root: String) {
 
   private def dirFor(key: String) = s"$root/$key"
   private def okMarker(key: String) = new Path(dirFor(key), "_GRAFT_OK")
+  // the entry's schema from its footer: no inference job per read-back
+  private def readBack(key: String) =
+    graft.Writes.readParquet(spark, dirFor(key))
 
   def lookup(key: String): Option[DataFrame] = {
     val m = okMarker(key)
-    if (fsFor(m).exists(m)) Some(spark.read.parquet(dirFor(key)))
+    if (fsFor(m).exists(m)) Some(readBack(key))
     else None
   }
 
@@ -81,7 +84,7 @@ final case class Memo(spark: SparkSession, root: String) {
   def store(key: String, df: DataFrame): DataFrame = {
     val target = new Path(dirFor(key))
     val fs = fsFor(target)
-    if (fs.exists(okMarker(key))) return spark.read.parquet(dirFor(key))
+    if (fs.exists(okMarker(key))) return readBack(key)
     val staging = new Path(dirFor(key) + ".tmp-" + java.util.UUID.randomUUID)
     try {
       df.write.mode("overwrite").parquet(staging.toString)
@@ -130,7 +133,7 @@ final case class Memo(spark: SparkSession, root: String) {
     } catch {
       case e: Throwable => fs.delete(staging, true); throw e
     }
-    spark.read.parquet(dirFor(key))
+    readBack(key)
   }
 
   /** Memoize: on hit read back; on miss compute, persist, read back.

@@ -186,7 +186,10 @@ object CLI {
                 .select(col("doc_id")), Seq("doc_id"))
             (lineage, kept)
           } >>>
-          (Access.writeData(linSnk) *** Access.writeData(keptSnk))
+          // lineage first, not `***`: a corpus whose lineage write
+          // failed must not be published without it
+          Access.writeData(linSnk).first[DataFrame] >>>
+          Access.writeData(keptSnk).second[Unit]
       }),
 
     // The crawl->clean-text extraction chain through the lifecycle:
@@ -404,7 +407,7 @@ object CLI {
                 val p = new org.apache.hadoop.fs.Path(dir)
                 val fs = p.getFileSystem(
                   spark.sparkContext.hadoopConfiguration)
-                if (fs.exists(p)) spark.read.parquet(dir).count()
+                if (fs.exists(p)) graft.Writes.readParquet(spark, dir).count()
                 else 0L
               }
               import spark.implicits._
@@ -547,7 +550,7 @@ object CLI {
                     .parquet(streamDir),
                   idxDir, reportDir, tau)
                 q.awaitTermination()
-                spark.read.parquet(reportDir)
+                graft.Writes.readParquet(spark, reportDir)
                   .agg(count(lit(1)).as("n_batches"),
                     sum(col("n_vectors")).as("n_vectors"),
                     round(max(col("mean_sqdist")), 6)
@@ -569,7 +572,7 @@ object CLI {
                     .parquet(streamDir),
                   idxDir, reportDir, tau)
                 q.awaitTermination()
-                spark.read.parquet(reportDir)
+                graft.Writes.readParquet(spark, reportDir)
                   .agg(count(lit(1)).as("n_batches"),
                     sum(col("n_vectors")).as("n_vectors"),
                     round(max(col("mean_qerr")), 6)
@@ -583,7 +586,7 @@ object CLI {
                     .parquet(streamDir),
                   trainData, reportDir, merges)
                 q.awaitTermination()
-                spark.read.parquet(reportDir)
+                graft.Writes.readParquet(spark, reportDir)
                   .agg(count(lit(1)).as("n_batches"),
                     sum(col("n_docs")).as("n_docs"),
                     sum(col("n_unk_words")).as("n_unk_words"),
@@ -666,7 +669,7 @@ object CLI {
             // deploy from the ARTIFACT: read the weights back and
             // score with those (any drift between memory and layer
             // would surface right here)
-            val wBack = spark.read.parquet(wPath)
+            val wBack = graft.Writes.readParquet(spark, wPath)
               .orderBy(col("bucket")).collect()
               .map(_.getDouble(1))
             require(wBack.length == dim + 1,
@@ -990,7 +993,7 @@ object CLI {
                   }
                   val (r, p) =
                     Takedown.layerTakedown(spark, layerDir, idSet, idCol)
-                  (r, p, spark.read.parquet(layerDir).count())
+                  (r, p, graft.Writes.readParquet(spark, layerDir).count())
                 case "bm25" =>
                   if (doBuild) {
                     val docs = sr.read()
@@ -1002,7 +1005,7 @@ object CLI {
                   }
                   val (r, p) =
                     Takedown.bm25Takedown(spark, layerDir, idSet)
-                  (r, p, spark.read.parquet(s"$layerDir/stats")
+                  (r, p, graft.Writes.readParquet(spark, s"$layerDir/stats")
                     .agg(sum(col("n_docs"))).head.getLong(0))
                 case "ivf" =>
                   if (doBuild) {
@@ -1013,7 +1016,7 @@ object CLI {
                   }
                   val (r, p) =
                     Takedown.ivfTakedown(spark, layerDir, idSet)
-                  (r, p, spark.read.parquet(layerDir).count())
+                  (r, p, graft.Writes.readParquet(spark, layerDir).count())
                 case "pq" =>
                   if (doBuild) {
                     val emb = sr.read()
@@ -1023,7 +1026,7 @@ object CLI {
                   }
                   val (r, p) =
                     Takedown.pqTakedown(spark, layerDir, idSet)
-                  (r, p, spark.read.parquet(layerDir).count())
+                  (r, p, graft.Writes.readParquet(spark, layerDir).count())
                 case _ =>
                   // the sketch is subtractive: it needs the removed
                   // docs' text, so the corpus layer rides NEXT TO the
@@ -1109,7 +1112,7 @@ object CLI {
               .layerRetention(spark, layerDir, keepFrom)
             import spark.implicits._
             Seq((keepFrom, parts, rows,
-                spark.read.parquet(layerDir).count()))
+                graft.Writes.readParquet(spark, layerDir).count()))
               .toDF("keep_from", "partitions_dropped", "rows_dropped",
                 "rows_remaining")
           } >>>

@@ -621,7 +621,7 @@ object Dedup {
       .filter(col("sz") > 0)
       .write.mode("overwrite").parquet(shPath)
     phase("shingle materialization")
-    val withSh = spark.read.parquet(shPath)
+    val withSh = graft.Writes.readParquet(spark, shPath)
     val statsRow = withSh.agg(count(lit(1)).as("n"),
       sum(col("sz")).as("mass")).head()
     if (statsRow.getLong(0) == 0L) return emptyResult
@@ -649,7 +649,7 @@ object Dedup {
       .write.mode("overwrite").partitionBy("slab").parquet(prefPath)
     phase("prefix stream (df + window + write)")
     fs.delete(new org.apache.hadoop.fs.Path(outPath), true)
-    val pref = spark.read.parquet(prefPath)
+    val pref = graft.Writes.readParquet(spark, prefPath)
     (0 until nSlabs).foreach { i =>
       val p = pref.filter(col("slab") === i)
         .select(col("s"), col("id"), col("sz"), col("rk"))
@@ -680,7 +680,7 @@ object Dedup {
     val hasParts = fs.exists(outP) && fs.listStatus(outP)
       .exists(_.getPath.getName.startsWith("part-"))
     if (!hasParts) emptyResult
-    else spark.read.parquet(outPath).distinct()
+    else graft.Writes.readParquet(spark, outPath).distinct()
   }
 
   // ---------------------------------------------------------------
@@ -1178,7 +1178,7 @@ object Dedup {
   def nearDupDedupIndexed(docs: DataFrame, indexDir: String,
                           idCol: String = "doc_id"): DataFrame =
     keepRepresentatives(docs,
-      docs.sparkSession.read.parquet(indexDir), idCol)
+      graft.Writes.readParquet(docs.sparkSession, indexDir), idCol)
 
   /** Keep one min-id representative per cluster of a `(id, component)`
     * assignment; docs outside any cluster always survive. The

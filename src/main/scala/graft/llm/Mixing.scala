@@ -218,7 +218,7 @@ object Mixing {
     * to the layout's own parquet discovery). */
   def shardManifest(spark: org.apache.spark.sql.SparkSession,
                     outDir: String): DataFrame = {
-    val m = spark.read.parquet(outDir)
+    val m = graft.Writes.readParquet(spark, outDir)
       .select(col("shard"),
         // provenance must be read BEFORE any caching can canonicalize
         // the scan (input_file_name over InMemoryRelation is empty)
@@ -229,7 +229,7 @@ object Mixing {
         max(col("ord")).as("max_ord"))
       .orderBy("shard", "min_ord")
     m.write.mode("overwrite").parquet(s"$outDir/_manifest")
-    spark.read.parquet(s"$outDir/_manifest").orderBy("shard", "min_ord")
+    graft.Writes.readParquet(spark, s"$outDir/_manifest").orderBy("shard", "min_ord")
   }
 
   /** The full training-data order export: [[epochRepeats]] realizes

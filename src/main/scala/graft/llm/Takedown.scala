@@ -362,7 +362,7 @@ object Takedown {
       .filter { case (dir, _) => fs.exists(new Path(dir)) }
       .map { case (dir, p) =>
         () => layerTakedown(spark, dir, ids, idCol, partCol = p) }
-    val audits = graft.Writes.inParallel(scrubs: _*)
+    val audits = graft.task.Fanout.all(spark, scrubs)
     (audits.map(_._1).sum, audits.map(_._2).sum)
   }
 
@@ -524,7 +524,7 @@ object Takedown {
     // takedown deletes tmp at the top, and an orphan writer could
     // otherwise land stale subdirs under the retry's tmp that its
     // marker then commits
-    graft.Writes.inParallel(postJob, statsJob, termdfJob)
+    graft.task.Fanout.all(spark, Seq(postJob, statsJob, termdfJob))
     val entries = batches.map { b =>
       (s"postings/ingest_batch=$b",
         fs.exists(new Path(tmp, s"postings/ingest_batch=$b")))

@@ -2616,13 +2616,13 @@ object LlmQueries {
         new java.io.File(idxDir))
       // the two doc-disjoint batch publishes write disjoint
       // ingest_batch partitions — concurrent jobs, not sequential
-      graft.Writes.inParallel(
+      graft.task.Fanout.all(s, Seq(
         () => TextAnalysis.bm25PostingsBatch(
           corpus.filter(col("doc_id") % 2 === 0), idxDir,
           batchId = 0L),
         () => TextAnalysis.bm25PostingsBatch(
           corpus.filter(col("doc_id") % 2 =!= 0), idxDir,
-          batchId = 1L))
+          batchId = 1L)))
       TextAnalysis.bm25TopKFromPostings(s, idxDir,
           docs.filter(col("doc_id") % 100 === 0)
             .select(col("doc_id").as("query_id"),
@@ -2761,7 +2761,7 @@ object LlmQueries {
       // as the two filtered writes); the two batch sketches are
       // doc-disjoint aggregates over their own partition dirs and
       // run as concurrent jobs alongside it
-      graft.Writes.inParallel(
+      graft.task.Fanout.all(s, Seq(
         () => graft.Writes.clusterByPartitions(
             docs.select(col("doc_id"), col("text"),
               (col("doc_id") % 2).as("ingest_batch")), "ingest_batch")
@@ -2771,7 +2771,7 @@ object LlmQueries {
           batchId = 0L),
         () => graft.streaming.IngestStream.cmsBatch(
           docs.filter(col("doc_id") % 2 === 1), s"$base/sketch",
-          batchId = 1L))
+          batchId = 1L)))
       Takedown.cmsTakedown(s, s"$base/sketch", s"$base/corpus",
         docs.filter(col("doc_id") % 9 === 5).select("doc_id"))
       graft.streaming.IngestStream.cmsLayerRead(s, s"$base/sketch")
@@ -2905,13 +2905,13 @@ object LlmQueries {
         new java.io.File(idxDir))
       // the two doc-disjoint batch publishes write disjoint
       // ingest_batch partitions — concurrent jobs, not sequential
-      graft.Writes.inParallel(
+      graft.task.Fanout.all(s, Seq(
         () => TextAnalysis.bm25PostingsBatch(
           corpus.filter(col("doc_id") % 2 === 0), idxDir,
           batchId = 0L),
         () => TextAnalysis.bm25PostingsBatch(
           corpus.filter(col("doc_id") % 2 =!= 0), idxDir,
-          batchId = 1L))
+          batchId = 1L)))
       Takedown.bm25Takedown(s, idxDir,
         corpus.filter(col("doc_id") % 15 === 7).select("doc_id"))
       // serve face: the FULL postings scan, by measurement — the
@@ -3014,7 +3014,7 @@ object LlmQueries {
         // disjoint dirs/inputs — build the standing layers as
         // concurrent jobs (one-time cost, but the single-shot
         // column pays it)
-        graft.Writes.inParallel(
+        graft.task.Fanout.all(s, Seq(
           () => TextAnalysis.bm25PostingsBatch(
             corpus.filter(col("doc_id") % 2 === 0), bmDir,
             batchId = 0L),
@@ -3026,7 +3026,7 @@ object LlmQueries {
               iters = 2)
             Similarity.ivfWriteIndex(
               emb.filter(col("vec_id") % 100 =!= 0), cents, ivfDir)
-          })
+          }))
       }
       // the lexical arm serves through the impact-pruned face — the
       // deployed shape (prove-or-fall-back is exact, so the oracle

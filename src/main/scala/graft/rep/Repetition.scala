@@ -1,8 +1,6 @@
 package graft.rep
 
-import graft.task.PTask
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import graft.task.{Fanout, PTask}
 
 /** Index sets + task repetition (reference Repetition.hs / Internal.hs).
   *
@@ -33,21 +31,16 @@ object Repetition {
   /** Repeat a task over a collection IN PARALLEL, binding `varName` to
     * each element's index so `{varName}` path templates splice per
     * repetition — reference `parMapTask` (REP:61-67) +
-    * `makeTaskRepeatable` (REPI:102-131). */
+    * `makeTaskRepeatable` (REPI:102-131). At most `maxConcurrent`
+    * repetitions run at once; all of them finish before the first
+    * failure is rethrown ([[Fanout]]). */
   def parMapTask[A, B](varName: String, task: PTask[A, B],
                        maxConcurrent: Int = 8)
       : PTask[Seq[(String, A)], Seq[(String, B)]] =
-    PTask(task.requirements, (ctx, items) => {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(maxConcurrent, items.size)))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = items.map { case (idx, a) =>
-          Future(idx -> task.run(ctx.withVar(varName, idx), a))
-        }
-        Await.result(Future.sequence(futs), Duration.Inf)
-      } finally pool.shutdown()
-    })
+    PTask(task.requirements, (ctx, items) =>
+      Fanout.all(ctx.spark, items.map { case (idx, a) =>
+        () => idx -> task.run(ctx.withVar(varName, idx), a)
+      }, math.max(1, maxConcurrent)))
 
   /** Parallel repeat, discard results — reference `parMapTask_`. */
   def parMapTask_[A](varName: String, task: PTask[A, _],

@@ -38,11 +38,9 @@ object Formats {
     * default: columnar, predicate-pushdown, partition-prunable). */
   object Parquet extends Format {
     val ext = "parquet"
-    def read(s: SparkSession, paths: Seq[String], schema: Option[StructType]) = {
-      val r = s.read
-      schema.foreach(r.schema)
-      r.parquet(paths: _*)
-    }
+    def read(s: SparkSession, paths: Seq[String], schema: Option[StructType]) =
+      schema.fold(graft.Writes.readParquet(s, paths: _*))(
+        s.read.schema(_).parquet(paths: _*))
     def write(df: DataFrame, path: String): Unit =
       df.write.mode("overwrite").parquet(path)
     override def write(df: DataFrame, path: String, codec: Option[String]): Unit = {

@@ -55,15 +55,23 @@ final case class PTask[-A, +B](requirements: Catalog, runFn: (RunCtx, A) => B) {
     PTask(requirements ++ next.requirements,
       (ctx, a) => next.runFn(ctx, runFn(ctx, a)))
 
-  /** Fanout (Arrow `&&&`): both branches see the same input. */
+  /** Fanout (Arrow `&&&`): both branches see the same input and run
+    * CONCURRENTLY, as the reference's `AsyncA` arrow runs them
+    * (PTI:137-144) — side effects of the two branches have no order.
+    * Both complete before a failure of either is rethrown
+    * ([[Fanout]]), so a failed branch does not stop its sibling's
+    * sinks from being written: chain sinks that must stay consistent
+    * with `>>>`. */
   def &&&[A2 <: A, C](other: PTask[A2, C]): PTask[A2, (B, C)] =
     PTask(requirements ++ other.requirements,
-      (ctx, a) => (runFn(ctx, a), other.runFn(ctx, a)))
+      (ctx, a) => Fanout.pair(ctx.spark)(runFn(ctx, a), other.runFn(ctx, a)))
 
-  /** Parallel product (Arrow `***`). */
+  /** Parallel product (Arrow `***`): the branches run concurrently,
+    * as with [[&&&]]. */
   def ***[C, D](other: PTask[C, D]): PTask[(A, C), (B, D)] =
     PTask(requirements ++ other.requirements,
-      (ctx, ac) => (runFn(ctx, ac._1), other.runFn(ctx, ac._2)))
+      (ctx, ac) => Fanout.pair(ctx.spark)(
+        runFn(ctx, ac._1), other.runFn(ctx, ac._2)))
 
   def map[C](f: B => C): PTask[A, C] = this >>> PTask.arr(f)
 

@@ -578,34 +578,8 @@ class AccessOpsSpec extends AnyFunSuite {
   // (reference parity: porcupine-s3 TaskPipelineUtils.hs:77-175 —
   // upload/download/streamS3Folder through the accessor registry)
 
-  /** Register the mock s3a FS and hand the body an s3a:// base URI
-    * whose objects live under a scratch dir. The conf keys are
-    * restored so other tests see an unpolluted session. */
-  private def withMockS3[T](name: String)(body: String => T): T = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val base = scratch(name) // local root standing in for the bucket keys
-    new java.io.File(base).mkdirs()
-    hconf.set("fs.s3a.impl", classOf[MockS3FileSystem].getName)
-    hconf.set("fs.AbstractFileSystem.s3a.impl",
-      classOf[MockS3AbstractFileSystem].getName)
-    // the engine's s3a conf surface pins the magic committer, whose
-    // factory lives in hadoop-aws (not in this sandbox) — route
-    // committer selection back to the rename-based default for the
-    // mock, everything else from configureS3 stands
-    graft.access.Schemes.configureS3(spark,
-      endpoint = Some("http://localhost:0"), accessKey = Some("test"),
-      secretKey = Some("test"), pathStyleAccess = true)
-    hconf.unset("mapreduce.outputcommitter.factory.scheme.s3a")
-    hconf.unset("fs.s3a.committer.name")
-    try body(s"s3a://graft-test-bucket$base")
-    finally {
-      org.apache.hadoop.fs.FileSystem.closeAll()
-      Seq("fs.s3a.impl", "fs.AbstractFileSystem.s3a.impl",
-        "fs.s3a.endpoint", "fs.s3a.access.key", "fs.s3a.secret.key",
-        "fs.s3a.path.style.access")
-        .foreach(hconf.unset)
-    }
-  }
+  private def withMockS3[T](name: String)(body: String => T): T =
+    MockS3FileSystem.withBucket(spark, scratch(name))(body)
 
   test("s3 accessor: scheme dispatch + writeData/loadData round-trip " +
        "through s3a:// locations") {

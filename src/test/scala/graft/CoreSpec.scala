@@ -129,6 +129,68 @@ class CoreSpec extends AnyFunSuite {
     assert(boom.catchAndLog.run(ctx, 1).isEmpty)
   }
 
+  test("&&& and *** run their branches concurrently") {
+    import graft.task.{PTask, RunCtx}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val ctx = RunCtx(null, Catalog.empty, Map.empty, Mappings.empty)
+    // each branch waits for the other: a sequential run times out
+    def meet(l: CountDownLatch) = PTask.arr { (i: Int) =>
+      l.countDown()
+      assert(l.await(10, TimeUnit.SECONDS), "the branches did not overlap")
+      i + 1
+    }
+    val fan = new CountDownLatch(2)
+    assert((meet(fan) &&& meet(fan)).run(ctx, 1) == (2, 2))
+    val prod = new CountDownLatch(2)
+    assert((meet(prod) *** meet(prod)).run(ctx, (1, 5)) == (2, 6))
+  }
+
+  test("a failing fan-out branch is rethrown after its sibling " +
+       "finished") {
+    import graft.task.{PTask, RunCtx}
+    val ctx = RunCtx(null, Catalog.empty, Map.empty, Mappings.empty)
+    val boom = PTask.arr((_: Int) => throw new IllegalStateException("boom"))
+    Seq(true, false).foreach { failLeft =>
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val slow = PTask.arr { (i: Int) => Thread.sleep(300); done.set(true); i }
+      val runs: Seq[() => Any] = Seq(
+        () => (if (failLeft) boom &&& slow else slow &&& boom).run(ctx, 1),
+        () => (if (failLeft) boom *** slow else slow *** boom).run(ctx, (1, 1)))
+      runs.foreach { run =>
+        done.set(false)
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage == "boom" && done.get,
+          s"failLeft=$failLeft: rethrown before the sibling finished")
+      }
+    }
+  }
+
+  test("parMapTask: a failing repetition is rethrown only after every " +
+       "sibling finished; at most maxConcurrent run at once") {
+    import graft.task.{PTask, RunCtx}
+    import java.util.concurrent.atomic.AtomicInteger
+    val ctx = RunCtx(null, Catalog.empty, Map.empty, Mappings.empty)
+    val finished, running, peak = new AtomicInteger(0)
+    val body = PTask.task { (c: RunCtx, ms: Int) =>
+      if (ms == 0) throw new IllegalStateException(s"rep ${c.vars("i")}")
+      peak.accumulateAndGet(running.incrementAndGet(),
+        (a: Int, b: Int) => math.max(a, b))
+      Thread.sleep(ms)
+      running.decrementAndGet()
+      finished.incrementAndGet()
+      ms
+    }
+    val e = intercept[IllegalStateException](
+      graft.rep.Repetition.parMapTask("i", body, maxConcurrent = 4)
+        .run(ctx, Seq("0" -> 0, "1" -> 400, "2" -> 400)))
+    assert(e.getMessage == "rep 0" && finished.get == 2,
+      s"rethrown with ${finished.get} of 2 siblings finished")
+    peak.set(0)
+    val out = graft.rep.Repetition.parMapTask("i", body, maxConcurrent = 2)
+      .run(ctx, (1 to 6).map(i => i.toString -> 50))
+    assert(out == (1 to 6).map(i => i.toString -> 50) && peak.get <= 2)
+  }
+
   test("task algebra utility faces: choice, void, throwTask, logMsg, " +
        "clocked, inNamespace, filterTask (PTask.hs / REP contracts)") {
     import graft.task.{PTask, RunCtx}

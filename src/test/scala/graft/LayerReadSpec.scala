@@ -1,7 +1,8 @@
 package graft
 
 import graft.llm._
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import graft.serial.Formats
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver; for every layer kind the engine writes it must resolve to
   * exactly the schema Spark's inference returns (nullability and the
   * partition columns' inferred types included), and it must fail
-  * exactly as the plain read does where there is nothing to read. */
+  * exactly as the plain read does where there is nothing to read.
+  * A schema-less `graft.serial` parquet source and the memo's
+  * read-backs resolve their schemas through the footer too. */
 class LayerReadSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.builder(4, "layer-read-spec")
@@ -108,6 +111,67 @@ class LayerReadSpec extends AnyFunSuite {
       assert(read.getCondition == plain.getCondition &&
         read.getMessage == plain.getMessage,
         s"$dir: ${read.getMessage} vs ${plain.getMessage}")
+    }
+  }
+
+  private def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+  /** A Spark-written parquet source and a memo entry read back with
+    * the footer schema, starting no job before the action. */
+  private def parquetCases(base: String): Unit = {
+    import spark.implicits._
+    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "x")
+    val src = s"$base/src.parquet"
+    df.write.mode("overwrite").parquet(src)
+    var read: DataFrame = null
+    assert(JobWatch.during(spark) {
+      read = Formats.Parquet.read(spark, Seq(src), None) }
+      .flatMap(_.stages).isEmpty, "a parquet source read must start no job")
+    val plain = spark.read.parquet(src)
+    assert(read.schema == plain.schema && rows(read) == rows(plain))
+    val memo = graft.cache.Memo(spark, s"$base/memo")
+    val key = memo.keyOf(Seq("layer-read-spec", base))
+    val miss = memo.getOrElseUpdate(key)(df.filter(col("id") > 1L))
+    val entry = spark.read.parquet(s"$base/memo/$key")
+    assert(miss.schema == entry.schema && rows(miss) == rows(entry))
+    var hit: Option[DataFrame] = None
+    assert(JobWatch.during(spark) { hit = memo.lookup(key) }
+      .flatMap(_.stages).isEmpty, "a memo hit must start no job")
+    assert(hit.get.schema == entry.schema && rows(hit.get) == rows(entry))
+  }
+
+  test("parquet source and memo hit/miss: footer schema, no job " +
+       "before the action") {
+    parquetCases(scratch("pqfmt"))
+  }
+
+  test("a parquet file without Spark's schema metadata falls back to " +
+       "inference") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val base = scratch("foreign")
+    val file = s"$base/f.parquet"
+    val schema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType(
+        "message m { required int64 id; optional binary name (UTF8); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file)).withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new SimpleGroupFactory(schema)
+    try (1 to 3).foreach(i =>
+      w.write(groups.newGroup().append("id", i.toLong).append("name", s"n$i")))
+    finally w.close()
+    val plain = spark.read.parquet(file)
+    var read: DataFrame = null
+    val jobs = JobWatch.during(spark) {
+      read = Formats.Parquet.read(spark, Seq(file), None) }
+    assert(jobs.nonEmpty, "a footer without Spark metadata must infer")
+    assert(read.schema == plain.schema && rows(read) == rows(plain))
+  }
+
+  test("the parquet source and memo reads on the mock s3a scheme") {
+    MockS3FileSystem.withBucket(spark, scratch("s3")) { s3 =>
+      parquetCases(s"$s3/pq")
     }
   }
 }

@@ -53,6 +53,38 @@ class MockS3FileSystem extends RawLocalFileSystem {
     super.listStatus(f).map(plain)
 }
 
+object MockS3FileSystem {
+
+  /** Register the mock s3a FS and hand the body an s3a:// base URI
+    * whose objects live under the local dir `base`. The conf keys are
+    * restored so other tests see an unpolluted session. */
+  def withBucket[T](spark: org.apache.spark.sql.SparkSession,
+                    base: String)(body: String => T): T = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(base).mkdirs()
+    hconf.set("fs.s3a.impl", classOf[MockS3FileSystem].getName)
+    hconf.set("fs.AbstractFileSystem.s3a.impl",
+      classOf[MockS3AbstractFileSystem].getName)
+    // the engine's s3a conf surface pins the magic committer, whose
+    // factory lives in hadoop-aws (not on the test classpath) — route
+    // committer selection back to the rename-based default for the
+    // mock, everything else from configureS3 stands
+    graft.access.Schemes.configureS3(spark,
+      endpoint = Some("http://localhost:0"), accessKey = Some("test"),
+      secretKey = Some("test"), pathStyleAccess = true)
+    hconf.unset("mapreduce.outputcommitter.factory.scheme.s3a")
+    hconf.unset("fs.s3a.committer.name")
+    try body(s"s3a://graft-test-bucket$base")
+    finally {
+      org.apache.hadoop.fs.FileSystem.closeAll()
+      Seq("fs.s3a.impl", "fs.AbstractFileSystem.s3a.impl",
+        "fs.s3a.endpoint", "fs.s3a.access.key", "fs.s3a.secret.key",
+        "fs.s3a.path.style.access")
+        .foreach(hconf.unset)
+    }
+  }
+}
+
 /** The FileContext face of the same mock: the engine's memo publishes
   * via FileContext.rename (atomic-rename-aside), which resolves
   * `fs.AbstractFileSystem.s3a.impl` independently of `fs.s3a.impl`. */

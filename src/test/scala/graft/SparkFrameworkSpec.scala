@@ -234,4 +234,34 @@ class SparkFrameworkSpec extends AnyFunSuite {
     assert(!empty.hasNext && runs.get == before,
       "an empty stream must not run the task at all")
   }
+
+  test("fan-out branches carry the caller's job group and tags; " +
+       "PTask.named labels the jobs of both branches") {
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val branch = PTask.task { (ctx: graft.task.RunCtx, n: Long) =>
+      threads.add(Thread.currentThread.getName)
+      ctx.spark.range(n).selectExpr("sum(id)").collect()
+      n
+    }
+    val task = (branch &&& branch).named("fanout-outer")
+    // leave an idle pool thread created outside the group: a reused
+    // thread must be given the caller's properties, not inherit them
+    Pipeline.run(spark, branch &&& branch, Mappings.empty, 1L)
+    threads.clear()
+    val sc = spark.sparkContext
+    sc.addJobTag("graft-spec-tag")
+    val jobs = try JobWatch.during(spark) {
+      assert(Pipeline.run(spark, task, Mappings.empty, 10L) == (10L, 10L))
+    } finally sc.removeJobTag("graft-spec-tag")
+    assert(threads.size == 2 &&
+      threads.toArray.exists(_.toString.startsWith("graft-fanout")),
+      s"branch threads: $threads")
+    assert(jobs.size >= 2, s"${jobs.size} jobs")
+    jobs.foreach { j =>
+      assert(j.group == "fanout-outer", s"job group ${j.group}")
+      assert(Option(j.props.getProperty("spark.job.tags"))
+        .exists(_.split(",").contains("graft-spec-tag")),
+        s"job tags ${j.props.getProperty("spark.job.tags")}")
+    }
+  }
 }

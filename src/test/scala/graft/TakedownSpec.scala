@@ -524,37 +524,9 @@ class TakedownSpec extends AnyFunSuite {
   }
 
   /** (has a SQL execution id, stage names) of every job started while
-    * `body` runs. Listener delivery is asynchronous but ordered, so
-    * once a trailing fence job's start has arrived, so has every
-    * earlier job's. */
-  private def jobsDuring(body: => Unit): Seq[(Boolean, Seq[String])] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, Boolean, Seq[String])]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        seen.add((props.map(_.getProperty("graft.spec.fence")).orNull,
-          props.exists(_.getProperty("spark.sql.execution.id") != null),
-          e.stageInfos.map(_.name)))
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      val fence = java.util.UUID.randomUUID().toString
-      sc.setLocalProperty("graft.spec.fence", fence)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.spec.fence", null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.asScala.exists(_._1 == fence) &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.asScala.exists(_._1 == fence), "fence job never seen")
-      seen.asScala.toSeq.filter(_._1 != fence).map(t => (t._2, t._3))
-    } finally sc.removeSparkListener(listener)
-  }
+    * `body` runs. */
+  private def jobsDuring(body: => Unit): Seq[(Boolean, Seq[String])] =
+    JobWatch.during(spark)(body).map(j => (j.inSql, j.stages))
 
   /** Jobs outside any SQL execution whose stage is a parquet read:
     * schema-inference jobs. */
