@@ -394,12 +394,12 @@ object Bench {
     // values-only line and the summary so the guaranteed-intact LAST
     // lines stay exactly what they were.
     if (mins.nonEmpty) {
-      val sortedMins0 = mins.sortBy(_._1)
-      val md5 = java.security.MessageDigest.getInstance("MD5")
-        .digest(sortedMins0.map(_._1).mkString(",")
+      val sortedMins = mins.sortBy(_._1)
+      val namesMd5 = java.security.MessageDigest.getInstance("MD5")
+        .digest(sortedMins.map(_._1).mkString(",")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .take(4).map("%02x".format(_)).mkString
-      val entries = sortedMins0.map { case (k, v) => "\"" + k + "\":" + sec(v) }
+      val entries = sortedMins.map { case (k, v) => "\"" + k + "\":" + sec(v) }
       val chunks = scala.collection.mutable.ArrayBuffer[Seq[String]]()
       var cur = scala.collection.mutable.ArrayBuffer[String]()
       var curLen = 0
@@ -412,15 +412,8 @@ object Bench {
       }
       if (cur.nonEmpty) chunks += cur.toSeq
       chunks.zipWithIndex.foreach { case (c, i) =>
-        println(s"""{"metric":"queries_min_part","i":$i,"k":${chunks.size},"names_md5":"$md5","q":${c.mkString("{", ",", "}")}}""")
+        println(s"""{"metric":"queries_min_part","i":$i,"k":${chunks.size},"names_md5":"$namesMd5","q":${c.mkString("{", ",", "}")}}""")
       }
-    }
-    if (mins.nonEmpty) {
-      val sortedMins = mins.sortBy(_._1)
-      val namesMd5 = java.security.MessageDigest.getInstance("MD5")
-        .digest(sortedMins.map(_._1).mkString(",")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(4).map("%02x".format(_)).mkString
       println(s"""{"metric":"queries_min_sorted","n":${sortedMins.size},"names_md5":"$namesMd5","values":[${sortedMins.map(t => sec(t._2)).mkString(",")}]}""")
     }
     // summary-line outliers: n_outliers always (when bands exist) and

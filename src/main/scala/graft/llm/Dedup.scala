@@ -469,48 +469,15 @@ object Dedup {
     * per slab), 60% on the natural Zipfian sf0.1 text (329k → 132k),
     * 56% at natural 16x (100M → 45M) — a steady ~2x+ across regimes,
     * not the order-of-magnitude a heavier-tailed prefix would give. */
-  private def prefixCandidates(prefix: DataFrame, threshold: Double,
-                               dedupe: Boolean = true,
-                               asymmetric: Boolean = false): DataFrame = {
+  private def prefixCandidates(prefix: DataFrame,
+                               threshold: Double): DataFrame = {
     val alphaD = lit(threshold / (1.0 + threshold)) *
       (col("sz_a") + col("sz_b")).cast("double")
-    // ASYMMETRIC INDEX PREFIX (PPJoin's indexing/probing split, the
-    // r20-verdict candidate-term cut): canonicalize pairs on
-    // (sz, id) instead of id, so side A is always the SMALLER doc —
-    // then |B| >= |A| gives α = ceil(t/(1+t)·(|A|+|B|)) >=
-    // ceil(2t/(1+t)·|A|), and the prefix lemma (all-shared-past-p
-    // leaves < α positions) shortens A's required prefix from
-    // (1−t)·|A|+1 to (1−t)/(1+t)·|A|+1 (1/3 shorter at t = 0.5). The
-    // first-in-global-order shared shingle of a true pair lies inside
-    // BOTH prefixes and passes the positional filter (every other
-    // shared shingle ranks later in both docs), so the surviving
-    // candidate set — and the verified output — is IDENTICAL to the
-    // symmetric join's; only the A-side join input shrinks, BEFORE
-    // the exchange (guide §3.2 reduce-before-shuffle). The ceil runs
-    // on −1e-9 so double noise only lengthens the prefix. Used by the
-    // slab form, where the prefix stream is parquet-materialized and
-    // the two differently-filtered reads are partition-pruned scans;
-    // the one-pass form keeps the symmetric self-join, whose
-    // identical subtrees share ONE exchange (ReuseExchange) — a
-    // second filtered subtree there would recompute the df+window
-    // stream from scratch.
-    val idxPrefixLen = col("sz") -
-      ceil(lit(2.0 * threshold / (1.0 + threshold)) *
-        col("sz").cast("double") - lit(1e-9)) + 1
-    val sideA =
-      (if (asymmetric) prefix.filter(col("rk") <= idxPrefixLen)
-       else prefix)
-        .select(col("s"), col("id").as("id_a"),
-          col("sz").as("sz_a"), col("rk").as("rk_a"))
-    val orient =
-      if (asymmetric)
-        col("sz_a") < col("sz_b") ||
-          (col("sz_a") === col("sz_b") && col("id_a") < col("id_b"))
-      else col("id_a") < col("id_b")
-    val candRaw = sideA
+    prefix.select(col("s"), col("id").as("id_a"),
+        col("sz").as("sz_a"), col("rk").as("rk_a"))
       .join(prefix.select(col("s"), col("id").as("id_b"),
         col("sz").as("sz_b"), col("rk").as("rk_b")), Seq("s"))
-      .filter(orient &&
+      .filter(col("id_a") < col("id_b") &&
         col("sz_a").cast("double") >=
           lit(threshold) * col("sz_b").cast("double") - lit(1e-9) &&
         col("sz_b").cast("double") >=
@@ -518,29 +485,9 @@ object Dedup {
         (lit(1) + least(col("sz_a") - col("rk_a"),
           col("sz_b") - col("rk_b"))).cast("double") >=
           ceil(alphaD - lit(1e-9)))
-    // size-canonical pairs re-emit in id order (the output contract)
-    val cand =
-      if (asymmetric)
-        candRaw.select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"))
-      else candRaw.select(col("id_a"), col("id_b"))
-    // dedupe=false: a pair sharing k prefix shingles reaches the
-    // verify k times and the CALLER dedupes after verification —
-    // correct whenever the caller's output is deduplicated (the slab
-    // operator's final distinct), and cheaper whenever k's mean is
-    // small and verify is cheap (the α-bounded kernel): it drops one
-    // whole shuffle + hash-dedup of the multi-million-row candidate
-    // stream. Measured A/B in graft.tools.JaccardDiag --e2e.
-    if (dedupe) cand.distinct() else cand
+      .select(col("id_a"), col("id_b"))
+      .distinct()
   }
-
-  /** Diag-only accessor for [[prefixCandidates]] (the tools package
-    * A/Bs the distinct placement and the asymmetric index prefix on
-    * a replayed slab). */
-  private[graft] def prefixCandidatesForDiag(prefix: DataFrame,
-      threshold: Double, dedupe: Boolean,
-      asymmetric: Boolean = false): DataFrame =
-    prefixCandidates(prefix, threshold, dedupe, asymmetric)
 
   /** [[jaccardPairsPrefix]] in an OUT-OF-CORE slab form: identical
     * output (same prefix-filter lemma, same exact verification), with

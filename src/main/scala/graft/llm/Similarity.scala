@@ -770,7 +770,6 @@ object Similarity {
     * sidecar reproduces the model bit-for-bit. */
   private[llm] val CentroidSidecar = "_centroids.txt"
   private[llm] val BooksSidecar = "_books.txt"
-  private val SidecarStaged = "_SIDECAR_NEW.txt"
 
   private def writeModelSidecar(fs: org.apache.hadoop.fs.FileSystem,
                                 path: org.apache.hadoop.fs.Path,
@@ -833,23 +832,14 @@ object Similarity {
     * rows. Cells untouched by the migration keep their files
     * byte-for-byte. Returns `(rowsMoved, cellsRewritten)`.
     *
-    * Mechanics: new rows land in an underscore temp dir inside the
-    * index (invisible to readers); once the temp write is COMPLETE a
-    * commit marker (`_PATCH_COMMIT`, the affected-cell list with a
-    * has-fresh-content flag per cell) is written inside it, and only
-    * then are live `cell_id=` partitions swapped. CRASH SAFE via the
-    * marker: a temp dir WITHOUT the marker is pre-commit garbage (no
-    * live partition was touched yet — a rerun deletes it and
-    * recomputes); a temp dir WITH the marker is the authoritative
-    * source for the swap, so every entry FIRST completes the pending
-    * swap from it (flag=1 cells whose fresh dir is still in the temp
-    * are renamed in; flag=0 cells' lives are deleted — their new
-    * content is empty; flag=1 cells whose fresh dir is gone were
-    * already swapped and are left alone) before recomputing. No live
-    * row is ever deleted while its only other copy is deletable
-    * state. IDEMPOTENT-CONVERGENT under crash at ANY point:
-    * assignments depend only on (vector, newCents), so recovery +
-    * re-patch converges to the same layout.
+    * Mechanics: the affected cells' new content and the refreshed
+    * `_centroids.txt` sidecar are swapped in under one [[Swap.commit]]
+    * (the sidecar is the marker's last entry), so past recovery the
+    * layout never pairs new cells with the old sidecar or the
+    * reverse. A patch that moves nothing swaps in the sidecar alone.
+    * IDEMPOTENT-CONVERGENT under crash at ANY point: assignments
+    * depend only on (vector, newCents), so recovery + re-patch
+    * converges to the same layout.
     *
     * Scale: cost is one index scan plus writes proportional to the
     * AFFECTED cells' row mass — a 0.1%-migration refresh rewrites
@@ -861,11 +851,10 @@ object Similarity {
                     vecCol: String = "embedding"): (Long, Long) = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    completePendingPatch(spark, fs, root)
-    // a committed-but-unswapped TAKEDOWN must land before this patch
-    // reads the index, or the patch would re-assign (and the pending
-    // swap later resurrect) rows destined for removal
-    Takedown.completePending(spark, indexDir)
+    // a committed-but-unswapped takedown must land before this patch
+    // reads the index, or the patch would re-assign rows destined for
+    // removal
+    Swap.completePending(spark, indexDir)
     // a standing delta segment holds assignments under the CURRENT
     // sidecar; patching around it would leave those stale (served
     // through wrong probes) — fold it first
@@ -900,132 +889,26 @@ object Similarity {
     val moved = stats.getLong(0)
     val affected = (stats.getSeq[Long](1) ++ stats.getSeq[Long](2))
       .distinct.sorted
-    if (affected.isEmpty) {
-      // nothing moves, but the refreshed set is now the layout's
-      // model (a rebuild under newCents would produce these exact
-      // assignments) — keep the sidecar in step so serving matches
+    // with nothing moved the refreshed set still becomes the layout's
+    // model (a rebuild under newCents would produce these exact
+    // assignments), so the sidecar entry swaps in either way
+    Swap.commit(spark, indexDir,
+        affected.map(c => s"cell_id=$c") :+ CentroidSidecar) { tmp =>
+      // full new content of every affected partition (movers in,
+      // stayers kept, leavers gone; a cell left empty writes no dir
+      // and disappears) — written while the index is still readable
+      if (affected.nonEmpty)
+        graft.Writes.clusterByPartitions(
+            re.filter(col("_to").isin(affected: _*))
+              .select(carried.map(col) :+ col("_to").as("cell_id"): _*),
+            "cell_id")
+          .write.partitionBy("cell_id").parquet(tmp.toString)
       writeModelSidecar(fs,
-        new org.apache.hadoop.fs.Path(root, CentroidSidecar),
+        new org.apache.hadoop.fs.Path(tmp, CentroidSidecar),
         newCents.zipWithIndex.map { case (v, i) => (0, i.toLong, v) })
-      return (0L, 0L)
     }
-    val tmp = new org.apache.hadoop.fs.Path(root, PatchTmpName)
-    // completePendingPatch left at most pre-commit garbage here
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // full new content of every affected partition (movers in, stayers
-    // kept, leavers gone) — written while the index is still readable
-    graft.Writes.clusterByPartitions(
-        re.filter(col("_to").isin(affected: _*))
-          .select(carried.map(col) :+ col("_to").as("cell_id"): _*),
-        "cell_id")
-      .write.partitionBy("cell_id").parquet(tmp.toString)
-    // commit point: the marker records which cells have fresh content
-    // (a cell that lost everything and gained nothing has none — its
-    // partition legitimately disappears). Until it exists, tmp is
-    // garbage and the live index is untouched; once it exists, the
-    // swap below (and any crash-recovery rerun) completes from tmp.
-    val cells = affected.map(c => c -> fs.exists(
-      new org.apache.hadoop.fs.Path(tmp, s"cell_id=$c")))
-    writePatchMarker(fs, tmp, cells)
-    // the refreshed centroid sidecar is staged INSIDE the committed
-    // temp dir and finalized by the same swap (or its crash
-    // recovery), so readers can never observe new partitions with the
-    // old model or vice versa past a completed patch
-    stageSidecar(fs, tmp, CentroidSidecar,
-      newCents.zipWithIndex.map { case (v, i) => (0, i.toLong, v) })
-    applyPatchSwap(fs, root, tmp, cells)
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(indexDir)
     (moved, affected.length.toLong)
     } finally re.unpersist(blocking = false)
-  }
-
-  private val PatchTmpName = "_patch_tmp"
-  private val PatchMarkerName = "_PATCH_COMMIT"
-
-  private def writePatchMarker(fs: org.apache.hadoop.fs.FileSystem,
-                               tmp: org.apache.hadoop.fs.Path,
-                               cells: Seq[(Long, Boolean)]): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(tmp, PatchMarkerName), true)
-    try out.write(cells.map { case (c, hasFresh) =>
-      s"$c ${if (hasFresh) 1 else 0}"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Execute (or re-execute) the partition swap for a COMMITTED patch
-    * temp dir. Safe to rerun from any crash point: delete-live happens
-    * only when the fresh replacement still sits in tmp (flag=1, fresh
-    * present) or when the marker proves the new content is empty
-    * (flag=0); a flag=1 cell whose fresh dir is gone was already
-    * renamed into place and is left untouched. */
-  private def applyPatchSwap(fs: org.apache.hadoop.fs.FileSystem,
-                             root: org.apache.hadoop.fs.Path,
-                             tmp: org.apache.hadoop.fs.Path,
-                             cells: Seq[(Long, Boolean)],
-                             partCol: String = "cell_id"): Unit = {
-    cells.foreach { case (c, hasFresh) =>
-      val live = new org.apache.hadoop.fs.Path(root, s"$partCol=$c")
-      val fresh = new org.apache.hadoop.fs.Path(tmp, s"$partCol=$c")
-      if (hasFresh) {
-        if (fs.exists(fresh)) {
-          if (fs.exists(live)) fs.delete(live, true)
-          require(fs.rename(fresh, live),
-            s"patch rename $fresh -> $live failed")
-        } // else: already swapped by a prior (crashed) run — leave it
-      } else if (fs.exists(live)) fs.delete(live, true)
-    }
-    // finalize a staged model sidecar (idempotent overwrite — safe to
-    // replay from crash recovery like the cell swaps above)
-    val staged = new org.apache.hadoop.fs.Path(tmp, SidecarStaged)
-    if (fs.exists(staged)) {
-      val (name, payload) =
-        graft.Writes.readUtf8(fs, staged).span(_ != '\n')
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(root, name.trim), true)
-      try out.write(payload.drop(1).getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
-
-  /** Stage a refreshed model sidecar inside a (to-be-)committed patch
-    * temp dir: first line = the target sidecar file name, rest = the
-    * [[writeModelSidecar]] payload. [[applyPatchSwap]] finalizes it. */
-  private def stageSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                           tmp: org.apache.hadoop.fs.Path, name: String,
-                           rows: Seq[(Int, Long, Seq[Double])]): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(tmp, SidecarStaged), true)
-    try out.write((name + "\n" + rows.map { case (g, i, v) =>
-      s"$g $i " + v.map(_.toString).mkString(" ")
-    }.mkString("", "\n", "\n")).getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Entry-time crash recovery for [[ivfPatchIndex]]: a leftover
-    * `_patch_tmp` WITH its `_PATCH_COMMIT` marker is the authoritative
-    * source for an interrupted swap — finish it before anything reads
-    * or recomputes the index. Without the marker the temp write never
-    * completed and no live partition was touched: plain garbage. */
-  private[llm] def completePendingPatch(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      partCol: String = "cell_id"): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(root, PatchTmpName)
-    if (!fs.exists(tmp)) return
-    val marker = new org.apache.hadoop.fs.Path(tmp, PatchMarkerName)
-    if (fs.exists(marker)) {
-      val cells = graft.Writes.readUtf8(fs, marker).split("\n").iterator
-        .map(_.trim).filter(_.nonEmpty)
-        .map { line =>
-          val Array(c, f) = line.split(" ")
-          c.toLong -> (f == "1")
-        }.toSeq
-      applyPatchSwap(fs, root, tmp, cells, partCol)
-    }
-    fs.delete(tmp, true)
   }
 
   /** IVF search over a persisted [[ivfWriteIndex]] layout. The probed
@@ -1099,10 +982,7 @@ object Similarity {
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    completePendingPatch(spark, fs, root)
-    Takedown.completePending(spark, indexDir)
+    Swap.completePending(spark, indexDir)
     val cents = ivfIndexCentroids(spark, indexDir).getOrElse(
       throw new IllegalArgumentException(
         s"$indexDir has no $CentroidSidecar sidecar — append needs " +
@@ -1125,7 +1005,7 @@ object Similarity {
   /** Fold the `_delta` side segment into the main `cell_id=`
     * partitions: only cells that actually received delta rows are
     * rewritten (main rows + delta rows of each affected cell, one
-    * partition-keyed write), swapped under the SAME commit-marker
+    * partition-keyed write), swapped under the SAME [[Swap]]
     * protocol as takedown — the marker's final entry deletes the
     * delta dir itself, so a crash at any point either leaves the
     * layer fully readable (main ∪ delta) or is completed by the next
@@ -1144,14 +1024,13 @@ object Similarity {
       : (Long, Long) = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    completePendingPatch(spark, fs, root, partCol)
-    Takedown.completePending(spark, indexDir)
+    Swap.completePending(spark, indexDir)
     val deltaPath = new org.apache.hadoop.fs.Path(root, DeltaDirName)
     if (!fs.exists(deltaPath)) return (0L, 0L)
     // a committed-but-unswapped takedown INSIDE the delta (its scrub
     // runs under the delta root) must land before the fold reads it,
     // or removed rows would be absorbed into main
-    Takedown.completePending(spark, deltaPath.toString)
+    Swap.completePending(spark, deltaPath.toString)
     // a takedown may have emptied every batch — an empty delta is
     // garbage, not a fold input (parquet cannot even infer a schema)
     if (!fs.exists(deltaPath) || !fs.listStatus(deltaPath)
@@ -1173,22 +1052,17 @@ object Similarity {
     val mainCols = main.columns.toSeq
     def norm(df: DataFrame) = df.select(mainCols.map(c =>
       if (c == partCol) col(c).cast("long").as(c) else col(c)): _*)
-    val tmp = new org.apache.hadoop.fs.Path(root, Takedown.TmpName)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    graft.Writes.clusterByPartitions(
-        norm(main.filter(col(partCol).isin(affected: _*)))
-          .unionByName(norm(delta)), partCol)
-      .write.partitionBy(partCol).parquet(tmp.toString)
     // partitions only GAIN rows here, so fresh content exists for
-    // every affected one; the trailing flag=0 entry deletes the
-    // absorbed delta as the swap's last step (replayed on recovery)
-    val entries = affected.map(c => (s"$partCol=$c",
-      fs.exists(new org.apache.hadoop.fs.Path(tmp, s"$partCol=$c")))) :+
-      (DeltaDirName -> false)
-    Takedown.writeMarker(fs, tmp, entries)
-    Takedown.applySwap(fs, root, tmp, entries)
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(indexDir)
+    // every affected one; the trailing entry has none under tmp, so
+    // the swap's last step deletes the absorbed delta (replayed on
+    // recovery)
+    Swap.commit(spark, indexDir,
+        affected.map(c => s"$partCol=$c") :+ DeltaDirName) { tmp =>
+      graft.Writes.clusterByPartitions(
+          norm(main.filter(col(partCol).isin(affected: _*)))
+            .unionByName(norm(delta)), partCol)
+        .write.partitionBy(partCol).parquet(tmp.toString)
+    }
     (merged, affected.length.toLong)
   }
 
@@ -1980,11 +1854,10 @@ object Similarity {
                    nBuckets: Int = 16): (Long, Long) = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    completePendingPatch(spark, fs, root, "pq_bucket")
-    // a committed-but-unswapped TAKEDOWN must land before this patch
-    // reads the index, or the patch would re-encode (and the pending
-    // swap later resurrect) rows destined for removal
-    Takedown.completePending(spark, indexDir)
+    // a committed-but-unswapped takedown must land before this patch
+    // reads the index, or the patch would re-encode rows destined for
+    // removal
+    Swap.completePending(spark, indexDir)
     // a standing delta was encoded under the CURRENT sidecar books;
     // patching around it would leave stale codes served — fold first
     require(!fs.exists(
@@ -2034,29 +1907,22 @@ object Similarity {
       .collect()(0)
     val moved = stats.getLong(0)
     val affected = stats.getSeq[Long](1).sorted
-    if (moved == 0L) {
-      // same codes under both books: the standing table already IS
-      // the newBooks encoding — only the sidecar needs to advance
+    // with no code changed the standing table already IS the newBooks
+    // encoding and only the sidecar entry swaps in; buckets never
+    // disappear (id-hash membership is books-independent), so every
+    // affected bucket has fresh content
+    Swap.commit(spark, indexDir,
+        affected.map(b => s"pq_bucket=$b") :+ BooksSidecar) { tmp =>
+      if (affected.nonEmpty)
+        graft.Writes.clusterByPartitions(
+            re.filter(col("pq_bucket").isin(affected: _*))
+              .select(col(idCol), col("_new").as("codes"),
+                col("pq_bucket")), "pq_bucket")
+          .write.partitionBy("pq_bucket").parquet(tmp.toString)
       writeModelSidecar(fs,
-        new org.apache.hadoop.fs.Path(root, BooksSidecar),
+        new org.apache.hadoop.fs.Path(tmp, BooksSidecar),
         booksRows(newBooks))
-      return (0L, 0L)
     }
-    val tmp = new org.apache.hadoop.fs.Path(root, PatchTmpName)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    graft.Writes.clusterByPartitions(
-        re.filter(col("pq_bucket").isin(affected: _*))
-          .select(col(idCol), col("_new").as("codes"),
-            col("pq_bucket")), "pq_bucket")
-      .write.partitionBy("pq_bucket").parquet(tmp.toString)
-    // buckets never disappear (id-hash membership is books-independent),
-    // so every affected bucket has fresh content — flag always true
-    val cells = affected.map(_ -> true).toSeq
-    writePatchMarker(fs, tmp, cells)
-    stageSidecar(fs, tmp, BooksSidecar, booksRows(newBooks))
-    applyPatchSwap(fs, root, tmp, cells, "pq_bucket")
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(indexDir)
     (moved, affected.length.toLong)
     } finally re.unpersist(blocking = false)
   }
@@ -2109,10 +1975,7 @@ object Similarity {
                     vecCol: String = "embedding",
                     nBuckets: Int = 16): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    completePendingPatch(spark, fs, root, "pq_bucket")
-    Takedown.completePending(spark, indexDir)
+    Swap.completePending(spark, indexDir)
     val books = pqIndexBooks(spark, indexDir).getOrElse(
       throw new IllegalArgumentException(
         s"$indexDir has no $BooksSidecar sidecar — append needs the " +

@@ -26,17 +26,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (porcupine-core/src/System/TaskPipeline/Run.hs:72-81); takedown
   * is the maintenance face of those layers.
   *
-  * Protocol (the ivfPatchIndex marker protocol, generalized to
-  * subdir-qualified partitions): fresh content for every affected
-  * partition is written under an invisible `_takedown_tmp` while the
-  * live layer stays readable; a `_TAKEDOWN_COMMIT` marker (one
-  * `<hasFresh> <relativePartitionPath>` line per swap) is the commit
-  * point; only then are live partitions swapped (delete live, rename
-  * fresh in — a flag=0 entry means the partition lost every row and
-  * legitimately disappears). Entry-time [[completePending]] replays
-  * a committed tmp and clears an uncommitted one, so reruns converge
-  * from any crash point. Untouched partitions keep their files
-  * byte-for-byte.
+  * Every mutation commits through [[Swap]]; see there for the
+  * protocol and its crash recovery.
   *
   * Scale: discovery is one semi-join of the layer against the
   * (broadcast) id set; rewrites are anti-joins over ONLY the
@@ -44,12 +35,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * affected partitions' row mass — a takedown touching 0.1% of
   * partitions rewrites 0.1% of the artifact. */
 object Takedown {
-
-  // shared with Similarity.ivfCompactDelta — the delta fold rides the
-  // SAME tmp/marker/swap protocol (and therefore the same entry-time
-  // recovery every maintenance face already runs)
-  private[llm] val TmpName = "_takedown_tmp"
-  private[llm] val MarkerName = "_TAKEDOWN_COMMIT"
 
   /** One completed layer mutation: partitions rewritten (or dropped)
     * and rows removed. (0, 0) means the id set did not intersect the
@@ -65,66 +50,6 @@ object Takedown {
     * a `distinct` here would cost a shuffle job per broadcast. */
   private def idFrame(ids: DataFrame, idCol: String): DataFrame =
     broadcast(ids.select(col(ids.columns.head).as(idCol)))
-
-  // ---------------------------------------------------------------
-  // The shared swap protocol
-  // ---------------------------------------------------------------
-
-  private[llm] def writeMarker(fs: FileSystem, tmp: Path,
-                               entries: Seq[(String, Boolean)]): Unit = {
-    val out = fs.create(new Path(tmp, MarkerName), true)
-    try out.write(entries.map { case (rel, hasFresh) =>
-      s"${if (hasFresh) 1 else 0} $rel"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Execute (or re-execute) the swap for a COMMITTED takedown tmp.
-    * Safe to rerun from any crash point: delete-live happens only
-    * when the fresh replacement still sits in tmp (flag=1, fresh
-    * present) or when the marker proves the partition's new content
-    * is empty (flag=0); a flag=1 entry whose fresh dir is gone was
-    * already renamed into place and is left alone. */
-  private[llm] def applySwap(fs: FileSystem, root: Path, tmp: Path,
-                             entries: Seq[(String, Boolean)]): Unit =
-    entries.foreach { case (rel, hasFresh) =>
-      val live = new Path(root, rel)
-      val fresh = new Path(tmp, rel)
-      if (hasFresh) {
-        if (fs.exists(fresh)) {
-          if (fs.exists(live)) fs.delete(live, true)
-          require(fs.rename(fresh, live),
-            s"takedown rename $fresh -> $live failed")
-        } // else: already swapped by a prior (crashed) run
-      } else if (fs.exists(live)) fs.delete(live, true)
-    }
-
-  /** Entry-time crash recovery: a leftover `_takedown_tmp` under
-    * `dir` WITH its `_TAKEDOWN_COMMIT` marker is the authoritative
-    * source for an interrupted swap — finish it before anything
-    * reads or recomputes the layer. Without the marker the temp
-    * write never completed and no live partition was touched: plain
-    * garbage, cleared. Public so operators can force recovery before
-    * serving after a suspected crash; every takedown entry point
-    * calls it automatically. */
-  def completePending(spark: SparkSession, dir: String): Unit = {
-    val root = new Path(dir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return
-    val tmp = new Path(root, TmpName)
-    if (!fs.exists(tmp)) return
-    val marker = new Path(tmp, MarkerName)
-    if (fs.exists(marker)) {
-      val entries = graft.Writes.readUtf8(fs, marker).split("\n")
-        .iterator.map(_.trim).filter(_.nonEmpty).map { line =>
-          val (flag, rel) = line.span(_ != ' ')
-          (rel.drop(1), flag == "1")
-        }.toSeq
-      applySwap(fs, root, tmp, entries)
-    }
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(dir)
-  }
 
   // ---------------------------------------------------------------
   // Batch-keyed ingest layers (corpus / signature / any
@@ -178,19 +103,25 @@ object Takedown {
     }
     val names = fs.listStatus(root).map(_.getPath.getName).toSeq
     def classifyTmp(tmpName: String, markerName: String,
-                    label: String): Unit =
+                    label: String)(detail: Boolean => String): Unit =
       if (names.contains(tmpName)) {
         val committed =
           fs.exists(new Path(new Path(root, tmpName), markerName))
         out += ((label,
           if (committed) "pending-committed" else "uncommitted-garbage",
-          if (committed)
-            "recovery state: the next maintenance entry completes it"
-          else "pre-commit leftovers: provably untouched layer, " +
-            "cleared on the next entry"))
+          detail(committed)))
       }
-    classifyTmp(TmpName, MarkerName, "takedown-swap")
-    classifyTmp("_patch_tmp", "_PATCH_COMMIT", "index-patch")
+    classifyTmp(Swap.TmpName, Swap.MarkerName, "takedown-swap") { c =>
+      if (c) "recovery state: the next maintenance entry completes it"
+      else "pre-commit leftovers: provably untouched layer, " +
+        "cleared on the next entry"
+    }
+    classifyTmp(Swap.LegacyPatchTmp, Swap.LegacyPatchMarker,
+        "index-patch") { _ =>
+      "left by an earlier build's index patch: finish it with that " +
+        "build; this build's maintenance entries refuse the layer " +
+        "while it stands"
+    }
     names.filter(_.startsWith("_compact_tmp_")).foreach { n =>
       out += (("compaction-temp", "uncommitted-garbage",
         s"$n: pre-rename fold output, cleared on the next compaction"))
@@ -285,7 +216,7 @@ object Takedown {
     val root = new Path(layerDir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
-    completePending(spark, layerDir)
+    Swap.completePending(spark, layerDir)
     val idsB = idFrame(ids, idCol)
     val layer = graft.Writes.readParquet(spark, layerDir)
     // partition-inference types the key as INT when values fit —
@@ -297,24 +228,17 @@ object Takedown {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .sortBy(_._1)
     if (affected.isEmpty) return (0L, 0L)
-    val tmp = new Path(root, TmpName)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     // full post-takedown content of every affected partition, ONE
     // job, partition-keyed into tmp (an emptied partition writes no
-    // dir — its flag comes out 0 and the live dir legitimately
-    // disappears at swap)
-    graft.Writes.clusterByPartitions(
-        layer.filter(col(partCol).cast("long")
-            .isin(affected.map(_._1): _*))
-          .join(idsB, Seq(idCol), "left_anti"), partCol)
-      .write.partitionBy(partCol).parquet(tmp.toString)
-    val entries = affected.map { case (p, _) =>
-      (s"$partCol=$p", fs.exists(new Path(tmp, s"$partCol=$p")))
+    // dir, so the swap drops its live dir)
+    Swap.commit(spark, layerDir,
+        affected.map { case (p, _) => s"$partCol=$p" }.toSeq) { tmp =>
+      graft.Writes.clusterByPartitions(
+          layer.filter(col(partCol).cast("long")
+              .isin(affected.map(_._1): _*))
+            .join(idsB, Seq(idCol), "left_anti"), partCol)
+        .write.partitionBy(partCol).parquet(tmp.toString)
     }
-    writeMarker(fs, tmp, entries)
-    applySwap(fs, root, tmp, entries)
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(layerDir)
     (affected.map(_._2).sum, affected.length.toLong)
   }
 
@@ -323,18 +247,14 @@ object Takedown {
     * centroids are untouched (dropping rows does not move cells), so
     * the `_centroids.txt` sidecar stays authoritative and
     * [[Similarity.ivfTopKIndexedAuto]] serves the patched layout
-    * directly. Completes any pending PATCH first (a committed
-    * `_patch_tmp` would later swap pre-takedown content back in —
-    * taken-down rows must never resurrect). */
+    * directly. */
   def ivfTakedown(spark: SparkSession, indexDir: String,
                   ids: DataFrame, idCol: String = "vec_id"): Audit =
     denseTakedown(spark, indexDir, ids, idCol, "cell_id")
 
   /** [[layerTakedown]] over a [[Similarity.pqWriteIndex]] layout
     * (`pq_bucket=` partitions of (id, codes)); codebooks untouched,
-    * `_books.txt` sidecar stays authoritative. Completes any pending
-    * PQ patch first, for the same resurrection reason as
-    * [[ivfTakedown]]. */
+    * `_books.txt` sidecar stays authoritative. */
   def pqTakedown(spark: SparkSession, indexDir: String,
                  ids: DataFrame, idCol: String = "vec_id"): Audit =
     denseTakedown(spark, indexDir, ids, idCol, "pq_bucket")
@@ -345,18 +265,17 @@ object Takedown {
     * appended-then-taken-down vectors would otherwise survive in the
     * serving union. The two scrubs run as concurrent jobs: each swaps
     * under its own root's `_takedown_tmp`, and the main listing skips
-    * the underscore delta dir. Every ROOT-level pending swap lands
-    * before the fork — a committed compaction marker at the root
-    * deletes `_delta` as its last entry, which must not race the
-    * delta scrub. */
+    * the underscore delta dir. The root's pending swap lands before
+    * the fork — a committed compaction marker at the root deletes
+    * `_delta` as its last entry, which must not race the delta
+    * scrub. */
   private def denseTakedown(spark: SparkSession, indexDir: String,
                             ids: DataFrame, idCol: String,
                             partCol: String): Audit = {
     val root = new Path(indexDir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
-    Similarity.completePendingPatch(spark, fs, root, partCol)
-    completePending(spark, indexDir)
+    Swap.completePending(spark, indexDir)
     val deltaDir = s"$indexDir/${Similarity.DeltaDirName}"
     val scrubs = Seq(deltaDir -> "ingest_batch", indexDir -> partCol)
       .filter { case (dir, _) => fs.exists(new Path(dir)) }
@@ -403,7 +322,7 @@ object Takedown {
     val root = new Path(indexDir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
-    completePending(spark, indexDir)
+    Swap.completePending(spark, indexDir)
     val postDir = s"$indexDir/postings"
     if (!fs.exists(new Path(postDir))) return (0L, 0L)
     val idsB = idFrame(ids, idCol)
@@ -443,18 +362,14 @@ object Takedown {
           s"matching stats partition — compact postings/ and stats/ " +
           s"at the same watermark so the subdirs stay id-aligned")
     }
-    val tmp = new Path(root, TmpName)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     // the three tmp writes below (postings / stats / termdf) read
     // disjoint live subdirs and write disjoint tmp subdirs, so they
     // run as CONCURRENT Spark jobs (thread-safe on one session; rm
     // is already materialized by the debits collect). The commit
-    // marker still lands only after ALL of them complete — the crash
-    // protocol is unchanged, an uncommitted tmp is recovered by
-    // completePending either way.
+    // marker still lands only after ALL of them complete.
     // fresh postings for every affected batch: ONE partition-keyed
-    // anti-join write (an emptied batch writes no dir -> flag 0)
-    val postJob = () => {
+    // anti-join write (an emptied batch writes no dir -> dropped)
+    val postJob = (tmp: Path) => {
       graft.Writes.clusterByPartitions(
           post.filter(col("ingest_batch").cast("long")
               .isin(batches: _*))
@@ -467,7 +382,7 @@ object Takedown {
     val debitRows = debits.map { case (b, _, n, dl) => (b, n, dl) }
     import spark.implicits._
     val debitDf = debitRows.toSeq.toDF("_b", "_n_rm", "_dl_rm")
-    val statsJob = () => {
+    val statsJob = (tmp: Path) => {
       graft.Writes.readParquet(spark, s"$indexDir/stats")
         .filter(col("ingest_batch").cast("long").isin(batches: _*))
         .groupBy(col("ingest_batch").cast("long").as("_b"))
@@ -490,7 +405,7 @@ object Takedown {
     // serve's cost routing toward always-full-scan on churned layers.
     val tdBatches = batches.filter(b =>
       fs.exists(new Path(root, s"termdf/ingest_batch=$b")))
-    val termdfJob = () => {
+    val termdfJob = (tmp: Path) => {
       if (tdBatches.nonEmpty) {
         // from the persisted removed-rows subset — no second postings
         // scan (one postings row per (doc, term), so count IS the df
@@ -520,26 +435,17 @@ object Takedown {
           .parquet(new Path(tmp, "termdf").toString)
       }
     }
+    val rels = batches.map(b => s"postings/ingest_batch=$b") ++
+      batches.map(b => s"stats/ingest_batch=$b") ++
+      tdBatches.map(b => s"termdf/ingest_batch=$b")
     // every write COMPLETES before any failure surfaces: a retried
-    // takedown deletes tmp at the top, and an orphan writer could
-    // otherwise land stale subdirs under the retry's tmp that its
-    // marker then commits
-    graft.task.Fanout.all(spark, Seq(postJob, statsJob, termdfJob))
-    val entries = batches.map { b =>
-      (s"postings/ingest_batch=$b",
-        fs.exists(new Path(tmp, s"postings/ingest_batch=$b")))
-    } ++ batches.map(b => (s"stats/ingest_batch=$b", true)) ++
-      tdBatches.map { b =>
-        (s"termdf/ingest_batch=$b",
-          fs.exists(new Path(tmp, s"termdf/ingest_batch=$b")))
-      }
-    writeMarker(fs, tmp, entries.toSeq)
-    applySwap(fs, root, tmp, entries.toSeq)
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(postDir)
-    spark.catalog.refreshByPath(s"$indexDir/stats")
-    if (tdBatches.nonEmpty)
-      spark.catalog.refreshByPath(s"$indexDir/termdf")
+    // takedown clears tmp before its stage, and an orphan writer
+    // could otherwise land stale subdirs under the retry's tmp that
+    // its marker then commits
+    Swap.commit(spark, indexDir, rels.toSeq) { tmp =>
+      graft.task.Fanout.all(spark,
+        Seq(postJob, statsJob, termdfJob).map(job => () => job(tmp)))
+    }
     (debits.map(_._2).sum, batches.length.toLong)
     } finally rm.unpersist(blocking = false)
   }

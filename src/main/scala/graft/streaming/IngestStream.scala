@@ -989,18 +989,14 @@ object IngestStream {
       : Option[Map[String, Set[(String, Long)]]] = {
     val p = new org.apache.hadoop.fs.Path(dir, CompactSourcesMarker)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toSeq
-        .map { line =>
-          val Array(name, rel, len) = line.split("\t", 3)
-          (name, (rel, len.toLong))
-        }.groupBy(_._1).map { case (n, xs) =>
-          n -> xs.map(_._2).toSet
-        })
-      finally in.close()
-    }
+    else Some(graft.Writes.readUtf8(fs, p).split("\n").toSeq
+      .filter(_.nonEmpty)
+      .map { line =>
+        val Array(name, rel, len) = line.split("\t", 3)
+        (name, (rel, len.toLong))
+      }.groupBy(_._1).map { case (n, xs) =>
+        n -> xs.map(_._2).toSet
+      })
   }
 
   /** The shared compaction machinery: list `ingest_batch=` partitions

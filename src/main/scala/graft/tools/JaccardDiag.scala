@@ -40,141 +40,6 @@ object JaccardDiag {
       spark.stop()
       return
     }
-    // --e2e: END-TO-END pipeline A/B on one slab — the shipped shape
-    // (candidates -> DISTINCT -> verify) vs the distinct-free shape
-    // (candidates -> verify duplicates -> distinct the verified
-    // output). With the α-bounded kernel making verify ~2x cheaper
-    // (r19), the 33M-row candidate distinct became the measured
-    // dominant slab term; the B shape trades duplicate verify work
-    // (cheap, bounded by the prefix length) for one whole shuffle +
-    // dedup of the candidate stream. A DISCARDED warm-up rep runs
-    // first (r19 protocol caveat: cold-JIT first readings of this
-    // kernel family are 5-11x warm — un-warmed readings of this
-    // family are not comparable numbers), then reps alternate A,B so
-    // neither variant owns the quieter half of the run. Both counts
-    // must agree (exactness law).
-    if (args.headOption.contains("--e2e")) {
-      val dir = args.lift(1).getOrElse(
-        graft.Scratch.root + "/scale/jslab_64")
-      val slab = args.lift(2).map(_.toInt).getOrElse(0)
-      val reps = args.lift(3).map(_.toInt).getOrElse(2)
-      val threshold = 0.5
-      val withSh = spark.read.parquet(s"$dir/shingles")
-      val pref = spark.read.parquet(s"$dir/prefix")
-      val p = pref.filter(col("slab") === slab)
-        .select(col("s"), col("id"), col("sz"), col("rk"))
-      def pipeline(dedupe: Boolean) = {
-        val cand = graft.llm.Dedup.prefixCandidatesForDiag(
-          p, threshold, dedupe)
-        val verified = cand
-          .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")),
-            Seq("id_a"))
-          .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")),
-            Seq("id_b"))
-          .withColumn("n_inter",
-            graft.functions.SketchExprs.setOverlapBounded(col("sh_a"),
-              col("sh_b"),
-              lit(threshold / (1.0 + threshold)) *
-                (size(col("sh_a")) + size(col("sh_b"))).cast("double")
-                - lit(1e-9)).cast("double"))
-          .withColumn("n_union",
-            (size(col("sh_a")) + size(col("sh_b"))).cast("double")
-              - col("n_inter"))
-          .withColumn("jaccard", col("n_inter") / col("n_union"))
-          .filter(col("jaccard") >= threshold)
-          .select(col("id_a"), col("id_b"))
-        if (dedupe) verified else verified.distinct()
-      }
-      // discarded warm-up (variant B exercises every kernel A does)
-      val t0w = System.nanoTime()
-      pipeline(dedupe = false).count()
-      println(f"[diag] e2e warm-up (discarded): " +
-        f"${(System.nanoTime() - t0w) / 1e9}%.1f s")
-      val results = (1 to reps).flatMap { r =>
-        Seq("A_distinct_then_verify" -> true,
-            "B_verify_then_distinct" -> false).map { case (tag, d) =>
-          val t0 = System.nanoTime()
-          val n = pipeline(d).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"[diag] e2e rep $r [$tag]: $dt%.1f s  ($n pairs)")
-          (tag, dt, n)
-        }
-      }
-      require(results.map(_._3).distinct.size == 1,
-        s"e2e variants disagree: $results")
-      Seq("A_distinct_then_verify", "B_verify_then_distinct").foreach {
-        tag =>
-          val vs = results.filter(_._1 == tag).map(_._2)
-          println(f"[diag] e2e [$tag] min ${vs.min}%.1f s " +
-            s"(reps ${vs.map(v => f"$v%.1f").mkString(", ")})")
-      }
-      spark.stop()
-      return
-    }
-    // --asym: symmetric vs ASYMMETRIC-index-prefix candidate join A/B
-    // on one slab (r21): candidate counts, end-to-end walls, and the
-    // exactness law (identical verified pairs). Same discarded-warm-up
-    // + alternating-rep protocol as --e2e.
-    if (args.headOption.contains("--asym")) {
-      val dir = args.lift(1).getOrElse(
-        graft.Scratch.root + "/scale/jslab_64")
-      val slab = args.lift(2).map(_.toInt).getOrElse(0)
-      val reps = args.lift(3).map(_.toInt).getOrElse(2)
-      val threshold = 0.5
-      val withSh = spark.read.parquet(s"$dir/shingles")
-      val pref = spark.read.parquet(s"$dir/prefix")
-      val p = pref.filter(col("slab") === slab)
-        .select(col("s"), col("id"), col("sz"), col("rk"))
-      def pipeline(asym: Boolean) = {
-        val cand = graft.llm.Dedup.prefixCandidatesForDiag(
-          p, threshold, dedupe = true, asymmetric = asym)
-        cand
-          .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")),
-            Seq("id_a"))
-          .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")),
-            Seq("id_b"))
-          .withColumn("n_inter",
-            graft.functions.SketchExprs.setOverlapBounded(col("sh_a"),
-              col("sh_b"),
-              lit(threshold / (1.0 + threshold)) *
-                (size(col("sh_a")) + size(col("sh_b"))).cast("double")
-                - lit(1e-9)).cast("double"))
-          .withColumn("n_union",
-            (size(col("sh_a")) + size(col("sh_b"))).cast("double")
-              - col("n_inter"))
-          .withColumn("jaccard", col("n_inter") / col("n_union"))
-          .filter(col("jaccard") >= threshold)
-          .select(col("id_a"), col("id_b"))
-      }
-      // pre-distinct candidate volumes — the term the cut targets
-      Seq(false, true).foreach { asym =>
-        val n = graft.llm.Dedup.prefixCandidatesForDiag(
-          p, threshold, dedupe = false, asymmetric = asym).count()
-        println(s"[diag] asym=$asym candidates pre-distinct: $n")
-      }
-      val t0w = System.nanoTime()
-      pipeline(asym = true).count()
-      println(f"[diag] asym warm-up (discarded): " +
-        f"${(System.nanoTime() - t0w) / 1e9}%.1f s")
-      val results = (1 to reps).flatMap { r =>
-        Seq("SYM" -> false, "ASYM" -> true).map { case (tag, a) =>
-          val t0 = System.nanoTime()
-          val n = pipeline(a).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"[diag] asym rep $r [$tag]: $dt%.1f s  ($n pairs)")
-          (tag, dt, n)
-        }
-      }
-      require(results.map(_._3).distinct.size == 1,
-        s"asym variants disagree: $results")
-      Seq("SYM", "ASYM").foreach { tag =>
-        val vs = results.filter(_._1 == tag).map(_._2)
-        println(f"[diag] asym [$tag] min ${vs.min}%.1f s " +
-          s"(reps ${vs.map(v => f"$v%.1f").mkString(", ")})")
-      }
-      spark.stop()
-      return
-    }
     val dir = args.headOption.getOrElse(
       graft.Scratch.root + "/scale/jslab_64")
     val slab = args.lift(1).map(_.toInt).getOrElse(0)

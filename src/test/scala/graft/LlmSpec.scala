@@ -3340,7 +3340,7 @@ class LlmSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$base/_takedown_tmp",
         "_TAKEDOWN_COMMIT"),
       s"1 cell_id=$cell\n0 _delta\n".getBytes("UTF-8"))
-    graft.llm.Takedown.completePending(spark, base)
+    graft.llm.Swap.completePending(spark, base)
     assert(!new java.io.File(s"$base/_delta").exists(),
       "recovery must finish the delta delete")
     assert(spark.read.parquet(base)
@@ -3420,7 +3420,7 @@ class LlmSpec extends AnyFunSuite {
       1L -> Seq(0L, 0L), 2L -> Seq(0L, 0L), 3L -> Seq(0L, 1L)))
   }
 
-  test("ivfPatchIndex crash recovery: a COMMITTED _patch_tmp is " +
+  test("ivfPatchIndex crash recovery: a COMMITTED swap tmp is " +
        "replayed on entry (no rows lost, even mid-swap); an " +
        "uncommitted one is discarded as garbage") {
     import spark.implicits._
@@ -3443,21 +3443,22 @@ class LlmSpec extends AnyFunSuite {
     // (marker present: cell 0 has fresh content — rows 1,2 — and
     // cell 1's new content is empty), live cell_id=1 already deleted
     // (the delete-first step), fresh cell 0 NOT yet renamed in. Row 2
-    // now exists ONLY inside _patch_tmp.
-    val tmp = s"$dir/_patch_tmp"
+    // now exists ONLY inside the swap tmp.
+    val tmp = s"$dir/_takedown_tmp"
     Seq((1L, v1, 0L), (2L, v2, 0L))
       .toDF("vec_id", "embedding", "cell_id")
       .write.partitionBy("cell_id").parquet(tmp)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(tmp, "_PATCH_COMMIT"),
-      "0 1\n1 0\n".getBytes("UTF-8"))
     // the crashed patch had also staged the refreshed centroid
-    // sidecar — recovery must finalize it along with the cell swaps
+    // sidecar as the marker's last entry — recovery must swap it in
+    // along with the cells
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(tmp, "_SIDECAR_NEW.txt"),
-      ("_centroids.txt\n" + newP.zipWithIndex.map { case (v, i) =>
+      java.nio.file.Paths.get(tmp, "_centroids.txt"),
+      newP.zipWithIndex.map { case (v, i) =>
         s"0 $i " + v.map(_.toString).mkString(" ")
-      }.mkString("", "\n", "\n")).getBytes("UTF-8"))
+      }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(tmp, "_TAKEDOWN_COMMIT"),
+      "1 cell_id=0\n0 cell_id=1\n1 _centroids.txt\n".getBytes("UTF-8"))
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(s"$dir/cell_id=1"))
     // rerun of the same patch: entry recovery completes the swap from

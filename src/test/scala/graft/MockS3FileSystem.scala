@@ -4,21 +4,13 @@ import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.RawLocalFileSystem
 
-/** In-JVM S3 stand-in for the accessor-dispatch tests: a Hadoop
-  * FileSystem registered for the `s3a` scheme (via
-  * `fs.s3a.impl=graft.MockS3FileSystem`) whose objects live on the
-  * local disk — `s3a://<bucket>/<path>` maps to the local file at
-  * `<path>`. Every engine IO path (Formats read/write, Memo,
-  * listFolder) reaches it through the exact same registry lookup that
-  * resolves the real `S3AFileSystem` in production (reference parity:
-  * the porcupine-s3 accessor, TaskPipelineUtils.hs:77-175) — what the
-  * sandbox cannot exercise is only the wire protocol behind that
-  * interface, since the hadoop-aws jar isn't shipped here.
-  *
-  * The only deviations from RawLocalFileSystem are the scheme/URI
-  * identity: paths check, qualify, and list back as `s3a://bucket/...`.
+/** A Hadoop FileSystem whose objects live on the local disk under a
+  * foreign scheme: `<scheme>://<authority>/<path>` maps to the local
+  * file at `<path>`. The only deviations from RawLocalFileSystem are
+  * the scheme/URI identity: paths check, qualify, and list back as
+  * `<scheme>://<authority>/...`.
   */
-class MockS3FileSystem extends RawLocalFileSystem {
+abstract class LocalAsFileSystem(scheme: String) extends RawLocalFileSystem {
   private var mockUri: URI = _
 
   override def initialize(name: URI, conf: Configuration): Unit = {
@@ -30,15 +22,16 @@ class MockS3FileSystem extends RawLocalFileSystem {
 
   // the base-class CONSTRUCTOR already qualifies its working dir
   // against getUri, before initialize has run — serve a scheme-only
-  // placeholder until the real bucket URI is known
+  // placeholder until the real authority is known
   override def getUri: URI =
-    if (mockUri == null) URI.create("s3a:///") else mockUri
-  override def getScheme: String = "s3a"
+    if (mockUri == null) URI.create(s"$scheme:///") else mockUri
+  override def getScheme: String = scheme
 
   // the base class returns lazy statuses whose permission load does
-  // `new File(path.toUri)` — impossible for an s3a URI. Materialize
-  // plain FileStatus values instead (default permissions, like a real
-  // object store's): the path identity is what the tests exercise.
+  // `new File(path.toUri)` — impossible for a foreign-scheme URI.
+  // Materialize plain FileStatus values instead (default permissions,
+  // like a real object store's): the path identity is what the tests
+  // exercise.
   private def plain(st: org.apache.hadoop.fs.FileStatus)
       : org.apache.hadoop.fs.FileStatus =
     new org.apache.hadoop.fs.FileStatus(st.getLen, st.isDirectory,
@@ -52,6 +45,18 @@ class MockS3FileSystem extends RawLocalFileSystem {
       : Array[org.apache.hadoop.fs.FileStatus] =
     super.listStatus(f).map(plain)
 }
+
+/** In-JVM S3 stand-in for the accessor-dispatch tests: registered for
+  * the `s3a` scheme (via `fs.s3a.impl=graft.MockS3FileSystem`), so
+  * `s3a://<bucket>/<path>` maps to the local file at `<path>`. Every
+  * engine IO path (Formats read/write, Memo, listFolder) reaches it
+  * through the exact same registry lookup that resolves the real
+  * `S3AFileSystem` in production (reference parity: the porcupine-s3
+  * accessor, TaskPipelineUtils.hs:77-175) — what the sandbox cannot
+  * exercise is only the wire protocol behind that interface, since
+  * the hadoop-aws jar isn't shipped here.
+  */
+class MockS3FileSystem extends LocalAsFileSystem("s3a")
 
 object MockS3FileSystem {
 

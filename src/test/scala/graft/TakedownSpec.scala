@@ -93,7 +93,7 @@ class TakedownSpec extends AnyFunSuite {
       java.nio.file.Paths.get(tmp, "_TAKEDOWN_COMMIT"),
       "1 ingest_batch=0\n0 ingest_batch=1\n".getBytes("UTF-8"))
     // entry-time recovery (any takedown entry or the public call)
-    Takedown.completePending(spark, dir)
+    Swap.completePending(spark, dir)
     val left = spark.read.parquet(dir).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(left == Set(1L), s"recovered layer content: $left")
