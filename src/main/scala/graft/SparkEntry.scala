@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` aggregates the per-module operator inventories; each key
-  * has a DuckDB oracle in `oracleSql` unless the op is not
-  * SQL-expressible (driver then records a rows-only check).
+  * `queries` and `oracleSql` are the two name-keyed views of one
+  * [[graft.queries.QueryTable]]: the per-module inventories, each a
+  * table of [[graft.queries.Query]] rows, so every query carries its
+  * DuckDB oracle by construction and a name can appear only once.
   */
 object SparkEntry {
 
@@ -22,12 +23,14 @@ object SparkEntry {
       .orderBy($"l_returnflag")
   }
 
+  private lazy val inventory = graft.queries.Relational.inventory ++
+    graft.queries.LlmQueries.inventory
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++ graft.queries.LlmQueries.queries
+    inventory.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracleSql ++ graft.queries.LlmQueries.oracleSql
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = inventory.oracleSql
 }

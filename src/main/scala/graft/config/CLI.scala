@@ -75,10 +75,7 @@ object CLI {
       OptionsSchema(Seq(
         OptField("minPrice", Some(OptNum(0)), "ignore orders cheaper than this"))),
       (spark, opts) => {
-        val minPrice = opts("minPrice") match {
-          case OptNum(n) => n
-          case v         => v.render.toDouble
-        }
+        val minPrice = opts("minPrice").num
         val src = VirtualFile(VPath("/orders"), Seq("parquet"), Usage.Source)
         val snk = VirtualFile(VPath("/Outputs/report"), Seq("parquet", "csv"),
           Usage.Sink)
@@ -118,13 +115,9 @@ object CLI {
         OptField("estThreshold", Some(OptNum(0.35)),
           "MinHash-LSH candidate threshold (permissive stage 1)"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
-        val minTokens = num(opts("minTokens"))
-        val tau = num(opts("tau"))
-        val est = num(opts("estThreshold"))
+        val minTokens = opts("minTokens").num
+        val tau = opts("tau").num
+        val est = opts("estThreshold").num
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val snk = VirtualFile(VPath("/Outputs/curated"), Seq("parquet"),
@@ -159,10 +152,7 @@ object CLI {
         OptField("threshold", Some(OptNum(0.35)),
           "MinHash-Jaccard candidate threshold for the near-dup stage"))),
       (spark, opts) => {
-        val thr = opts("threshold") match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
+        val thr = opts("threshold").num
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val linSnk = VirtualFile(VPath("/Outputs/lineage"),
@@ -206,15 +196,8 @@ object CLI {
         OptField("foldAccents", Some(OptBool(false)),
           "also accent-fold the cleaned text"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
-        val minWords = num(opts("minWordsPerLine")).toInt
-        val foldAcc = opts("foldAccents") match {
-          case OptBool(b) => b
-          case other      => other.render.toBoolean
-        }
+        val minWords = opts("minWordsPerLine").num.toInt
+        val foldAcc = opts("foldAccents").bool
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val snk = VirtualFile(VPath("/Outputs/clean"), Seq("parquet"),
@@ -254,14 +237,10 @@ object CLI {
         OptField("minEntropy", Some(OptNum(2.5)),
           "minimum char entropy (nats) for a secret verdict"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
         val terms = opts("blockTerms").render.split(',')
           .map(_.trim).filter(_.nonEmpty).toSeq
-        val minLen = num(opts("minLen")).toInt
-        val minEnt = num(opts("minEntropy"))
+        val minLen = opts("minLen").num.toInt
+        val minEnt = opts("minEntropy").num
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val docSnk = VirtualFile(VPath("/Outputs/safety"),
@@ -320,10 +299,7 @@ object CLI {
         val fam = opts("family").render
         require(Set("bpe", "unigram", "wordpiece")(fam),
           s"tokenize: unknown family '$fam' (bpe|unigram|wordpiece)")
-        val merges = (opts("merges") match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }).toInt
+        val merges = opts("merges").num.toInt
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val modelSnk = VirtualFile(VPath("/Outputs/model"),
@@ -370,10 +346,7 @@ object CLI {
         val kind = opts("kind").render
         require(Set("image", "audio", "blob")(kind),
           s"media_ingest: unknown kind '$kind' (image|audio|blob)")
-        val maxDist = (opts("maxDist") match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }).toInt
+        val maxDist = opts("maxDist").num.toInt
         import graft.streaming.IngestStream
         val scheme: IngestStream.SigScheme = kind match {
           case "image" => IngestStream.SigScheme.ImagePhash(maxDist)
@@ -438,10 +411,7 @@ object CLI {
         val nums = opts("numericCols").render.split(",")
           .map(_.trim).filter(_.nonEmpty).toSeq
         val key = opts("skewKey").render
-        val topK = (opts("topK") match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }).toInt
+        val topK = opts("topK").num.toInt
         val src = VirtualFile(VPath("/table"), Seq("parquet"),
           Usage.Source)
         def snk(p: String) = VirtualFile(VPath(p), Seq("parquet"),
@@ -506,17 +476,13 @@ object CLI {
         OptField("tau", Some(OptNum(1.0)),
           "embedding/pq: beyond-this sq-distance counts as drifted"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
         val kind = opts("kind").render
         require(Set("tokenizer", "embedding", "pq")(kind),
           s"drift: unknown kind '$kind' (tokenizer|embedding|pq)")
-        val merges = num(opts("merges")).toInt
-        val nCells = num(opts("nCells")).toInt
-        val pqM = num(opts("m")).toInt
-        val tau = num(opts("tau"))
+        val merges = opts("merges").num.toInt
+        val nCells = opts("nCells").num.toInt
+        val pqM = opts("m").num.toInt
+        val tau = opts("tau").num
         val train = VirtualFile(
           VPath(if (kind == "embedding" || kind == "pq") "/embeddings"
                 else "/documents"),
@@ -619,15 +585,11 @@ object CLI {
         OptField("trainEvery", Some(OptNum(1)),
           "fit on doc_id % trainEvery == 0 (1 = whole corpus)"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
         val token = opts("teacherToken").render
-        val dim = num(opts("dim")).toInt
-        val rounds = num(opts("rounds")).toInt
-        val lr = num(opts("lr"))
-        val every = math.max(1L, num(opts("trainEvery")).toLong)
+        val dim = opts("dim").num.toInt
+        val rounds = opts("rounds").num.toInt
+        val lr = opts("lr").num
+        val every = math.max(1L, opts("trainEvery").num.toLong)
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val wLayer = VirtualFile(VPath("/Gate/weights"), Seq("parquet"),
@@ -725,19 +687,15 @@ object CLI {
         OptField("filesPerShard", Some(OptNum(1)),
           "output files per shard (task right-sizing)"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
         val weights = opts("weights").render.split(",")
           .map(_.trim).filter(_.nonEmpty).map { kv =>
             val Array(k, v) = kv.split("=", 2)
             k.trim -> v.trim.toDouble
           }.toMap
         require(weights.nonEmpty, "export: weights must be non-empty")
-        val target = num(opts("targetTokens")).toLong
-        val nShards = num(opts("nShards")).toInt
-        val fps = num(opts("filesPerShard")).toInt
+        val target = opts("targetTokens").num.toLong
+        val nShards = opts("nShards").num.toInt
+        val fps = opts("filesPerShard").num.toInt
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val ordSnk = VirtualFile(VPath("/Outputs/order"),
@@ -777,20 +735,13 @@ object CLI {
             "grows); pq: codewords per subspace (0 = 16)"),
         OptField("topK", Some(OptNum(5)), "serve: results per query"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
         val kind = opts("kind").render
         require(Set("bm25", "ivf", "pq", "cms")(kind),
           s"index: unknown kind '$kind' (bm25|ivf|pq|cms)")
-        val batches = num(opts("batches")).toInt
-        val doCompact = opts("compact") match {
-          case OptBool(b) => b
-          case other      => other.render.toBoolean
-        }
-        val nCells = num(opts("nCells")).toInt
-        val topK = num(opts("topK")).toInt
+        val batches = opts("batches").num.toInt
+        val doCompact = opts("compact").bool
+        val nCells = opts("nCells").num.toInt
+        val topK = opts("topK").num.toInt
         val dense = kind == "ivf" || kind == "pq"
         val src = VirtualFile(
           VPath(if (dense) "/embeddings" else "/documents"),
@@ -937,19 +888,12 @@ object CLI {
         OptField("nCells", Some(OptNum(16)),
           "ivf/pq build: k-means cells / codewords per subspace"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
         val kind = opts("kind").render
         require(Set("layer", "bm25", "ivf", "pq", "cms")(kind),
           s"takedown: unknown kind '$kind' (layer|bm25|ivf|pq|cms)")
-        val doBuild = opts("build") match {
-          case OptBool(b) => b
-          case other      => other.render.toBoolean
-        }
-        val batches = num(opts("batches")).toInt
-        val nCells = num(opts("nCells")).toInt
+        val doBuild = opts("build").bool
+        val batches = opts("batches").num.toInt
+        val nCells = opts("nCells").num.toInt
         val dense = kind == "ivf" || kind == "pq"
         val idCol = if (dense) "vec_id" else "doc_id"
         val src = VirtualFile(
@@ -1077,16 +1021,9 @@ object CLI {
         OptField("batches", Some(OptNum(4)),
           "build: publish batches (split by doc_id % batches)"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
-        val keepFrom = num(opts("keepFrom")).toLong
-        val doBuild = opts("build") match {
-          case OptBool(b) => b
-          case other      => other.render.toBoolean
-        }
-        val batches = num(opts("batches")).toInt
+        val keepFrom = opts("keepFrom").num.toLong
+        val doBuild = opts("build").bool
+        val batches = opts("batches").num.toInt
         val src = VirtualFile(VPath("/documents"), Seq("parquet"),
           Usage.Source)
         val layer = VirtualFile(VPath("/Index/layer"), Seq("parquet"),
@@ -1143,10 +1080,6 @@ object CLI {
         OptField("silenceRms", Some(OptNum(0.01)),
           "audio: rms level below which a clip is silent"))),
       (spark, opts) => {
-        def num(v: OptValue): Double = v match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }
         val kind = opts("kind").render
         require(kind == "image" || kind == "audio" || kind == "video",
           s"media_audit: unknown kind '$kind' (image|audio|video)")
@@ -1176,12 +1109,12 @@ object CLI {
             val gated = kind match {
               case "audio" =>
                 Multimodal.audioQuality(feats,
-                  num(opts("clipThreshold")), num(opts("silenceRms")))
+                  opts("clipThreshold").num, opts("silenceRms").num)
               case "video" => Multimodal.videoQuality(feats)
               case _ =>
                 Multimodal.imageQuality(feats,
-                  num(opts("minPixels")).toLong,
-                  num(opts("maxAspect")), num(opts("flatEps")))
+                  opts("minPixels").num.toLong,
+                  opts("maxAspect").num, opts("flatEps").num)
             }
             // undecodable media is the FIRST discard of any curation
             // pass — it flags alongside the kind-specific verdicts
@@ -1219,10 +1152,7 @@ object CLI {
         val kind = opts("kind").render
         require(kind == "image" || kind == "audio" || kind == "video",
           s"media_dedup: unknown kind '$kind' (image|audio|video)")
-        val maxDist = (opts("maxDist") match {
-          case OptNum(n) => n
-          case other     => other.render.toDouble
-        }).toInt
+        val maxDist = opts("maxDist").num.toInt
         val src = VirtualFile(VPath("/media"), Seq("bin"),
           Usage.Source)
         val keptSnk = VirtualFile(VPath("/Outputs/kept"),
@@ -1284,10 +1214,7 @@ object CLI {
           "Width & height of visualisations"))),
       (spark, opts) => {
         import graft.fold.FoldCol
-        val nsamples = (opts("nsamples") match {
-          case OptNum(n) => n
-          case v         => v.render.toDouble
-        }).toLong
+        val nsamples = opts("nsamples").num.toLong
         val vizSize = opts("vizSize").render
         val src = VirtualFile(VPath("/data/radon"), Seq("csv", "json"),
           Usage.Source)

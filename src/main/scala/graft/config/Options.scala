@@ -15,6 +15,18 @@ sealed trait OptValue {
     case OptBool(b) => b.toString
     case OptList(l) => l.map(_.render).mkString(",")
   }
+
+  /** The value as a number: an OptNum as is, anything else parsed. */
+  def num: Double = this match {
+    case OptNum(n) => n
+    case v         => v.render.toDouble
+  }
+
+  /** The value as a flag: an OptBool as is, anything else parsed. */
+  def bool: Boolean = this match {
+    case OptBool(b) => b
+    case v          => v.render.toBoolean
+  }
 }
 final case class OptStr(s: String) extends OptValue
 final case class OptNum(n: Double) extends OptValue

@@ -158,8 +158,8 @@ object Contamination {
     * geometry — the price of never moving the corpus). */
   def bloomDecontaminate(docs: DataFrame, benchmark: DataFrame,
                          n: Int = 8, log2m: Int = BloomLog2M,
-                         k: Int = BloomK, textCol: String = "text",
-                         idCol: String = "doc_id"): DataFrame = {
+                         k: Int = BloomK, textCol: String = "text")
+      : DataFrame = {
     val words = bloomWords(benchmark, n, log2m, k, textCol)
     val shift = bloomShift(log2m, k)
     docs.filter(graft.functions.SketchExprs.bloomHits(

@@ -425,8 +425,7 @@ object Sampling {
     * window, nothing corpus-sized sorted. */
   def quantileGateApprox(df: DataFrame, scoreCol: String,
                          keepFrac: Double = 0.5, tolFrac: Double = 0.1,
-                         groupCol: String = "source",
-                         idCol: String = "doc_id"): DataFrame = {
+                         groupCol: String = "source"): DataFrame = {
     require(keepFrac > 0.0 && keepFrac < 1.0, s"keepFrac $keepFrac")
     val base = df.select(col(groupCol).as("grp"),
       col(scoreCol).cast("double").as("_s"))

@@ -600,7 +600,6 @@ object Similarity {
     * second pass), collapsed map-side to ≤ nCells² count rows. */
   def cellMigration(emb: DataFrame, oldCents: Seq[Seq[Double]],
                     newCents: Seq[Seq[Double]],
-                    idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame =
     emb.select(
         graft.functions.SketchExprs.nearestCell(col(vecCol), oldCents)
@@ -815,7 +814,9 @@ object Similarity {
                          nProbe: Int = 4, idCol: String = "vec_id",
                          vecCol: String = "embedding",
                          qIdCol: String = "query_id",
-                         qVecCol: String = "query_vec"): DataFrame =
+                         qVecCol: String = "query_vec"): DataFrame = {
+    // refuse a half-swapped layer before its sidecar reads as missing
+    requireSettledIndex(spark, indexDir)
     ivfTopKIndexed(spark, indexDir,
       ivfIndexCentroids(spark, indexDir).getOrElse(
         throw new IllegalArgumentException(
@@ -823,6 +824,7 @@ object Similarity {
             "ivfWriteIndex layout (rebuild it, or pass centroids " +
             "explicitly to ivfTopKIndexed)")),
       queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
+  }
 
   /** Patch a persisted [[ivfWriteIndex]] layout IN PLACE after a
     * centroid refresh ([[kmeansUpdate]]) — the apply step of the
@@ -847,7 +849,6 @@ object Similarity {
     * rebuilding. */
   def ivfPatchIndex(spark: org.apache.spark.sql.SparkSession,
                     indexDir: String, newCents: Seq[Seq[Double]],
-                    idCol: String = "vec_id",
                     vecCol: String = "embedding"): (Long, Long) = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -942,6 +943,7 @@ object Similarity {
   private def probedIndexFrame(spark: org.apache.spark.sql.SparkSession,
                                indexDir: String,
                                probedCells: Seq[Long]): DataFrame = {
+    requireSettledIndex(spark, indexDir)
     val main = graft.Writes.readParquet(spark, indexDir)
       .filter(col("cell_id").isin(probedCells: _*))
     val mainCols = main.columns.toSeq
@@ -962,6 +964,13 @@ object Similarity {
 
   private[llm] val DeltaDirName = "_delta"
 
+  /** A serve's guard on both swap roots of an IVF or PQ index: the
+    * layout root and its `_delta` segment ([[Swap.requireSettled]]). */
+  private def requireSettledIndex(spark: org.apache.spark.sql.SparkSession,
+                                  indexDir: String): Unit =
+    Swap.requireSettled(spark, indexDir, s"$indexDir/$DeltaDirName")
+
+
   /** LSM-style APPEND ingest for a persisted [[ivfWriteIndex]] layout:
     * new vectors are assigned under the layout's own sidecar
     * centroids and published as a batch-keyed `_delta` side segment —
@@ -979,7 +988,6 @@ object Similarity {
     * Returns the appended row count. */
   def ivfAppendBatch(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String, rows: DataFrame, batchId: Long,
-                     idCol: String = "vec_id",
                      vecCol: String = "embedding"): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     Swap.completePending(spark, indexDir)
@@ -1173,7 +1181,9 @@ object Similarity {
                               idCol: String = "vec_id",
                               vecCol: String = "embedding",
                               qIdCol: String = "query_id",
-                              qVecCol: String = "query_vec"): DataFrame =
+                              qVecCol: String = "query_vec"): DataFrame = {
+    // refuse a half-swapped layer before its sidecar reads as missing
+    requireSettledIndex(spark, indexDir)
     ivfTopKIndexedWhere(spark, indexDir,
       ivfIndexCentroids(spark, indexDir).getOrElse(
         throw new IllegalArgumentException(
@@ -1181,6 +1191,7 @@ object Similarity {
             "ivfWriteIndex layout (rebuild it, or pass centroids " +
             "explicitly to ivfTopKIndexedWhere)")),
       queries, k, predicate, nProbe, idCol, vecCol, qIdCol, qVecCol)
+  }
 
   /** Seeded gaussian hyperplanes, quantized to 6 decimals. Each
     * component is exactly n/1e6 for an integer n, so a SQL oracle can
@@ -1793,7 +1804,9 @@ object Similarity {
                         indexDir: String, queries: DataFrame, k: Int,
                         idCol: String = "vec_id",
                         qIdCol: String = "query_id",
-                        qVecCol: String = "query_vec"): DataFrame =
+                        qVecCol: String = "query_vec"): DataFrame = {
+    // refuse a half-swapped layer before its sidecar reads as missing
+    requireSettledIndex(spark, indexDir)
     pqTopKIndexed(spark, indexDir,
       pqIndexBooks(spark, indexDir).getOrElse(
         throw new IllegalArgumentException(
@@ -1801,6 +1814,7 @@ object Similarity {
             "pqWriteIndex table (rebuild it, or pass books explicitly " +
             "to pqTopKIndexed)")),
       queries, k, idCol, qIdCol, qVecCol)
+  }
 
   /** [[pqPatchIndex]] with the OLD books derived from the sidecar (the
     * set the standing codes were actually produced under — passing a
@@ -1946,6 +1960,7 @@ object Similarity {
     * pruning to preserve, unlike the IVF probed-cell frame). */
   private def pqIndexFrame(spark: org.apache.spark.sql.SparkSession,
                            indexDir: String): DataFrame = {
+    requireSettledIndex(spark, indexDir)
     val main = graft.Writes.readParquet(spark, indexDir)
     val mainCols = main.columns.toSeq
     def norm(df: DataFrame) = df.select(mainCols.map(c =>
@@ -2021,8 +2036,10 @@ object Similarity {
         (lit(s * kk) + element_at(col("codes"), s + 1)).cast("int") + 1)
     val num = (0 until m).map(s => at(col("_lut"), s)).reduce(_ + _)
     val rn = sqrt((0 until m).map(s => at(typedlit(cn2), s)).reduce(_ + _))
+    // a zero query or reconstruction has no cosine: NULL, ranked last
+    val den = col("_qn") * rn
     val scored = codes.crossJoin(broadcast(q))
-      .withColumn("cosine", round(num / (col("_qn") * rn), 6))
+      .withColumn("cosine", when(den > 0, round(num / den, 6)))
     val w = Window.partitionBy(col(qIdCol))
       .orderBy(col("cosine").desc, col(idCol).asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))

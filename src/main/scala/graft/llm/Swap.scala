@@ -20,6 +20,8 @@ import org.apache.spark.sql.SparkSession
   * an uncommitted one, so reruns converge from any crash point.
   * Entries not named in the marker keep their files byte-for-byte.
   * One tmp per root, so at most one swap is ever pending on a root.
+  * Serves never recover: they refuse a root with a committed swap
+  * pending ([[requireSettled]]).
   */
 object Swap {
 
@@ -114,4 +116,20 @@ object Swap {
     fs.delete(tmp, true)
     spark.catalog.refreshByPath(dir)
   }
+
+  /** Read-side guard for a serve of the swap roots `dirs`: throws
+    * IllegalStateException naming the first root with a committed swap
+    * pending (its `_TAKEDOWN_COMMIT` marker exists), whose live entries
+    * may be half-swapped. Read-only: a serve must not replay the marker
+    * itself, since two concurrent serves would race on the renames. A
+    * tmp without a marker never touched a live entry and passes. */
+  def requireSettled(spark: SparkSession, dirs: String*): Unit =
+    dirs.foreach { dir =>
+      val root = new Path(dir)
+      val marker = new Path(new Path(root, TmpName), MarkerName)
+      if (fsOf(spark, root).exists(marker))
+        throw new IllegalStateException(s"layer $dir has a committed " +
+          s"swap pending ($marker); run Swap.completePending on $dir, " +
+          "or any maintenance entry on the layer, before serving it")
+    }
 }

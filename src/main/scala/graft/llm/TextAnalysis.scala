@@ -382,15 +382,18 @@ object TextAnalysis {
   /** The standing-layer inputs every serve face starts from: the
     * `(term, idCol, tf, dl)` postings relation and the 1-row
     * `(_n, _sumdl)` stats aggregate — one resolution point so the
-    * set-query, bag-query and pruned serves read the SAME frames. */
+    * set-query, bag-query and pruned serves read the SAME frames.
+    * Refuses a layer with a takedown swap pending. */
   private def bm25LayerFrames(spark: org.apache.spark.sql.SparkSession,
                               indexDir: String, idCol: String)
-      : (DataFrame, DataFrame) = (
-    graft.Writes.readParquet(spark, s"$indexDir/postings")
+      : (DataFrame, DataFrame) = {
+    Swap.requireSettled(spark, indexDir)
+    (graft.Writes.readParquet(spark, s"$indexDir/postings")
       .select(col(idCol), col("term"), col("tf"), col("dl")),
     graft.Writes.readParquet(spark, s"$indexDir/stats")
       .agg(sum(col("n_docs")).as("_n"),
         sum(col("sum_dl")).as("_sumdl")))
+  }
 
   /** [[bm25TopKWeighted]] served from a standing [[bm25PostingsBatch]]
     * layer — the bag-query (qtf-weighted) twin of
@@ -1302,7 +1305,8 @@ object TextAnalysis {
     // plan, and when `scored` is an unpersisted corpus-sized chain
     // (the score-and-reweight one-shot) every re-evaluation re-pays
     // the whole scoring join — measured 4x on llm_reweight_sample
-    // (ReweightDiag). Collecting the rollup and re-planting it as a
+    // (HISTORY.md, "llm_reweight_sample drift attributed AND fixed").
+    // Collecting the rollup and re-planting it as a
     // local relation makes the scaladoc's "|sources|-row arithmetic
     // after the groupBy" literally true; the downstream expressions
     // are unchanged, so the output is bit-identical.

@@ -1147,7 +1147,6 @@ object IngestStream {
     * default. The index must already exist with its centroid sidecar
     * — a stream cannot train the model it assigns under. */
   def ivfMonitor(vectors: DataFrame, indexDir: String,
-                 idCol: String = "vec_id",
                  vecCol: String = "embedding",
                  checkpointDir: Option[String] = None,
                  trigger: Trigger = Trigger.AvailableNow())
@@ -1158,7 +1157,7 @@ object IngestStream {
         checkpointDir.getOrElse(s"$indexDir/_checkpoints"))
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         graft.llm.Similarity.ivfAppendBatch(batch.sparkSession,
-          indexDir, batch.toDF(), bid, idCol, vecCol): Unit
+          indexDir, batch.toDF(), bid, vecCol): Unit
       }
       .trigger(trigger)
       .start()

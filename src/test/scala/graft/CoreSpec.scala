@@ -283,6 +283,26 @@ class CoreSpec extends AnyFunSuite {
     assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
   }
 
+  test("query table: a name declared twice is refused, naming it, " +
+       "also across tables joined with ++") {
+    import graft.queries.{Query, QueryTable}
+    def row(name: String) =
+      Query(name, (s, _) => s.range(1).toDF(), "SELECT 1 AS id")
+    val e = intercept[IllegalArgumentException] {
+      QueryTable(row("q_a"), row("q_dup"), row("q_b"), row("q_dup"))
+    }
+    assert(e.getMessage.contains("q_dup"), e.getMessage)
+    assert(!e.getMessage.contains("q_a"), e.getMessage)
+    val joined = intercept[IllegalArgumentException] {
+      QueryTable(row("q_a")) ++ QueryTable(row("q_b"), row("q_a"))
+    }
+    assert(joined.getMessage.contains("q_a"), joined.getMessage)
+    val ok = QueryTable(row("q_a"), row("q_b"))
+    assert(ok.queries.keySet == Set("q_a", "q_b"))
+    assert(ok.oracleSql == Map("q_a" -> "SELECT 1 AS id",
+      "q_b" -> "SELECT 1 AS id"))
+  }
+
   test("no dark faces: every public operator face in graft main is " +
        "referenced by name, IN CODE, outside its defining file (a " +
        "face with zero external callers shipped unverified once — " +

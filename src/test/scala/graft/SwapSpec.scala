@@ -14,7 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * delta rows and model sidecar judged together per root, so an index
   * never pairs new partitions with the old sidecar or the reverse),
   * the layer doctor must find no protocol leftovers, and rerunning the
-  * interrupted operation must give exactly the after state. */
+  * interrupted operation must give exactly the after state. Before that
+  * recovery, each serve of the layer must either refuse it, naming a
+  * swap root, or answer as it does once recovery has run (a serve never
+  * reads a half-swapped root): the before or after answer whenever
+  * recovery leaves every root on one side. An IVF takedown swaps main
+  * and `_delta` as two roots, so a crash can leave them on different
+  * sides; the info line counts those crash points. */
 class SwapSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.builder(4, "swap-spec")
@@ -34,10 +40,23 @@ class SwapSpec extends AnyFunSuite {
   /** One maintenance operation under enumeration: `build` writes its
     * fixture, `run` is the operation, `roots` maps each swap root
     * (relative to the layer dir) to the components its marker owns
-    * (parquet dirs, or `.txt` sidecar files). */
+    * (parquet dirs, or `.txt` sidecar files), `serve` answers a fixed
+    * query set from the layer. */
   private case class Op(name: String, build: String => Unit,
                         run: String => Unit,
-                        roots: Seq[(String, Seq[String])])
+                        roots: Seq[(String, Seq[String])],
+                        serve: Option[String => Seq[String]])
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  /** A serve's answer, or the message of its refusal. */
+  private def answer(op: Op, dir: String)
+      : Option[Either[String, Seq[String]]] =
+    op.serve.map { serve =>
+      try Right(serve(dir))
+      catch { case e: IllegalStateException => Left(e.getMessage) }
+    }
 
   private type State = Seq[(String, Seq[(String, Seq[String])])]
 
@@ -75,9 +94,15 @@ class SwapSpec extends AnyFunSuite {
 
   private def live(local: String) = CrashFileSystem.uri("live", local)
 
+  /** An operation's uncrashed run: its mutating-call count, and the
+    * layer's state and serve answer before and after it. */
+  private case class Ref(n: Long, before: State, after: State,
+                         beforeAnswer: Option[Either[String, Seq[String]]],
+                         afterAnswer: Option[Either[String, Seq[String]]])
+
   /** Build `op`'s fixture and run it once uncrashed, counting its
-    * mutating calls: (crash points, before state, after state). */
-  private def prepare(i: Int, op: Op): (Long, State, State) = {
+    * mutating calls. */
+  private def prepare(i: Int, op: Op): Ref = {
     val pristine = s"$base/${op.name}/pristine"
     op.build(live(pristine))
     val ref = s"$base/${op.name}/ref"
@@ -85,14 +110,18 @@ class SwapSpec extends AnyFunSuite {
     val domain = s"op$i-ref"
     CrashFileSystem.arm(domain, Long.MaxValue)
     op.run(CrashFileSystem.uri(domain, ref))
-    (CrashFileSystem.calls(domain), snapshot(op, live(pristine)),
-      snapshot(op, live(ref)))
+    Ref(CrashFileSystem.calls(domain), snapshot(op, live(pristine)),
+      snapshot(op, live(ref)), answer(op, live(pristine)),
+      answer(op, live(ref)))
   }
 
   /** Run `op` on a fresh fixture copy, crashing at its k-th mutating
-    * call, then recover and check; returns whether it crashed. */
-  private def crashAt(i: Int, op: Op, k: Long, before: State,
-                      after: State): Boolean = {
+    * call, then recover and check; returns whether it crashed, whether
+    * the serve refused the crashed layer, and whether recovery left its
+    * roots on different sides. */
+  private def crashAt(i: Int, op: Op, k: Long, ref: Ref)
+      : (Boolean, Boolean, Boolean) = {
+    val (before, after) = (ref.before, ref.after)
     val local = s"$base/${op.name}/k$k"
     copy(s"$base/${op.name}/pristine", local)
     val domain = s"op$i-k$k"
@@ -105,6 +134,7 @@ class SwapSpec extends AnyFunSuite {
     // the crashed domain stays dead, straggling task threads
     // included: recovery and checks go through the live one
     val dir = live(local)
+    val served = answer(op, dir)
     op.roots.foreach { case (r, _) =>
       Swap.completePending(spark, at(dir, r)) }
     val got = snapshot(op, dir)
@@ -113,6 +143,23 @@ class SwapSpec extends AnyFunSuite {
       assert(state == before(j)._2 || state == after(j)._2,
         s"${op.name}: crash point $k left swap root '$root' in " +
           s"neither its before nor its after state: $state")
+    }
+    served.foreach {
+      case Left(msg) =>
+        assert(op.roots.exists { case (r, _) =>
+          msg.contains(s"layer ${at(dir, r)} has a committed swap") },
+          s"${op.name}: crash point $k: the refusal names no swap " +
+            s"root: $msg")
+      case Right(pre) =>
+        // recovery never changes what the serve saw; with every root
+        // recovered to one side, that is the side's answer
+        val recovered = answer(op, dir).get
+        assert(recovered == Right(pre), s"${op.name}: crash point $k " +
+          s"served $pre before recovery, $recovered after it")
+        if (got == before || got == after)
+          assert(Some(Right(pre)) == (if (got == before)
+            ref.beforeAnswer else ref.afterAnswer),
+            s"${op.name}: crash point $k served a third answer: $pre")
     }
     op.roots.foreach { case (r, _) =>
       val left = Takedown.layerDoctor(spark, at(dir, r)).collect()
@@ -124,7 +171,7 @@ class SwapSpec extends AnyFunSuite {
     assert(snapshot(op, dir) == after,
       s"${op.name}: rerun after crash point $k")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(local))
-    crashed
+    (crashed, served.exists(_.isLeft), got != before && got != after)
   }
 
   private def idsDf(ids: Seq[Long], c: String): DataFrame = {
@@ -153,6 +200,14 @@ class SwapSpec extends AnyFunSuite {
       Similarity.ivfAppendBatch(spark, dir, vecs(deltaPts), batchId = 0L)
   }
   private val ivfRoot = "" -> Seq("", "_centroids.txt")
+  // every cell probed and k above the row count: any row change moves
+  // the answer
+  private def ivfServe(dir: String): Seq[String] = rows(
+    Similarity.ivfTopKIndexedAuto(spark, dir,
+      vecs(Seq((100L, 2.0, 0.0), (101L, 10.0, 1.0), (102L, 99.0, 99.0)))
+        .select(col("vec_id").as("query_id"),
+          col("embedding").as("query_vec")),
+      k = 10, nProbe = 3))
 
   private val pqBooks = Seq(
     Seq(Seq(0.0, 0.0), Seq(8.0, 0.0)),
@@ -163,6 +218,13 @@ class SwapSpec extends AnyFunSuite {
       (2L, Seq(7.0f, 0.0f, 1.0f, 0.0f)),
       (3L, Seq(1.0f, 0.0f, 9.0f, 0.0f)))
       .toDF("vec_id", "embedding")
+  }
+  private def pqServe(dir: String): Seq[String] = {
+    import spark.implicits._
+    rows(Similarity.pqTopKIndexedAuto(spark, dir,
+      Seq((100L, Seq(2.0f, 0.0f, 1.0f, 0.0f)),
+        (101L, Seq(6.0f, 0.0f, 8.0f, 0.0f))).toDF("query_id", "query_vec"),
+      k = 3))
   }
   private def pqIndex(dir: String): Unit =
     Similarity.pqWriteIndex(pqPts, pqBooks, dir, nBuckets = 4)
@@ -181,7 +243,7 @@ class SwapSpec extends AnyFunSuite {
       // batch 0 rewritten, batch 1 emptied, batch 2 untouched
       Takedown.layerTakedown(spark, dir, idsDf(Seq(2L, 3L), "doc_id"),
         "doc_id")
-    }, Seq("" -> Seq(""))),
+    }, Seq("" -> Seq("")), None),
     Op("bm25Takedown", { dir =>
       import spark.implicits._
       val docs = Seq((1L, "red fox runs"), (2L, "blue fox sleeps"),
@@ -193,36 +255,41 @@ class SwapSpec extends AnyFunSuite {
         docs.filter(col("doc_id") > 3L), dir, batchId = 1L)
     }, { dir =>
       Takedown.bm25Takedown(spark, dir, idsDf(Seq(2L, 5L), "doc_id"))
-    }, Seq("" -> Seq("postings", "stats", "termdf"))),
+    }, Seq("" -> Seq("postings", "stats", "termdf")), Some { dir =>
+      import spark.implicits._
+      rows(TextAnalysis.bm25TopKFromPostings(spark, dir,
+        Seq((100L, "red fox"), (101L, "blue car"), (102L, "hen sleeps"))
+          .toDF("query_id", "text"), k = 6))
+    }),
     Op("ivfTakedown", ivfIndex(withDelta = true), { dir =>
       // main cell 0 rewritten, cell 1 emptied, delta batch rewritten
       Takedown.ivfTakedown(spark, dir,
         idsDf(Seq(2L, 3L, 4L, 8L), "vec_id"))
-    }, Seq(ivfRoot, "_delta" -> Seq("_delta"))),
+    }, Seq(ivfRoot, "_delta" -> Seq("_delta")), Some(ivfServe)),
     Op("ivfCompactDelta", ivfIndex(withDelta = true), { dir =>
       Similarity.ivfCompactDelta(spark, dir)
-    }, Seq("" -> Seq("", "_delta", "_centroids.txt"))),
+    }, Seq("" -> Seq("", "_delta", "_centroids.txt")), Some(ivfServe)),
     Op("ivfPatchIndex", ivfIndex(withDelta = false), { dir =>
       // rows 3 and 4 move to cell 0, cell 1 empties
       Similarity.ivfPatchIndex(spark, dir, Seq(pad(Seq(8.0, 0.0)),
         pad(Seq(20.0, 0.0)), pad(Seq(100.0, 100.0))))
-    }, Seq(ivfRoot)),
+    }, Seq(ivfRoot), Some(ivfServe)),
     Op("ivfPatchIndex_sidecar_only", ivfIndex(withDelta = false), {
       dir =>
         // no row changes cell: only the centroid sidecar advances
         Similarity.ivfPatchIndex(spark, dir, Seq(pad(Seq(0.0, 0.0)),
           pad(Seq(10.0, 0.0)), pad(Seq(100.0, 101.0))))
-    }, Seq(ivfRoot)),
+    }, Seq(ivfRoot), Some(ivfServe)),
     Op("pqPatchIndex", pqIndex, pqPatch(Seq(
       // every codeword pair swapped: every row re-codes
       Seq(Seq(8.0, 0.0), Seq(0.0, 0.0)),
       Seq(Seq(0.0, 8.0), Seq(0.0, 0.0)))),
-      Seq("" -> Seq("", "_books.txt"))),
+      Seq("" -> Seq("", "_books.txt")), Some(pqServe)),
     Op("pqPatchIndex_sidecar_only", pqIndex, pqPatch(Seq(
       // codewords nudged, no row's codes change
       Seq(Seq(0.0, 0.0), Seq(8.0, 1.0)),
       Seq(Seq(0.0, 0.0), Seq(0.0, 9.0)))),
-      Seq("" -> Seq("", "_books.txt"))))
+      Seq("" -> Seq("", "_books.txt")), Some(pqServe)))
 
   test("crash-point enumeration: every maintenance swap recovers to " +
        "its before or after state at every crash point, leaves no " +
@@ -231,24 +298,28 @@ class SwapSpec extends AnyFunSuite {
     val indexed = ops.zipWithIndex
     val prepared = graft.task.Fanout.all(spark,
       indexed.map { case (op, i) => () => prepare(i, op) }, Parallel)
-    indexed.zip(prepared).foreach { case ((op, _), (n, before, after)) =>
-      assert(before != after, s"${op.name}: the fixture must change")
+    indexed.zip(prepared).foreach { case ((op, _), ref) =>
+      assert(ref.before != ref.after,
+        s"${op.name}: the fixture must change")
       // clear, stage, marker, at least one swap step, final delete
-      assert(n >= 5L, s"${op.name}: only $n mutating calls")
+      assert(ref.n >= 5L, s"${op.name}: only ${ref.n} mutating calls")
     }
     // every crash point 1..n, then n + 1, where the run must complete
-    val runs = indexed.zip(prepared).flatMap {
-      case ((op, i), (n, before, after)) =>
-        (1L to n + 1).map(k => () =>
-          (op.name, k, n, crashAt(i, op, k, before, after)))
+    val runs = indexed.zip(prepared).flatMap { case ((op, i), ref) =>
+      (1L to ref.n + 1).map(k => () =>
+        (op.name, k, ref.n, crashAt(i, op, k, ref)))
     }
-    graft.task.Fanout.all(spark, runs, Parallel).foreach {
-      case (name, k, n, crashed) =>
-        assert(crashed == (k <= n), s"$name: the run armed at $k of " +
-          s"$n ${if (crashed) "crashed" else "completed"}")
+    val results = graft.task.Fanout.all(spark, runs, Parallel)
+    results.foreach { case (name, k, n, (crashed, _, _)) =>
+      assert(crashed == (k <= n), s"$name: the run armed at $k of " +
+        s"$n ${if (crashed) "crashed" else "completed"}")
     }
-    info(indexed.zip(prepared).map { case ((op, _), (n, _, _)) =>
-      s"${op.name} $n" }.mkString("crash points: ", ", ", "") +
+    def count(op: Op, f: ((Boolean, Boolean, Boolean)) => Boolean) =
+      results.count { case (name, _, _, r) => name == op.name && f(r) }
+    info(indexed.zip(prepared).map { case ((op, _), ref) =>
+      s"${op.name} ${ref.n} (serve refused ${count(op, _._2)}, roots " +
+        s"split ${count(op, _._3)})"
+    }.mkString("crash points: ", ", ", "") +
       f"; ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 
