@@ -17,10 +17,11 @@ object Graft {
               appName: String = "graft"): SparkSession =
     builder(cores, appName).getOrCreate()
 
-  /** The pre-configured builder, for callers who add their own conf. */
+  /** The pre-configured builder, for callers who add their own conf.
+    * Its session resolves `file:` to [[graft.access.LocalFs]]. */
   def builder(cores: Int = Runtime.getRuntime.availableProcessors(),
               appName: String = "graft"): SparkSession.Builder =
-    SparkSession.builder()
+    graft.access.LocalFs.register(SparkSession.builder())
       .appName(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)

@@ -113,6 +113,17 @@ object Writes {
     }.toOption.flatten
   }
 
+  /** Run `write` over `df` and return the number of rows it wrote,
+    * counted by an `Observation` on the write's own pass: reading the
+    * output back to count it would cost a Spark job or two more. */
+  def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs,
+      org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
+
   /** Whole-file UTF-8 read of a small protocol file (commit markers,
     * staged sidecars, model sidecars). */
   def readUtf8(fs: FileSystem, path: Path): String = {

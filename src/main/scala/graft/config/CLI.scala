@@ -1313,19 +1313,20 @@ object CLI {
 
   def main(args: Array[String]): Unit = run(args, defaultSession())
 
-  def defaultSession(): SparkSession = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // NTZ inference is off, so unannotated parquet timestamps are read
-    // as TIMESTAMP_LTZ — pin the session to UTC so their wall-clock
-    // rendering matches Graft.builder regardless of machine zone.
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .getOrCreate()
+  def defaultSession(): SparkSession =
+    graft.access.LocalFs.register(SparkSession.builder())
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // NTZ inference is off, so unannotated parquet timestamps are read
+      // as TIMESTAMP_LTZ — pin the session to UTC so their wall-clock
+      // rendering matches Graft.builder regardless of machine zone.
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .getOrCreate()
 
   /** Entry point, separated from `main` for tests (pass a session).
     * Logging flags (--log-level, --log-format, -q, -v) apply to every

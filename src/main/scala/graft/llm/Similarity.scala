@@ -985,7 +985,7 @@ object Similarity {
     * [[ivfCompactDelta]] once it stops being small — and ALWAYS
     * before a centroid patch ([[ivfPatchIndex]] fails fast on a
     * standing delta, whose stored assignments would go stale).
-    * Returns the appended row count. */
+    * Returns the appended row count, counted on the write itself. */
   def ivfAppendBatch(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String, rows: DataFrame, batchId: Long,
                      vecCol: String = "embedding"): Long = {
@@ -1002,12 +1002,11 @@ object Similarity {
     val carried = graft.Writes.readParquet(spark, indexDir).columns
       .filterNot(_ == "cell_id").toSeq
     val dest = s"$indexDir/$DeltaDirName/ingest_batch=$batchId"
-    rows.select(carried.map(col) :+
+    val n = graft.Writes.writeCounted(rows.select(carried.map(col) :+
         graft.functions.SketchExprs.nearestCell(col(vecCol), cents)
-          .as("cell_id"): _*)
-      .write.mode("overwrite").parquet(dest)
+          .as("cell_id"): _*))(_.write.mode("overwrite").parquet(dest))
     spark.catalog.refreshByPath(indexDir)
-    graft.Writes.readParquet(spark, dest).count()
+    n
   }
 
   /** Fold the `_delta` side segment into the main `cell_id=`
@@ -1996,11 +1995,11 @@ object Similarity {
         s"$indexDir has no $BooksSidecar sidecar — append needs the " +
           "table's authoritative codebooks"))
     val dest = s"$indexDir/$DeltaDirName/ingest_batch=$batchId"
-    pqEncode(rows, books, idCol, vecCol)
-      .withColumn("pq_bucket", pmod(col(idCol), lit(nBuckets.toLong)))
-      .write.mode("overwrite").parquet(dest)
+    val n = graft.Writes.writeCounted(pqEncode(rows, books, idCol, vecCol)
+        .withColumn("pq_bucket", pmod(col(idCol), lit(nBuckets.toLong))))(
+      _.write.mode("overwrite").parquet(dest))
     spark.catalog.refreshByPath(indexDir)
-    graft.Writes.readParquet(spark, dest).count()
+    n
   }
 
   /** Fold a [[pqAppendBatch]] `_delta` segment into its `pq_bucket=`

@@ -217,29 +217,63 @@ object Takedown {
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
     Swap.completePending(spark, layerDir)
-    val idsB = idFrame(ids, idCol)
-    val layer = graft.Writes.readParquet(spark, layerDir)
+    findScrubs(Seq((graft.Writes.readParquet(spark, layerDir), partCol,
+        "")), idFrame(ids, idCol), idCol).headOption match {
+      case None => (0L, 0L)
+      case Some(scrub) =>
+        Swap.commit(spark, layerDir, scrub.rels)(scrub.stage)
+        scrub.audit
+    }
+  }
+
+  /** The takedown scrubs of partition-keyed `layers`, each given as
+    * (layer, partition column, its subdir of the swap root — "" for
+    * the root itself): ONE semi-join aggregation job finds every
+    * layer's affected partitions. A layer with none has no scrub. */
+  private def findScrubs(layers: Seq[(DataFrame, String, String)],
+                         idsB: DataFrame, idCol: String): Seq[Scrub] = {
     // partition-inference types the key as INT when values fit —
     // normalize to long so compacted layers' negative ids and the
     // dense indexes' long keys land in one code path
-    val affected = layer.join(idsB, Seq(idCol), "left_semi")
-      .groupBy(col(partCol).cast("long").as("_p"))
+    val hits = layers.zipWithIndex.map { case ((layer, partCol, _), i) =>
+        layer.join(idsB, Seq(idCol), "left_semi")
+          .select(lit(i).as("_l"), col(partCol).cast("long").as("_p"))
+      }.reduce(_ unionByName _)
+      .groupBy(col("_l"), col("_p"))
       .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    if (affected.isEmpty) return (0L, 0L)
-    // full post-takedown content of every affected partition, ONE
-    // job, partition-keyed into tmp (an emptied partition writes no
-    // dir, so the swap drops its live dir)
-    Swap.commit(spark, layerDir,
-        affected.map { case (p, _) => s"$partCol=$p" }.toSeq) { tmp =>
+      .collect().toSeq
+      .groupMap(_.getInt(0))(r => (r.getLong(1), r.getLong(2)))
+    layers.zipWithIndex.flatMap { case ((layer, partCol, subdir), i) =>
+      hits.get(i).map(affected => Scrub(layer, idsB, idCol, partCol,
+        subdir, affected.sortBy(_._1)))
+    }
+  }
+
+  /** A takedown scrub: its `affected` partitions, ascending, with the
+    * rows each loses. */
+  private case class Scrub(layer: DataFrame, idsB: DataFrame,
+                           idCol: String, partCol: String,
+                           subdir: String, affected: Seq[(Long, Long)]) {
+
+    /** The swap entries, relative to the swap root. */
+    def rels: Seq[String] = affected.map { case (p, _) =>
+      (if (subdir.isEmpty) "" else s"$subdir/") + s"$partCol=$p" }
+
+    /** Full post-takedown content of every affected partition, ONE
+      * job, partition-keyed under `tmp` at the entries' relative
+      * paths (an emptied partition writes no dir, so the swap drops
+      * its live dir). Appends: another scrub's write may share `tmp`
+      * and create it first. */
+    def stage(tmp: Path): Unit =
       graft.Writes.clusterByPartitions(
           layer.filter(col(partCol).cast("long")
               .isin(affected.map(_._1): _*))
             .join(idsB, Seq(idCol), "left_anti"), partCol)
-        .write.partitionBy(partCol).parquet(tmp.toString)
-    }
-    (affected.map(_._2).sum, affected.length.toLong)
+        .write.mode("append").partitionBy(partCol)
+        .parquet((if (subdir.isEmpty) tmp else new Path(tmp, subdir))
+          .toString)
+
+    def audit: Audit = (affected.map(_._2).sum, affected.length.toLong)
   }
 
   /** [[layerTakedown]] over an [[Similarity.ivfWriteIndex]] layout:
@@ -263,12 +297,13 @@ object Takedown {
     * `partCol=` partitions AND the `_delta` side segment
     * ([[Similarity.ivfAppendBatch]]) — invisible to the main read, so
     * appended-then-taken-down vectors would otherwise survive in the
-    * serving union. The two scrubs run as concurrent jobs: each swaps
-    * under its own root's `_takedown_tmp`, and the main listing skips
-    * the underscore delta dir. The root's pending swap lands before
-    * the fork — a committed compaction marker at the root deletes
-    * `_delta` as its last entry, which must not race the delta
-    * scrub. */
+    * serving union. Both scrubs swap under ONE marker at the index
+    * root (`_delta/ingest_batch=` entries beside the `partCol=` ones),
+    * so a crash can never leave one segment taken down and the other
+    * not. Discovery is one job over both; the two staging writes run
+    * as concurrent jobs into the one tmp. The root's pending swap lands
+    * before anything reads, and so does a `_delta` tmp that an earlier
+    * build's separate delta scrub left. */
   private def denseTakedown(spark: SparkSession, indexDir: String,
                             ids: DataFrame, idCol: String,
                             partCol: String): Audit = {
@@ -277,13 +312,29 @@ object Takedown {
     if (!fs.exists(root)) return (0L, 0L)
     Swap.completePending(spark, indexDir)
     val deltaDir = s"$indexDir/${Similarity.DeltaDirName}"
-    val scrubs = Seq(deltaDir -> "ingest_batch", indexDir -> partCol)
-      .filter { case (dir, _) => fs.exists(new Path(dir)) }
-      .map { case (dir, p) =>
-        () => layerTakedown(spark, dir, ids, idCol, partCol = p) }
-    val audits = graft.task.Fanout.all(spark, scrubs)
+    Swap.completePending(spark, deltaDir)
+    val idsB = idFrame(ids, idCol)
+    val layers = Seq(
+      (indexDir, partCol, ""),
+      (deltaDir, "ingest_batch", Similarity.DeltaDirName))
+      .filter { case (dir, _, _) => hasPartitions(fs, new Path(dir)) }
+      .map { case (dir, p, subdir) =>
+        (graft.Writes.readParquet(spark, dir), p, subdir) }
+    if (layers.isEmpty) return (0L, 0L)
+    val scrubs = findScrubs(layers, idsB, idCol)
+    if (scrubs.isEmpty) return (0L, 0L)
+    Swap.commit(spark, indexDir, scrubs.flatMap(_.rels)) { tmp =>
+      graft.task.Fanout.all(spark, scrubs.map(s => () => s.stage(tmp)))
+    }
+    val audits = scrubs.map(_.audit)
     (audits.map(_._1).sum, audits.map(_._2).sum)
   }
+
+  /** Whether `dir` holds a partition directory (a `_delta` a takedown
+    * emptied holds none, and parquet cannot read it). */
+  private def hasPartitions(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(dir) && fs.listStatus(dir)
+      .exists(_.getPath.getName.contains("="))
 
   // ---------------------------------------------------------------
   // BM25 postings layer (postings + stats subdirs, coupled)

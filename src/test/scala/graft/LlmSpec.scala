@@ -3210,6 +3210,12 @@ class LlmSpec extends AnyFunSuite {
     val odd = emb.filter(col("vec_id") % 2 =!= 0)
     assert(Similarity.pqAppendBatch(spark, base, odd, batchId = 0L)
       == odd.count())
+    // replay of the same batch REPLACES: the returned count is the
+    // write's own, so the segment itself must hold one copy
+    assert(Similarity.pqAppendBatch(spark, base, odd, batchId = 0L)
+      == odd.count(), "re-append must replace, not double-ingest")
+    assert(spark.read.parquet(s"$base/_delta").count() == odd.count(),
+      "the replayed delta must hold the batch once")
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"))
@@ -3262,6 +3268,8 @@ class LlmSpec extends AnyFunSuite {
     // replay of the same batch REPLACES (overwrite discipline)
     assert(Similarity.ivfAppendBatch(spark, base, odd, batchId = 0L)
       == n1, "re-append must replace, not double-ingest")
+    assert(spark.read.parquet(s"$base/_delta").count() == n1,
+      "the replayed delta must hold the batch once")
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"))

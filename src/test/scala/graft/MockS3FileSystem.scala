@@ -2,15 +2,16 @@ package graft
 
 import java.net.URI
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.RawLocalFileSystem
 
 /** A Hadoop FileSystem whose objects live on the local disk under a
   * foreign scheme: `<scheme>://<authority>/<path>` maps to the local
-  * file at `<path>`. The only deviations from RawLocalFileSystem are
-  * the scheme/URI identity: paths check, qualify, and list back as
+  * file at `<path>`. The only deviations from the engine's raw local
+  * file system (`LocalFs.Raw`, which sets permission bits in-process)
+  * are the scheme/URI identity: paths check, qualify, and list back as
   * `<scheme>://<authority>/...`.
   */
-abstract class LocalAsFileSystem(scheme: String) extends RawLocalFileSystem {
+abstract class LocalAsFileSystem(scheme: String)
+    extends graft.access.LocalFs.Raw {
   private var mockUri: URI = _
 
   override def initialize(name: URI, conf: Configuration): Unit = {

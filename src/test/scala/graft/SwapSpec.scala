@@ -18,9 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * recovery, each serve of the layer must either refuse it, naming a
   * swap root, or answer as it does once recovery has run (a serve never
   * reads a half-swapped root): the before or after answer whenever
-  * recovery leaves every root on one side. An IVF takedown swaps main
-  * and `_delta` as two roots, so a crash can leave them on different
-  * sides; the info line counts those crash points. */
+  * recovery leaves every root on one side. A dense takedown scrubs an
+  * index's main partitions and its `_delta` segment under one marker;
+  * the spec judges the two as separate roots, and recovery must never
+  * leave them on different sides (no "split" crash point). */
 class SwapSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.builder(4, "swap-spec")
@@ -39,9 +40,9 @@ class SwapSpec extends AnyFunSuite {
 
   /** One maintenance operation under enumeration: `build` writes its
     * fixture, `run` is the operation, `roots` maps each swap root
-    * (relative to the layer dir) to the components its marker owns
-    * (parquet dirs, or `.txt` sidecar files), `serve` answers a fixed
-    * query set from the layer. */
+    * (relative to the layer dir) to the components judged together
+    * under it (parquet dirs, or `.txt` sidecar files), `serve` answers
+    * a fixed query set from the layer. */
   private case class Op(name: String, build: String => Unit,
                         run: String => Unit,
                         roots: Seq[(String, Seq[String])],
@@ -228,6 +229,15 @@ class SwapSpec extends AnyFunSuite {
   }
   private def pqIndex(dir: String): Unit =
     Similarity.pqWriteIndex(pqPts, pqBooks, dir, nBuckets = 4)
+  // buckets 1, 2 and 3 hold one row each; the delta batch holds two
+  private def pqIndexWithDelta(dir: String): Unit = {
+    import spark.implicits._
+    pqIndex(dir)
+    Similarity.pqAppendBatch(spark, dir,
+      Seq((4L, Seq(9.0f, 0.0f, 0.0f, 1.0f)),
+        (5L, Seq(0.0f, 1.0f, 8.0f, 0.0f))).toDF("vec_id", "embedding"),
+      batchId = 0L, nBuckets = 4)
+  }
   private def pqPatch(newBooks: Seq[Seq[Seq[Double]]])(dir: String)
       : Unit =
     Similarity.pqPatchIndex(spark, dir, pqPts, pqBooks, newBooks,
@@ -285,6 +295,11 @@ class SwapSpec extends AnyFunSuite {
       Seq(Seq(8.0, 0.0), Seq(0.0, 0.0)),
       Seq(Seq(0.0, 8.0), Seq(0.0, 0.0)))),
       Seq("" -> Seq("", "_books.txt")), Some(pqServe)),
+    Op("pqTakedown", pqIndexWithDelta, { dir =>
+      // main bucket 2 emptied, delta batch rewritten
+      Takedown.pqTakedown(spark, dir, idsDf(Seq(2L, 5L), "vec_id"))
+    }, Seq("" -> Seq("", "_books.txt"), "_delta" -> Seq("_delta")),
+      Some(pqServe)),
     Op("pqPatchIndex_sidecar_only", pqIndex, pqPatch(Seq(
       // codewords nudged, no row's codes change
       Seq(Seq(0.0, 0.0), Seq(8.0, 1.0)),
@@ -310,15 +325,16 @@ class SwapSpec extends AnyFunSuite {
         (op.name, k, ref.n, crashAt(i, op, k, ref)))
     }
     val results = graft.task.Fanout.all(spark, runs, Parallel)
-    results.foreach { case (name, k, n, (crashed, _, _)) =>
+    results.foreach { case (name, k, n, (crashed, _, split)) =>
       assert(crashed == (k <= n), s"$name: the run armed at $k of " +
         s"$n ${if (crashed) "crashed" else "completed"}")
+      assert(!split, s"$name: crash point $k left its roots on " +
+        "different sides after recovery")
     }
-    def count(op: Op, f: ((Boolean, Boolean, Boolean)) => Boolean) =
-      results.count { case (name, _, _, r) => name == op.name && f(r) }
     info(indexed.zip(prepared).map { case ((op, _), ref) =>
-      s"${op.name} ${ref.n} (serve refused ${count(op, _._2)}, roots " +
-        s"split ${count(op, _._3)})"
+      val refused = results.count { case (name, _, _, (_, r, _)) =>
+        name == op.name && r }
+      s"${op.name} ${ref.n} (serve refused $refused)"
     }.mkString("crash points: ", ", ", "") +
       f"; ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }

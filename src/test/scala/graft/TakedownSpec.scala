@@ -653,4 +653,35 @@ class TakedownSpec extends AnyFunSuite {
     assert(findings == Set("ivf-cells", "centroid-sidecar"),
       s"leftovers: $findings")
   }
+
+  test("ivfTakedown: a committed _delta tmp of an earlier build's " +
+       "separate delta scrub is replayed on entry, and a _delta that " +
+       "holds no batch is skipped by the next takedowns and cleared " +
+       "by compaction") {
+    import spark.implicits._
+    val base = scratch("delta_emptied")
+    def pad(v: Seq[Double]) = v.padTo(8, 0.0)
+    val cents = Seq(pad(Seq(0.0, 0.0)), pad(Seq(10.0, 0.0)))
+    def pts(ids: Seq[Long]) = ids.map(i =>
+      (i, Seq((i % 11).toFloat, 0.0f).padTo(8, 0.0f)))
+      .toDF("vec_id", "embedding")
+    Similarity.ivfWriteIndex(pts(1L to 6L), cents, base)
+    Similarity.ivfAppendBatch(spark, base, pts(7L to 9L), batchId = 0L)
+    // committed, not yet swapped: the delta's only batch emptied
+    val tmp = new java.io.File(s"$base/_delta/_takedown_tmp")
+    tmp.mkdirs()
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(tmp.getPath, "_TAKEDOWN_COMMIT"),
+      "0 ingest_batch=0\n".getBytes("UTF-8"))
+    assert(Takedown.ivfTakedown(spark, base,
+      idsDf(Seq(2L, 9L), "vec_id")) == ((1L, 1L)))
+    assert(!tmp.exists() &&
+      new java.io.File(s"$base/_delta").list().isEmpty)
+    assert(Takedown.ivfTakedown(spark, base,
+      idsDf(Seq(3L, 8L), "vec_id")) == ((1L, 1L)))
+    assert(spark.read.parquet(base).select("vec_id").as[Long]
+      .collect().toSet == Set(1L, 4L, 5L, 6L))
+    assert(Similarity.ivfCompactDelta(spark, base) == ((0L, 0L)))
+    assert(!new java.io.File(s"$base/_delta").exists())
+  }
 }
