@@ -37,14 +37,6 @@ object Split {
     def close(): Unit = { parent.unpersist(); () }
   }
 
-  /** [[Branches]] for plans pinned on SEVERAL cached parents (e.g. the
-    * two signature sets behind a cross-corpus LSH join): `close()`
-    * releases them all. */
-  final case class Pinned[T](value: T, parents: Seq[DataFrame])
-      extends AutoCloseable {
-    def close(): Unit = { parents.foreach(_.unpersist()); () }
-  }
-
   /** Two-way split by predicate — `Either`-filter semantics: rows
     * where `cond` holds, and the rest (null counts as false). */
   def splitEitherManaged(df: DataFrame, cond: Column)

@@ -67,13 +67,6 @@ object SketchExprs {
     case _ => false
   }
 
-  private def checkStrArr(name: String, dt: DataType): TypeCheckResult =
-    dt match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$name requires array<string>, got $other")
-    }
-
   private def checkVec(name: String, dts: DataType*): TypeCheckResult =
     dts.collectFirst {
       case dt if !isFloatArr(dt) && !dt.isInstanceOf[ArrayType] =>
@@ -91,26 +84,6 @@ object SketchExprs {
         TypeCheckResult.TypeCheckFailure(
           s"$name requires array<long>, got $dt")
     }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-
-  /** MinHash signature: array<string> -> array<long> of length k. */
-  case class MinHashSig(child: Expression, k: Int, seed: Long, xx: Boolean)
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkStrArr(prettyName, child.dataType)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "minhash_sig"
-    @transient private lazy val (as, bs) = SketchOps.coeffs(k, seed)
-    override def nullSafeEval(input: Any): Any =
-      SketchOps.minhash(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], as, bs, xx)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val aRef = ctx.addReferenceObj("mhAs", as, "long[]")
-      val bRef = ctx.addReferenceObj("mhBs", bs, "long[]")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.SketchOps.minhash($c, $aRef, $bRef, $xx);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-      copy(child = newChild)
-  }
 
   /** MinHash signature straight from a text column (tokenize +
     * shingle + hash in one kernel pass): string -> array<long> | null
@@ -410,7 +383,7 @@ object SketchExprs {
 
   /** Bloom membership count: array<long> of shingle hashes -> number
     * with all `k` bloom bits set. The word array rides into codegen as
-    * one reference object (like MinHashSig's coefficient tables). */
+    * one reference object (like MinHashText's coefficient tables). */
   case class BloomHits(child: Expression, words: Array[Long], k: Int,
                        log2m: Int, shift: Int)
       extends UnaryExpression {
@@ -482,21 +455,6 @@ object SketchExprs {
         s"graft.functions.SketchOps.langId($c, $mRef, $lRef)")
     }
     override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
-      copy(child = newChild)
-  }
-
-  /** SimHash: array<string> -> long bit-sketch. */
-  case class SimHash64(child: Expression, xx: Boolean)
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkStrArr(prettyName, child.dataType)
-    override def dataType: DataType = LongType
-    override def prettyName: String = "simhash64"
-    override def nullSafeEval(input: Any): Any =
-      SketchOps.simhash(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], xx)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.SketchOps.simhash($c, $xx)")
-    override protected def withNewChildInternal(newChild: Expression): SimHash64 =
       copy(child = newChild)
   }
 
@@ -701,13 +659,9 @@ object SketchExprs {
   // Hash-family-dependent constructors resolve spark.graft.hash.family
   // here (plan construction, driver side) and bake it into the
   // expression, so the choice serializes with the plan.
-  def minhashSig(c: Column, k: Int = 64, seed: Long = 42L): Column =
-    toCol(MinHashSig(toExpr(c), k, seed, SketchOps.xxFamily()))
   def minhashText(c: Column, shingleSize: Int = 3, k: Int = 64,
                   seed: Long = 42L): Column =
     toCol(MinHashText(toExpr(c), shingleSize, k, seed, SketchOps.xxFamily()))
-  def simhash64(c: Column): Column =
-    toCol(SimHash64(toExpr(c), SketchOps.xxFamily()))
   def simhashText(c: Column): Column =
     toCol(SimHashText(toExpr(c), SketchOps.xxFamily()))
   def simhashBytes(c: Column): Column =

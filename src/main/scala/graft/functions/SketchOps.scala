@@ -81,7 +81,7 @@ object SketchOps {
   /** First 8 MD5 bytes, big-endian (full signed 64-bit). SQL gets the
     * same BITS as two 32-bit halves: hex chars 1-8 = bits 32..63, hex
     * chars 9-16 = bits 0..31. */
-  def md5Base64(bytes: Array[Byte]): Long = {
+  private[graft] def md5Base64(bytes: Array[Byte]): Long = {
     val d = md5Of(bytes)
     var h = 0L
     var i = 0
@@ -92,7 +92,8 @@ object SketchOps {
   /** First 15 MD5 hex chars as a non-negative 60-bit value (= first 8
     * bytes >>> 4). SQL: `CAST('0x' || substring(md5(s), 1, 15) AS
     * BIGINT)` — sign-safe in every engine. */
-  def md5Base60(bytes: Array[Byte]): Long = md5Base64(bytes) >>> 4
+  private[graft] def md5Base60(bytes: Array[Byte]): Long =
+    md5Base64(bytes) >>> 4
 
   private def utf8(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -102,16 +103,6 @@ object SketchOps {
   @inline private def base32Str(s: String, xx: Boolean): Long =
     if (xx) java.lang.Math.floorMod(xx64Str(s), 1L << 32)
     else md5Base32(utf8(s))
-
-  @inline private def base32U(u: org.apache.spark.unsafe.types.UTF8String,
-                              xx: Boolean): Long =
-    if (xx) java.lang.Math.floorMod(xx64(u), 1L << 32)
-    else md5Base32(u.getBytes)
-
-  /** Full-width 64-bit base hash (simhash bit votes). */
-  @inline private def base64U(u: org.apache.spark.unsafe.types.UTF8String,
-                              xx: Boolean): Long =
-    if (xx) xx64(u) else md5Base64(u.getBytes)
 
   /** Modulus for the affine MinHash family: prime > 2^32. */
   val P: Long = 4294967311L
@@ -146,7 +137,7 @@ object SketchOps {
 
   /** Split on single spaces, dropping empty tokens (the semantics of
     * `filter(split(text, " "), t -> t <> '')`). */
-  def spaceTokens(s: String): Array[String] = {
+  private[graft] def spaceTokens(s: String): Array[String] = {
     val out = new scala.collection.mutable.ArrayBuffer[String](16)
     var i = 0
     val n = s.length
@@ -609,49 +600,6 @@ object SketchOps {
   // document silently diverges token counts
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
-
-  /** MinHash signature of a string array: sig_j = min over elements of
-    * (a_j * base32(s) + b_j) mod P. One pass: k*n ops. */
-  def minhash(arr: ArrayData, as: Array[Long], bs: Array[Long],
-              xx: Boolean): ArrayData = {
-    val k = as.length
-    val sig = new Array[Long](k)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val h32 = base32U(arr.getUTF8String(i), xx)
-      var j = 0
-      while (j < k) {
-        val v = (as(j) * h32 + bs(j)) % P
-        if (v < sig(j)) sig(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(sig)
-  }
-
-  /** 64-bit SimHash of a (distinct) string array: bit b set iff the
-    * count of elements whose hash has bit b exceeds those without. */
-  def simhash(arr: ArrayData, xx: Boolean): Long = {
-    val counts = new Array[Int](64)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val h = base64U(arr.getUTF8String(i), xx)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
 
   /** Fraction of agreeing positions between two equal-length long
     * arrays (MinHash signature similarity estimate). */

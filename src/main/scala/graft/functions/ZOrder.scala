@@ -20,7 +20,7 @@ object ZOrder {
     * each (values are taken mod 2^bits — callers with wider domains
     * should range-rank first): bit i of `a` lands at position 2i,
     * bit i of `b` at 2i+1. Total code width 2·bits ≤ 62. */
-  def morton2(a: Column, b: Column, bits: Int = 16): Column = {
+  private[graft] def morton2(a: Column, b: Column, bits: Int = 16): Column = {
     require(bits >= 1 && bits <= 31, "bits must be in [1, 31]")
     def spread(x: Column, shiftBy: Int): Column = {
       val q = pmod(x.cast("long"), lit(1L << bits))
@@ -35,7 +35,7 @@ object ZOrder {
   /** Scalar reference form of [[morton2]] (same arithmetic, plain
     * longs) — driver-side tooling (computing range boundaries,
     * planning splits) and the law-check target for the Column form. */
-  def morton2Long(a: Long, b: Long, bits: Int = 16): Long = {
+  private[graft] def morton2Long(a: Long, b: Long, bits: Int = 16): Long = {
     require(bits >= 1 && bits <= 31, "bits must be in [1, 31]")
     def spread(x: Long, sh: Int): Long = {
       val q = java.lang.Math.floorMod(x, 1L << bits)

@@ -152,17 +152,4 @@ object Contamination {
       .filter(col("n_flagged") > 0)
   }
 
-  /** [[decontaminate]] through the bloom filter: one benchmark
-    * aggregation to build the 16 KiB filter, then a shuffle-free
-    * corpus scan. Drops bloom false positives too (bounded by the
-    * geometry — the price of never moving the corpus). */
-  def bloomDecontaminate(docs: DataFrame, benchmark: DataFrame,
-                         n: Int = 8, log2m: Int = BloomLog2M,
-                         k: Int = BloomK, textCol: String = "text")
-      : DataFrame = {
-    val words = bloomWords(benchmark, n, log2m, k, textCol)
-    val shift = bloomShift(log2m, k)
-    docs.filter(graft.functions.SketchExprs.bloomHits(
-      shingleHashes(col(textCol), n), words, k, log2m, shift) === 0L)
-  }
 }

@@ -296,10 +296,6 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Distinct non-empty tokens. */
-  def tokenSet(text: Column): Column =
-    array_distinct(filter(split(text, " "), t => t =!= ""))
-
   // ---------------------------------------------------------------
   // n-gram Jaccard — exact pairwise (brute-force baseline)
   // ---------------------------------------------------------------
@@ -382,13 +378,11 @@ object Dedup {
     * MEMORY_AND_DISK_SER / DISK_ONLY (the array-of-long shingle
     * columns serialize compactly) — on a real cluster the pressure
     * spreads over executors and the default stands. */
-  def jaccardPairsPrefixManaged(docs: DataFrame, n: Int,
-                                threshold: Double,
-                                textCol: String = "text",
-                                idCol: String = "doc_id",
-                                storage: org.apache.spark.storage.StorageLevel =
-                                  org.apache.spark.storage.StorageLevel
-                                    .MEMORY_AND_DISK)
+  private[graft] def jaccardPairsPrefixManaged(
+      docs: DataFrame, n: Int, threshold: Double, textCol: String = "text",
+      idCol: String = "doc_id",
+      storage: org.apache.spark.storage.StorageLevel =
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       : graft.access.Split.Branches[DataFrame] = {
     import org.apache.spark.sql.expressions.Window
     // SORTED shingle arrays: one sort per doc at materialization so
@@ -464,8 +458,8 @@ object Dedup {
     * tiny positional ceilings and die here, BEFORE the distinct
     * shuffle and the array-carrying verify join — the candidate
     * stream, not the corpus, is the at-scale working set. MEASURED
-    * cut (JaccardDiag, pre-distinct candidates, t = 0.5; BASELINE.md
-    * r17/r18): 52% on the salted copy-scaled 64x corpus (69M → 33M
+    * cut (pre-distinct candidates, t = 0.5; BASELINE.md r17/r18):
+    * 52% on the salted copy-scaled 64x corpus (69M → 33M
     * per slab), 60% on the natural Zipfian sf0.1 text (329k → 132k),
     * 56% at natural 16x (100M → 45M) — a steady ~2x+ across regimes,
     * not the order-of-magnitude a heavier-tailed prefix would give. */
@@ -662,7 +656,7 @@ object Dedup {
 
   /** Estimated Jaccard from two signatures: fraction of agreeing
     * minhash positions (native codegen'd expression). */
-  def sigSimilarity(sigA: Column, sigB: Column): Column =
+  private[graft] def sigSimilarity(sigA: Column, sigB: Column): Column =
     graft.functions.SketchExprs.sigSim(sigA, sigB)
 
   /** MinHash+LSH near-dup candidate pairs with estimated similarity.
@@ -757,34 +751,6 @@ object Dedup {
     minHashPairsFromSigs(newSigs, corpusSigs, threshold, bands)
   }
 
-  /** [[minHashPairsAgainst]] with an explicit cache lifecycle for
-    * long-lived ingest sessions: BOTH signature sets are persisted
-    * (each side of the returned plan consumes its signatures twice —
-    * band join + attach join), and `close()` releases both. Use when
-    * the same pair plan is consumed repeatedly in one session; one-shot
-    * callers keep the unpersisted [[minHashPairsAgainst]], and
-    * production ingest keeps its corpus signatures in a parquet layer
-    * ([[graft.streaming.IngestStream]]) rather than executor memory. */
-  def minHashPairsAgainstManaged(newDocs: DataFrame, corpus: DataFrame,
-                                 threshold: Double = 0.7,
-                                 shingleSize: Int = 3, k: Int = 64,
-                                 bands: Int = 16, seed: Long = 42L,
-                                 textCol: String = "text",
-                                 idCol: String = "doc_id")
-      : graft.access.Split.Pinned[DataFrame] = {
-    require(k % bands == 0, "bands must divide k")
-    import org.apache.spark.storage.StorageLevel
-    val newSigs =
-      minHashSignatures(newDocs, shingleSize, k, seed, textCol, idCol)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val corpusSigs =
-      minHashSignatures(corpus, shingleSize, k, seed, textCol, idCol)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.access.Split.Pinned(
-      minHashPairsFromSigs(newSigs, corpusSigs, threshold, bands),
-      Seq(newSigs, corpusSigs))
-  }
-
   /** Signature-level core of [[minHashPairsAgainst]]: cross-side LSH
     * pairs between two `(id, sig)` frames. This is the form a
     * production ingest uses — the corpus side is a PERSISTED signature
@@ -869,13 +835,13 @@ object Dedup {
 
   /** 64-bit SimHash per document: sign of the per-bit sum of token
     * hash bits (+1/-1), via the native
-    * [[graft.functions.SketchExprs.SimHash64]] expression.
+    * [[graft.functions.SketchExprs.SimHashText]] expression.
     *
     * ROW-LOCAL: one narrow codegen'd projection — NO explode, NO
     * shuffle (same scale argument as [[minHashSignatures]]). Docs with
     * zero tokens carry no simhash. */
-  def simHash(docs: DataFrame, textCol: String = "text",
-              idCol: String = "doc_id"): DataFrame =
+  private[graft] def simHash(docs: DataFrame, textCol: String = "text",
+                             idCol: String = "doc_id"): DataFrame =
     docs.filter(tokenCountAtLeast(col(textCol), 1))
       .select(col(idCol).as("id"),
         graft.functions.SketchExprs.simhashText(col(textCol)).as("simhash"))
@@ -1100,33 +1066,6 @@ object Dedup {
     keepRepresentatives(docs, comps, idCol)
   }
 
-  /** Persist the near-dup cluster assignment as a corpus-version
-    * artifact: one parquet of `(id, component)` — the on-disk form of
-    * the session-level components memo. Build once per corpus
-    * snapshot (pair caches released on completion); every consumer
-    * (cluster listing, best-per-cluster, [[keepRepresentatives]])
-    * then reads a table that is ≪ corpus instead of recomputing the
-    * MinHash pair graph. */
-  def writeClusterIndex(docs: DataFrame, dir: String,
-                        threshold: Double = 0.35,
-                        textCol: String = "text",
-                        idCol: String = "doc_id"): Unit = {
-    val handle = minHashPairsManaged(docs, threshold,
-      textCol = textCol, idCol = idCol)
-    try
-      connectedComponents(handle.value)
-        .write.mode("overwrite").parquet(dir)
-    finally handle.close()
-  }
-
-  /** [[nearDupDedup]] against a persisted [[writeClusterIndex]]
-    * artifact: a broadcast-sized parquet read + one representative
-    * join — no signature or pair computation at query time. */
-  def nearDupDedupIndexed(docs: DataFrame, indexDir: String,
-                          idCol: String = "doc_id"): DataFrame =
-    keepRepresentatives(docs,
-      graft.Writes.readParquet(docs.sparkSession, indexDir), idCol)
-
   /** Keep one min-id representative per cluster of a `(id, component)`
     * assignment; docs outside any cluster always survive. The
     * downstream half of [[nearDupDedup]], reusable against a
@@ -1257,24 +1196,6 @@ object Dedup {
       .select(col("component"), col("id").as("keep_id"), col(qualityCol))
   }
 
-  /** [[nearDupDedup]] with quality-based representative choice: every
-    * unclustered doc survives; each near-dup cluster keeps its
-    * [[bestPerCluster]] winner under `quality` (an expression over the
-    * doc row, e.g. a token count or an LM score). */
-  def nearDupDedupBy(docs: DataFrame, quality: Column,
-                     threshold: Double = 0.7, textCol: String = "text",
-                     idCol: String = "doc_id"): DataFrame = {
-    val handle = minHashPairsManaged(docs, threshold, textCol = textCol,
-      idCol = idCol)
-    val comps =
-      try connectedComponents(handle.value) finally handle.close()
-    val keep = bestPerCluster(comps,
-        docs.select(col(idCol), quality.as("quality")), idCol)
-      .select(col("keep_id").as(idCol))
-    val dupIds = comps.select(col("id").as(idCol)).exceptAll(keep)
-    docs.join(dupIds, Seq(idCol), "left_anti")
-  }
-
   // ---------------------------------------------------------------
   // embedding-cosine near-dup
   // ---------------------------------------------------------------
@@ -1310,17 +1231,6 @@ object Dedup {
         i => array_join(slice(toks, i * w + 1, lit(w)), " ")))
       .otherwise(array().cast("array<string>"))
   }
-
-  /** Corpus-wide chunk frequency table: one row per distinct chunk
-    * content with its occurrence count (within-doc repeats count).
-    * The group-by rides 64-bit chunk hashes — at 100 TB the shuffle
-    * carries 8-byte keys with map-side partial counts, never chunk
-    * text. */
-  def chunkFrequencies(docs: DataFrame, chunkTokens: Int = 20,
-                       textCol: String = "text"): DataFrame =
-    docs.select(explode(tokenChunks(col(textCol), chunkTokens)).as("_c"))
-      .groupBy(xxhash64(col("_c")).as("chunk_hash"))
-      .agg(count(lit(1)).as("n_occurrences"))
 
   /** Remove corpus-wide repeated passages: chunks whose occurrence
     * count exceeds `maxFreq` are dropped from every document and the
@@ -1605,10 +1515,10 @@ object Dedup {
     * print stream backing the returned plan is released by `close()`
     * — the unmanaged shorthand tracks its pin in
     * [[graft.cache.Pins]] instead. */
-  def winnowPairsManaged(docs: DataFrame, k: Int = 5, w: Int = 4,
-                         minShared: Long = 2, maxDf: Long = 50,
-                         textCol: String = "text",
-                         idCol: String = "doc_id")
+  private[graft] def winnowPairsManaged(docs: DataFrame, k: Int = 5, w: Int = 4,
+                                        minShared: Long = 2, maxDf: Long = 50,
+                                        textCol: String = "text",
+                                        idCol: String = "doc_id")
       : graft.access.Split.Branches[DataFrame] = {
     // persist the winnowed prints: ~1/w of the gram stream, 16-byte
     // rows — consumed three times (df cap + both join sides); without

@@ -77,7 +77,8 @@ object HeavyHitters {
     * `tokens`, in one distributed pass. The result is driver-sized by
     * construction (≤ m candidate entries); counter values are the
     * usual MG undercounts, NOT exact frequencies. */
-  def summarize(tokens: DataFrame, m: Int): (Map[String, Long], Long) = {
+  private[graft] def summarize(tokens: DataFrame, m: Int)
+      : (Map[String, Long], Long) = {
     val s = tokens.sparkSession
     import s.implicits._
     tokens.select(col(tokens.columns.head).cast("string")).as[String]
@@ -284,9 +285,9 @@ object HeavyHitters {
     * publishes `(depth, width, seed)` next to the cells;
     * `cmsLayerGeometry` reads it back so callers re-derive instead
     * of re-passing). */
-  def cmsLookup(sketch: DataFrame, probes: DataFrame,
-                itemCol: String = "token",
-                depth: Int = 4, width: Int = 16, seed: Long = 7L)
+  private[graft] def cmsLookup(sketch: DataFrame, probes: DataFrame,
+                               itemCol: String = "token",
+                               depth: Int = 4, width: Int = 16, seed: Long = 7L)
       : DataFrame = {
     val geo = sketch.agg(max(col("row")).cast("long"),
       max(col("bucket")).cast("long")).first()
@@ -322,10 +323,11 @@ object HeavyHitters {
     * broadcasts (≤ d·w rows), history itself is never rescanned —
     * the streaming face is `IngestStream.cmsMonitor`'s layer
     * feeding this per batch. */
-  def trendingTokens(batchItems: DataFrame, sketch: DataFrame,
-                     itemCol: String = "token", minCount: Long = 2L,
-                     minRatio: Double = 2.0, depth: Int = 4,
-                     width: Int = 16, seed: Long = 7L): DataFrame =
+  private[graft] def trendingTokens(
+      batchItems: DataFrame, sketch: DataFrame, itemCol: String = "token",
+      minCount: Long = 2L, minRatio: Double = 2.0, depth: Int = 4,
+      width: Int = 16, seed: Long = 7L)
+      : DataFrame =
     trendingFromCounts(
         batchItems.groupBy(col(itemCol))
           .agg(count(lit(1)).as("batch_cnt")),
@@ -406,9 +408,8 @@ object HeavyHitters {
     require(rawCount <= depth.toLong * width,
       s"sketch frame holds $rawCount cells > depth*width = " +
         s"${depth.toLong * width} — not a summed sketch (an uncompacted " +
-        "multi-batch layer read raw? use cmsLayerRead / " +
-        "windowedTrendingLayer, or trendingTokens in foreachBatch for " +
-        "wide geometries)")
+        "multi-batch layer read raw? use cmsLayerRead, or " +
+        "IngestStream.windowedTrendingWide for wide geometries)")
     val raw = sketch.select(col("row").cast("int"),
         col("bucket").cast("long"), col("cnt").cast("long"))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
@@ -470,12 +471,12 @@ object HeavyHitters {
   /** [[windowedTrending]] against a persisted CMS LAYER by path —
     * geometry from the sidecar, cells via `cmsLayerRead` (summed, so
     * the duplicate-cell guard can't trip on a multi-batch layer). */
-  def windowedTrendingLayer(spark: org.apache.spark.sql.SparkSession,
-                            sketchDir: String, events: DataFrame,
-                            tsCol: String, itemCol: String,
-                            windowDur: String, minCount: Long = 2L,
-                            minRatio: Double = 2.0,
-                            watermark: String = "2 hours"): DataFrame = {
+  private[graft] def windowedTrendingLayer(
+      spark: org.apache.spark.sql.SparkSession, sketchDir: String,
+      events: DataFrame, tsCol: String, itemCol: String, windowDur: String,
+      minCount: Long = 2L, minRatio: Double = 2.0,
+      watermark: String = "2 hours")
+      : DataFrame = {
     val (depth, width, seed) = requireGeometry(spark, sketchDir)
     windowedTrending(events, tsCol, itemCol, windowDur,
       graft.streaming.IngestStream.cmsLayerRead(spark, sketchDir),

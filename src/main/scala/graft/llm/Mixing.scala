@@ -318,10 +318,9 @@ object Mixing {
     * per stratum. Same result (LlmSpec asserts equivalence); one window
     * partition per stratum, so a dominant stratum becomes a
     * single-partition sort — use the bucketed default at scale. */
-  def tokenBudgetSampleWindowed(docs: DataFrame, budgets: Map[String, Long],
-                                strataCol: String = "lang",
-                                textCol: String = "text",
-                                idCol: String = "doc_id"): DataFrame = {
+  private[graft] def tokenBudgetSampleWindowed(
+      docs: DataFrame, budgets: Map[String, Long], strataCol: String = "lang",
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val w = Window.partitionBy(col(strataCol))
       .orderBy(Sampling.hashBucket32(col(textCol)).asc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -479,9 +478,9 @@ object Mixing {
   /** The direct form of [[packSequences]]: ONE global running-sum
     * window (single partition — the semantic reference, not the scale
     * path). */
-  def packSequencesWindowed(docs: DataFrame, seqTokens: Long,
-                            textCol: String = "text",
-                            idCol: String = "doc_id"): DataFrame = {
+  private[graft] def packSequencesWindowed(
+      docs: DataFrame, seqTokens: Long, textCol: String = "text",
+      idCol: String = "doc_id"): DataFrame = {
     val w = Window
       .orderBy(Sampling.hashBucket32(col(textCol)).asc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -582,8 +582,9 @@ object Multimodal {
     * [[extractFeatures]] (the mapInPandas shape): one resizer per
     * task, rows streamed through it, output schema = input schema
     * with updated content + dims columns. Narrow (no shuffle). */
-  def resizeBlobs(blobs: DataFrame, width: Int, height: Int,
-                  resizer: MediaResizer = MediaResizer.Deterministic)
+  private[graft] def resizeBlobs(
+      blobs: DataFrame, width: Int, height: Int,
+      resizer: MediaResizer = MediaResizer.Deterministic)
       : DataFrame = {
     val schema = StructType(blobs.schema.fields ++ Seq(
       StructField("target_w", IntegerType, nullable = false),
@@ -838,8 +839,10 @@ object Multimodal {
     * Output `(<idCol>, frame_slot 0-3, fphash)` — undecodable blobs
     * emit no rows. Only the 4 sampled frames rasterize, so cost is
     * per-clip constant regardless of clip length. */
-  def videoPhashFrames(blobs: DataFrame, idCol: String = "media_id",
-                       contentCol: String = "content"): DataFrame = {
+  private[graft] def videoPhashFrames(
+      blobs: DataFrame, idCol: String = "media_id",
+      contentCol: String = "content")
+      : DataFrame = {
     val schema = StructType(Seq(
       StructField(idCol, LongType, nullable = false),
       StructField("frame_slot", IntegerType, nullable = false),

@@ -22,7 +22,7 @@ object Sampling {
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
   /** Percent bucket in [0, 100). */
-  def pctBucket(c: Column): Column = hashBucket32(c) % 100
+  private[graft] def pctBucket(c: Column): Column = hashBucket32(c) % 100
 
   /** Deterministic split assignment from cumulative percent weights:
     * e.g. `Seq("train" -> 80, "val" -> 10, "test" -> 10)`. The last
@@ -42,11 +42,6 @@ object Sampling {
       .fold(lit(weights.last._1))(_.otherwise(weights.last._1))
     when(c.isNotNull, assigned)
   }
-
-  /** Deterministic p-percent sample: keep rows whose content bucket
-    * falls below `pct`. */
-  def sampleByHash(df: DataFrame, keyCol: String, pct: Int): DataFrame =
-    df.filter(pctBucket(col(keyCol)) < pct)
 
   /** Cluster-balanced diversity sample over an embedding column: each
     * vector is assigned its nearest IVF cell (narrow codegen'd

@@ -200,9 +200,9 @@ object Similarity {
     * k-means; the cell-probe plumbing is identical and this keeps the
     * operator reproducible. Returned driver-side: centroid sets are
     * small by definition (C ≪ N) and become a plan literal. */
-  def collectCentroids(corpus: DataFrame, nCells: Int,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Seq[Seq[Double]] =
+  private[graft] def collectCentroids(
+      corpus: DataFrame, nCells: Int, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Seq[Seq[Double]] =
     corpus.select(col(idCol), col(vecCol)).orderBy(col(idCol).asc)
       .limit(nCells).collect()
       // element-type-agnostic: float32 embeddings and double frames
@@ -386,9 +386,9 @@ object Similarity {
   /** [[randProject]] in ARRAY form — `(idCol, proj: array<double>)`
     * — the shape the ANN operators consume directly. Same matrix,
     * same arithmetic. */
-  def randProjectVec(emb: DataFrame, outDim: Int = 16, inDim: Int = 64,
-                     seed: String = "jl", idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+  private[graft] def randProjectVec(
+      emb: DataFrame, outDim: Int = 16, inDim: Int = 64, seed: String = "jl",
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -797,14 +797,27 @@ object Similarity {
 
   /** Read the centroid set an [[ivfWriteIndex]] layout was built (or
     * last patched) with, from its `_centroids.txt` sidecar. */
-  def ivfIndexCentroids(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String): Option[Seq[Seq[Double]]] = {
+  private[graft] def ivfIndexCentroids(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String)
+      : Option[Seq[Seq[Double]]] = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     readModelSidecar(
       root.getFileSystem(spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(root, CentroidSidecar))
       .map(_.sortBy(_._2).map(_._3))
   }
+
+  /** The centroid set every sidecar-driven IVF operator (serve,
+    * append, fit monitor) runs under; fails naming the dir when it is
+    * not an [[ivfWriteIndex]] layout. */
+  private[graft] def sidecarCentroids(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String)
+      : Seq[Seq[Double]] =
+    ivfIndexCentroids(spark, indexDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"$indexDir has no $CentroidSidecar sidecar — not an " +
+          "ivfWriteIndex layout (rebuild it, or pass centroids " +
+          "explicitly to ivfTopKIndexed)"))
 
   /** [[ivfTopKIndexed]] with the centroid set derived from the
     * layout's own sidecar — serving cannot silently disagree with the
@@ -817,12 +830,7 @@ object Similarity {
                          qVecCol: String = "query_vec"): DataFrame = {
     // refuse a half-swapped layer before its sidecar reads as missing
     requireSettledIndex(spark, indexDir)
-    ivfTopKIndexed(spark, indexDir,
-      ivfIndexCentroids(spark, indexDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"$indexDir has no $CentroidSidecar sidecar — not an " +
-            "ivfWriteIndex layout (rebuild it, or pass centroids " +
-            "explicitly to ivfTopKIndexed)")),
+    ivfTopKIndexed(spark, indexDir, sidecarCentroids(spark, indexDir),
       queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
   }
 
@@ -858,9 +866,11 @@ object Similarity {
     Swap.completePending(spark, indexDir)
     // a standing delta segment holds assignments under the CURRENT
     // sidecar; patching around it would leave those stale (served
-    // through wrong probes) — fold it first
-    require(!fs.exists(
-        new org.apache.hadoop.fs.Path(root, DeltaDirName)),
+    // through wrong probes) — fold it first. A `_delta` a takedown
+    // emptied holds no batch and does not block; a tmp an earlier
+    // build's separate delta scrub left lands before the probe
+    Swap.completePending(spark, deltaDir(indexDir).toString)
+    require(deltaBatches(spark, indexDir) == 0,
       s"ivfPatchIndex: $indexDir has a standing $DeltaDirName " +
         "segment — run ivfCompactDelta first, then patch")
     val idx = graft.Writes.readParquet(spark, indexDir)
@@ -928,41 +938,58 @@ object Similarity {
       .select(explode(graft.functions.SketchExprs.probeCells(
         col(qVecCol), centroids, nProbe)).as("cell_id"))
       .distinct().collect().map(_.getLong(0))
-    scoreProbedCells(probedIndexFrame(spark, indexDir, probedCells),
+    scoreProbedCells(
+      indexFrame(spark, indexDir, "cell_id", Some(probedCells)),
       centroids, queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
   }
 
-  /** The index's probed-cell candidate frame: the main `cell_id=`
-    * layout pruned at the partition level, UNIONed with the `_delta`
-    * side segment ([[ivfAppendBatch]]) when one stands — delta rows
-    * carry their assignment as a stored column, so the same `isin`
-    * prunes them at the row level (the delta is small by contract;
-    * [[ivfCompactDelta]] folds it into partitions when it stops
-    * being small). `cell_id` normalized to long on both sides
-    * (partition discovery types small values as int). */
-  private def probedIndexFrame(spark: org.apache.spark.sql.SparkSession,
-                               indexDir: String,
-                               probedCells: Seq[Long]): DataFrame = {
+  /** An IVF or PQ index's serving frame: the main `partCol=` layout
+    * UNIONed with the `_delta` side segment ([[ivfAppendBatch]],
+    * [[pqAppendBatch]]) when it holds a batch, `partCol` normalized
+    * to long on both sides (partition discovery types small values
+    * as int). `probed` restricts both sides to the given partition
+    * values: the main layout prunes at the partition level, and delta
+    * rows carry their assignment as a stored column, so the same
+    * `isin` prunes them at the row level (the delta is small by
+    * contract; the compactions fold it into partitions when it stops
+    * being small). The PQ serve passes none: ADC scans every
+    * bucket. */
+  private def indexFrame(spark: org.apache.spark.sql.SparkSession,
+                         indexDir: String, partCol: String,
+                         probed: Option[Seq[Long]] = None): DataFrame = {
     requireSettledIndex(spark, indexDir)
-    val main = graft.Writes.readParquet(spark, indexDir)
-      .filter(col("cell_id").isin(probedCells: _*))
+    def restrict(df: DataFrame) =
+      probed.fold(df)(p => df.filter(col(partCol).isin(p: _*)))
+    val main = restrict(graft.Writes.readParquet(spark, indexDir))
     val mainCols = main.columns.toSeq
     def norm(df: DataFrame) = df.select(mainCols.map(c =>
-      if (c == "cell_id") col(c).cast("long").as(c) else col(c)): _*)
-    val deltaPath = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(indexDir), DeltaDirName)
-    val fs = deltaPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val hasDelta = fs.exists(deltaPath) && fs.listStatus(deltaPath)
-      .exists(_.getPath.getName.startsWith("ingest_batch="))
-    if (!hasDelta) norm(main)
-    else norm(main).unionByName(
-      norm(graft.Writes.readParquet(spark, deltaPath.toString)
-        .filter(col("cell_id").isin(probedCells: _*))
+      if (c == partCol) col(c).cast("long").as(c) else col(c)): _*)
+    if (deltaBatches(spark, indexDir) == 0) norm(main)
+    else norm(main).unionByName(norm(restrict(
+      graft.Writes.readParquet(spark, deltaDir(indexDir).toString))
         .drop("ingest_batch")))
   }
 
   private[llm] val DeltaDirName = "_delta"
+
+  private[llm] def deltaDir(indexDir: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(indexDir),
+      DeltaDirName)
+
+  /** How many `ingest_batch=` batches the index's `_delta` segment
+    * holds; 0 when none stands. The one probe behind every serve,
+    * fold, patch guard, takedown and [[Takedown.layerDoctor]]: a
+    * takedown that removes the last batch leaves an empty `_delta`
+    * dir, which holds nothing to serve or fold (parquet cannot even
+    * infer its schema) and must not block a patch. */
+  private[llm] def deltaBatches(spark: org.apache.spark.sql.SparkSession,
+                                indexDir: String): Int = {
+    val dir = deltaDir(indexDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) 0
+    else fs.listStatus(dir)
+      .count(_.getPath.getName.startsWith("ingest_batch="))
+  }
 
   /** A serve's guard on both swap roots of an IVF or PQ index: the
     * layout root and its `_delta` segment ([[Swap.requireSettled]]). */
@@ -977,7 +1004,7 @@ object Similarity {
     * the main `cell_id=` partitions are NOT rewritten (an append that
     * rewrote every touched cell would approach rebuild cost whenever
     * a batch spreads across cells, which real batches do). Serving
-    * reads main ∪ delta transparently ([[probedIndexFrame]]); the
+    * reads main ∪ delta transparently ([[indexFrame]]); the
     * underscore dir keeps the delta invisible to plain parquet reads
     * of the index root. Batch-keyed OVERWRITE makes replay replace,
     * never double-ingest (the [[graft.streaming.IngestStream]] layer
@@ -991,10 +1018,7 @@ object Similarity {
                      vecCol: String = "embedding"): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     Swap.completePending(spark, indexDir)
-    val cents = ivfIndexCentroids(spark, indexDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"$indexDir has no $CentroidSidecar sidecar — append needs " +
-          "the layout's authoritative centroid set"))
+    val cents = sidecarCentroids(spark, indexDir)
     // column parity with the main layout: the same carried columns
     // (id, vector, any attributes) must ride every delta row, so a
     // later compaction unions cleanly and filtered search sees its
@@ -1032,17 +1056,16 @@ object Similarity {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Swap.completePending(spark, indexDir)
-    val deltaPath = new org.apache.hadoop.fs.Path(root, DeltaDirName)
+    val deltaPath = deltaDir(indexDir)
     if (!fs.exists(deltaPath)) return (0L, 0L)
     // a committed-but-unswapped takedown INSIDE the delta (its scrub
     // runs under the delta root) must land before the fold reads it,
     // or removed rows would be absorbed into main
     Swap.completePending(spark, deltaPath.toString)
     // a takedown may have emptied every batch — an empty delta is
-    // garbage, not a fold input (parquet cannot even infer a schema)
-    if (!fs.exists(deltaPath) || !fs.listStatus(deltaPath)
-        .exists(_.getPath.getName.startsWith("ingest_batch="))) {
-      if (fs.exists(deltaPath)) fs.delete(deltaPath, true)
+    // garbage, not a fold input
+    if (deltaBatches(spark, indexDir) == 0) {
+      fs.delete(deltaPath, true)
       return (0L, 0L)
     }
     val delta = graft.Writes.readParquet(spark, deltaPath.toString)
@@ -1165,31 +1188,9 @@ object Similarity {
     // the predicate rides BELOW the main∪delta union — Catalyst
     // pushes it through Union into each branch's parquet reader
     scoreProbedCells(
-      probedIndexFrame(spark, indexDir, probedCells).filter(predicate),
+      indexFrame(spark, indexDir, "cell_id", Some(probedCells))
+        .filter(predicate),
       centroids, queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
-  }
-
-  /** [[ivfTopKIndexedWhere]] serving under the layout's own sidecar
-    * centroids — the safe path for filtered search, matching
-    * [[ivfTopKIndexedAuto]]. */
-  def ivfTopKIndexedAutoWhere(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, queries: DataFrame,
-                              k: Int,
-                              predicate: org.apache.spark.sql.Column,
-                              nProbe: Int = 4,
-                              idCol: String = "vec_id",
-                              vecCol: String = "embedding",
-                              qIdCol: String = "query_id",
-                              qVecCol: String = "query_vec"): DataFrame = {
-    // refuse a half-swapped layer before its sidecar reads as missing
-    requireSettledIndex(spark, indexDir)
-    ivfTopKIndexedWhere(spark, indexDir,
-      ivfIndexCentroids(spark, indexDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"$indexDir has no $CentroidSidecar sidecar — not an " +
-            "ivfWriteIndex layout (rebuild it, or pass centroids " +
-            "explicitly to ivfTopKIndexedWhere)")),
-      queries, k, predicate, nProbe, idCol, vecCol, qIdCol, qVecCol)
   }
 
   /** Seeded gaussian hyperplanes, quantized to 6 decimals. Each
@@ -1371,9 +1372,9 @@ object Similarity {
     * Reference analog: porcupine has no ANN/embedding surface; this
     * extends the repo's curation pack (SURVEY §2 "beyond-reference"
     * scope) alongside [[Dedup.nearDupDedup]]. */
-  def semDedup(emb: DataFrame, centroids: Seq[Seq[Double]], tau: Double,
-               idCol: String = "vec_id", vecCol: String = "embedding")
-      : DataFrame = {
+  private[graft] def semDedup(
+      emb: DataFrame, centroids: Seq[Seq[Double]], tau: Double,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val assigned = assignCells(emb, centroids, idCol, vecCol)
     val a = assigned.select(col("cell_id").as("cell_a"),
       col(idCol).as("id_a"), col(vecCol).as("v_a"),
@@ -1715,9 +1716,9 @@ object Similarity {
     * slices), no shuffle. This is the build step: at scale, persist
     * the (id, codes) frame once and every query batch scans codes
     * only. */
-  def pqEncode(corpus: DataFrame, books: Seq[Seq[Seq[Double]]],
-               idCol: String = "vec_id", vecCol: String = "embedding")
-      : DataFrame = {
+  private[graft] def pqEncode(
+      corpus: DataFrame, books: Seq[Seq[Seq[Double]]],
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val m = books.length
     val sub = books.head.head.length
     corpus.select(col(idCol),
@@ -1740,11 +1741,10 @@ object Similarity {
     * Output contract matches [[bruteTopK]]: (query_id, rank, vec_id,
     * cosine) with ties to the lowest id — recall vs the float path is
     * asserted in LlmSpec. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame,
-             books: Seq[Seq[Seq[Double]]], k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding",
-             qIdCol: String = "query_id", qVecCol: String = "query_vec")
-      : DataFrame =
+  private[graft] def pqTopK(
+      corpus: DataFrame, queries: DataFrame, books: Seq[Seq[Seq[Double]]],
+      k: Int, idCol: String = "vec_id", vecCol: String = "embedding",
+      qIdCol: String = "query_id", qVecCol: String = "query_vec"): DataFrame =
     pqTopKFromCodes(pqEncode(corpus, books, idCol, vecCol), queries,
       books, k, idCol, qIdCol, qVecCol)
 
@@ -1786,8 +1786,9 @@ object Similarity {
 
   /** Read the codebooks a [[pqWriteIndex]] table was built (or last
     * patched) with, from its `_books.txt` sidecar. */
-  def pqIndexBooks(spark: org.apache.spark.sql.SparkSession,
-                   indexDir: String): Option[Seq[Seq[Seq[Double]]]] = {
+  private[graft] def pqIndexBooks(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String)
+      : Option[Seq[Seq[Seq[Double]]]] = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     readModelSidecar(
       root.getFileSystem(spark.sparkContext.hadoopConfiguration),
@@ -1795,6 +1796,18 @@ object Similarity {
       .map(_.groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.sortBy(_._2).map(_._3)))
   }
+
+  /** The codebooks every sidecar-driven PQ operator (serve, patch,
+    * append, fit monitor) runs under; fails naming the dir when it is
+    * not a [[pqWriteIndex]] table. */
+  private[graft] def sidecarBooks(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String)
+      : Seq[Seq[Seq[Double]]] =
+    pqIndexBooks(spark, indexDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"$indexDir has no $BooksSidecar sidecar — not a " +
+          "pqWriteIndex table (rebuild it, or pass books explicitly " +
+          "to pqTopKIndexed)"))
 
   /** [[pqTopKIndexed]] with the codebooks derived from the table's own
     * sidecar — ADC scoring cannot silently disagree with the books the
@@ -1806,12 +1819,7 @@ object Similarity {
                         qVecCol: String = "query_vec"): DataFrame = {
     // refuse a half-swapped layer before its sidecar reads as missing
     requireSettledIndex(spark, indexDir)
-    pqTopKIndexed(spark, indexDir,
-      pqIndexBooks(spark, indexDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"$indexDir has no $BooksSidecar sidecar — not a " +
-            "pqWriteIndex table (rebuild it, or pass books explicitly " +
-            "to pqTopKIndexed)")),
+    pqTopKIndexed(spark, indexDir, sidecarBooks(spark, indexDir),
       queries, k, idCol, qIdCol, qVecCol)
   }
 
@@ -1824,11 +1832,7 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding",
                        nBuckets: Int = 16): (Long, Long) =
-    pqPatchIndex(spark, indexDir, corpus,
-      pqIndexBooks(spark, indexDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"$indexDir has no $BooksSidecar sidecar — not a " +
-            "pqWriteIndex table")),
+    pqPatchIndex(spark, indexDir, corpus, sidecarBooks(spark, indexDir),
       newBooks, idCol, vecCol, nBuckets)
 
   /** Patch a persisted [[pqWriteIndex]] code table IN PLACE after a
@@ -1873,8 +1877,9 @@ object Similarity {
     Swap.completePending(spark, indexDir)
     // a standing delta was encoded under the CURRENT sidecar books;
     // patching around it would leave stale codes served — fold first
-    require(!fs.exists(
-        new org.apache.hadoop.fs.Path(root, DeltaDirName)),
+    // (same probe and same pending-tmp landing as ivfPatchIndex)
+    Swap.completePending(spark, deltaDir(indexDir).toString)
+    require(deltaBatches(spark, indexDir) == 0,
       s"pqPatchIndex: $indexDir has a standing $DeltaDirName " +
         "segment — run pqCompactDelta first, then patch")
     if (oldBooks == newBooks) return (0L, 0L)
@@ -1951,30 +1956,8 @@ object Similarity {
                     idCol: String = "vec_id",
                     qIdCol: String = "query_id",
                     qVecCol: String = "query_vec"): DataFrame =
-    pqTopKFromCodes(pqIndexFrame(spark, indexDir), queries, books, k,
-      idCol, qIdCol, qVecCol)
-
-  /** The code table's serving frame: main ∪ delta, `pq_bucket`
-    * normalized to long on both sides (ADC scans every bucket — no
-    * pruning to preserve, unlike the IVF probed-cell frame). */
-  private def pqIndexFrame(spark: org.apache.spark.sql.SparkSession,
-                           indexDir: String): DataFrame = {
-    requireSettledIndex(spark, indexDir)
-    val main = graft.Writes.readParquet(spark, indexDir)
-    val mainCols = main.columns.toSeq
-    def norm(df: DataFrame) = df.select(mainCols.map(c =>
-      if (c == "pq_bucket") col(c).cast("long").as(c) else col(c)): _*)
-    val deltaPath = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(indexDir), DeltaDirName)
-    val fs = deltaPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val hasDelta = fs.exists(deltaPath) && fs.listStatus(deltaPath)
-      .exists(_.getPath.getName.startsWith("ingest_batch="))
-    if (!hasDelta) norm(main)
-    else norm(main).unionByName(
-      norm(graft.Writes.readParquet(spark, deltaPath.toString)
-        .drop("ingest_batch")))
-  }
+    pqTopKFromCodes(indexFrame(spark, indexDir, "pq_bucket"), queries,
+      books, k, idCol, qIdCol, qVecCol)
 
   /** [[ivfAppendBatch]]'s PQ sibling: encode the new vectors under
     * the table's own sidecar books and publish them as a batch-keyed
@@ -1990,10 +1973,7 @@ object Similarity {
                     nBuckets: Int = 16): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     Swap.completePending(spark, indexDir)
-    val books = pqIndexBooks(spark, indexDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"$indexDir has no $BooksSidecar sidecar — append needs the " +
-          "table's authoritative codebooks"))
+    val books = sidecarBooks(spark, indexDir)
     val dest = s"$indexDir/$DeltaDirName/ingest_batch=$batchId"
     val n = graft.Writes.writeCounted(pqEncode(rows, books, idCol, vecCol)
         .withColumn("pq_bucket", pmod(col(idCol), lit(nBuckets.toLong))))(

@@ -161,15 +161,13 @@ object Takedown {
           out += ((label, "present", s"${ids.size} partitions"))
       }
     if (names.contains(Similarity.DeltaDirName)) {
-      val deltaBatches = fs.listStatus(
-          new Path(root, Similarity.DeltaDirName))
-        .map(_.getPath.getName).count(_.startsWith("ingest_batch="))
+      val batches = Similarity.deltaBatches(spark, dir)
       out += (("delta-segment", "present",
-        s"$deltaBatches batches; fold before any centroid/codebook " +
+        s"$batches batches; fold before any centroid/codebook " +
           "patch"))
     }
-    Seq("_centroids.txt" -> "centroid-sidecar",
-        "_books.txt" -> "codebook-sidecar",
+    Seq(Similarity.CentroidSidecar -> "centroid-sidecar",
+        Similarity.BooksSidecar -> "codebook-sidecar",
         "_geometry.json" -> "geometry-sidecar")
       .foreach { case (n, label) =>
         if (names.contains(n)) out += ((label, "present", n))
@@ -311,14 +309,18 @@ object Takedown {
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
     Swap.completePending(spark, indexDir)
-    val deltaDir = s"$indexDir/${Similarity.DeltaDirName}"
+    val deltaDir = Similarity.deltaDir(indexDir).toString
     Swap.completePending(spark, deltaDir)
     val idsB = idFrame(ids, idCol)
+    // a main layout every row left, or a `_delta` a takedown emptied,
+    // holds no partition to read
+    val mainHolds = fs.listStatus(root)
+      .exists(_.getPath.getName.startsWith(s"$partCol="))
     val layers = Seq(
-      (indexDir, partCol, ""),
-      (deltaDir, "ingest_batch", Similarity.DeltaDirName))
-      .filter { case (dir, _, _) => hasPartitions(fs, new Path(dir)) }
-      .map { case (dir, p, subdir) =>
+      (mainHolds, indexDir, partCol, ""),
+      (Similarity.deltaBatches(spark, indexDir) > 0, deltaDir,
+        "ingest_batch", Similarity.DeltaDirName))
+      .collect { case (true, dir, p, subdir) =>
         (graft.Writes.readParquet(spark, dir), p, subdir) }
     if (layers.isEmpty) return (0L, 0L)
     val scrubs = findScrubs(layers, idsB, idCol)
@@ -329,12 +331,6 @@ object Takedown {
     val audits = scrubs.map(_.audit)
     (audits.map(_._1).sum, audits.map(_._2).sum)
   }
-
-  /** Whether `dir` holds a partition directory (a `_delta` a takedown
-    * emptied holds none, and parquet cannot read it). */
-  private def hasPartitions(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(dir) && fs.listStatus(dir)
-      .exists(_.getPath.getName.contains("="))
 
   // ---------------------------------------------------------------
   // BM25 postings layer (postings + stats subdirs, coupled)

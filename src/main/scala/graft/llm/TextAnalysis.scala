@@ -36,13 +36,6 @@ object TextAnalysis {
   /** Token count (whitespace segmentation). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count estimate: words + punctuation clusters
-    * counted separately (a cheap proxy for tokenizer load without
-    * shipping a vocab). */
-  def subwordCountEstimate(text: Column): Column =
-    size(filter(split(text, "(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
-      t => trim(t) =!= ""))
-
   /** One-pass text statistics struct (native kernel): n_chars,
     * n_tokens, n_token_chars, n_punct, n_upper. */
   def textStats(text: Column): Column =
@@ -84,19 +77,6 @@ object TextAnalysis {
     docs.select(col(idCol) +: g.getField("n_lines").as("n_lines") +:
         fracs: _*)
       .withColumn("kept", kept)
-  }
-
-  /** Gopher repetition filter: the docs that pass every threshold,
-    * original schema preserved. The gate is evaluated inline on the
-    * kernel struct — a plain Filter over the scan, no join, no
-    * shuffle, pushdown-friendly. */
-  def gopherQualityFilter(docs: DataFrame, textCol: String = "text")
-      : DataFrame = {
-    val g = gopherStats(col(textCol))
-    val gate = gopherThresholds
-      .map { case (f, th) => round(g.getField(f), 6) <= lit(th) }
-      .reduce(_ && _)
-    docs.filter(gate)
   }
 
   /** Top-k characteristic terms per document by tf-idf
@@ -461,7 +441,7 @@ object TextAnalysis {
     * the match stream, and the bound tightens as the corpus grows
     * (rare-term idf grows with N while a stopword's tail stays
     * bounded). Saturated queries degrade gracefully to the full
-    * path. [[bm25PruneStats]] is the observability face. */
+    * path. */
   def bm25TopKFromPostingsPruned(spark: org.apache.spark.sql.SparkSession,
                                  indexDir: String, queries: DataFrame,
                                  k: Int, sliceM: Int = 0,
@@ -495,7 +475,7 @@ object TextAnalysis {
     * Correctness never depends on the choice — the bound check makes
     * every depth exact (prove-or-fall-back); sliceM only moves the
     * prune/fallback frontier and the slice arm's cost. */
-  def bm25AutoSliceM(k: Int, nDocs: Long): Int = {
+  private[graft] def bm25AutoSliceM(k: Int, nDocs: Long): Int = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     val grow = 32 * math.ceil(
       math.log(nDocs.max(0L) / 1000.0 + 2.0) / math.log(2.0)).toInt
@@ -505,36 +485,6 @@ object TextAnalysis {
     // the caller never chose)
     math.max(k, math.min(4096, math.max(math.max(64, 4 * k), grow)))
   }
-
-  /** Per-query pruning observability for
-    * [[bm25TopKFromPostingsPruned]]: `(queryIdCol, n_candidates,
-    * theta, bound, pruned)` — `pruned = true` rows were answered
-    * from the impact slices with the bound PROVING exactness;
-    * `false` rows fell back to the full scan (rows the routing
-    * pre-gate sent straight to the full scan carry zero candidates
-    * and null theta/bound — the attempt was never made). */
-  def bm25PruneStats(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String, queries: DataFrame,
-                     k: Int, sliceM: Int = 0,
-                     k1: Double = 1.2, b: Double = 0.75,
-                     textCol: String = "text",
-                     idCol: String = "doc_id",
-                     queryIdCol: String = "query_id"): DataFrame =
-    bm25PrunedCore(spark, indexDir, queries, k, sliceM, k1, b,
-      textCol, idCol, queryIdCol, weighted = false)._2
-
-  /** Results AND prune stats from ONE core run — the deployed
-    * pairing (serve + log the verdicts). Calling the two single
-    * faces separately would compute the whole pruned pipeline — and
-    * pin its persisted frames — twice. */
-  def bm25PrunedServeWithStats(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, sliceM: Int = 0,
-      k1: Double = 1.2, b: Double = 0.75, textCol: String = "text",
-      idCol: String = "doc_id", queryIdCol: String = "query_id")
-      : (DataFrame, DataFrame) =
-    bm25PrunedCore(spark, indexDir, queries, k, sliceM, k1, b,
-      textCol, idCol, queryIdCol, weighted = false)
 
   /** Impact-pruned BAG-QUERY (qtf-weighted) BM25 serve — the
     * [[bm25TopKWeighted]] semantics under the same prove-or-fall-back
@@ -561,17 +511,6 @@ object TextAnalysis {
       : DataFrame =
     bm25PrunedCore(spark, indexDir, queries, k, sliceM, k1, b,
       textCol, idCol, queryIdCol, weighted = true)._1
-
-  /** Weighted serve + prune verdicts from one core run (the weighted
-    * [[bm25PrunedServeWithStats]]). */
-  def bm25PrunedServeWithStatsWeighted(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, sliceM: Int = 0,
-      k1: Double = 1.2, b: Double = 0.75, textCol: String = "text",
-      idCol: String = "doc_id", queryIdCol: String = "query_id")
-      : (DataFrame, DataFrame) =
-    bm25PrunedCore(spark, indexDir, queries, k, sliceM, k1, b,
-      textCol, idCol, queryIdCol, weighted = true)
 
   /** The query-vocabulary posting-contribution frame `(term, idCol,
     * _s)` the pruned serve slices — package-private so PlanSpec can
@@ -631,11 +570,22 @@ object TextAnalysis {
       .filter(col("_r") <= sliceM)
   }
 
-  private def bm25PrunedCore(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String, queries: DataFrame,
-                             k: Int, sliceM0: Int, k1: Double, b: Double,
-                             textCol: String, idCol: String,
-                             queryIdCol: String, weighted: Boolean)
+  /** The pruned serve behind [[bm25TopKFromPostingsPruned]] and
+    * [[bm25TopKFromPostingsPrunedWeighted]]: the served top-k AND the
+    * per-query prune verdicts `(queryIdCol, n_candidates, theta,
+    * bound, pruned)` from one run. `pruned = true` rows were answered
+    * from the impact slices with the bound PROVING exactness; `false`
+    * rows fell back to the full scan (rows the routing pre-gate sent
+    * straight to the full scan carry zero candidates and null
+    * theta/bound — the attempt was never made). Package-private: the
+    * verdicts are how the specs prove the live serve prunes or falls
+    * back. */
+  private[graft] def bm25PrunedCore(
+      spark: org.apache.spark.sql.SparkSession, indexDir: String,
+      queries: DataFrame, k: Int, sliceM0: Int = 0, k1: Double = 1.2,
+      b: Double = 0.75, textCol: String = "text",
+      idCol: String = "doc_id", queryIdCol: String = "query_id",
+      weighted: Boolean = false)
       : (DataFrame, DataFrame) = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     // the layer frames resolve ONCE and feed the auto geometry, the
@@ -928,7 +878,7 @@ object TextAnalysis {
     * (1 - distinct/total) — the classic repetitive-text quality gate
     * (boilerplate, keyword stuffing, decode loops score high). Pure
     * Column expression; 0.0 for docs with fewer than n tokens. */
-  def repetitionRatio(text: Column, n: Int = 3): Column = {
+  private[graft] def repetitionRatio(text: Column, n: Int = 3): Column = {
     val toks = filter(split(text, " "), t => t =!= "")
     val total = size(toks) - (n - 1)
     when(total > lit(0),
@@ -951,15 +901,6 @@ object TextAnalysis {
     * Native codegen'd kernel; row-local. */
   def accentFold(text: Column): Column =
     graft.functions.SketchExprs.accentFold(text)
-
-  /** Stopword ratio against a given list. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val toks = tokens(text)
-    val sw = array(stopwords.map(lit(_)): _*)
-    when(size(toks) > 0,
-      size(filter(toks, t => array_contains(sw, t))).cast("double") /
-        size(toks)).otherwise(0.0)
-  }
 
   /** Language-ID by stopword-hit scoring: argmax over per-language
     * marker-word hit counts (n-gram-heuristic family; deterministic
@@ -1145,32 +1086,20 @@ object TextAnalysis {
       graft.access.Split.Branches(result, cb)).value
   }
 
-  /** CCNet-style perplexity tiering: every document gets a
-    * per-language quality bucket from an `ntile` over its
-    * [[bigramLmScore]] average log-probability — bucket 1 = the
-    * most-probable (head) slice, bucket `nBuckets` = tail. CCNet
-    * keeps head/middle and drops or down-weights tail; emitting the
-    * per-doc assignment (rather than a pre-filtered corpus) lets the
-    * pipeline choose. Ties are broken by id, so the tiering is a pure
-    * function of the corpus.
+  /** CCNet-style perplexity tiering over a PRECOMPUTED
+    * [[bigramLmScore]] table: every document gets a per-language
+    * quality bucket from an `ntile` over its average log-probability —
+    * bucket 1 = the most-probable (head) slice, bucket `nBuckets` =
+    * tail. Ties are broken by id, so the tiering is a pure function of
+    * the corpus. The LM scoring is a corpus-version artifact (score
+    * once, persist the narrow per-doc table), and every tier / filter
+    * consumer reads it instead of re-training the LM.
     *
-    * Scale: the LM scoring is [[bigramLmScore]]'s bounded-table plan;
-    * the ntile window shuffles one (id, lang, score) row per doc keyed
-    * by language. A dominant language concentrates its ntile sort on
-    * one partition — at 100 TB replace the exact ntile with quantile
-    * cuts from the scored histogram (same downstream contract). */
-  def pplBuckets(docs: DataFrame, train: DataFrame, nBuckets: Int = 3,
-                 alpha: Double = 0.5, textCol: String = "text",
-                 idCol: String = "doc_id", langCol: String = "lang")
-      : DataFrame =
-    pplBucketsScored(docs,
-      bigramLmScore(docs, train, alpha, textCol = textCol, idCol = idCol),
-      nBuckets, idCol, langCol)
-
-  /** [[pplBuckets]] over a PRECOMPUTED [[bigramLmScore]] table — the
-    * deployment shape: the LM scoring is a corpus-version artifact
-    * (score once, persist the narrow per-doc table), and every tier /
-    * filter consumer reads it instead of re-training the LM. */
+    * Scale: the ntile window shuffles one (id, lang, score) row per
+    * doc keyed by language. A dominant language concentrates its
+    * ntile sort on one partition — at 100 TB replace the exact ntile
+    * with quantile cuts from the scored histogram (same downstream
+    * contract). */
   def pplBucketsScored(docs: DataFrame, scored: DataFrame,
                        nBuckets: Int = 3, idCol: String = "doc_id",
                        langCol: String = "lang"): DataFrame = {
@@ -1324,27 +1253,12 @@ object TextAnalysis {
         round(col("_raw") / col("_tot"), 6).as("weight"))
   }
 
-  /** CCNet head/tail corpus filter: materialize the kept slice of the
-    * corpus from [[pplBuckets]]'s per-language perplexity tiers —
+  /** CCNet head/tail corpus filter: the kept slice of the corpus
+    * from [[pplBucketsScored]]'s per-language perplexity tiers —
     * original doc schema plus the `ppl_bucket` column, keeping buckets
     * `<= keepBuckets` (CCNet keeps head+middle and drops tail; pass 1
-    * for head-only). Docs that produce no bigrams (< 2 tokens) have no
-    * LM score and are dropped with the tail, matching [[pplBuckets]]'s
-    * output domain.
-    *
-    * Scale: the tier table is one narrow row per doc; joining it back
-    * keys on the id, so full text rides exactly one shuffle — or none
-    * when AQE broadcasts the filtered tier side. */
-  def ccnetFilter(docs: DataFrame, train: DataFrame, nBuckets: Int = 3,
-                  keepBuckets: Int = 2, alpha: Double = 0.5,
-                  textCol: String = "text", idCol: String = "doc_id",
-                  langCol: String = "lang"): DataFrame =
-    ccnetFilterScored(docs,
-      bigramLmScore(docs, train, alpha, textCol = textCol, idCol = idCol),
-      nBuckets, keepBuckets, idCol, langCol)
-
-  /** [[ccnetFilter]] over a precomputed score table (see
-    * [[pplBucketsScored]]). */
+    * for head-only). Docs without an LM score are dropped with the
+    * tail. */
   def ccnetFilterScored(docs: DataFrame, scored: DataFrame,
                         nBuckets: Int = 3, keepBuckets: Int = 2,
                         idCol: String = "doc_id",
@@ -1644,8 +1558,8 @@ object TextAnalysis {
     * Like centroids/codebooks, the merge list is a train-once
     * corpus-version artifact (k bounded rows) and rides the same
     * registry ([[Similarity.memoized]], canonicalized-plan key). */
-  def bpeMerges(docs: DataFrame, merges: Int,
-                textCol: String = "text")
+  private[graft] def bpeMerges(docs: DataFrame, merges: Int,
+                               textCol: String = "text")
       : Array[(Long, String, String, Long)] =
     Similarity.memoized(docs, s"bpeTrain:$merges:$textCol") {
       mergeTrainerLoop(docs, merges, textCol,
@@ -1733,8 +1647,8 @@ object TextAnalysis {
     * distinct-word table; every round's pair count, symbol count,
     * and merge run over vocab-sized data. Memoized like its
     * sibling. */
-  def wordpieceMerges(docs: DataFrame, merges: Int,
-                      textCol: String = "text")
+  private[graft] def wordpieceMerges(docs: DataFrame, merges: Int,
+                                     textCol: String = "text")
       : Array[(Long, String, String, Long, Long)] =
     Similarity.memoized(docs, s"wpTrain:$merges:$textCol") {
       mergeTrainerLoop(docs, merges, textCol,
@@ -1925,9 +1839,9 @@ object TextAnalysis {
     * the driver — the Lloyd-iteration / [[bpeMerges]] registry shape.
     * Returns `(piece, n_occ, logp)`: occurrences in the final E-step
     * and the post-final-M-step log-prob. */
-  def unigramModel(docs: DataFrame, vocabSize: Int = 40,
-                   maxPieceLen: Int = 4, iters: Int = 2,
-                   textCol: String = "text")
+  private[graft] def unigramModel(docs: DataFrame, vocabSize: Int = 40,
+                                  maxPieceLen: Int = 4, iters: Int = 2,
+                                  textCol: String = "text")
       : Array[(String, Long, Double)] =
     unigramModelWith(docs, vocabSize, maxPieceLen, iters, textCol,
       prune = false)
@@ -1940,9 +1854,9 @@ object TextAnalysis {
     * shrinks with the vocab. The fixed-vocab form remains the
     * default (and the simpler oracle); this is the
     * SentencePiece-faithful variant. */
-  def unigramModelWith(docs: DataFrame, vocabSize: Int = 40,
-                       maxPieceLen: Int = 4, iters: Int = 2,
-                       textCol: String = "text", prune: Boolean = false)
+  private[graft] def unigramModelWith(
+      docs: DataFrame, vocabSize: Int = 40, maxPieceLen: Int = 4,
+      iters: Int = 2, textCol: String = "text", prune: Boolean = false)
       : Array[(String, Long, Double)] =
     Similarity.memoized(docs,
       s"unigramTrain:$vocabSize:$maxPieceLen:$iters:$textCol:$prune") {
@@ -2131,9 +2045,9 @@ object TextAnalysis {
     * `array<double>` of length `dim` — drop-in for the `embedding`
     * column every vector operator consumes. All-zero vectors (a doc
     * whose signs cancel entirely) stay zero. */
-  def hashEmbed(docs: DataFrame, dim: Int = 64,
-                textCol: String = "text",
-                idCol: String = "doc_id"): DataFrame = {
+  private[graft] def hashEmbed(docs: DataFrame, dim: Int = 64,
+                               textCol: String = "text",
+                               idCol: String = "doc_id"): DataFrame = {
     val dense = hashEmbedSparse(docs, dim, textCol, idCol)
       .groupBy(col(idCol))
       .agg(map_from_entries(collect_list(
@@ -2711,9 +2625,10 @@ object TextAnalysis {
     * Every label keeps its constants row even if the vocab cap cut
     * all its tokens (token total coalesces to 0, floor = ln(1/V) —
     * the dense formula's own nl=0 value). */
-  def nbModel(train: DataFrame, alpha: Double = 0.5,
-              textCol: String = "text", labelCol: String = "lang",
-              maxVocab: Int = 1 << 16): (DataFrame, DataFrame) = {
+  private[graft] def nbModel(
+      train: DataFrame, alpha: Double = 0.5, textCol: String = "text",
+      labelCol: String = "lang", maxVocab: Int = 1 << 16)
+      : (DataFrame, DataFrame) = {
     val spark = train.sparkSession
     import spark.implicits._
     val c = train.select(col(labelCol).as("_lang"),

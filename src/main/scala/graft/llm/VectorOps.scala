@@ -23,7 +23,7 @@ object VectorOps {
     * expensive array expression N times would otherwise recompute it
     * N times. Implemented as `transform` over a one-element array:
     * the lambda variable IS the materialized value. */
-  def bindOnce(value: Column)(body: Column => Column): Column =
+  private[graft] def bindOnce(value: Column)(body: Column => Column): Column =
     element_at(transform(array(value), v => body(v)), 1)
 
   /** Dot product of two float-array columns, accumulated in double.

@@ -296,6 +296,30 @@ object IngestStream {
       idCol, batchId)
   }
 
+  /** The one micro-batch driver behind every streaming face in this
+    * object: an append-mode `foreachBatch(step)` under the caller's
+    * trigger. AvailableNow is every face's default (drain-and-stop,
+    * the batch-backfill mode); pass ProcessingTime for a continuously
+    * running stream. The checkpoint (source offsets + committed batch
+    * ids) lives at `checkpointDir`, by default `<stateDir>/_checkpoints`
+    * under the face's own state or report layer — without one, every
+    * restart would replay the whole source. `step` gets the
+    * micro-batch and its id; every step publishes batch-keyed
+    * (`ingest_batch=<id>` overwrite), so the at-least-once replay of
+    * an uncommitted batch after a crash REPLACES its partitions
+    * instead of doubling them. */
+  private def microBatches(stream: DataFrame, stateDir: String,
+                           checkpointDir: Option[String],
+                           trigger: Trigger)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation",
+        checkpointDir.getOrElse(s"$stateDir/_checkpoints"))
+      .foreachBatch { (batch: Dataset[Row], bid: Long) => step(batch, bid) }
+      .trigger(trigger)
+      .start()
+
   /** The streaming wrapper: foreachBatch over a document stream. The
     * checkpoint (source offsets + batch ids) defaults to a hidden dir
     * under the signature layer — without one, every restart would
@@ -309,18 +333,10 @@ object IngestStream {
                     idCol: String = "doc_id",
                     checkpointDir: Option[String] = None,
                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$sigDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        ingestBatch(batch.toDF(), corpusDir, sigDir, threshold, textCol,
-          idCol, batchId = Some(bid))
-      }
-      // AvailableNow by default (drain-and-stop, the batch-backfill
-      // mode); pass ProcessingTime for a continuously running ingest
-      .trigger(trigger)
-      .start()
+    microBatches(docs, sigDir, checkpointDir, trigger) { (batch, bid) =>
+      ingestBatch(batch, corpusDir, sigDir, threshold, textCol,
+        idCol, batchId = Some(bid))
+    }
 
   /** [[nearDupIngest]] with the two-stage verify per micro-batch
     * ([[ingestBatchVerified]]) — same checkpoint/replay contract. */
@@ -332,16 +348,10 @@ object IngestStream {
                             checkpointDir: Option[String] = None,
                             trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$sigDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        ingestBatchVerified(batch.toDF(), corpusDir, sigDir, tau,
-          estThreshold, textCol, idCol, batchId = Some(bid))
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, sigDir, checkpointDir, trigger) { (batch, bid) =>
+      ingestBatchVerified(batch, corpusDir, sigDir, tau,
+        estThreshold, textCol, idCol, batchId = Some(bid))
+    }
 
   /** One novelty-scoring step (batch semantics — unit-testable; the
     * streaming wrapper calls this per micro-batch): score every doc
@@ -437,16 +447,10 @@ object IngestStream {
                      checkpointDir: Option[String] = None,
                      trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$gramDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        noveltyBatch(batch.toDF(), gramDir, reportDir, n, tau,
-          textCol, idCol, batchId = bid)
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, gramDir, checkpointDir, trigger) { (batch, bid) =>
+      noveltyBatch(batch, gramDir, reportDir, n, tau,
+        textCol, idCol, batchId = bid)
+    }
 
   /** Streaming CDC-novelty monitor: [[cdcNoveltyBatch]] over a
     * document stream — [[noveltyMonitor]]'s contract with the
@@ -458,16 +462,10 @@ object IngestStream {
                         checkpointDir: Option[String] = None,
                         trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$chunkDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        cdcNoveltyBatch(batch.toDF(), chunkDir, reportDir, n, div,
-          tau, textCol, idCol, batchId = bid)
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, chunkDir, checkpointDir, trigger) { (batch, bid) =>
+      cdcNoveltyBatch(batch, chunkDir, reportDir, n, div,
+        tau, textCol, idCol, batchId = bid)
+    }
 
   /** Per-batch safety rollup: [[graft.llm.TextAnalysis.safetyScan]]
     * over one micro-batch, aggregated to one row per source
@@ -526,16 +524,10 @@ object IngestStream {
                        checkpointDir: Option[String] = None,
                        trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$reportDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        fertilityBatch(batch.toDF(), trainDocs, reportDir, merges,
-          textCol, idCol, batchId = bid)
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, reportDir, checkpointDir, trigger) { (batch, bid) =>
+      fertilityBatch(batch, trainDocs, reportDir, merges,
+        textCol, idCol, batchId = bid)
+    }
 
   /** Streaming safety monitor: [[safetyBatch]] over a document
     * stream. STATELESS by design — every signal is row-local or
@@ -549,16 +541,10 @@ object IngestStream {
                     checkpointDir: Option[String] = None,
                     trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$reportDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        safetyBatch(batch.toDF(), reportDir, blockTerms, minLen,
-          minEntropy, textCol, idCol, srcCol, batchId = bid)
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, reportDir, checkpointDir, trigger) { (batch, bid) =>
+      safetyBatch(batch, reportDir, blockTerms, minLen,
+        minEntropy, textCol, idCol, srcCol, batchId = bid)
+    }
 
   /** Streaming distilled-gate scoring: every micro-batch scored
     * under the FROZEN weight artifact persisted by the quality_gate
@@ -579,18 +565,12 @@ object IngestStream {
     require(w.length >= 2,
       s"$weightsDir is not a gate-weights layer (need dim+1 " +
         s"(bucket, w) rows, found ${w.length})")
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$outDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        graft.llm.TextAnalysis
-          .applyLinearGate(batch.toDF(), w, textCol, idCol)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/ingest_batch=$bid")
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, outDir, checkpointDir, trigger) { (batch, bid) =>
+      graft.llm.TextAnalysis
+        .applyLinearGate(batch, w, textCol, idCol)
+        .write.mode("overwrite")
+        .parquet(s"$outDir/ingest_batch=$bid")
+    }
   }
 
   /** Streaming near-identical-BLOB ingest: [[nearDupIngest]] with the
@@ -606,17 +586,11 @@ object IngestStream {
                         checkpointDir: Option[String] = None,
                         trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    blobs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$sigDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        ingestBatchWith(batch.toDF(), corpusDir, sigDir,
-          SigScheme.BlobSimHash(maxDist, contentCol), idCol,
-          batchId = Some(bid))
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(blobs, sigDir, checkpointDir, trigger) { (batch, bid) =>
+      ingestBatchWith(batch, corpusDir, sigDir,
+        SigScheme.BlobSimHash(maxDist, contentCol), idCol,
+        batchId = Some(bid))
+    }
 
   /** Streaming PERCEPTUAL media ingest: [[blobNearDupIngest]]
     * generalized over the sketch — pass
@@ -634,16 +608,10 @@ object IngestStream {
                          checkpointDir: Option[String] = None,
                          trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    blobs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$sigDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        ingestBatchWith(batch.toDF(), corpusDir, sigDir, scheme, idCol,
-          batchId = Some(bid))
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(blobs, sigDir, checkpointDir, trigger) { (batch, bid) =>
+      ingestBatchWith(batch, corpusDir, sigDir, scheme, idCol,
+        batchId = Some(bid))
+    }
 
   /** One streaming count-min step: the micro-batch's token stream
     * collapsed to its OWN `depth x width` sketch, published under
@@ -1123,16 +1091,10 @@ object IngestStream {
                   checkpointDir: Option[String] = None,
                   trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$indexDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        graft.llm.TextAnalysis.bm25PostingsBatch(batch.toDF(),
-          indexDir, bid, textCol, idCol)
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, indexDir, checkpointDir, trigger) { (batch, bid) =>
+      graft.llm.TextAnalysis.bm25PostingsBatch(batch,
+        indexDir, bid, textCol, idCol)
+    }
 
   /** Live vector-index ingest: each micro-batch of embeddings lands
     * as one [[graft.llm.Similarity.ivfAppendBatch]] delta batch keyed
@@ -1151,16 +1113,10 @@ object IngestStream {
                  checkpointDir: Option[String] = None,
                  trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$indexDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        graft.llm.Similarity.ivfAppendBatch(batch.sparkSession,
-          indexDir, batch.toDF(), bid, vecCol): Unit
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(vectors, indexDir, checkpointDir, trigger) { (batch, bid) =>
+      graft.llm.Similarity.ivfAppendBatch(batch.sparkSession,
+        indexDir, batch, bid, vecCol)
+    }
 
   /** Index-drift monitor: per micro-batch of embeddings, the
     * [[graft.llm.Similarity.indexFitReport]] gauge against the
@@ -1176,26 +1132,14 @@ object IngestStream {
                     vecCol: String = "embedding",
                     checkpointDir: Option[String] = None,
                     trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$reportDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val spark = batch.sparkSession
-        val cents = graft.llm.Similarity
-          .ivfIndexCentroids(spark, indexDir).getOrElse(
-            throw new IllegalArgumentException(
-              s"$indexDir has no centroid sidecar — the monitor " +
-                "gauges fit against a standing ivfWriteIndex layout"))
-        graft.llm.Similarity.indexFitReport(batch.toDF(), cents, tau,
-            vecCol)
-          .write.mode("overwrite")
-          .parquet(s"$reportDir/ingest_batch=$bid")
-      }
-      .trigger(trigger)
-      .start()
-  }
+      : StreamingQuery =
+    microBatches(vectors, reportDir, checkpointDir, trigger) { (batch, bid) =>
+      val cents = graft.llm.Similarity.sidecarCentroids(batch.sparkSession,
+        indexDir)
+      graft.llm.Similarity.indexFitReport(batch, cents, tau, vecCol)
+        .write.mode("overwrite")
+        .parquet(s"$reportDir/ingest_batch=$bid")
+    }
 
   /** Codebook-drift monitor — [[ivfFitMonitor]]'s PQ sibling: per
     * micro-batch of embeddings, the
@@ -1213,26 +1157,14 @@ object IngestStream {
                    vecCol: String = "embedding",
                    checkpointDir: Option[String] = None,
                    trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$reportDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        val spark = batch.sparkSession
-        val books = graft.llm.Similarity
-          .pqIndexBooks(spark, indexDir).getOrElse(
-            throw new IllegalArgumentException(
-              s"$indexDir has no codebook sidecar — the monitor " +
-                "gauges fit against a standing pqWriteIndex layout"))
-        graft.llm.Similarity.pqFitReport(batch.toDF(), books, tau,
-            vecCol)
-          .write.mode("overwrite")
-          .parquet(s"$reportDir/ingest_batch=$bid")
-      }
-      .trigger(trigger)
-      .start()
-  }
+      : StreamingQuery =
+    microBatches(vectors, reportDir, checkpointDir, trigger) { (batch, bid) =>
+      val books = graft.llm.Similarity.sidecarBooks(batch.sparkSession,
+        indexDir)
+      graft.llm.Similarity.pqFitReport(batch, books, tau, vecCol)
+        .write.mode("overwrite")
+        .parquet(s"$reportDir/ingest_batch=$bid")
+    }
 
   /** Wide-geometry event-time trending: the SAME semantics as
     * [[graft.llm.HeavyHitters.windowedTrending]] — per tumbling
@@ -1275,25 +1207,19 @@ object IngestStream {
       .agg(count(lit(1)).as("batch_cnt"))
       .select(col("window.start").as("window_start"), col(itemCol),
         col("batch_cnt"))
-    counts.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$outDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        // the micro-batch frame feeds BOTH sides of the lookup join
-        // (counts + probes) — pin it so the second consumer reads the
-        // same rows instead of re-pulling the drained source
-        val counts = batch.toDF().persist()
-        try graft.llm.HeavyHitters.trendingFromCounts(counts, sketch,
-            itemCol, minCount, minRatio, depth, width, seed)
-          .select(col("window_start"), col(itemCol), col("batch_cnt"),
-            col("hist_est"), col("ratio"))
-          .write.mode("overwrite")
-          .parquet(s"$outDir/ingest_batch=$bid")
-        finally { counts.unpersist(); () }
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(counts, outDir, checkpointDir, trigger) { (batch, bid) =>
+      // the micro-batch frame feeds BOTH sides of the lookup join
+      // (counts + probes) — pin it so the second consumer reads the
+      // same rows instead of re-pulling the drained source
+      val counts = batch.persist()
+      try graft.llm.HeavyHitters.trendingFromCounts(counts, sketch,
+          itemCol, minCount, minRatio, depth, width, seed)
+        .select(col("window_start"), col(itemCol), col("batch_cnt"),
+          col("hist_est"), col("ratio"))
+        .write.mode("overwrite")
+        .parquet(s"$outDir/ingest_batch=$bid")
+      finally { counts.unpersist(); () }
+    }
   }
 
   /** Streaming corpus-frequency monitor: [[cmsBatch]] over a
@@ -1306,14 +1232,8 @@ object IngestStream {
                  checkpointDir: Option[String] = None,
                  trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$sketchDir/_checkpoints"))
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        cmsBatch(batch.toDF(), sketchDir, depth, width, seed,
-          textCol, batchId = bid)
-      }
-      .trigger(trigger)
-      .start()
+    microBatches(docs, sketchDir, checkpointDir, trigger) { (batch, bid) =>
+      cmsBatch(batch, sketchDir, depth, width, seed,
+        textCol, batchId = bid)
+    }
 }

@@ -192,32 +192,6 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(interpFp == viaDf.getLong(1))
   }
 
-  test("token-array sketch constructors: minhashSig is set-semantic " +
-       "and k-long; simhash64 is permutation-invariant and agrees " +
-       "with the scalar kernel") {
-    import graft.functions.SketchExprs
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val df = Seq(
-      (1L, Seq("a", "b", "c")),
-      (2L, Seq("c", "b", "a")),        // same SET, different order
-      (3L, Seq("x", "y", "z", "w"))
-    ).toDF("id", "toks")
-    val rows = df.select(col("id"),
-        SketchExprs.minhashSig(col("toks"), k = 32).as("sig"),
-        SketchExprs.simhash64(col("toks")).as("sh"))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getSeq[Long](1), r.getLong(2)))).toMap
-    assert(rows(1L)._1.length == 32, "signature length == k")
-    assert(rows(1L)._1 == rows(2L)._1,
-      "minhash over a token SET must ignore order")
-    assert(rows(1L)._1 != rows(3L)._1,
-      "disjoint sets must differ")
-    assert(rows(1L)._2 == rows(2L)._2,
-      "simhash bit votes are permutation-invariant")
-    assert(rows(1L)._2 != rows(3L)._2)
-  }
-
   test("md5Base64 / md5Base60: first-8-byte big-endian kernel " +
        "matches MessageDigest; base60 is the sign-safe >>> 4 form") {
     import graft.functions.SketchOps

@@ -380,41 +380,21 @@ class LlmSpec extends AnyFunSuite {
     import spark.implicits._
     def one(c: org.apache.spark.sql.Column): org.apache.spark.sql.Row =
       spark.range(1).select(c).head()
-    // subwordCountEstimate: pieces split at alnum/non-alnum borders,
-    // whitespace pieces dropped — "a,b" is 3 pieces (comma counts)
-    assert(one(TextAnalysis.subwordCountEstimate(lit("hello world")))
-      .getInt(0) == 2)
-    assert(one(TextAnalysis.subwordCountEstimate(lit("a,b")))
-      .getInt(0) == 3)
-    // stopwordRatio: share of tokens in the list; empty text -> 0
-    assert(one(TextAnalysis.stopwordRatio(lit("the cat the"),
-      Seq("the"))).getDouble(0) == 2.0 / 3.0)
-    assert(one(TextAnalysis.stopwordRatio(lit(""), Seq("the")))
-      .getDouble(0) == 0.0)
     // gopherStats: the native kernel's struct backs gopherKeep
     val gs = one(TextAnalysis.gopherStats(lit("aa bb aa")))
       .getStruct(0)
     assert(gs.length > 0, s"gopherStats struct: $gs")
-    // tokenSet: distinct non-empty tokens, first-seen order
-    assert(one(Dedup.tokenSet(lit("b a  a"))).getSeq[String](0)
-      == Seq("b", "a"))
     // sigSimilarity: fraction of agreeing minhash positions
     assert(one(Dedup.sigSimilarity(
       array(lit(1L), lit(2L), lit(3L), lit(4L)),
       array(lit(1L), lit(2L), lit(9L), lit(4L)))).getDouble(0) == 0.75)
-    // pctBucket/hashBucket32/sampleByHash: stable [0,100) buckets,
-    // sample = exactly the rows whose bucket clears the cut
+    // pctBucket/hashBucket32: stable [0,100) buckets
     val bkt = docs.select(col("doc_id"),
       Sampling.pctBucket(col("text")).as("b"),
       (Sampling.hashBucket32(col("text")) % 100).as("b2")).collect()
     assert(bkt.forall(r => r.getLong(1) >= 0 && r.getLong(1) < 100))
     assert(bkt.forall(r => r.getLong(1) == r.getLong(2)),
       "pctBucket must be hashBucket32 mod 100")
-    val sampled = Sampling.sampleByHash(docs, "text", 30)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val expectIds = bkt.filter(_.getLong(1) < 30).map(_.getLong(0)).toSet
-    assert(sampled == expectIds, "sampleByHash must keep exactly the " +
-      "sub-cut buckets (deterministic, rerun-stable)")
     // bindOnce: the lambda sees the bound value; compute once, use twice
     assert(one(VectorOps.bindOnce(lit(3))(v => v * v + v)).getInt(0) == 12)
     // cosineHoisted: the hoisted-norms form (na/nb are the PRE-SQRT'D
@@ -706,25 +686,6 @@ class LlmSpec extends AnyFunSuite {
     assert(scanLines.nonEmpty && scanLines.forall(
       !_.contains("embedding")),
       s"indexed scan must be code-width:\n${scanLines.mkString("\n")}")
-  }
-
-  test("minHashPairsAgainstManaged: same pairs, close() releases both sides") {
-    import org.apache.spark.storage.StorageLevel
-    val newDocs = docs.filter(col("doc_id") % 7 === 0)
-    val corpus = docs.filter(col("doc_id") % 7 =!= 0)
-    val plain = Dedup.minHashPairsAgainst(newDocs, corpus, threshold = 0.35)
-      .select("id_new", "id_corpus").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val handle = Dedup.minHashPairsAgainstManaged(newDocs, corpus,
-      threshold = 0.35)
-    val managed = handle.value.select("id_new", "id_corpus").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(managed == plain)
-    assert(handle.parents.size == 2 &&
-      handle.parents.forall(_.storageLevel != StorageLevel.NONE))
-    handle.close()
-    assert(handle.parents.forall(_.storageLevel == StorageLevel.NONE),
-      "close() must release both signature caches")
   }
 
   test("kmeans centroids: deterministic across runs, improve IVF recall") {
@@ -1909,10 +1870,6 @@ class LlmSpec extends AnyFunSuite {
     assert(got(3L).getBoolean(got(3L).fieldIndex("kept")))
     assert(!got(1L).getBoolean(got(1L).fieldIndex("kept")))
     assert(!got(2L).getBoolean(got(2L).fieldIndex("kept")))
-    // the filter keeps exactly the clean doc, schema untouched
-    val kept = TextAnalysis.gopherQualityFilter(df)
-    assert(kept.columns.toSeq == Seq("doc_id", "text"))
-    assert(kept.select("doc_id").as[Long].collect().toSeq == Seq(3L))
   }
 
   test("clusterBalancedSample caps every cell and is partition-independent") {
@@ -2027,12 +1984,13 @@ class LlmSpec extends AnyFunSuite {
     val other = (0 until 100).map(i => s"z$i").mkString(" ")
     val docs = Seq((1L, base), (2L, longer), (3L, other))
       .toDF("doc_id", "text")
-    val kept = Dedup.nearDupDedupBy(docs,
-        TextAnalysis.tokenCount(col("text")).cast("long"),
-        threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val comps = Dedup.connectedComponents(
+      Dedup.minHashPairs(docs, threshold = 0.5))
+    val kept = Dedup.bestPerCluster(comps, docs.select(col("doc_id"),
+        TextAnalysis.tokenCount(col("text")).cast("long").as("quality")))
+      .select("keep_id").collect().map(_.getLong(0)).toSet
     // 1 and 2 cluster; 2 is longer so it wins despite the higher id
-    assert(kept == Set(2L, 3L), s"got $kept")
+    assert(kept == Set(2L), s"got $kept")
     // min-id variant keeps 1 — the two policies differ exactly here
     assert(Dedup.nearDupDedup(docs, threshold = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
@@ -2127,7 +2085,8 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("pplBuckets: buckets partition each language, head outscores tail") {
-    val out = TextAnalysis.pplBuckets(docs, docs, nBuckets = 3).collect()
+    val out = TextAnalysis.pplBucketsScored(docs,
+        TextAnalysis.bigramLmScore(docs, docs), nBuckets = 3).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3)))
     assert(out.map(_._4).toSet == Set(1L, 2L, 3L))
     // per language: bucket sizes differ by at most 1 (ntile contract)
@@ -2142,9 +2101,10 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("ccnetFilter: kept slice = buckets <= keep, schema preserved") {
-    val tiers = TextAnalysis.pplBuckets(docs, docs, nBuckets = 3)
+    val scored = TextAnalysis.bigramLmScore(docs, docs)
+    val tiers = TextAnalysis.pplBucketsScored(docs, scored, nBuckets = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    val kept = TextAnalysis.ccnetFilter(docs, docs, nBuckets = 3,
+    val kept = TextAnalysis.ccnetFilterScored(docs, scored, nBuckets = 3,
       keepBuckets = 2)
     assert(kept.columns.toSeq ==
       docs.columns.toSeq :+ "ppl_bucket")
@@ -2215,16 +2175,18 @@ class LlmSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val dir = graft.Scratch.root + "/cluster_index"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    Dedup.writeClusterIndex(docs, dir, threshold = 0.5)
-    val indexed = Dedup.nearDupDedupIndexed(docs, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    // the cluster table as a corpus-version artifact: components
+    // persisted once, then consumed through keepRepresentatives
+    Dedup.connectedComponents(Dedup.minHashPairs(docs, threshold = 0.5))
+      .write.parquet(dir)
+    def indexed = Dedup.keepRepresentatives(docs, spark.read.parquet(dir))
+    val kept = indexed.select("doc_id").collect().map(_.getLong(0)).toSet
     val direct = Dedup.nearDupDedup(docs, threshold = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(indexed == direct && indexed == Set(1L, 4L))
+    assert(kept == direct && kept == Set(1L, 4L))
     // the query-time plan reads the index, not the pair pipeline:
     // no minhash signature kernel in it
-    val plan = Dedup.nearDupDedupIndexed(docs, dir)
-      .queryExecution.optimizedPlan.toString
+    val plan = indexed.queryExecution.optimizedPlan.toString
     assert(!plan.toLowerCase.contains("minhash"),
       s"index path must not recompute signatures:\n${plan.take(1200)}")
   }
@@ -3031,8 +2993,9 @@ class LlmSpec extends AnyFunSuite {
       "filtered search must equal filter-then-search")
     assert(filtered.forall(_._3 % 5 == 2),
       "every returned neighbor honors the predicate")
-    // Auto overload serves identically through the sidecar
-    assert(srv(Similarity.ivfTopKIndexedAutoWhere(spark, base, q,
+    // the layout's own sidecar centroids serve identically
+    def sidecar = Similarity.ivfIndexCentroids(spark, base).get
+    assert(srv(Similarity.ivfTopKIndexedWhere(spark, base, sidecar, q,
       k = 5, predicate = col("grp") === 2)) == filtered)
     // a patch rewrite must CARRY the attribute columns: patch to a
     // refreshed set, then filtered search still works and every row
@@ -3045,8 +3008,8 @@ class LlmSpec extends AnyFunSuite {
     assert(idx.filter(col("grp").isNull).count() == 0 &&
       idx.filter(col("grp") =!= col("vec_id") % 5).count() == 0,
       "attribute columns must survive the patch rewrite intact")
-    val afterPatch = srv(Similarity.ivfTopKIndexedAutoWhere(spark,
-      base, q, k = 5, predicate = col("grp") === 2))
+    val afterPatch = srv(Similarity.ivfTopKIndexedWhere(spark,
+      base, sidecar, q, k = 5, predicate = col("grp") === 2))
     val wantPatched = srv(Similarity.ivfTopKWith(newC,
       emb.filter(col("vec_id") % 5 === 2), q, k = 5))
     assert(afterPatch == wantPatched,
@@ -3249,6 +3212,58 @@ class LlmSpec extends AnyFunSuite {
       tdIds.toDF("vec_id"))
     assert(rmT == tdIds.length,
       s"pq takedown must reach delta AND main: $rmT vs ${tdIds.length}")
+  }
+
+  test("a takedown that empties _delta does not block a later IVF " +
+       "or PQ patch") {
+    import spark.implicits._
+    val base = graft.Scratch.root + "/emptied_delta_spec"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val main = emb.filter(col("vec_id") % 2 === 0)
+    val odd = emb.filter(col("vec_id") % 2 =!= 0)
+    val ten = odd.orderBy(col("vec_id")).limit(10)
+    val tenIds = ten.select("vec_id").collect().map(_.getLong(0)).toSeq
+    val q = emb.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("query_id"),
+        col("embedding").as("query_vec"))
+    def srv(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
+    // append 10 vectors, take all 10 down: `_delta` stands, empty
+    def emptyDelta(dir: String, append: () => Long,
+                   takedown: () => (Long, Long)): Unit = {
+      assert(append() == 10L)
+      assert(takedown()._1 == 10L)
+      assert(new java.io.File(s"$dir/_delta").isDirectory &&
+        !new java.io.File(s"$dir/_delta").list()
+          .exists(_.startsWith("ingest_batch=")),
+        "the takedown must leave an emptied _delta behind")
+    }
+    val ivf = s"$base/ivf"
+    val cents = Similarity.kmeansCentroidsUncached(emb, nCells = 16,
+      iters = 2)
+    Similarity.ivfWriteIndex(main, cents, ivf)
+    emptyDelta(ivf,
+      () => Similarity.ivfAppendBatch(spark, ivf, ten, batchId = 0L),
+      () => graft.llm.Takedown.ivfTakedown(spark, ivf,
+        tenIds.toDF("vec_id")))
+    val newC = Similarity.kmeansUpdate(odd, cents)
+    Similarity.ivfPatchIndex(spark, ivf, newC)
+    assert(srv(Similarity.ivfTopKIndexedAuto(spark, ivf, q, k = 10)) ==
+      srv(Similarity.ivfTopKWith(newC, main, q, k = 10)),
+      "the patched IVF layout serves the refreshed centroids")
+    val pq = s"$base/pq"
+    val books = Similarity.pqCodebooks(emb, m = 4, k = 16, iters = 2)
+    Similarity.pqWriteIndex(main, books, pq)
+    emptyDelta(pq,
+      () => Similarity.pqAppendBatch(spark, pq, ten, batchId = 0L),
+      () => graft.llm.Takedown.pqTakedown(spark, pq,
+        tenIds.toDF("vec_id")))
+    val newBooks = Similarity.pqCodebooks(odd, m = 4, k = 16, iters = 2)
+    Similarity.pqPatchIndexAuto(spark, pq, main, newBooks)
+    assert(srv(Similarity.pqTopKIndexedAuto(spark, pq, q, k = 10)) ==
+      srv(Similarity.pqTopK(main, q, newBooks, k = 10)),
+      "the patched PQ table serves the refreshed books")
   }
 
   test("ivf delta ingest: append replay replaces; compaction folds " +
@@ -3548,8 +3563,8 @@ class LlmSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     // serve + stats from ONE core run (the deployed pairing)
-    val (servedDf, statsDf) = TextAnalysis.bm25PrunedServeWithStats(
-      spark, base, qs, k = 5, sliceM = 16)
+    val (servedDf, statsDf) = TextAnalysis.bm25PrunedCore(
+      spark, base, qs, k = 5, sliceM0 = 16)
     val pruned = rows(servedDf)
     val full = rows(TextAnalysis.bm25TopKFromPostings(
       spark, base, qs, k = 5))
@@ -3584,7 +3599,7 @@ class LlmSpec extends AnyFunSuite {
     val qRare = (0 until 12).map(q => (1000L + q,
       (0 until 8).map(j => s"rk${(q * 53 + j * 17) % 499}")
         .mkString(" "))).toDF("query_id", "text")
-    val st2 = TextAnalysis.bm25PruneStats(spark, base2, qRare, k = 5)
+    val st2 = TextAnalysis.bm25PrunedCore(spark, base2, qRare, k = 5)._2
       .collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap
     assert(st2.size == 12 && st2.values.forall(identity),
       s"every rare-token query must be slice-answered on the " +
@@ -3618,8 +3633,8 @@ class LlmSpec extends AnyFunSuite {
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     // default routing: every matched term has df (31) > sliceM (16)
     // -> straight to the full scan, the attempt is never made
-    val stOff = TextAnalysis.bm25PruneStats(spark, base, qs,
-        k = 2, sliceM = 16)
+    val stOff = TextAnalysis.bm25PrunedCore(spark, base, qs,
+        k = 2, sliceM0 = 16)._2
       .collect().map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2),
         r.getBoolean(4))).toSeq
     graft.cache.Pins.release(spark)
@@ -3630,8 +3645,8 @@ class LlmSpec extends AnyFunSuite {
     try {
       // ratio 4, k=2: sliceM (16) >= 8 -> attempt; the bound PROVES
       // the slice answer exact and the serve matches the full scan
-      val (served, stats) = TextAnalysis.bm25PrunedServeWithStats(
-        spark, base, qs, k = 2, sliceM = 16)
+      val (served, stats) = TextAnalysis.bm25PrunedCore(
+        spark, base, qs, k = 2, sliceM0 = 16)
       val got = rows(served)
       val st = stats.collect()
         .map(r => (r.getLong(0), r.getBoolean(4))).toSeq
@@ -3645,8 +3660,8 @@ class LlmSpec extends AnyFunSuite {
         s"flagged prune must reproduce the full scan exactly: $got")
       // the cheap condition itself: ratio 4, k=5 -> sliceM (16) < 20,
       // no attempt even with the flag on (saturated routing preserved)
-      val stTight = TextAnalysis.bm25PruneStats(spark, base, qs,
-          k = 5, sliceM = 16)
+      val stTight = TextAnalysis.bm25PrunedCore(spark, base, qs,
+          k = 5, sliceM0 = 16)._2
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.isNullAt(2), r.getBoolean(4))).toSeq
       graft.cache.Pins.release(spark)
@@ -3677,8 +3692,8 @@ class LlmSpec extends AnyFunSuite {
     val qs = Seq((1L, "rare3 rare7"), (2L, "the of"),
       (3L, "absentterm")).toDF("query_id", "text")
     def run() = {
-      val (served, stats) = TextAnalysis.bm25PrunedServeWithStats(
-        spark, base, qs, k = 5, sliceM = 16)
+      val (served, stats) = TextAnalysis.bm25PrunedCore(
+        spark, base, qs, k = 5, sliceM0 = 16)
       val s2 = (served.collect().map(r => (r.getLong(0), r.getLong(1),
           r.getLong(2), r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq,
         stats.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -3721,8 +3736,8 @@ class LlmSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     val (servedDf, statsDf) =
-      TextAnalysis.bm25PrunedServeWithStatsWeighted(
-        spark, base, qs, k = 5, sliceM = 16)
+      TextAnalysis.bm25PrunedCore(
+        spark, base, qs, k = 5, sliceM0 = 16, weighted = true)
     val pruned = rows(servedDf)
     val full = rows(TextAnalysis.bm25TopKWeightedFromPostings(
       spark, base, qs, k = 5))
