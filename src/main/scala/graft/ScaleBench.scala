@@ -725,10 +725,10 @@ object ScaleBench {
         runProbe("ivf_patch", f, nEmb)(
           graft.llm.Similarity.ivfPatchIndex(spark, idx, newC)._1)
       }
-      // wide-geometry trending lookup: the broadcast-join face's cost
-      // vs SKETCH WIDTH at a fixed corpus (the plan-literal device is
-      // capped at 1e4 cells; this probes the windowedTrendingWide
-      // claim that the broadcast path stays flat as geometry grows).
+      // wide-geometry trending lookup: trendingFromCounts' cost vs
+      // SKETCH WIDTH at a fixed corpus (the plan-literal device is
+      // capped at 1e4 cells; this probes the claim that the
+      // broadcast-join path stays flat as geometry grows).
       // The synthetic sketch is DENSE — every (row,bucket) cell
       // non-zero — so the broadcast truly carries 4*w cells.
       if (f == 1 && enabled("trend_wide")) {

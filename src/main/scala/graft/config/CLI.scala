@@ -222,9 +222,8 @@ object CLI {
 
     // The compliance sweep through the same task-algebra lifecycle:
     // per-doc typed-PII/blocklist/secret verdicts to one sink, the
-    // per-source rollup (the safetyMonitor batch shape) to another —
-    // one registered pipeline covers both the review queue and the
-    // dashboard feed.
+    // per-source rollup to another — one registered pipeline covers
+    // both the review queue and the dashboard feed.
     "safety" -> Registered(
       "safety",
       "corpus safety scan: typed PII counts + blocklist + secret " +
@@ -759,9 +758,9 @@ object CLI {
             // `run` is a fresh REBUILD: the pipeline owns its layer
             // output, so a rerun (or a corpus change) starts clean
             // instead of re-publishing batch ids under an existing
-            // compact partition. Cross-run incremental maintenance is
-            // the streaming faces' contract (bm25Monitor/cmsMonitor),
-            // not the batch lifecycle's.
+            // compact partition. Cross-run incremental maintenance
+            // (bm25PostingsBatch/cmsBatch under caller-kept batch ids)
+            // is not the batch lifecycle's contract.
             val lp = new org.apache.hadoop.fs.Path(layerDir)
             val lfs = lp.getFileSystem(
               spark.sparkContext.hadoopConfiguration)

@@ -474,27 +474,6 @@ object SketchExprs {
       copy(left = l, right = r)
   }
 
-  /** Exact |A ∩ B| of two long-array SETS (native sort-merge kernel,
-    * [[SketchOps.setOverlap]]): (array<long>, array<long>) -> long.
-    * Equals `size(array_intersect(a, b))` for distinct-element
-    * arrays at a fraction of the per-row cost. */
-  case class SetOverlap(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkLongArr(prettyName, left.dataType, right.dataType)
-    override def dataType: DataType = LongType
-    override def prettyName: String = "set_overlap"
-    override def nullSafeEval(a: Any, b: Any): Any =
-      SketchOps.setOverlap(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) =>
-        s"graft.functions.SketchOps.setOverlap($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): SetOverlap =
-      copy(left = l, right = r)
-  }
-
   /** α-bounded overlap over SORTED long arrays (native early-exit
     * merge, [[SketchOps.setOverlapSortedBounded]]):
     * (array<long> sorted, array<long> sorted, double) -> long.
@@ -687,8 +666,6 @@ object SketchExprs {
     toCol(LangIdExpr(toExpr(c), markers))
   def sigSim(a: Column, b: Column): Column =
     toCol(SigSim(toExpr(a), toExpr(b)))
-  def setOverlap(a: Column, b: Column): Column =
-    toCol(SetOverlap(toExpr(a), toExpr(b)))
   def setOverlapBounded(a: Column, b: Column, need: Column): Column =
     toCol(SetOverlapBounded(toExpr(a), toExpr(b), toExpr(need)))
   def shingleHashesSorted(c: Column, shingleSize: Int): Column =

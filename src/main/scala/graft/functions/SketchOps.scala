@@ -613,15 +613,16 @@ object SketchOps {
 
   /** EXACT |A ∩ B| (SET semantics — duplicates in either input are
     * counted once) of two long arrays by per-row sort + linear merge
-    * over primitive copies, skipping equal-element runs — the verify
-    * kernel for the exact Jaccard joins. Equals
+    * over primitive copies, skipping equal-element runs — the
+    * unbounded form of [[setOverlapSortedBounded]], the verify kernel
+    * the exact Jaccard joins call. Equals
     * `size(array_intersect(a, b))` on ARBITRARY inputs
     * (order-insensitive, duplicate-insensitive), without the
     * built-in's per-row hash-set build and boxing: the candidate
     * verify stream is tens of millions of rows per slab at 64x
     * (BASELINE.md r17) and the built-in's evaluation was its
     * measured bottleneck. */
-  def setOverlap(a: ArrayData, b: ArrayData): Long = {
+  private[graft] def setOverlap(a: ArrayData, b: ArrayData): Long = {
     val la = a.toLongArray()
     val lb = b.toLongArray()
     java.util.Arrays.sort(la)

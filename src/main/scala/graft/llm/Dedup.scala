@@ -1702,21 +1702,8 @@ object Dedup {
     val cg = corpus.select(explode(array_distinct(
         graft.functions.SketchExprs.windowHashes(col(textCol), n)))
       .as("_h")).distinct()
-    noveltyScore(
-      bg.join(cg.withColumn("_seen", lit(1)), Seq("_h"), "left"),
-      tau, idCol)
-  }
-
-  /** The novelty-report aggregate shared by [[batchNovelty]] and the
-    * streaming monitor ([[graft.streaming.IngestStream.noveltyBatch]])
-    * — ONE copy of the oracle-replayed formula (count, null-`_seen`
-    * novel count, round-6 fraction, tau verdict), so the streaming
-    * report can never drift from the batch semantics the `llm_novelty`
-    * oracle checks. Input: one row per (doc, distinct gram) with a
-    * nullable `_seen` marker. */
-  private[graft] def noveltyScore(seen: DataFrame, tau: Double,
-                                  idCol: String): DataFrame =
-    seen.groupBy(col(idCol))
+    bg.join(cg.withColumn("_seen", lit(1)), Seq("_h"), "left")
+      .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("_seen").isNull, 1L).otherwise(0L))
           .as("n_novel"))
@@ -1724,6 +1711,7 @@ object Dedup {
         round(col("n_novel").cast("double") /
           col("n_grams").cast("double"), 6))
       .withColumn("is_novel", col("novelty_frac") >= tau)
+  }
 
   /** Rare-n-gram exposure stats — the memorization / privacy gate a
     * curation stage runs before training (Carlini et al.'s

@@ -128,51 +128,6 @@ object HeavyHitters {
         col("mg.counters").as("counters"), col("mg.n").as("n"))
   }
 
-  /** Streaming Misra-Gries: per micro-batch, run the distributed MG
-    * summary and MERGE it into a running driver-held buffer. By the
-    * mergeable-summaries property the running buffer is at all times
-    * a valid m-counter MG summary of EVERYTHING ingested (superset
-    * guarantee intact, n exact) — so a periodic exact verify pass
-    * against the corpus-so-far turns it into exact heavy hitters,
-    * same as the batch [[heavyHitters]]. State is m entries on the
-    * driver; each batch ships only its own ≤ m-entry summary. */
-  final class StreamTracker(m: Int) {
-    private val agg = new MisraGriesAgg(m)
-    @volatile private var state: MGBuf =
-      (mutable.HashMap.empty[String, Long], 0L)
-
-    /** Live (candidate counters, exact element total). */
-    def current(): (Map[String, Long], Long) = {
-      val s = state
-      (s._1.toMap, s._2)
-    }
-
-    /** Attach to a streaming frame whose first column is the token. */
-    def sink(tokens: DataFrame)
-        : org.apache.spark.sql.streaming.StreamingQuery =
-      tokens.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[
-             org.apache.spark.sql.Row], _: Long) =>
-            val (cand, n) = summarize(batch, m)
-            // merge mutates its first argument — merge into a COPY and
-            // publish that, so a concurrent current() never observes a
-            // map under mutation. The read-copy-merge-publish is
-            // GUARDED: one streaming query's foreachBatch runs
-            // serially, but the same tracker attached to two sinks
-            // would interleave and silently drop a batch's counts
-            synchronized {
-              val prev = state
-              state = agg.merge(
-                (mutable.HashMap(prev._1.toSeq: _*), prev._2),
-                (mutable.HashMap(cand.toSeq: _*), n))
-            }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-  }
-
   /** Tokens with frequency strictly above n/k (n = total token
     * instances), with exact counts: `(rank, token, n_occurrences)`.
     *
@@ -321,8 +276,8 @@ object HeavyHitters {
     *
     * Scale: the batch aggregate is batch-sized, the sketch
     * broadcasts (≤ d·w rows), history itself is never rescanned —
-    * the streaming face is `IngestStream.cmsMonitor`'s layer
-    * feeding this per batch. */
+    * the standing history is an `IngestStream.cmsBatch` layer read
+    * through `IngestStream.cmsLayerRead`. */
   private[graft] def trendingTokens(
       batchItems: DataFrame, sketch: DataFrame, itemCol: String = "token",
       minCount: Long = 2L, minRatio: Double = 2.0, depth: Int = 4,
@@ -339,10 +294,11 @@ object HeavyHitters {
     * `(…, itemCol, batch_cnt)` row to its [[cmsLookup]] history
     * estimate and keep the rows whose exact count is both ≥ `minCount`
     * and ≥ `minRatio`× the estimate. Extra columns (e.g. a window
-    * start) ride through untouched — this is the shared kernel of
-    * [[trendingTokens]] and the wide-geometry streaming face
-    * (`IngestStream.windowedTrendingWide`), which cannot inline the
-    * sketch as a plan literal and broadcast-joins it instead. */
+    * start) ride through untouched — this is the kernel of
+    * [[trendingTokens]], and over a windowed aggregate
+    * (`(window_start, itemCol, batch_cnt)`) it serves the sketch
+    * geometries too wide for [[windowedTrending]]'s plan literal: it
+    * broadcast-joins the sketch instead of inlining it. */
   def trendingFromCounts(counts: DataFrame, sketch: DataFrame,
                          itemCol: String = "token", minCount: Long = 2L,
                          minRatio: Double = 2.0, depth: Int = 4,
@@ -382,10 +338,9 @@ object HeavyHitters {
     * ≤ `maxLiteralCells` (the plan carries one width-array of
     * literals per row regardless of how many cells are non-zero; the
     * default 4×16 costs 64). A wider geometry belongs to
-    * [[graft.streaming.IngestStream.windowedTrendingWide]]: the SAME
-    * event-time tumbling windows (the stateful aggregation stays in
-    * the streaming plan), with the history lookup broadcast-joined
-    * per finalized micro-batch in foreachBatch instead of inlined. */
+    * [[trendingFromCounts]] over a windowed aggregate: the SAME
+    * per-window counts, with the history lookup broadcast-joined
+    * instead of inlined. */
   def windowedTrending(events: DataFrame, tsCol: String,
                        itemCol: String, windowDur: String,
                        sketch: DataFrame, minCount: Long = 2L,
@@ -396,9 +351,8 @@ object HeavyHitters {
     require(depth.toLong * width <= maxLiteralCells,
       s"depth*width = ${depth.toLong * width} > $maxLiteralCells: too " +
         "wide for the plan-literal device (every row inlines a " +
-        "width-sized literal array) — use " +
-        "IngestStream.windowedTrendingWide, which broadcast-joins the " +
-        "sketch per finalized micro-batch instead")
+        "width-sized literal array) — use trendingFromCounts over a " +
+        "windowed aggregate, which broadcast-joins the sketch instead")
     // SIZE GUARD before the collect: the literal device is only valid
     // for a summed sketch of at most depth*width cells — a raw
     // multi-batch layer (or a wrong frame) would otherwise OOM the
@@ -409,7 +363,8 @@ object HeavyHitters {
       s"sketch frame holds $rawCount cells > depth*width = " +
         s"${depth.toLong * width} — not a summed sketch (an uncompacted " +
         "multi-batch layer read raw? use cmsLayerRead, or " +
-        "IngestStream.windowedTrendingWide for wide geometries)")
+        "trendingFromCounts over a windowed aggregate for wide " +
+        "geometries)")
     val raw = sketch.select(col("row").cast("int"),
         col("bucket").cast("long"), col("cnt").cast("long"))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))

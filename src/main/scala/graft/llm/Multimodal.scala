@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -231,7 +231,6 @@ object Multimodal {
 
       private def stats(pcm: Array[Byte], rate: Int, channels: Int,
                         frames: Int): (Int, Int, Int, Array[Float]) = {
-        val nCh = math.min(channels, 2)
         val sumSq = Array.fill(2)(0.0)
         val peak = Array.fill(2)(0.0)
         val segSq = Array.fill(4)(0.0)

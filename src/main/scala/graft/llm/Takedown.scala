@@ -126,10 +126,8 @@ object Takedown {
       out += (("compaction-temp", "uncommitted-garbage",
         s"$n: pre-rename fold output, cleared on the next compaction"))
     }
-    def partIds(prefix: String): Seq[Long] = names
-      .filter(_.startsWith(prefix))
-      .flatMap(_.drop(prefix.length).toLongOption)
-    val batches = partIds("ingest_batch=")
+    val batches = graft.streaming.IngestStream.batchPartitions(fs, root)
+      .map(_._2)
     if (batches.nonEmpty) {
       val (compacts, live) = batches.partition(_ < 0)
       out += (("batch-partitions", "present",
@@ -154,6 +152,9 @@ object Takedown {
             "re-key or delete those live partitions manually"))
       }
     }
+    def partIds(prefix: String): Seq[Long] = names
+      .filter(_.startsWith(prefix))
+      .flatMap(_.drop(prefix.length).toLongOption)
     Seq("cell_id=" -> "ivf-cells", "pq_bucket=" -> "pq-buckets")
       .foreach { case (p, label) =>
         val ids = partIds(p)
@@ -351,8 +352,7 @@ object Takedown {
     *
     * Requires a stats partition with the SAME id as every affected
     * postings partition — true by construction for
-    * [[TextAnalysis.bm25PostingsBatch]] /
-    * [[graft.streaming.IngestStream.bm25Monitor]] layers, and
+    * [[TextAnalysis.bm25PostingsBatch]] layers, and
     * preserved by compaction when BOTH subdirs are compacted at the
     * same watermark (the documented
     * [[graft.streaming.IngestStream.ingestLayerCompact]] usage);
@@ -555,13 +555,10 @@ object Takedown {
     // sketch into one compact partition; pick the watermark that
     // covers every present partition, bumped past an already-present
     // compact target so the fold actually runs
-    val prefix = "ingest_batch="
-    val idsPresent = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .flatMap(_.drop(prefix.length).toLongOption)
+    val idsPresent = IngestStream.batchPartitions(fs, root).map(_._2)
     if (idsPresent.isEmpty) return 0L
     var wm = idsPresent.map(i => if (i >= 0) i else -i - 1).max
-    while (fs.exists(new Path(root, s"$prefix${-(wm + 1)}"))) wm += 1
+    while (fs.exists(new Path(root, s"ingest_batch=${-(wm + 1)}"))) wm += 1
     val neg = removedSketch.select(col("row"), col("bucket"),
       (-col("cnt")).as("cnt"))
     IngestStream.compactPartitions(spark, sketchDir, wm) { covered =>

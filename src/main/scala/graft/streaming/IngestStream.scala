@@ -8,11 +8,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 /** Streaming near-duplicate ingest: the incremental-dedup operator
   * ([[graft.llm.Dedup.minHashPairsAgainst]]) run continuously.
   *
-  * The ONLY state is the signature layer on disk — an append-only
-  * parquet of `(id, sig)` rows. Each micro-batch (1) near-dup-dedups
-  * within itself, (2) LSH-joins its signatures against the layer and
-  * drops matches, (3) appends the survivors' documents to the corpus
-  * sink and their signatures to the layer. No unbounded in-memory
+  * The ONLY state is the signature layer on disk — a parquet of
+  * `(id, sig)` rows, one `ingest_batch=<id>` partition per
+  * micro-batch. Each micro-batch (1) near-dup-dedups within itself,
+  * (2) LSH-joins its signatures against the layer and drops matches,
+  * (3) publishes the survivors' documents to the corpus sink and
+  * their signatures to the layer. No unbounded in-memory
   * state store: restart recovery is just re-reading the layer, and
   * the same layer serves any number of parallel readers.
   *
@@ -46,40 +47,6 @@ object IngestStream {
         Dedup.minHashSignatures(batch, textCol = textCol, idCol = idCol)
       def pairs(newSigs: DataFrame, corpusSigs: DataFrame): DataFrame =
         Dedup.minHashPairsFromSigs(newSigs, corpusSigs, threshold)
-    }
-
-    /** [[MinHash]] with the two-stage verify
-      * ([[graft.llm.Dedup.verifiedNearDupPairs]]'s rule): LSH
-      * candidates at the permissive `estThreshold`, then each pair
-      * confirmed by thresholded Levenshtein under the per-pair bound
-      * `floor(maxlen·(1−tau))` — an ingest that never drops a doc on
-      * sketch evidence alone. `textOf` resolves `(id, text)` for any
-      * id a pair can mention (the current batch plus the standing
-      * corpus); it is invoked lazily at pair time, BEFORE this
-      * batch's own writes, so it reads the pre-batch corpus. */
-    final case class VerifiedMinHash(textOf: () => DataFrame,
-                                     tau: Double = 0.8,
-                                     estThreshold: Double = 0.35,
-                                     textCol: String = "text")
-        extends SigScheme {
-      def signatures(batch: DataFrame, idCol: String): DataFrame =
-        Dedup.minHashSignatures(batch, textCol = textCol, idCol = idCol)
-      def pairs(newSigs: DataFrame, corpusSigs: DataFrame): DataFrame = {
-        val cand =
-          Dedup.minHashPairsFromSigs(newSigs, corpusSigs, estThreshold)
-        val txt = textOf()
-        val maxLen = greatest(length(col("_ta")), length(col("_tb")))
-        val maxDist = floor(maxLen.cast("double") * lit(1.0 - tau))
-          .cast("int")
-        cand
-          .join(txt.select(col("id").as("id_new"), col(textCol).as("_ta")),
-            Seq("id_new"))
-          .join(txt.select(col("id").as("id_corpus"),
-            col(textCol).as("_tb")), Seq("id_corpus"))
-          .filter(call_function("levenshtein", col("_ta"), col("_tb"),
-            maxDist) >= 0)
-          .select(col("id_new"), col("id_corpus"), col("est_jaccard"))
-      }
     }
 
     /** Codec-free blob SimHash ([[graft.llm.Multimodal
@@ -138,8 +105,8 @@ object IngestStream {
     try Some(graft.Writes.readParquet(spark, dir))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
-  /** One ingest step (batch semantics — unit-testable; the streaming
-    * wrapper calls this per micro-batch). Appends surviving docs to
+  /** One ingest step, run per micro-batch by [[nearDupIngest]] and
+    * [[mediaNearDupIngest]]: publishes the surviving docs to
     * `corpusDir` and their signatures to `sigDir`.
     *
     * Signatures are computed ONCE per batch and shared by the
@@ -150,30 +117,28 @@ object IngestStream {
     *
     * IDEMPOTENT REPLAY: `foreachBatch` is at-least-once — a crash
     * between the two output writes replays the whole batch under the
-    * SAME `batchId`. With `batchId` set, both outputs land in
-    * batch-keyed partition directories (`<dir>/ingest_batch=<id>`)
-    * written with overwrite, so a replay REPLACES the previous
-    * attempt's files instead of appending duplicates; and the layer
-    * join EXCLUDES this batch's own `ingest_batch` partition, so a
-    * replay whose first attempt already published signatures doesn't
-    * self-match every survivor into oblivion. Readers of the corpus /
-    * layer see one extra `ingest_batch` partition column. With
-    * `batchId = None` (plain batch use) both writes are appends —
-    * don't mix the two layouts under one directory (parquet partition
-    * discovery rejects the mixture). */
-  def ingestBatch(batch: DataFrame, corpusDir: String, sigDir: String,
-                  threshold: Double = 0.7, textCol: String = "text",
-                  idCol: String = "doc_id",
-                  batchId: Option[Long] = None): Unit =
+    * SAME `batchId`. Both outputs land in batch-keyed partition
+    * directories (`<dir>/ingest_batch=<id>`) written with overwrite,
+    * so a replay REPLACES the previous attempt's files instead of
+    * appending duplicates; and the layer join EXCLUDES this batch's
+    * own `ingest_batch` partition, so a replay whose first attempt
+    * already published signatures doesn't self-match every survivor
+    * into oblivion. Readers of the corpus / layer see one extra
+    * `ingest_batch` partition column. */
+  private[graft] def ingestBatch(batch: DataFrame, corpusDir: String,
+                                 sigDir: String, threshold: Double = 0.7,
+                                 textCol: String = "text",
+                                 idCol: String = "doc_id",
+                                 batchId: Long): Unit =
     ingestBatchWith(batch, corpusDir, sigDir,
       SigScheme.MinHash(threshold, textCol), idCol, batchId)
 
   /** [[ingestBatch]] generalized over the sketch ([[SigScheme]]) —
     * the replay contract, write ordering, and cache lifecycle are
     * identical for every scheme. */
-  def ingestBatchWith(batch: DataFrame, corpusDir: String, sigDir: String,
-                      scheme: SigScheme, idCol: String,
-                      batchId: Option[Long] = None): Unit = {
+  private[graft] def ingestBatchWith(batch: DataFrame, corpusDir: String,
+                                     sigDir: String, scheme: SigScheme,
+                                     idCol: String, batchId: Long): Unit = {
     import org.apache.spark.storage.StorageLevel
     // the clustering path (connectedComponents driver union-find) and
     // the empty-layer stub are long-typed; fail fast on ids that
@@ -212,16 +177,12 @@ object IngestStream {
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
           val dupIds = layerReadable(spark, sigDir) match {
-            case Some(layer0) =>
+            case Some(layer) =>
               // replay guard: a prior attempt of THIS batch may have
               // already published its signature partition — joining
               // against it would self-match every survivor
-              val layer = batchId match {
-                case Some(bid) if layer0.columns.contains("ingest_batch") =>
-                  layer0.filter(col("ingest_batch") =!= bid)
-                case _ => layer0
-              }
-              scheme.pairs(keptSigs, layer)
+              scheme.pairs(keptSigs,
+                  layer.filter(col("ingest_batch") =!= batchId))
                 .select(col("id_new").as("id")).distinct()
                 .persist(StorageLevel.MEMORY_AND_DISK)
             case None => spark.emptyDataFrame
@@ -242,17 +203,11 @@ object IngestStream {
               val dropAll = dropWithin.unionByName(dupIds)
                 .withColumnRenamed("id", idCol)
               val survivors = b.join(dropAll, Seq(idCol), "left_anti")
-              batchId match {
-                case Some(bid) =>
-                  // batch-keyed overwrite: replay replaces, never appends
-                  survivors.write.mode("overwrite")
-                    .parquet(s"$corpusDir/ingest_batch=$bid")
-                  survivorSigs.write.mode("overwrite")
-                    .parquet(s"$sigDir/ingest_batch=$bid")
-                case None =>
-                  survivors.write.mode("append").parquet(corpusDir)
-                  survivorSigs.write.mode("append").parquet(sigDir)
-              }
+              // batch-keyed overwrite: replay replaces, never appends
+              survivors.write.mode("overwrite")
+                .parquet(s"$corpusDir/ingest_batch=$batchId")
+              survivorSigs.write.mode("overwrite")
+                .parquet(s"$sigDir/ingest_batch=$batchId")
             } finally { survivorSigs.unpersist(); () }
           } finally {
             dupIds match {
@@ -264,36 +219,6 @@ object IngestStream {
         } finally { keptSigs.unpersist(); () }
       } finally { sigs.unpersist(); () }
     } finally { b.unpersist(); () }
-  }
-
-  /** [[ingestBatch]] with the two-stage verify: candidates never drop
-    * a doc on sketch evidence alone — each within-batch and
-    * cross-layer pair is confirmed by thresholded edit distance
-    * before it counts as a duplicate ([[SigScheme.VerifiedMinHash]]).
-    * The text resolver unions the batch with the standing corpus
-    * (pre-batch — pairs are built before this batch's writes) and
-    * dedups on id so an at-least-once replay, whose first attempt
-    * already published this batch's corpus partition, cannot double
-    * pair rows. */
-  def ingestBatchVerified(batch: DataFrame, corpusDir: String,
-                          sigDir: String, tau: Double = 0.8,
-                          estThreshold: Double = 0.35,
-                          textCol: String = "text",
-                          idCol: String = "doc_id",
-                          batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val textOf = () => {
-      val bt = batch.select(col(idCol).cast("long").as("id"),
-        col(textCol))
-      (layerReadable(spark, corpusDir) match {
-        case Some(c) => bt.unionByName(
-          c.select(col(idCol).cast("long").as("id"), col(textCol)))
-        case None => bt
-      }).dropDuplicates("id")
-    }
-    ingestBatchWith(batch, corpusDir, sigDir,
-      SigScheme.VerifiedMinHash(textOf, tau, estThreshold, textCol),
-      idCol, batchId)
   }
 
   /** The one micro-batch driver behind every streaming face in this
@@ -334,161 +259,8 @@ object IngestStream {
                     checkpointDir: Option[String] = None,
                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     microBatches(docs, sigDir, checkpointDir, trigger) { (batch, bid) =>
-      ingestBatch(batch, corpusDir, sigDir, threshold, textCol,
-        idCol, batchId = Some(bid))
+      ingestBatch(batch, corpusDir, sigDir, threshold, textCol, idCol, bid)
     }
-
-  /** [[nearDupIngest]] with the two-stage verify per micro-batch
-    * ([[ingestBatchVerified]]) — same checkpoint/replay contract. */
-  def nearDupIngestVerified(docs: DataFrame, corpusDir: String,
-                            sigDir: String, tau: Double = 0.8,
-                            estThreshold: Double = 0.35,
-                            textCol: String = "text",
-                            idCol: String = "doc_id",
-                            checkpointDir: Option[String] = None,
-                            trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(docs, sigDir, checkpointDir, trigger) { (batch, bid) =>
-      ingestBatchVerified(batch, corpusDir, sigDir, tau,
-        estThreshold, textCol, idCol, batchId = Some(bid))
-    }
-
-  /** One novelty-scoring step (batch semantics — unit-testable; the
-    * streaming wrapper calls this per micro-batch): score every doc
-    * of the batch against the persisted GRAM layer
-    * ([[graft.llm.Dedup.batchNovelty]]'s standing-corpus side as an
-    * on-disk artifact of distinct 60-bit window-gram hashes), write
-    * the per-doc novelty report, then publish the batch's novel
-    * grams to the layer. The layer is the only state — restart
-    * recovery is re-reading it, and it grows by NOVEL grams only, so
-    * a crawl full of re-ingested content adds ~nothing.
-    *
-    * Same idempotent-replay contract as [[ingestBatch]]: `batchId`
-    * is REQUIRED — both outputs are batch-keyed overwrite partitions
-    * and the layer read excludes this batch's own partition, so an
-    * at-least-once replay of the same id replaces rather than
-    * doubles (an unkeyed append path would silently double the gram
-    * layer under retry, so it is not offered). ORDER MATTERS: the
-    * report is written FIRST — both plans read `gramDir`, and
-    * publishing the grams first would recache the layer path and
-    * score the report against a layer already containing this batch
-    * (novelty would collapse to zero on replay-free runs too, via
-    * recacheByPath). */
-  def noveltyBatch(batch: DataFrame, gramDir: String, reportDir: String,
-                  n: Int = 8, tau: Double = 0.5,
-                  textCol: String = "text", idCol: String = "doc_id",
-                  batchId: Long): Unit =
-    noveltyBatchWith(
-      batch.select(col(idCol), explode(array_distinct(
-        graft.functions.SketchExprs.windowHashes(col(textCol), n)))
-        .as("h")),
-      batch.sparkSession, gramDir, reportDir, tau, idCol, batchId)
-
-  /** [[noveltyBatch]] over CDC chunk keys instead of window grams —
-    * the SAME novelty contract with a standing layer ~`div`× smaller
-    * (one key per chunk, not per token position), and chunk
-    * boundaries that re-synchronize after edits
-    * ([[graft.llm.Dedup.cdcChunks]]), so a lightly-edited re-ingest
-    * still scores near zero. The layer a continuously-deduped corpus
-    * actually wants to carry at 100 TB. */
-  def cdcNoveltyBatch(batch: DataFrame, chunkDir: String,
-                      reportDir: String, n: Int = 4, div: Int = 16,
-                      tau: Double = 0.5, textCol: String = "text",
-                      idCol: String = "doc_id", batchId: Long): Unit =
-    noveltyBatchWith(
-      graft.llm.Dedup.cdcChunks(batch, n, div, textCol, idCol)
-        .select(col(idCol), col("chunk_hash").as("h")).distinct(),
-      batch.sparkSession, chunkDir, reportDir, tau, idCol, batchId)
-
-  /** Shared novelty core: per-doc unseen-key fraction against the
-    * standing key layer, batch-keyed overwrite publishing of both
-    * the report and the layer's novel-key growth. */
-  private def noveltyBatchWith(bg: DataFrame,
-                               spark: org.apache.spark.sql.SparkSession,
-                               gramDir: String, reportDir: String,
-                               tau: Double, idCol: String,
-                               batchId: Long): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val layer = layerReadable(spark, gramDir).map { l0 =>
-      val l =
-        if (l0.columns.contains("ingest_batch"))
-          l0.filter(col("ingest_batch") =!= batchId)
-        else l0
-      l.select(col("h")).distinct()
-    }
-    // persist the JOINED stream (batch-sized): both outputs derive
-    // from it, so the standing-layer scan + distinct + join run once
-    // per micro-batch and both writes see one consistent layer
-    // snapshot
-    val seen = (layer match {
-      case Some(l) =>
-        bg.join(l.withColumn("_seen", lit(1)), Seq("h"), "left")
-      case None => bg.withColumn("_seen", lit(null).cast("int"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val report = graft.llm.Dedup.noveltyScore(seen, tau, idCol)
-      val novelGrams = seen.filter(col("_seen").isNull)
-        .select(col("h")).distinct()
-      report.write.mode("overwrite")
-        .parquet(s"$reportDir/ingest_batch=$batchId")
-      novelGrams.write.mode("overwrite")
-        .parquet(s"$gramDir/ingest_batch=$batchId")
-    } finally { seen.unpersist(); () }
-  }
-
-  /** Streaming novelty monitor: [[noveltyBatch]] over a document
-    * stream — the live gauge of how much of an ingest feed is new
-    * content vs re-crawl, with the gram layer as the only (on-disk,
-    * bounded-growth) state. Batch-keyed overwrite publishing makes
-    * at-least-once replay idempotent. */
-  def noveltyMonitor(docs: DataFrame, gramDir: String,
-                     reportDir: String, n: Int = 8, tau: Double = 0.5,
-                     textCol: String = "text", idCol: String = "doc_id",
-                     checkpointDir: Option[String] = None,
-                     trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(docs, gramDir, checkpointDir, trigger) { (batch, bid) =>
-      noveltyBatch(batch, gramDir, reportDir, n, tau,
-        textCol, idCol, batchId = bid)
-    }
-
-  /** Streaming CDC-novelty monitor: [[cdcNoveltyBatch]] over a
-    * document stream — [[noveltyMonitor]]'s contract with the
-    * chunk-granularity layer. */
-  def cdcNoveltyMonitor(docs: DataFrame, chunkDir: String,
-                        reportDir: String, n: Int = 4, div: Int = 16,
-                        tau: Double = 0.5, textCol: String = "text",
-                        idCol: String = "doc_id",
-                        checkpointDir: Option[String] = None,
-                        trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(docs, chunkDir, checkpointDir, trigger) { (batch, bid) =>
-      cdcNoveltyBatch(batch, chunkDir, reportDir, n, div,
-        tau, textCol, idCol, batchId = bid)
-    }
-
-  /** Per-batch safety rollup: [[graft.llm.TextAnalysis.safetyScan]]
-    * over one micro-batch, aggregated to one row per source
-    * (docs, typed-PII instances, blocklist hits, secret docs,
-    * flagged docs) and published under `ingest_batch=<id>` — the
-    * compliance gauge of a live ingest feed. Batch-keyed overwrite
-    * keeps at-least-once replay idempotent (the [[noveltyBatch]]
-    * contract). */
-  def safetyBatch(batch: DataFrame, reportDir: String,
-                  blockTerms: Seq[String], minLen: Int = 20,
-                  minEntropy: Double = 2.5, textCol: String = "text",
-                  idCol: String = "doc_id", srcCol: String = "source",
-                  batchId: Long): Unit =
-    graft.llm.TextAnalysis.safetyScan(batch, blockTerms, minLen,
-        minEntropy, textCol, idCol, srcCol)
-      .groupBy(col(srcCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_email") + col("n_ip") + col("n_phone")).as("n_pii"),
-        sum(col("n_blocked")).as("n_blocked"),
-        sum(when(col("has_secret"), 1L).otherwise(0L)).as("n_secret"),
-        sum(when(col("flagged"), 1L).otherwise(0L)).as("n_flagged"))
-      .write.mode("overwrite")
-      .parquet(s"$reportDir/ingest_batch=$batchId")
 
   /** One tokenizer-drift step: encode the micro-batch with a FROZEN
     * WordPiece model (trained once on `trainDocs` — the trainer is
@@ -499,10 +271,12 @@ object IngestStream {
     * the tokenizer-side early-warning a training pipeline wants
     * BEFORE the model sees the data. Batch-keyed overwrite partition
     * like every report layer (at-least-once replay idempotent). */
-  def fertilityBatch(batch: DataFrame, trainDocs: DataFrame,
-                     reportDir: String, merges: Int = 8,
-                     textCol: String = "text", idCol: String = "doc_id",
-                     batchId: Long): Unit =
+  private[graft] def fertilityBatch(batch: DataFrame,
+                                    trainDocs: DataFrame,
+                                    reportDir: String, merges: Int = 8,
+                                    textCol: String = "text",
+                                    idCol: String = "doc_id",
+                                    batchId: Long): Unit =
     graft.llm.TextAnalysis.wordpieceEncode(trainDocs, merges, textCol,
         idCol, applyTo = Some(batch))
       .agg(count(lit(1)).as("n_docs"),
@@ -529,79 +303,17 @@ object IngestStream {
         textCol, idCol, batchId = bid)
     }
 
-  /** Streaming safety monitor: [[safetyBatch]] over a document
-    * stream. STATELESS by design — every signal is row-local or
-    * batch-local, so there is no standing layer, no state store and
-    * no shuffle beyond the per-batch source rollup; the unbounded
-    * feed is gated at scan speed. */
-  def safetyMonitor(docs: DataFrame, reportDir: String,
-                    blockTerms: Seq[String], minLen: Int = 20,
-                    minEntropy: Double = 2.5, textCol: String = "text",
-                    idCol: String = "doc_id", srcCol: String = "source",
-                    checkpointDir: Option[String] = None,
-                    trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(docs, reportDir, checkpointDir, trigger) { (batch, bid) =>
-      safetyBatch(batch, reportDir, blockTerms, minLen,
-        minEntropy, textCol, idCol, srcCol, batchId = bid)
-    }
-
-  /** Streaming distilled-gate scoring: every micro-batch scored
-    * under the FROZEN weight artifact persisted by the quality_gate
-    * pipeline (or [[graft.llm.TextAnalysis.trainLinearGate]]) — the
-    * `(id, score, pred)` rows land batch-keyed (`ingest_batch=<bid>`
-    * overwrite ⇒ at-least-once replay replaces). The model is read
-    * once at start (dim+1 doubles of driver state); a gate refresh
-    * is a new run — the frozen-model drift-monitor discipline. */
-  def gateMonitor(docs: DataFrame, weightsDir: String, outDir: String,
-                  textCol: String = "text", idCol: String = "doc_id",
-                  checkpointDir: Option[String] = None,
-                  trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
-    val spark = docs.sparkSession
-    val w = graft.Writes.readParquet(spark, weightsDir)
-      .orderBy(col("bucket"))
-      .collect().map(_.getDouble(1))
-    require(w.length >= 2,
-      s"$weightsDir is not a gate-weights layer (need dim+1 " +
-        s"(bucket, w) rows, found ${w.length})")
-    microBatches(docs, outDir, checkpointDir, trigger) { (batch, bid) =>
-      graft.llm.TextAnalysis
-        .applyLinearGate(batch, w, textCol, idCol)
-        .write.mode("overwrite")
-        .parquet(s"$outDir/ingest_batch=$bid")
-    }
-  }
-
-  /** Streaming near-identical-BLOB ingest: [[nearDupIngest]] with the
-    * codec-free byte-SimHash sketch — the signature layer holds ONE
-    * long per blob, so the standing corpus of a 100 TB media store is
-    * consulted through a few GB of sketches. Same idempotent-replay
-    * contract; within-batch duplicate groups keep their min-id
-    * representative. */
-  def blobNearDupIngest(blobs: DataFrame, corpusDir: String,
-                        sigDir: String, maxDist: Int = 3,
-                        idCol: String = "media_id",
-                        contentCol: String = "content",
-                        checkpointDir: Option[String] = None,
-                        trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(blobs, sigDir, checkpointDir, trigger) { (batch, bid) =>
-      ingestBatchWith(batch, corpusDir, sigDir,
-        SigScheme.BlobSimHash(maxDist, contentCol), idCol,
-        batchId = Some(bid))
-    }
-
-  /** Streaming PERCEPTUAL media ingest: [[blobNearDupIngest]]
-    * generalized over the sketch — pass
-    * [[SigScheme.ImagePhash]] for an image stream or
-    * [[SigScheme.AudioFingerprint]] for audio, and re-encoded /
-    * near-identical media dedups against the standing corpus through
-    * an 8-bytes-per-blob signature layer (a 100 TB media store's
-    * layer is a few GB). Blobs the scheme cannot sign (undecodable,
-    * too short) always survive — chain a [[SigScheme.BlobSimHash]]
-    * pass for codec-free cover of those. Same idempotent-replay
-    * contract as every ingest face. */
+  /** Streaming media ingest: [[nearDupIngest]] generalized over the
+    * sketch — pass [[SigScheme.BlobSimHash]] for codec-free
+    * near-identical blobs, [[SigScheme.ImagePhash]] for an image
+    * stream or [[SigScheme.AudioFingerprint]] for audio, and
+    * re-encoded / near-identical media dedups against the standing
+    * corpus through an 8-bytes-per-blob signature layer (a 100 TB
+    * media store's layer is a few GB). Blobs a perceptual scheme
+    * cannot sign (undecodable, too short) always survive — chain a
+    * [[SigScheme.BlobSimHash]] pass for codec-free cover of those.
+    * Same idempotent-replay contract as [[ingestBatch]]; within-batch
+    * duplicate groups keep their min-id representative. */
   def mediaNearDupIngest(blobs: DataFrame, corpusDir: String,
                          sigDir: String, scheme: SigScheme,
                          idCol: String = "media_id",
@@ -609,8 +321,7 @@ object IngestStream {
                          trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
     microBatches(blobs, sigDir, checkpointDir, trigger) { (batch, bid) =>
-      ingestBatchWith(batch, corpusDir, sigDir, scheme, idCol,
-        batchId = Some(bid))
+      ingestBatchWith(batch, corpusDir, sigDir, scheme, idCol, bid)
     }
 
   /** One streaming count-min step: the micro-batch's token stream
@@ -786,7 +497,7 @@ object IngestStream {
     * rewritten as `targetFiles` right-sized files. Same reserved
     * negative partition id, same crash-safe rename protocol, same
     * replay contract — and the layer's replay guard
-    * (`ingest_batch =!= bid`, ingestBatchWith:189) keeps working
+    * (`ingest_batch =!= batchId` in [[ingestBatchWith]]) keeps working
     * because a compact partition's negative id never equals a batch
     * id. Size `targetFiles` from the layer's byte count over the
     * shard-size target (the `writeShardedBalanced` rule). */
@@ -797,6 +508,20 @@ object IngestStream {
     compactPartitions(spark, layerDir, watermark)(
       _.repartition(targetFiles))
   }
+
+  /** The `ingest_batch=<id>` partitions directly under `root`, with
+    * their ids: a batch id is non-negative, a compact covering every
+    * batch ≤ k is `-(k+1)`. The one parser of batch partition names. */
+  private[graft] def batchPartitions(fs: org.apache.hadoop.fs.FileSystem,
+                                     root: org.apache.hadoop.fs.Path)
+      : Seq[(org.apache.hadoop.fs.Path, Long)] =
+    fs.listStatus(root).toSeq.map(_.getPath).flatMap { p =>
+      if (p.getName.startsWith(BatchPrefix))
+        p.getName.drop(BatchPrefix.length).toLongOption.map(p -> _)
+      else None
+    }
+
+  private val BatchPrefix = "ingest_batch="
 
   /** AS-OF read of a batch-keyed layer — time travel to an ingest
     * horizon: the layer as it stood when batch `asOf` was the newest
@@ -820,12 +545,7 @@ object IngestStream {
     val root = new org.apache.hadoop.fs.Path(layerDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"layerReadAsOf: $layerDir is absent")
-    val prefix = "ingest_batch="
-    val parts = fs.listStatus(root).map(_.getPath)
-      .flatMap(p =>
-        if (p.getName.startsWith(prefix))
-          p.getName.drop(prefix.length).toLongOption.map(p -> _)
-        else None)
+    val parts = batchPartitions(fs, root)
     parts.foreach { case (p, id) =>
       if (id < 0) require(-id - 1 <= asOf,
         s"layerReadAsOf: compact partition ${p.getName} folds " +
@@ -878,13 +598,7 @@ object IngestStream {
     val root = new org.apache.hadoop.fs.Path(layerDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root) || keepFrom == 0) return (0L, 0L)
-    val prefix = "ingest_batch="
-    def partId(p: org.apache.hadoop.fs.Path): Option[Long] =
-      if (p.getName.startsWith(prefix))
-        p.getName.drop(prefix.length).toLongOption
-      else None
-    val parts = fs.listStatus(root).map(_.getPath)
-      .flatMap(p => partId(p).map(p -> _))
+    val parts = batchPartitions(fs, root)
     parts.foreach { case (p, id) =>
       if (id < 0) {
         val k = -id - 1
@@ -902,7 +616,7 @@ object IngestStream {
     }
     if (drop.isEmpty) return (0L, 0L)
     val rows = spark.read
-      .parquet(drop.map(_._1.toString).toIndexedSeq: _*).count()
+      .parquet(drop.map(_._1.toString): _*).count()
     drop.foreach { case (p, _) => fs.delete(p, true) }
     spark.catalog.refreshByPath(layerDir)
     (drop.length.toLong, rows)
@@ -996,15 +710,10 @@ object IngestStream {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
-    val prefix = "ingest_batch="
-    def partId(p: org.apache.hadoop.fs.Path): Option[Long] =
-      if (p.getName.startsWith(prefix))
-        p.getName.drop(prefix.length).toLongOption
-      else None
     def covered(id: Long): Boolean =
       if (id >= 0) id <= watermark else -id - 1 <= watermark
     val targetId = -(watermark + 1)
-    val target = new org.apache.hadoop.fs.Path(root, s"$prefix$targetId")
+    val target = new org.apache.hadoop.fs.Path(root, s"$BatchPrefix$targetId")
     val tmp = new org.apache.hadoop.fs.Path(root,
       s"_compact_tmp_$watermark")
     if (fs.exists(tmp)) fs.delete(tmp, true)
@@ -1013,8 +722,7 @@ object IngestStream {
     // deletes each landed compact's marker records. Markerless
     // (pre-upgrade) compacts coexisting with covered live partitions
     // are ambiguous — refuse loudly rather than guess.
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => partId(p).exists(_ < 0)).foreach { cp =>
+    batchPartitions(fs, root).filter(_._2 < 0).foreach { case (cp, cid) =>
         readSourcesMarker(fs, cp) match {
           case Some(recorded) => recorded.foreach { case (n, sig) =>
             val p = new org.apache.hadoop.fs.Path(root, n)
@@ -1029,11 +737,11 @@ object IngestStream {
             }
           }
           case None =>
-            val jcov = -partId(cp).get - 1
-            val ambiguous = fs.listStatus(root).map(_.getPath)
-              .filter(p => p.getName != cp.getName && partId(p).exists(
-                id => if (id >= 0) id <= jcov else -id - 1 < jcov))
-              .map(_.getName)
+            val jcov = -cid - 1
+            val ambiguous = batchPartitions(fs, root).collect {
+              case (p, id) if p.getName != cp.getName &&
+                  (if (id >= 0) id <= jcov else -id - 1 < jcov) => p.getName
+            }
             require(ambiguous.isEmpty,
               s"compactPartitions: $dir has a markerless compact " +
                 s"${cp.getName} coexisting with partitions it covers " +
@@ -1042,8 +750,8 @@ object IngestStream {
                 "layerDoctor and delete or re-key them manually")
         }
       }
-    val sources = fs.listStatus(root).map(_.getPath)
-      .filter(p => partId(p).exists(id => covered(id) && id != targetId))
+    val (sources, sourceIds) = batchPartitions(fs, root)
+      .filter { case (_, id) => covered(id) && id != targetId }.unzip
     if (fs.exists(target)) {
       // a previous attempt already landed the fold — the marker
       // restoration above finished its deletes; a markerless target
@@ -1052,8 +760,7 @@ object IngestStream {
       if (readSourcesMarker(fs, target).isEmpty)
         sources.foreach(fs.delete(_, true))
     } else if (sources.nonEmpty) {
-      val maxLive = sources.flatMap(partId).filter(_ >= 0)
-        .foldLeft(-1L)(math.max)
+      val maxLive = sourceIds.filter(_ >= 0).foldLeft(-1L)(math.max)
       if (maxLive >= 0 && watermark > maxLive)
         compactLog.warn(
           s"compactPartitions: watermark $watermark is ahead of the " +
@@ -1063,10 +770,8 @@ object IngestStream {
             "usually a scheduling bug)")
       // snapshot the source content identities BEFORE the fold reads
       // them — the marker must describe exactly what was consumed
-      val sourceSigs = sources.map(p =>
-        p.getName -> fileSig(fs, p)).toIndexedSeq
-      fold(graft.Writes.readParquet(spark,
-          sources.map(_.toString).toIndexedSeq: _*))
+      val sourceSigs = sources.map(p => p.getName -> fileSig(fs, p))
+      fold(graft.Writes.readParquet(spark, sources.map(_.toString): _*))
         .write.parquet(tmp.toString)
       writeSourcesMarker(fs, tmp, sourceSigs)
       require(fs.rename(tmp, target),
@@ -1075,48 +780,6 @@ object IngestStream {
     }
     spark.catalog.refreshByPath(dir)
   }
-
-  /** Streaming lexical-index maintenance: each micro-batch publishes
-    * its postings + stats partitions via
-    * [[graft.llm.TextAnalysis.bm25PostingsBatch]] (batch-keyed
-    * overwrite ⇒ at-least-once replay replaces), so the standing
-    * index is ALWAYS serveable through
-    * [[graft.llm.TextAnalysis.bm25TopKFromPostings]] and answers
-    * bit-identically to a from-scratch build over everything
-    * ingested. [[ingestLayerCompact]] bounds the file count on both
-    * subdirs. The streaming face of the BM25 postings layer —
-    * the cmsMonitor pattern for the lexical ranker. */
-  def bm25Monitor(docs: DataFrame, indexDir: String,
-                  textCol: String = "text", idCol: String = "doc_id",
-                  checkpointDir: Option[String] = None,
-                  trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(docs, indexDir, checkpointDir, trigger) { (batch, bid) =>
-      graft.llm.TextAnalysis.bm25PostingsBatch(batch,
-        indexDir, bid, textCol, idCol)
-    }
-
-  /** Live vector-index ingest: each micro-batch of embeddings lands
-    * as one [[graft.llm.Similarity.ivfAppendBatch]] delta batch keyed
-    * by the micro-batch id — at-least-once replay REPLACES the batch
-    * partition (the same overwrite discipline as [[bm25Monitor]]'s
-    * postings), so the serving union main ∪ delta never
-    * double-counts; new vectors are searchable as soon as their batch
-    * commits, with no main-partition rewrite on the hot path.
-    * Schedule [[graft.llm.Similarity.ivfCompactDelta]] between runs
-    * (quiesced) when the segment grows past its usefulness; the
-    * checkpoint lives under the index's own `_checkpoints` by
-    * default. The index must already exist with its centroid sidecar
-    * — a stream cannot train the model it assigns under. */
-  def ivfMonitor(vectors: DataFrame, indexDir: String,
-                 vecCol: String = "embedding",
-                 checkpointDir: Option[String] = None,
-                 trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(vectors, indexDir, checkpointDir, trigger) { (batch, bid) =>
-      graft.llm.Similarity.ivfAppendBatch(batch.sparkSession,
-        indexDir, batch, bid, vecCol)
-    }
 
   /** Index-drift monitor: per micro-batch of embeddings, the
     * [[graft.llm.Similarity.indexFitReport]] gauge against the
@@ -1164,76 +827,5 @@ object IngestStream {
       graft.llm.Similarity.pqFitReport(batch, books, tau, vecCol)
         .write.mode("overwrite")
         .parquet(s"$reportDir/ingest_batch=$bid")
-    }
-
-  /** Wide-geometry event-time trending: the SAME semantics as
-    * [[graft.llm.HeavyHitters.windowedTrending]] — per tumbling
-    * event-time window, flag tokens whose exact in-window count is ≥
-    * `minRatio`× their count-min history estimate (and ≥ `minCount`)
-    * — for sketches too wide to inline as a plan literal
-    * (`depth·width` beyond the literal device's cap).
-    *
-    * Mechanics: the stateful windowed aggregation STAYS in the
-    * streaming plan (watermark → window/token count, append mode, so
-    * each window emits exactly once, finalized at the watermark —
-    * real event-time semantics, late data folded in, nothing emitted
-    * per-micro-batch-boundary); the history lookup moves to
-    * foreachBatch, where the finalized `(window_start, token,
-    * batch_cnt)` rows broadcast-join the sketch through the shared
-    * [[graft.llm.HeavyHitters.trendingFromCounts]] kernel. Flagged
-    * rows land batch-keyed (`ingest_batch=<bid>` overwrite), so
-    * at-least-once replay REPLACES — the layer discipline every
-    * streaming face here uses.
-    *
-    * Scale: state is one count per (open window, token), dropped at
-    * the watermark; the sketch side of the lookup is ≤ depth·width
-    * rows (a 10⁶-cell sketch is ~24 MB — comfortably broadcastable;
-    * the corpus never rejoins). */
-  def windowedTrendingWide(events: DataFrame, tsCol: String,
-                           itemCol: String, windowDur: String,
-                           sketch: DataFrame, outDir: String,
-                           checkpointDir: Option[String] = None,
-                           minCount: Long = 2L, minRatio: Double = 2.0,
-                           depth: Int = 4, width: Int = 16,
-                           seed: Long = 7L, watermark: String = "2 hours",
-                           trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
-    require(events.isStreaming,
-      "windowedTrendingWide is the streaming face — for a batch frame " +
-        "use HeavyHitters.windowedTrending (small geometry) or " +
-        "trendingFromCounts over a windowed aggregate (wide)")
-    val counts = events.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowDur), col(itemCol))
-      .agg(count(lit(1)).as("batch_cnt"))
-      .select(col("window.start").as("window_start"), col(itemCol),
-        col("batch_cnt"))
-    microBatches(counts, outDir, checkpointDir, trigger) { (batch, bid) =>
-      // the micro-batch frame feeds BOTH sides of the lookup join
-      // (counts + probes) — pin it so the second consumer reads the
-      // same rows instead of re-pulling the drained source
-      val counts = batch.persist()
-      try graft.llm.HeavyHitters.trendingFromCounts(counts, sketch,
-          itemCol, minCount, minRatio, depth, width, seed)
-        .select(col("window_start"), col(itemCol), col("batch_cnt"),
-          col("hist_est"), col("ratio"))
-        .write.mode("overwrite")
-        .parquet(s"$outDir/ingest_batch=$bid")
-      finally { counts.unpersist(); () }
-    }
-  }
-
-  /** Streaming corpus-frequency monitor: [[cmsBatch]] over a
-    * document stream — the live fixed-state token-frequency summary
-    * (trending-term detection, drift gauges) whose state can never
-    * grow into a 100 TB problem. */
-  def cmsMonitor(docs: DataFrame, sketchDir: String, depth: Int = 4,
-                 width: Int = 16, seed: Long = 7L,
-                 textCol: String = "text",
-                 checkpointDir: Option[String] = None,
-                 trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    microBatches(docs, sketchDir, checkpointDir, trigger) { (batch, bid) =>
-      cmsBatch(batch, sketchDir, depth, width, seed,
-        textCol, batchId = bid)
     }
 }

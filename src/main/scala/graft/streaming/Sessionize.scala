@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Gap-based sessionization (batch form of Structured Streaming's
-  * session windows — the `EventsStream.sessionFold` state logic as a
-  * declarative plan the optimizer can see through).
+/** Gap-based sessionization (the batch form of Structured Streaming's
+  * session windows, as a declarative plan the optimizer can see
+  * through).
   *
   * A session is a maximal run of a key's events where consecutive
   * event times are within `gap` of each other. Classic two-window
@@ -25,8 +25,10 @@ object Sessionize {
     * column's units (e.g. micros for `unix_micros`). `tieCol` breaks
     * equal-timestamp ordering for deterministic output when (key, ts)
     * is not unique. */
-  def sessionize(events: DataFrame, keyCol: String, tsCol: String,
-                 gap: Long, tieCol: Option[String] = None): DataFrame = {
+  private[graft] def sessionize(events: DataFrame, keyCol: String,
+                                tsCol: String, gap: Long,
+                                tieCol: Option[String] = None)
+      : DataFrame = {
     val order: Seq[Column] =
       col(tsCol).asc +: tieCol.map(col(_).asc).toSeq
     val w = Window.partitionBy(col(keyCol)).orderBy(order: _*)
@@ -52,78 +54,4 @@ object Sessionize {
         count(lit(1)).as("n_events"),
         sum(col(valueCol).cast("decimal(28,10)")).cast("double")
           .as("sum_value"))
-
-  /** In-flight session state: millis bounds + running count/sum. */
-  final case class SessState(start: Long, last: Long, n: Long,
-                             sum: Double)
-  /** One closed session. */
-  final case class SessionRow(user_id: Long, session_start: Long,
-                              session_end: Long, n_events: Long,
-                              sum_value: Double)
-
-  /** Streaming gap-sessionization — the unbounded face of
-    * [[sessionize]], per-key state via `flatMapGroupsWithState` with
-    * an EVENT-TIME timeout: a key's session closes either when a
-    * later in-batch event gaps past it, or when the watermark passes
-    * `last + gap` (the timeout emits the session and clears the
-    * state, so the store holds at most one open session per ACTIVE
-    * key — idle keys age out with the watermark horizon, stream
-    * length never accumulates).
-    *
-    * Emits each session exactly once (Append mode), bounds in epoch
-    * millis. `events` needs `user_id`, a `ts` timestamp column and
-    * `value`; set the watermark delay to the max expected lateness —
-    * events later than that may start a spurious new session (the
-    * same answer every watermark system gives). */
-  def sessionizeStream(events: DataFrame, gapMs: Long,
-                       watermark: String = "2 hours")
-      : org.apache.spark.sql.Dataset[SessionRow] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id").cast("long"), col("ts"),
-        col("value").cast("double"))
-      .as[(Long, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessState, SessionRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (uid, rows, state: GroupState[SessState]) =>
-          def closed(s: SessState) =
-            SessionRow(uid, s.start, s.last, s.n, s.sum)
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(closed(s))
-          } else {
-            val sorted = rows.toSeq.sortBy(_._2.getTime)
-            val out = scala.collection.mutable.ArrayBuffer[SessionRow]()
-            var cur = state.getOption
-            sorted.foreach { case (_, t, v) =>
-              val tm = t.getTime
-              cur match {
-                case Some(s) if tm - s.last <= gapMs =>
-                  cur = Some(SessState(s.start, math.max(s.last, tm),
-                    s.n + 1, s.sum + v))
-                case Some(s) =>
-                  out += closed(s)
-                  cur = Some(SessState(tm, tm, 1L, v))
-                case None =>
-                  cur = Some(SessState(tm, tm, 1L, v))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // the timeout target must sit beyond the current
-              // watermark or Spark rejects it (a session already
-              // gap-expired by watermark closes on the next batch)
-              state.setTimeoutTimestamp(
-                math.max(s.last + gapMs,
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
-  }
 }

@@ -317,10 +317,17 @@ class CoreSpec extends AnyFunSuite {
     // [[link]] or prose mention can never satisfy the gate. Mains'
     // entry points (`main`, CLI verb dispatch) are exempt: their
     // caller is the JVM / the driver contract, not another file.
-    val root = new java.io.File("src")
+    //
+    // The operator library (`llm/`, `functions/`, `streaming/`) is
+    // held to the stricter rule: a spec is not a caller there. A
+    // public face needs a use in shipped code — `src/main` or the
+    // bench harness — or a mention in the README "Using" block, the
+    // library's front door. A spec-only seam is `private[graft]`.
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def read(f: java.io.File): String =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     // comment/scaladoc strip: block comments first (covers /** ... */),
     // then line comments — string literals keep their text, which can
     // only ever ADD witnesses (e.g. reflective dispatch tables), the
@@ -328,15 +335,21 @@ class CoreSpec extends AnyFunSuite {
     def strip(src: String): String = src
       .replaceAll("(?s)/\\*.*?\\*/", " ")
       .replaceAll("//[^\n]*", " ")
-    val sources = walk(root).map { f =>
-      f.getPath -> new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    }
+    val sources = walk(new java.io.File("src")).map(f => f.getPath -> read(f))
     val gated = sources.filter(_._1.contains("main/scala/graft/"))
     val stripped = sources.map { case (p, s) => p -> strip(s) }
+    val shipped = stripped.filter(_._1.startsWith("src/main/")) ++
+      walk(new java.io.File("bench")).map(f => f.getPath -> strip(read(f)))
+    val library = Seq("llm", "functions", "streaming")
+      .map(d => s"main/scala/graft/$d/")
+    val using = "(?s)\n## Using\n(.*?)\n## ".r
+      .findFirstMatchIn(read(new java.io.File("README.md")))
+      .fold("")(_.group(1))
     val defRe = "\n  def (\\w+)[\\(\\[:]".r
     val dark = gated.flatMap { case (path, src) =>
-      val others = stripped.filter(_._1 != path).map(_._2)
+      val isLib = library.exists(path.contains)
+      val others = (if (isLib) shipped else stripped)
+        .filter(_._1 != path).map(_._2)
       defRe.findAllMatchIn(strip(src)).map(_.group(1)).distinct
         .filterNot(_ == "main")
         .filterNot { name =>
@@ -347,13 +360,15 @@ class CoreSpec extends AnyFunSuite {
           // other
           val use = ("""\b""" + name + """\b""").r
           val defSite = ("""\bdef\s+""" + name + """\b""").r
+          (isLib && use.findFirstIn(using).isDefined) ||
           others.exists(o =>
             use.findFirstIn(defSite.replaceAllIn(o, " ")).isDefined)
         }
         .map(name => s"$path: $name")
     }
     assert(dark.isEmpty,
-      s"public faces with no external by-name reference:\n" +
+      s"public faces with no external by-name reference (in llm/, " +
+        "functions/ and streaming/: none outside the specs):\n" +
         dark.mkString("\n"))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.streaming.EventsStream
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -32,121 +31,20 @@ class StreamingSpec extends AnyFunSuite {
     dir
   }
 
-  test("streaming hourly agg equals the batch aggregation") {
-    val stream = EventsStream.hourlyAgg(
-      EventsStream.readEvents(spark, eventsDir))
-    val q = stream.writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName("hourly").start()
-    try { q.processAllAvailable() } finally q.stop()
-    val got = spark.table("hourly")
-    val want = graft.queries.Star.events(spark, "/root/testdata/sf0.001")
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    assert(got.count() == want.count())
-    val g = got.select("hour", "event_type", "n").collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val w = want.select("hour", "event_type", "n").collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(g == w)
-  }
-
-  test("foldPerBatch: FoldA stepped per micro-batch, appended to sink") {
-    val sink = graft.Scratch.root + "/stream_folds"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sink))
-    val q = EventsStream.foldPerBatch(
-      EventsStream.readEvents(spark, eventsDir), sink)
-    try { q.processAllAvailable() } finally q.stop()
-    val folds = spark.read.parquet(sink)
-    assert(folds.columns.toSet ==
-      Set("batch_id", "n", "sum_value", "n_users"))
-    val totalN = folds.agg(sum("n")).head().getLong(0)
-    assert(totalN == spark.read.parquet(eventsDir).count())
-  }
-
-  test("multi-sink streaming write hits every layer") {
-    val base = graft.Scratch.root + "/stream_layers"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val q = EventsStream.writeLayers(
-      EventsStream.readEvents(spark, eventsDir),
-      Seq(s"$base/a", s"$base/b"))
-    try { q.processAllAvailable() } finally q.stop()
-    val n = spark.read.parquet(eventsDir).count()
-    assert(spark.read.parquet(s"$base/a").count() == n)
-    assert(spark.read.parquet(s"$base/b").count() == n)
-  }
-
-  test("stream-static enrich equals the batch join; unmatched keys kept") {
-    import spark.implicits._
-    // deliberately PARTIAL dim: one event_type is missing, the left
-    // join must keep its events with a null category
-    val dim = Seq(("click", "ui"), ("view", "ui"), ("purchase", "money"))
-      .toDF("event_type", "category")
-    val enriched = EventsStream.enrichWithDim(
-      EventsStream.readEvents(spark, eventsDir), dim, "event_type")
-    val q = enriched.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("enriched").start()
-    try { q.processAllAvailable() } finally q.stop()
-    val got = spark.table("enriched")
-      .groupBy("event_type", "category").count().collect()
-      .map(r => (r.getString(0), Option(r.getString(1)), r.getLong(2)))
-      .toSet
-    val want = spark.read.schema(EventsStream.eventsRawSchema())
-      .parquet(eventsDir)
-      .join(broadcast(dim), Seq("event_type"), "left")
-      .groupBy("event_type", "category").count().collect()
-      .map(r => (r.getString(0), Option(r.getString(1)), r.getLong(2)))
-      .toSet
-    assert(got == want)
-    assert(got.exists(_._2.isEmpty),
-      "expected at least one event_type outside the dim")
-    // the static side carries the broadcast hint: the fact stream
-    // never shuffles for this join
-    assert(enriched.queryExecution.logical.toString.toLowerCase
-      .contains("hint"))
-  }
-
-  test("streaming Misra-Gries: merged state = valid summary of all " +
-      "batches (exact n, superset holds)") {
-    // stage documents as a FileStreamSource directory
-    val dir = graft.Scratch.root + "/stream_docs"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    new java.io.File(dir).mkdirs()
-    // two files -> two micro-batches, so the driver-side MERGE of
-    // per-batch summaries is actually exercised
-    Seq("part-0", "part-1").foreach { p =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(
-          "/root/testdata/sf0.001/documents.parquet"),
-        java.nio.file.Paths.get(s"$dir/$p.parquet"))
-    }
-    val docsStatic = spark.read.parquet(dir)
-    val m = 8
-    val tracker = new graft.llm.HeavyHitters.StreamTracker(m)
-    val toks = spark.readStream.schema(docsStatic.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-      .select(explode(graft.llm.TextAnalysis.tokens(col("text")))
-        .as("token"))
-    val q = tracker.sink(toks)
-    try { q.processAllAvailable() } finally q.stop()
-    val (cand, n) = tracker.current()
-    val exact = docsStatic
-      .select(explode(graft.llm.TextAnalysis.tokens(col("text")))
-        .as("token"))
-      .groupBy("token").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val total = exact.values.sum
-    assert(n == total, s"exact total: $n vs $total")
-    assert(cand.size <= m)
-    val must = exact.filter(_._2 > total / (m + 1.0)).keySet
-    assert(must.subsetOf(cand.keySet), s"missing ${must -- cand.keySet}")
-  }
-
   test("windowed Misra-Gries: per-window laws hold on the stream; " +
       "exact n per window") {
     val m = 3 // below the 5 event types, so decrements really happen
+    // the events file's ts is either a timestamp or, when written as
+    // TIMESTAMP(NANOS), a raw nanos long under nanosAsLong: stream it
+    // with the file's own schema and convert the long vintage
+    val schema = spark.read.parquet(eventsDir).schema
+    val raw = spark.readStream.schema(schema).parquet(eventsDir)
+    val events =
+      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
+        raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
+      else raw
     val stream = graft.llm.HeavyHitters.windowedCandidates(
-      EventsStream.readEvents(spark, eventsDir),
-      tsCol = "ts", tokenCol = "event_type",
+      events, tsCol = "ts", tokenCol = "event_type",
       windowDur = "1 hour", m = m)
     val q = stream.writeStream.outputMode(OutputMode.Complete)
       .format("memory").queryName("win_mg").start()
@@ -214,73 +112,6 @@ class StreamingSpec extends AnyFunSuite {
       s"state rows should track OPEN windows, got $maxState of $nWindows")
   }
 
-  test("streaming dedup drops in-horizon duplicates, keeps distinct") {
-    import spark.implicits._
-    // build a source dir with planted duplicates
-    val dir = graft.Scratch.root + "/stream_dedup_src"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    val rows = Seq(
-      (1L, 1000000000000000000L, 7L, "click", 1.0, "{}"),
-      (2L, 1000000000000000000L, 7L, "click", 1.0, "{}"),  // dup of 1 (same key+ts)
-      (3L, 1000003600000000000L, 7L, "view", 2.0, "{}"))
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .repartition(1).write.parquet(dir)
-    val deduped = EventsStream.dedupStream(
-      EventsStream.readEvents(spark, dir),
-      keys = Seq("user_id", "event_type", "value"))
-    val q = deduped.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("dedup").start()
-    try { q.processAllAvailable() } finally q.stop()
-    assert(spark.table("dedup").count() == 2)
-  }
-
-  test("mapGroupsWithState sessionizer counts per-user events") {
-    import spark.implicits._
-    val snaps = EventsStream.userSessions(
-      graft.queries.Star.events(spark, "/root/testdata/sf0.001"))
-    val got = snaps.collect().map(s => s.user_id -> s.n_events).toMap
-    val want = spark.read.parquet(eventsDir)
-      .groupBy("user_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-  }
-  test("streaming gap-sessionization emits exactly the batch sessions, " +
-       "save at most one open session per user") {
-    import graft.streaming.Sessionize
-    val gapMs = 30L * 60 * 1000
-    val stream = Sessionize.sessionizeStream(
-      EventsStream.readEvents(spark, eventsDir), gapMs)
-    val q = stream.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("gap_sessions").start()
-    try { q.processAllAvailable() } finally q.stop()
-    val got = spark.table("gap_sessions").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4)))
-    val batch = Sessionize.sessionStats(
-      graft.queries.Star.events(spark, "/root/testdata/sf0.001")
-        .withColumn("tsm", unix_millis(col("ts")))
-        .select(col("user_id"), col("tsm"), col("value")),
-      "user_id", "tsm", gapMs, "value").collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4),
-        r.getDouble(5)))
-    def key(t: (Long, Long, Long, Long, Double)) = (t._1, t._2, t._3, t._4)
-    val gotK = got.map(key).toSet
-    val batchK = batch.map(key).toSet
-    assert(got.nonEmpty && gotK.subsetOf(batchK),
-      s"streaming emitted a session batch never saw: ${gotK -- batchK}")
-    // only a user's LAST session may still be open (unflushed state)
-    val missing = batch.filterNot(t => gotK(key(t)))
-    assert(missing.groupBy(_._1).values.forall(_.size <= 1))
-    missing.foreach { t =>
-      val lastEnd = batch.filter(_._1 == t._1).map(_._3).max
-      assert(t._3 == lastEnd,
-        s"unflushed session for user ${t._1} is not its last one")
-    }
-    // running double sums agree with the decimal-exact batch rollup
-    val bSum = batch.map(t => key(t) -> t._5).toMap
-    got.foreach(t => assert(math.abs(bSum(key(t)) - t._5) < 1e-6))
-  }
-
   test("near-dup ingest: signature layer dedups within and across batches") {
     import spark.implicits._
     import graft.streaming.IngestStream
@@ -296,13 +127,13 @@ class StreamingSpec extends AnyFunSuite {
     IngestStream.ingestBatch(
       Seq(doc(1, textA), doc(2, textA), doc(3, textB))
         .toDF("doc_id", "text"),
-      corpusDir, sigDir, threshold = 0.5)
+      corpusDir, sigDir, threshold = 0.5, batchId = 0L)
     // batch 2: another dup of A (cross-batch), new C, and a doc too
     // short to carry a signature (must survive: near-dup can't match)
     IngestStream.ingestBatch(
       Seq(doc(4, textA), doc(5, textC), doc(6, "two words"))
         .toDF("doc_id", "text"),
-      corpusDir, sigDir, threshold = 0.5)
+      corpusDir, sigDir, threshold = 0.5, batchId = 1L)
     val ids = spark.read.parquet(corpusDir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 3L, 5L, 6L), s"got $ids")
@@ -311,167 +142,6 @@ class StreamingSpec extends AnyFunSuite {
     val sigIds = spark.read.parquet(sigDir)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(sigIds == Set(1L, 3L, 5L), s"got $sigIds")
-  }
-
-  test("verified ingest: sketch-only candidate survives, true " +
-       "near-dup drops within and across batches") {
-    import spark.implicits._
-    import graft.streaming.IngestStream
-    val base = graft.Scratch.root + "/verified_ingest"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val corpusDir = s"$base/corpus"
-    val sigDir = s"$base/sigs"
-    val baseText = (0 until 60).map(i => s"w$i").mkString(" ")
-    // same 60-word vocabulary fully reordered: minhash similarity is
-    // high (identical 1-token sets, many shared shingles at the
-    // permissive estThreshold) but edit distance is large - an
-    // UNVERIFIED candidate that must survive
-    val reordered = (0 until 60).map(i => s"w${(i * 37) % 60}")
-      .mkString(" ")
-    val other = (0 until 60).map(i => s"z$i").mkString(" ")
-    // batch 1: base, reordered (sketch candidate, verify rejects),
-    // a true within-batch near-dup of base (one word changed), other
-    IngestStream.ingestBatchVerified(
-      Seq((1L, baseText), (2L, reordered),
-        (3L, baseText.replace("w30", "wxx")), (4L, other))
-        .toDF("doc_id", "text"),
-      corpusDir, sigDir, tau = 0.8, estThreshold = 0.05)
-    val ids1 = spark.read.parquet(corpusDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids1 == Set(1L, 2L, 4L), s"got $ids1")
-    // batch 2: a cross-layer true near-dup of base (drops) and
-    // ANOTHER reordering of base's vocabulary (candidate, survives)
-    IngestStream.ingestBatchVerified(
-      Seq((10L, baseText.replace("w10", "wyy")),
-        (11L, (0 until 60).map(i => s"w${(i * 41) % 60}").mkString(" ")))
-        .toDF("doc_id", "text"),
-      corpusDir, sigDir, tau = 0.8, estThreshold = 0.05)
-    val ids2 = spark.read.parquet(corpusDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids2 == Set(1L, 2L, 4L, 11L), s"got $ids2")
-  }
-
-  test("stream-stream interval join (click->purchase attribution) " +
-       "equals the batch join") {
-    val clicks = EventsStream.readEvents(spark, eventsDir)
-      .filter(col("event_type") === "click")
-    val purchases = EventsStream.readEvents(spark, eventsDir)
-      .filter(col("event_type") === "purchase")
-    val q = EventsStream.clickPurchaseAttribution(clicks, purchases)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("attrib").start()
-    try { q.processAllAvailable() } finally q.stop()
-    val got = spark.table("attrib")
-      .select("click_id", "purchase_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ev = graft.queries.Star.events(spark, "/root/testdata/sf0.001")
-    val want = EventsStream.clickPurchaseAttribution(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"))
-      .select("click_id", "purchase_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(want.nonEmpty, "fixture must produce attributions")
-    assert(got == want,
-      s"missing ${(want -- got).take(5)}; extra ${(got -- want).take(5)}")
-  }
-
-  test("windowedDrift: stream equals batch; self-baseline on a " +
-       "uniform slice scores ~0") {
-    val ev = graft.queries.Star.events(spark, "/root/testdata/sf0.001")
-    val baseline = EventsStream.driftBaseline(ev)
-    val q = EventsStream.windowedDrift(
-        EventsStream.readEvents(spark, eventsDir), baseline)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("wdrift").start()
-    try { q.processAllAvailable() } finally q.stop()
-    val got = spark.table("wdrift").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2))).toSet
-    // append mode emits a window once the watermark passes its END:
-    // the batch reference keeps only windows closed at the final
-    // watermark (maxTs - 2h), i.e. window_start <= maxTs - 3h
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    val want = EventsStream.windowedDrift(ev, baseline).collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2)))
-      .filter(_._1.getTime <= maxTs.getTime - 3L * 3600 * 1000).toSet
-    assert(want.nonEmpty, "fixture must close at least one window")
-    assert(got == want,
-      s"missing ${(want -- got).take(3)}; extra ${(got -- want).take(3)}")
-    // KL >= 0 always (Gibbs), and a window identical in distribution
-    // to the baseline would sit at 0 — the fixture windows should
-    // hover near but above zero
-    assert(want.forall(_._3 >= 0.0), s"negative KL: $want")
-  }
-
-  test("attribution interval join: watermark evicts both sides' " +
-       "state — bounded join state across many horizons") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // (epoch secs, event_id, user_id, value)
-    val clickIn = MemoryStream[(Long, Long, Long)]
-    val purchIn = MemoryStream[(Long, Long, Long)]
-    def shape(s: MemoryStream[(Long, Long, Long)], withValue: Boolean) = {
-      val base = s.toDS().toDF("secs", "event_id", "user_id")
-        .withColumn("ts", col("secs").cast("timestamp"))
-      if (withValue) base.withColumn("value", lit(1.0)) else base
-    }
-    val stream = EventsStream.clickPurchaseAttribution(
-      shape(clickIn, withValue = false), shape(purchIn, withValue = true),
-      horizon = "10 minutes", watermark = "10 minutes")
-    val q = stream.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("attrib_evict").start()
-    // batches one HOUR apart with a 10-minute watermark+horizon: every
-    // batch's buffered rows are evictable long before the next one
-    // lands, so join state must track the newest batch, not history —
-    // the bounded-state claim for the 100×-scale deployment (state is
-    // sized by watermark + horizon, never by stream length)
-    val nBatches = 20
-    var maxState = 0L
-    try {
-      (0 until nBatches).foreach { b =>
-        // start one hour past the epoch: a ts-0 row ties the INITIAL
-        // watermark value (0) and is discarded as late by the join's
-        // input filter — an artifact of the synthetic clock, not of
-        // the eviction behavior under test
-        val base = 3600L * (b + 1L)
-        clickIn.addData((base, 10000L + b, b.toLong))
-        purchIn.addData((base + 60L, 20000L + b, b.toLong))
-        q.processAllAvailable()
-        val seen = (Option(q.lastProgress).toSeq ++ q.recentProgress)
-          .flatMap(_.stateOperators.map(_.numRowsTotal))
-        maxState = (maxState +: seen).max
-      }
-    } finally q.stop()
-    // inner interval joins emit eagerly: every batch's in-horizon pair
-    // must have been attributed
-    val emitted = spark.table("attrib_evict")
-    assert(emitted.count() == nBatches.toLong,
-      s"expected $nBatches attributions, got ${emitted.count()}: " +
-        emitted.select("click_id").collect().map(_.getLong(0)).sorted
-          .mkString(","))
-    // state never approaches rows-ever-buffered (2 rows/batch × 20
-    // batches = 40): watermark eviction keeps it at the last
-    // batch-or-two of rows on both sides combined
-    assert(maxState > 0 && maxState <= 8,
-      s"join state should stay bounded by the horizon, got $maxState " +
-        s"of ${2 * nBatches} rows ever buffered")
-  }
-
-  test("attribution rejects watermark < horizon (state evicted " +
-       "before the window closes would drop matches silently)") {
-    val ev = graft.queries.Star.events(spark, "/root/testdata/sf0.001")
-    val ex = intercept[IllegalArgumentException] {
-      EventsStream.clickPurchaseAttribution(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"),
-        horizon = "3 hours", watermark = "2 hours")
-    }
-    assert(ex.getMessage.contains("watermark"))
-    // boundary is allowed: watermark == horizon
-    EventsStream.clickPurchaseAttribution(
-      ev.filter(col("event_type") === "click"),
-      ev.filter(col("event_type") === "purchase"),
-      horizon = "90 minutes", watermark = "90 minutes")
   }
 
   test("blob ingest: byte-SimHash layer drops tampered re-uploads " +
@@ -492,13 +162,13 @@ class StreamingSpec extends AnyFunSuite {
     // batch 1: A, a tampered copy of A (within-batch dup), B
     IngestStream.ingestBatchWith(
       Seq((1L, a), (2L, tamper(a)), (3L, b)).toDF("media_id", "content"),
-      corpusDir, sigDir, scheme, "media_id")
+      corpusDir, sigDir, scheme, "media_id", batchId = 0L)
     // batch 2: tampered A again (cross-batch, must drop via the
     // layer), new C, and a 2-byte blob (no window -> always survives)
     IngestStream.ingestBatchWith(
       Seq((4L, tamper(a)), (5L, c), (6L, Array[Byte](9, 9)))
         .toDF("media_id", "content"),
-      corpusDir, sigDir, scheme, "media_id")
+      corpusDir, sigDir, scheme, "media_id", batchId = 1L)
     val ids = spark.read.parquet(corpusDir)
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 3L, 5L, 6L), s"got $ids")
@@ -541,7 +211,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1L, enc(raster(1, false), "png")),
           (2L, enc(raster(2, false), "png")))
         .toDF("media_id", "content"),
-      corpusDir, sigDir, scheme, "media_id")
+      corpusDir, sigDir, scheme, "media_id", batchId = 0L)
     // batch 2: BMP re-encode of A (byte-disjoint container, same
     // raster), an EDITED A (small perceptual distance), a new C, and
     // junk (no signature -> survives)
@@ -551,7 +221,7 @@ class StreamingSpec extends AnyFunSuite {
           (5L, enc(raster(3, false), "png")),
           (6L, "not an image".getBytes("UTF-8")))
         .toDF("media_id", "content"),
-      corpusDir, sigDir, scheme, "media_id")
+      corpusDir, sigDir, scheme, "media_id", batchId = 1L)
     val ids = spark.read.parquet(corpusDir)
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 5L, 6L), s"got $ids")
@@ -598,7 +268,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1L, clip(1, 256, aiff = false)),
           (2L, clip(2, 256, aiff = false)))
         .toDF("media_id", "content"),
-      corpusDir, sigDir, scheme, "media_id")
+      corpusDir, sigDir, scheme, "media_id", batchId = 0L)
     // batch 2: AIFF of clip 1 (same PCM -> Hamming 0 -> drop), a
     // sub-64-frame clip (unsignable -> survives), a new clip
     IngestStream.ingestBatchWith(
@@ -606,7 +276,7 @@ class StreamingSpec extends AnyFunSuite {
           (4L, clip(9, 32, aiff = false)),
           (5L, clip(3, 256, aiff = false)))
         .toDF("media_id", "content"),
-      corpusDir, sigDir, scheme, "media_id")
+      corpusDir, sigDir, scheme, "media_id", batchId = 1L)
     val ids = spark.read.parquet(corpusDir)
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 4L, 5L), s"got $ids")
@@ -711,14 +381,14 @@ class StreamingSpec extends AnyFunSuite {
     val textB = "completely different content about distributed query engines"
     val batch0 = Seq((1L, textA), (2L, textB)).toDF("doc_id", "text")
     IngestStream.ingestBatch(batch0, corpusDir, sigDir, threshold = 0.5,
-      batchId = Some(0L))
+      batchId = 0L)
     // crash-and-replay: foreachBatch re-fires the SAME batch under the
     // SAME id after its first attempt already published both outputs —
     // the worst case: without the self-exclusion guard every survivor
     // would match its own prior signatures and the corpus would empty;
     // without keyed overwrite every row would double
     IngestStream.ingestBatch(batch0, corpusDir, sigDir, threshold = 0.5,
-      batchId = Some(0L))
+      batchId = 0L)
     val rows = spark.read.parquet(corpusDir).select("doc_id")
       .collect().map(_.getLong(0)).toSeq
     assert(rows.sorted == Seq(1L, 2L),
@@ -727,7 +397,7 @@ class StreamingSpec extends AnyFunSuite {
     IngestStream.ingestBatch(
       Seq((3L, textA), (4L, "brand new unrelated text about file formats"))
         .toDF("doc_id", "text"),
-      corpusDir, sigDir, threshold = 0.5, batchId = Some(1L))
+      corpusDir, sigDir, threshold = 0.5, batchId = 1L)
     val ids = spark.read.parquet(corpusDir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 4L), s"got $ids")
@@ -736,196 +406,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(sigIds == Set(1L, 2L, 4L), s"got $sigIds")
   }
 
-  test("noveltyBatch: per-batch novelty vs the gram layer, layer " +
-       "grows by novel grams only, replay is idempotent") {
-    import spark.implicits._
-    import graft.streaming.IngestStream
-    val base = graft.Scratch.root + "/novelty_stream"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val gramDir = s"$base/grams"
-    val reportDir = s"$base/report"
-    val textA = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    val textB = "v1 v2 v3 v4 v5 v6 v7 v8 v9 v10"
-    IngestStream.noveltyBatch(
-      Seq((1L, textA), (2L, textB)).toDF("doc_id", "text"),
-      gramDir, reportDir, n = 8, batchId = 0L)
-    def report(bid: Long): Map[Long, (Double, Boolean)] =
-      spark.read.parquet(s"$reportDir/ingest_batch=$bid")
-        .collect().map(r => r.getAs[Long]("doc_id") ->
-          (r.getAs[Double]("novelty_frac"), r.getAs[Boolean]("is_novel")))
-        .toMap
-    assert(report(0L) == Map(1L -> ((1.0, true)), 2L -> ((1.0, true))),
-      "empty layer: everything is novel")
-    // batch 1: one full re-ingest, one new doc
-    val batch1 = Seq((3L, textA), (4L, "u1 u2 u3 u4 u5 u6 u7 u8"))
-      .toDF("doc_id", "text")
-    IngestStream.noveltyBatch(batch1, gramDir, reportDir, n = 8,
-      batchId = 1L)
-    assert(report(1L) == Map(3L -> ((0.0, false)), 4L -> ((1.0, true))))
-    // crash-and-replay of batch 1 under the same id: the layer read
-    // excludes its own partition, so doc 3 does not self-match to
-    // novelty 0 *because of its own prior publish*, and doc 4 does
-    // not flip to seen; the overwrite replaces, never doubles
-    IngestStream.noveltyBatch(batch1, gramDir, reportDir, n = 8,
-      batchId = 1L)
-    assert(report(1L) == Map(3L -> ((0.0, false)), 4L -> ((1.0, true))),
-      "replay must reproduce the report")
-    // layer holds each gram once: batch 0 published 3+3, batch 1 only
-    // doc 4's single novel gram (doc 3's grams were all seen)
-    val layer = spark.read.parquet(gramDir)
-    assert(layer.count() == 7L, s"layer rows: ${layer.count()}")
-    assert(layer.select("h").distinct().count() == 7L)
-  }
-
-  test("noveltyMonitor end-to-end: file-source stream drains through " +
-       "foreachBatch and reports per-doc novelty") {
-    import graft.streaming.IngestStream
-    val base = graft.Scratch.root + "/novelty_e2e"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    new java.io.File(s"$base/src").mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
-      java.nio.file.Paths.get(s"$base/src/part-0.parquet"))
-    val docsStatic = spark.read.parquet(s"$base/src")
-    val stream = spark.readStream.schema(docsStatic.schema)
-      .parquet(s"$base/src")
-    val q = IngestStream.noveltyMonitor(stream, s"$base/grams",
-      s"$base/report", n = 8)
-    assert(q.awaitTermination(60000),
-      "stream must terminate within 60s")
-    val report = spark.read.parquet(s"$base/report")
-    val expected = graft.llm.Dedup.batchNovelty(
-      docsStatic.limit(0), docsStatic, n = 8)
-    // first-ever batch == batch semantics against an empty corpus
-    assert(report.count() == expected.count() && report.count() > 0)
-    val joined = report.as("s").join(expected.as("b"), Seq("doc_id"))
-      .filter(col("s.novelty_frac") =!= col("b.novelty_frac"))
-    assert(joined.count() == 0,
-      "streaming report must equal the batch op on the same data")
-  }
-
-  test("cdcNoveltyBatch: re-ingest scores ~0, an EDITED re-ingest " +
-       "stays low (chunk boundaries re-sync), layer is chunk-sized") {
-    import graft.streaming.IngestStream
-    import spark.implicits._
-    val base = graft.Scratch.root + "/cdc_novelty"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val words = (1 to 600).map(i => s"t${i * 11 % 509}n$i")
-    val docs1 = Seq((1L, words.take(300).mkString(" ")),
-      (2L, words.drop(300).mkString(" "))).toDF("doc_id", "text")
-    IngestStream.cdcNoveltyBatch(docs1, s"$base/chunks",
-      s"$base/report", batchId = 0L)
-    val r0 = spark.read.parquet(s"$base/report/ingest_batch=0")
-    assert(r0.filter(col("novelty_frac") =!= 1.0).count() == 0,
-      "first batch against an empty layer is all-novel")
-    // batch 1: doc 1 re-ingested verbatim, doc 2 with ONE token
-    // inserted at the front
-    val docs2 = Seq((11L, words.take(300).mkString(" ")),
-      (12L, "editmarker " + words.drop(300).mkString(" ")))
-      .toDF("doc_id", "text")
-    IngestStream.cdcNoveltyBatch(docs2, s"$base/chunks",
-      s"$base/report", batchId = 1L)
-    val r1 = spark.read.parquet(s"$base/report/ingest_batch=1")
-      .collect().map(r => r.getLong(0) ->
-        r.getAs[Double]("novelty_frac")).toMap
-    assert(r1(11L) == 0.0, s"verbatim re-ingest must score 0: $r1")
-    assert(r1(12L) <= 0.35,
-      s"CDC boundaries must re-sync after the edit: $r1")
-    // the standing layer is chunk-sized: far fewer keys than the
-    // 8-gram layer the gram-novelty monitor would carry
-    val layer = spark.read.parquet(s"$base/chunks")
-    assert(layer.count() < 120,
-      s"chunk layer must be ~n_tokens/div keys, got ${layer.count()}")
-  }
-
-  test("safetyMonitor: stream report equals the batch safetyScan " +
-       "rollup; stateless (no standing layer)") {
-    import graft.streaming.IngestStream
-    val base = graft.Scratch.root + "/safety_e2e"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    new java.io.File(s"$base/src").mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
-      java.nio.file.Paths.get(s"$base/src/part-0.parquet"))
-    val docsStatic = spark.read.parquet(s"$base/src")
-    val stream = spark.readStream.schema(docsStatic.schema)
-      .parquet(s"$base/src")
-    val terms = Seq("merge", "casino777")   // 'merge' occurs naturally
-    val q = IngestStream.safetyMonitor(stream, s"$base/report", terms)
-    assert(q.awaitTermination(60000),
-      "stream must terminate within 60s")
-    val report = spark.read.parquet(s"$base/report")
-      .select("source", "n_docs", "n_pii", "n_blocked", "n_secret",
-        "n_flagged")
-    val batch = graft.llm.TextAnalysis.safetyScan(docsStatic, terms)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_email") + col("n_ip") + col("n_phone")).as("n_pii"),
-        sum(col("n_blocked")).as("n_blocked"),
-        sum(when(col("has_secret"), 1L).otherwise(0L)).as("n_secret"),
-        sum(when(col("flagged"), 1L).otherwise(0L)).as("n_flagged"))
-    assert(report.count() > 0)
-    assert(report.exceptAll(batch).count() == 0 &&
-      batch.exceptAll(report).count() == 0,
-      "stream rollup must equal the batch op on the same data")
-    // blocklist actually fired on natural text
-    assert(report.agg(sum(col("n_blocked"))).head.getLong(0) > 0)
-    // stateless: the report dir holds only batch partitions + spark
-    // metadata, no gram/signature layer
-    assert(!new java.io.File(s"$base/report").listFiles()
-      .exists(_.getName.contains("layer")))
-  }
-
-  test("gateMonitor: streamed scores equal the batch gate from the " +
-       "same frozen weights artifact; replay replaces") {
-    import graft.streaming.IngestStream
-    import graft.llm.TextAnalysis
-    val base = graft.Scratch.root + "/gate_e2e"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    new java.io.File(s"$base/src").mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
-      java.nio.file.Paths.get(s"$base/src/part-0.parquet"))
-    val docsStatic = spark.read.parquet(s"$base/src")
-    // the frozen artifact: train once, persist as the weights layer
-    val w = TextAnalysis.trainLinearGate(docsStatic,
-      array_contains(TextAnalysis.tokens(col("text")), "spark"),
-      rounds = 4)
-    import spark.implicits._
-    w.zipWithIndex.map { case (v, b) => (b.toLong, v) }.toSeq
-      .toDF("bucket", "w")
-      .coalesce(1).write.parquet(s"$base/weights")
-    val stream = spark.readStream.schema(docsStatic.schema)
-      .parquet(s"$base/src")
-    val q = IngestStream.gateMonitor(stream, s"$base/weights",
-      s"$base/scores")
-    assert(q.awaitTermination(60000),
-      "stream must terminate within 60s")
-    def scored() = spark.read.parquet(s"$base/scores")
-      .select("doc_id", "score", "pred").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).sorted
-    val batch = TextAnalysis.applyLinearGate(docsStatic, w)
-      .collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).sorted
-    assert(scored().length == docsStatic.count() &&
-      scored().sameElements(batch),
-      "streamed scores must equal the batch gate bit-for-bit")
-    // at-least-once replay: a fresh run over the same source with a
-    // NEW checkpoint re-keys the same batch ids — overwrite replaces
-    val q2 = IngestStream.gateMonitor(stream, s"$base/weights",
-      s"$base/scores", checkpointDir = Some(s"$base/ckpt2"))
-    assert(q2.awaitTermination(60000),
-      "stream must terminate within 60s")
-    spark.catalog.refreshByPath(s"$base/scores")
-    assert(scored().sameElements(batch),
-      "replay must replace the batch partition, never double-count")
-  }
-
   test("gate deployment chain e2e: quality_gate pipeline trains and " +
        "publishes the artifact, gateMonitor scores micro-batches " +
        "under it, and the threshold sweep over the monitor's output " +
        "equals the batch sweep") {
-    import graft.streaming.IngestStream
     import graft.llm.TextAnalysis
     import graft.config.CLI
     val base = graft.Scratch.root + "/gate_deploy_e2e"
@@ -947,20 +431,19 @@ class StreamingSpec extends AnyFunSuite {
     CLI.run(Array("quality_gate", "run", specFile), spark)
     val wLayer = Seq(s"$base/weights", s"$base/weights.parquet")
       .find(d => new java.io.File(d).exists()).get
-    // 2. monitor: micro-batched stream scored under the FROZEN layer
-    //    (two files -> two batches, so the monitor really composes
-    //    across micro-batch boundaries)
+    // 2. score two doc-disjoint batches under the FROZEN layer read
+    //    back from disk (dim+1 `(bucket, w)` rows), so the artifact
+    //    composes across batch boundaries
     val docsStatic = spark.read.parquet(s"$base/src.parquet")
-    docsStatic.filter(col("doc_id") % 2 === 0).write
-      .parquet(s"$base/feed")
-    docsStatic.filter(col("doc_id") % 2 =!= 0).write
-      .mode("append").parquet(s"$base/feed")
-    val stream = spark.readStream.schema(docsStatic.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/feed")
-    val q = IngestStream.gateMonitor(stream, wLayer, s"$base/mscores")
-    assert(q.awaitTermination(60000),
-      "stream must terminate within 60s")
-    // 3. threshold sweep over the monitor's output == the batch sweep
+    val w = spark.read.parquet(wLayer).orderBy(col("bucket"))
+      .collect().map(_.getDouble(1))
+    assert(w.length >= 2, s"not a gate-weights layer: ${w.length} rows")
+    val mScores = Seq(0, 1)
+      .map(h => TextAnalysis.applyLinearGate(
+        docsStatic.filter(col("doc_id") % 2 === h), w))
+      .reduce(_ unionByName _)
+      .select("doc_id", "score")
+    // 3. threshold sweep over the batched scores == the batch sweep
     //    over the pipeline's own scores (same labels, same corpus)
     val labels = docsStatic.select(col("doc_id"),
       array_contains(TextAnalysis.tokens(col("text")), "spark")
@@ -971,15 +454,13 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
         .sortBy(_._1)
-    val mScores = spark.read.parquet(s"$base/mscores")
-      .select("doc_id", "score")
     assert(mScores.count() == docsStatic.count(),
-      "monitor must score every doc across micro-batches")
+      "the artifact must score every doc across batches")
     val batchScores = spark.read.parquet(s"$base/scores.parquet")
       .select("doc_id", "score")
     val sm = sweep(mScores)
     assert(sm.nonEmpty && sm.sameElements(sweep(batchScores)),
-      "threshold sweep over monitor output must equal the batch sweep")
+      "threshold sweep over batched scores must equal the batch sweep")
   }
 
   test("streaming bloom decontamination gate matches the batch filter") {
@@ -1068,76 +549,24 @@ class StreamingSpec extends AnyFunSuite {
       s"steady token must not trend: $flagged")
   }
 
-  test("bm25Monitor: the streamed postings layer serves the " +
-       "one-shot ranking bit-for-bit") {
-    import graft.streaming.IngestStream
-    import graft.llm.TextAnalysis
-    val base = graft.Scratch.root + "/bm25_stream"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val src = s"$base/src"
-    new java.io.File(src).mkdirs()
-    val docs0 = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    // two DOC-DISJOINT halves as two files -> two micro-batches
-    Seq(0, 1).foreach { h =>
-      val tmp = s"$base/half$h"
-      docs0.filter(col("doc_id") % 2 === h).coalesce(1)
-        .write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/half$h.parquet"))
-    }
-    val q = IngestStream.bm25Monitor(
-      spark.readStream.schema(docs0.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-      s"$base/idx")
-    try { q.processAllAvailable() } finally q.stop()
-    val queries = docs0.filter(col("doc_id") % 100 === 0)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(TextAnalysis.tokens(col("text")), 1, 8), " ")
-          .as("text"))
-    def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    val served = norm(TextAnalysis.bm25TopKFromPostings(spark,
-      s"$base/idx", queries, k = 5))
-    val oneShot = norm(TextAnalysis.bm25TopK(docs0, queries, k = 5))
-    assert(oneShot.nonEmpty && served == oneShot,
-      s"streamed layer diverged: ${served.size} vs ${oneShot.size}")
-  }
-
   test("ivfMonitor: streamed delta batches serve the one-shot-build " +
        "ranking; compaction after the run keeps it; the index must " +
        "pre-exist with its sidecar") {
-    import graft.streaming.IngestStream
     import graft.llm.Similarity
     val base = graft.Scratch.root + "/ivf_stream"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val src = s"$base/src"
-    new java.io.File(src).mkdirs()
     val emb0 = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.kmeansCentroidsUncached(emb0, nCells = 8,
       iters = 1)
     // the standing index: built on a third of the corpus; the other
-    // two thirds arrive as two streamed files -> two delta batches
+    // two thirds arrive as two delta batches
     Similarity.ivfWriteIndex(emb0.filter(col("vec_id") % 3 === 0),
       cents, s"$base/idx")
     Seq(1, 2).foreach { h =>
-      val tmp = s"$base/third$h"
-      emb0.filter(col("vec_id") % 3 === h).coalesce(1)
-        .write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/third$h.parquet"))
+      Similarity.ivfAppendBatch(spark, s"$base/idx",
+        emb0.filter(col("vec_id") % 3 === h), batchId = h.toLong)
     }
-    val q = IngestStream.ivfMonitor(
-      spark.readStream.schema(emb0.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-      s"$base/idx")
-    try { q.processAllAvailable() } finally q.stop()
     val queries = emb0.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"))
@@ -1148,25 +577,20 @@ class StreamingSpec extends AnyFunSuite {
       k = 5))
     assert(oneShot.nonEmpty && norm(Similarity.ivfTopKIndexedAuto(
       spark, s"$base/idx", queries, k = 5)) == oneShot,
-      "streamed delta must serve the one-shot-build ranking")
-    // two delta batches landed (one per micro-batch)
+      "delta batches must serve the one-shot-build ranking")
+    // two delta batches landed
     assert(new java.io.File(s"$base/idx/_delta").listFiles()
       .count(_.getName.startsWith("ingest_batch=")) == 2)
     val (rowsM, _) = Similarity.ivfCompactDelta(spark, s"$base/idx")
     assert(rowsM == emb0.filter(col("vec_id") % 3 =!= 0).count())
     assert(norm(Similarity.ivfTopKIndexedAuto(spark, s"$base/idx",
       queries, k = 5)) == oneShot, "compaction must not change serving")
-    // no index, no sidecar -> the stream fails fast, not silently
-    val bad = IngestStream.ivfMonitor(
-      spark.readStream.schema(emb0.schema).parquet(src),
-      s"$base/nonexistent")
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try q.awaitTermination(100) finally ()
-      bad.processAllAvailable()
+    // no index, no sidecar -> the append fails fast, not silently
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.ivfAppendBatch(spark, s"$base/nonexistent", emb0,
+        batchId = 0L)
     }
-    bad.stop()
-    assert(ex.getMessage.contains("sidecar") ||
-      Option(ex.getCause).exists(_.getMessage.contains("sidecar")),
+    assert(ex.getMessage.contains("sidecar"),
       s"missing-sidecar append must fail fast: ${ex.getMessage}")
   }
 
@@ -1366,12 +790,12 @@ class StreamingSpec extends AnyFunSuite {
     val textB = "completely different content about distributed query engines"
     val textC = "yet another unrelated document describing parquet file layouts"
     IngestStream.ingestBatch(Seq((1L, textA)).toDF("doc_id", "text"),
-      corpusDir, sigDir, threshold = 0.5, batchId = Some(0L))
+      corpusDir, sigDir, threshold = 0.5, batchId = 0L)
     IngestStream.ingestBatch(Seq((2L, textB)).toDF("doc_id", "text"),
-      corpusDir, sigDir, threshold = 0.5, batchId = Some(1L))
+      corpusDir, sigDir, threshold = 0.5, batchId = 1L)
     val b2 = Seq((3L, textC)).toDF("doc_id", "text")
     IngestStream.ingestBatch(b2, corpusDir, sigDir, threshold = 0.5,
-      batchId = Some(2L))
+      batchId = 2L)
     def snap(dir: String, cols: Seq[String]) = spark.read.parquet(dir)
       .select(cols.head, cols.tail: _*).collect()
       .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
@@ -1389,14 +813,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(snap(sigDir, Seq("id")) == sigsBefore)
     // tail replay (the only replayable batch) stays idempotent
     IngestStream.ingestBatch(b2, corpusDir, sigDir, threshold = 0.5,
-      batchId = Some(2L))
+      batchId = 2L)
     assert(snap(corpusDir, Seq("doc_id", "text")) == corpusBefore)
     // the next batch still dedups against the COMPACTED signatures:
     // a near-dup of doc 1 (batch 0, now inside partition -2) drops
     IngestStream.ingestBatch(
       Seq((9L, textA), (10L, "genuinely fresh words about row groups"))
         .toDF("doc_id", "text"),
-      corpusDir, sigDir, threshold = 0.5, batchId = Some(3L))
+      corpusDir, sigDir, threshold = 0.5, batchId = 3L)
     val ids = spark.read.parquet(corpusDir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 3L, 10L), s"got $ids")
@@ -1473,10 +897,8 @@ class StreamingSpec extends AnyFunSuite {
   test("windowedTrendingWide: same event-time semantics as the " +
        "literal path on a small geometry; handles the wide geometry " +
        "the literal device refuses; replay replaces") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.IngestStream
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = graft.Scratch.root + "/cms_wtrend_wide"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val dir = s"$base/sketch"
@@ -1484,54 +906,44 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1L, "a a b c"), (2L, "a b c d")).toDF("doc_id", "text"),
       dir, batchId = 0L)
     val layer = IngestStream.cmsLayerRead(spark, dir)
-    val rows = (0 until 8).map(i => (i * 60L, "zz")) ++
+    val events = ((0 until 8).map(i => (i * 60L, "zz")) ++
       Seq((480L, "a"), (540L, "a")) ++
-      (0 until 4).map(i => (3600L + i * 60L, "yy"))
-    def runWide(sketch: org.apache.spark.sql.DataFrame, out: String,
-                width: Int): Map[(Long, String), (Long, Long)] = {
-      val input = MemoryStream[(Long, String)]
-      val df = input.toDS().toDF("secs", "token")
-        .withColumn("ts", col("secs").cast("timestamp"))
-      val q = IngestStream.windowedTrendingWide(df, "ts", "token",
-        "1 hour", sketch, out, watermark = "30 minutes", width = width,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      try {
-        input.addData(rows)
-        q.processAllAvailable()
-        input.addData(Seq((3600L * 10, "sentinel")))
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.read.parquet(out)
-        .select("window_start", "token", "batch_cnt", "hist_est")
-        .collect()
-        .map(r => (r.getTimestamp(0).getTime / 1000, r.getString(1)) ->
-          ((r.getLong(2), r.getLong(3)))).toMap
-    }
-    // small geometry: wide face == literal face, row for row
-    val wide = runWide(layer, s"$base/out_small", width = 16)
-    val literal = graft.llm.HeavyHitters.windowedTrending(
-        rows.toDF("secs", "token")
-          .withColumn("ts", col("secs").cast("timestamp")),
-        "ts", "token", "1 hour", layer)
+      (0 until 4).map(i => (3600L + i * 60L, "yy")))
+      .toDF("secs", "token")
+      .withColumn("ts", col("secs").cast("timestamp"))
+    def keyed(df: org.apache.spark.sql.DataFrame) = df
+      .select("window_start", "token", "batch_cnt", "hist_est")
       .collect()
       .map(r => (r.getTimestamp(0).getTime / 1000, r.getString(1)) ->
         ((r.getLong(2), r.getLong(3)))).toMap
-    assert(wide == literal && wide.keySet ==
+    // the wide path: trendingFromCounts over the windowed aggregate,
+    // the sketch broadcast-joined instead of inlined
+    def wide(sketch: org.apache.spark.sql.DataFrame, width: Int) =
+      keyed(graft.llm.HeavyHitters.trendingFromCounts(
+        events.groupBy(window(col("ts"), "1 hour"), col("token"))
+          .agg(count(lit(1)).as("batch_cnt"))
+          .select(col("window.start").as("window_start"), col("token"),
+            col("batch_cnt")),
+        sketch, width = width))
+    // small geometry: wide path == literal face, row for row
+    val small = wide(layer, width = 16)
+    val literal = keyed(graft.llm.HeavyHitters.windowedTrending(
+      events, "ts", "token", "1 hour", layer))
+    assert(small == literal && small.keySet ==
       Set((0L, "zz"), (3600L, "yy")),
-      s"wide/literal divergence: $wide vs $literal")
-    // wide geometry (d*w >= 1e5): the literal device refuses…
+      s"wide/literal divergence: $small vs $literal")
+    // wide geometry (d*w >= 1e5): the literal device refuses and
+    // names the wide path…
     val wideSketch = graft.llm.HeavyHitters.cmsSketch(
       Seq("a", "a", "a").toDF("token"), width = 30000)
     val ex = intercept[IllegalArgumentException] {
-      graft.llm.HeavyHitters.windowedTrending(
-        rows.toDF("secs", "token")
-          .withColumn("ts", col("secs").cast("timestamp")),
-        "ts", "token", "1 hour", wideSketch, width = 30000)
+      graft.llm.HeavyHitters.windowedTrending(events, "ts", "token",
+        "1 hour", wideSketch, width = 30000)
     }
-    assert(ex.getMessage.contains("windowedTrendingWide"), ex.getMessage)
-    // …and the wide face runs it: zz and yy burst (no history), the
-    // steady a (history 3, in-window 2) stays quiet
-    val wideGeo = runWide(wideSketch, s"$base/out_wide", width = 30000)
+    assert(ex.getMessage.contains("trendingFromCounts"), ex.getMessage)
+    // …which serves it: zz and yy burst (no history), the steady a
+    // (history 3, in-window 2) stays quiet
+    val wideGeo = wide(wideSketch, width = 30000)
     assert(wideGeo.keySet == Set((0L, "zz"), (3600L, "yy")),
       s"wide-geometry run: $wideGeo")
     assert(wideGeo((0L, "zz")) == ((8L, 0L)), s"$wideGeo")
@@ -1741,9 +1153,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
 
-  // ---- streaming-wrapper pins: every foreachBatch wrapper face is
-  // driven end-to-end and must equal its batch kernel on the same
-  // data (the no-dark-faces gate's honest witness) ----
+  // ---- streaming-wrapper pins: a foreachBatch face driven
+  // end-to-end must equal its batch kernel on the same data ----
 
   def stageDocs(tag: String, rows: Seq[(Long, String)])
       : (String, org.apache.spark.sql.DataFrame) = {
@@ -1770,33 +1181,12 @@ class StreamingSpec extends AnyFunSuite {
       s"$base/sigs", threshold = 0.5)
     assert(q.awaitTermination(60000), "stream must drain in 60s")
     IngestStream.ingestBatch(docsStatic, s"$base/bcorpus",
-      s"$base/bsigs", threshold = 0.5)
+      s"$base/bsigs", threshold = 0.5, batchId = 0L)
     def ids(dir: String) = spark.read.parquet(dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids(s"$base/corpus") == ids(s"$base/bcorpus"))
     assert(ids(s"$base/corpus") == Set(1L, 3L, 4L),
       "near-dup 2 drops, short 4 survives")
-  }
-
-  test("nearDupIngestVerified wrapper: stream == two-stage batch " +
-       "ingest") {
-    import graft.streaming.IngestStream
-    val baseText = (0 until 60).map(i => s"w$i").mkString(" ")
-    val rows = Seq((1L, baseText),
-      (2L, baseText.replace("w30", "wxx")),      // true near-dup
-      (3L, (0 until 60).map(i => s"z$i").mkString(" ")))
-    val (base, docsStatic) = stageDocs("neardupv", rows)
-    val stream = spark.readStream.schema(docsStatic.schema)
-      .parquet(s"$base/src")
-    val q = IngestStream.nearDupIngestVerified(stream, s"$base/corpus",
-      s"$base/sigs", tau = 0.8, estThreshold = 0.05)
-    assert(q.awaitTermination(60000), "stream must drain in 60s")
-    IngestStream.ingestBatchVerified(docsStatic, s"$base/bcorpus",
-      s"$base/bsigs", tau = 0.8, estThreshold = 0.05)
-    def ids(dir: String) = spark.read.parquet(dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids(s"$base/corpus") == ids(s"$base/bcorpus"))
-    assert(ids(s"$base/corpus") == Set(1L, 3L))
   }
 
   test("blobNearDupIngest wrapper: stream == batch blob ingest " +
@@ -1815,12 +1205,12 @@ class StreamingSpec extends AnyFunSuite {
     val blobsStatic = spark.read.parquet(s"$base/src")
     val stream = spark.readStream.schema(blobsStatic.schema)
       .parquet(s"$base/src")
-    val q = IngestStream.blobNearDupIngest(stream, s"$base/corpus",
-      s"$base/sigs")
+    val q = IngestStream.mediaNearDupIngest(stream, s"$base/corpus",
+      s"$base/sigs", IngestStream.SigScheme.BlobSimHash())
     assert(q.awaitTermination(60000), "stream must drain in 60s")
     IngestStream.ingestBatchWith(blobsStatic, s"$base/bcorpus",
       s"$base/bsigs", IngestStream.SigScheme.BlobSimHash(3, "content"),
-      "media_id")
+      "media_id", batchId = 0L)
     def ids(dir: String) = spark.read.parquet(dir)
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(ids(s"$base/corpus") == ids(s"$base/bcorpus"))
@@ -1828,69 +1218,13 @@ class StreamingSpec extends AnyFunSuite {
       "tampered near-identical blob must drop")
   }
 
-  test("cdcNoveltyMonitor wrapper: stream report == cdcNoveltyBatch " +
-       "on the same batch") {
-    import graft.streaming.IngestStream
-    val words = (1 to 400).map(i => s"t${i * 11 % 509}n$i")
-    val rows = Seq((1L, words.take(200).mkString(" ")),
-      (2L, words.drop(200).mkString(" ")))
-    val (base, docsStatic) = stageDocs("cdcmon", rows)
-    val stream = spark.readStream.schema(docsStatic.schema)
-      .parquet(s"$base/src")
-    val q = IngestStream.cdcNoveltyMonitor(stream, s"$base/chunks",
-      s"$base/report")
-    assert(q.awaitTermination(60000), "stream must drain in 60s")
-    IngestStream.cdcNoveltyBatch(docsStatic, s"$base/bchunks",
-      s"$base/breport", batchId = 0L)
-    val got = spark.read.parquet(s"$base/report")
-      .select("doc_id", "novelty_frac")
-    val want = spark.read.parquet(s"$base/breport")
-      .select("doc_id", "novelty_frac")
-    assert(got.count() == 2)
-    assert(got.exceptAll(want).count() == 0 &&
-      want.exceptAll(got).count() == 0)
-  }
-
-  test("cmsMonitor wrapper: the streamed sketch layer equals " +
-       "cmsBatch cell-for-cell") {
-    import graft.streaming.IngestStream
-    val rows = (1L to 20L).map(i =>
-      (i, (0 until 30).map(j => s"tok${(i * 7 + j) % 41}").mkString(" ")))
-    val (base, docsStatic) = stageDocs("cmsmon", rows)
-    val stream = spark.readStream.schema(docsStatic.schema)
-      .parquet(s"$base/src")
-    val q = IngestStream.cmsMonitor(stream, s"$base/sketch")
-    assert(q.awaitTermination(60000), "stream must drain in 60s")
-    IngestStream.cmsBatch(docsStatic, s"$base/bsketch", batchId = 0L)
-    val got = IngestStream.cmsLayerRead(spark, s"$base/sketch")
-    val want = IngestStream.cmsLayerRead(spark, s"$base/bsketch")
-    assert(got.count() > 0)
-    assert(got.exceptAll(want).count() == 0 &&
-      want.exceptAll(got).count() == 0,
-      "stream and batch sketches must agree cell-for-cell")
-  }
-
   test("safetyBatch / fertilityBatch kernels: direct per-batch calls " +
        "publish the same rollups their monitors stream") {
     import graft.streaming.IngestStream
-    import graft.llm.TextAnalysis
     val base = graft.Scratch.root + "/wrap_kernels"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val docsStatic = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val terms = Seq("merge", "casino777")
-    IngestStream.safetyBatch(docsStatic, s"$base/safety", terms,
-      batchId = 0L)
-    val got = spark.read.parquet(s"$base/safety/ingest_batch=0")
-    val want = TextAnalysis.safetyScan(docsStatic, terms)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_email") + col("n_ip") + col("n_phone")).as("n_pii"),
-        sum(col("n_blocked")).as("n_blocked"),
-        sum(when(col("has_secret"), 1L).otherwise(0L)).as("n_secret"),
-        sum(when(col("flagged"), 1L).otherwise(0L)).as("n_flagged"))
-    assert(got.count() > 0 && got.exceptAll(want).count() == 0 &&
-      want.exceptAll(got).count() == 0)
     IngestStream.fertilityBatch(docsStatic, docsStatic,
       s"$base/fert", merges = 4, batchId = 0L)
     val fert = spark.read.parquet(s"$base/fert/ingest_batch=0").head()
