@@ -923,25 +923,37 @@ object Similarity {
   }
 
   /** IVF search over a persisted [[ivfWriteIndex]] layout. The probed
-    * cell set (<= |queries| * nProbe values — driver-sized by the same
-    * argument that lets probes broadcast) becomes a LITERAL `isin`
-    * partition filter, so unprobed `cell_id=` directories are pruned
-    * from the scan statically — no full-corpus read, no assignment
-    * recompute. Centroids must be the set the index was built with. */
+    * cell set ([[probedCells]], resolved on the driver) becomes a
+    * LITERAL `isin` partition filter, so unprobed `cell_id=`
+    * directories are pruned from the scan statically — no full-corpus
+    * read, no assignment recompute. Centroids must be the set the
+    * index was built with.
+    *
+    * Batch contract: `queries` is DRIVER-SIZED — its vectors are
+    * force-broadcast into the probed-cell scan. */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String, centroids: Seq[Seq[Double]],
                      queries: DataFrame, k: Int, nProbe: Int = 4,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      qIdCol: String = "query_id", qVecCol: String = "query_vec")
-      : DataFrame = {
-    val probedCells = queries
-      .select(explode(graft.functions.SketchExprs.probeCells(
-        col(qVecCol), centroids, nProbe)).as("cell_id"))
-      .distinct().collect().map(_.getLong(0))
+      : DataFrame =
     scoreProbedCells(
-      indexFrame(spark, indexDir, "cell_id", Some(probedCells)),
+      indexFrame(spark, indexDir, "cell_id",
+        Some(probedCells(queries, centroids, nProbe, qVecCol))),
       centroids, queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
-  }
+
+  /** The distinct cells a query batch probes, sorted: one projection
+    * collect of each query's probe list (no Spark job for a local
+    * query frame — the projection folds into the local relation),
+    * deduplicated on the driver. At most |queries| x nProbe values,
+    * driver-sized by the same contract that lets the queries
+    * broadcast. */
+  private def probedCells(queries: DataFrame, centroids: Seq[Seq[Double]],
+                          nProbe: Int, qVecCol: String): Seq[Long] =
+    queries.select(graft.functions.SketchExprs.probeCells(
+        col(qVecCol), centroids, nProbe))
+      .collect().iterator.filterNot(_.isNullAt(0))
+      .flatMap(_.getSeq[Long](0)).toSeq.distinct.sorted
 
   /** An IVF or PQ index's serving frame: the main `partCol=` layout
     * UNIONed with the `_delta` side segment ([[ivfAppendBatch]],
@@ -1180,18 +1192,14 @@ object Similarity {
                           idCol: String = "vec_id",
                           vecCol: String = "embedding",
                           qIdCol: String = "query_id",
-                          qVecCol: String = "query_vec"): DataFrame = {
-    val probedCells = queries
-      .select(explode(graft.functions.SketchExprs.probeCells(
-        col(qVecCol), centroids, nProbe)).as("cell_id"))
-      .distinct().collect().map(_.getLong(0))
+                          qVecCol: String = "query_vec"): DataFrame =
     // the predicate rides BELOW the main∪delta union — Catalyst
     // pushes it through Union into each branch's parquet reader
     scoreProbedCells(
-      indexFrame(spark, indexDir, "cell_id", Some(probedCells))
+      indexFrame(spark, indexDir, "cell_id",
+          Some(probedCells(queries, centroids, nProbe, qVecCol)))
         .filter(predicate),
       centroids, queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
-  }
 
   /** Seeded gaussian hyperplanes, quantized to 6 decimals. Each
     * component is exactly n/1e6 for an integer n, so a SQL oracle can

@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType,
+  LongType, StringType, StructField, StructType}
 
 /** Text-analysis operators for training-data curation: token counting,
   * quality scoring, language ID, document fingerprinting. All pure
@@ -191,63 +193,76 @@ object TextAnalysis {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats = corpus.agg(count(lit(1)).as("_n"),
       sum(size(toks).cast("long")).as("_sumdl"))
-    val result = bm25ScoreOverPostings(tf, stats, queries, k, k1, b,
-      textCol, idCol, queryIdCol, weighted)
-    graft.access.Split.Branches(result, tf)
-  }
-
-  /** The query-time half of BM25, factored over a PREPARED postings
-    * relation `(term, idCol, tf, dl)` and a 1-row `( _n, _sumdl )`
-    * stats frame — shared verbatim by the one-shot [[bm25TopK]] path
-    * and the incremental [[bm25TopKFromPostings]] layer, so the two
-    * serve bit-identical scores from the same inputs. */
-  private def bm25ScoreOverPostings(tf: DataFrame, stats: DataFrame,
-                                    queries: DataFrame, k: Int,
-                                    k1: Double, b: Double,
-                                    textCol: String, idCol: String,
-                                    queryIdCol: String,
-                                    weighted: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = tokens(col(textCol))
-    val dfT = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // set-query form: DISTINCT terms, each counted once. bag-query
-    // form: terms carry their in-query frequency as a weight. Either
-    // way the query side stays queries-sized and broadcasts.
+    // the query side in-plan: the same `(term, df, _n, _sumdl, _q)`
+    // relation the layered faces resolve on the driver ([[bm25Batch]]).
+    // set-query form: DISTINCT terms, each counted once; bag-query
+    // form: terms carry their in-query frequency as a weight. df is a
+    // vocab-sized aggregate; N/Σdl ride a 1-row broadcast
+    val qt0 = queries.select(col(queryIdCol), explode(toks).as("term"))
     val qt =
       if (weighted)
-        queries.select(col(queryIdCol), explode(toks).as("term"))
-          .groupBy(col(queryIdCol), col("term"))
+        qt0.groupBy(col(queryIdCol), col("term"))
           .agg(count(lit(1)).as("qtf"))
-      else
-        queries.select(col(queryIdCol), explode(toks).as("term"))
-          .distinct()
+      else qt0.distinct()
+    val q = col(queryIdCol).as("q")
+    val qside = qt
+      .groupBy(col("term"))
+      .agg(collect_list(
+        if (weighted) struct(q, col("qtf")) else struct(q)).as("_q"))
+      .join(tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
+        Seq("term"))
+      .crossJoin(broadcast(stats))
+    graft.access.Split.Branches(
+      bm25Score(tf, qside, k, k1, b, idCol, queryIdCol, weighted), tf)
+  }
+
+  /** The BM25 contribution of one (term, doc) posting, over the
+    * columns `tf`, `dl`, `df`, `_n` and `_sumdl`. */
+  private def bm25Contrib(k1: Double, b: Double): Column = {
     val avgdl = col("_sumdl").cast("double") / col("_n").cast("double")
     val idf = log(lit(1.0) +
       (col("_n").cast("double") - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5)))
-    val contrib = idf * (col("tf").cast("double") * (lit(k1) + lit(1.0))) /
+    idf * (col("tf").cast("double") * (lit(k1) + lit(1.0))) /
       (col("tf").cast("double") + lit(k1) * ((lit(1.0) - lit(b)) +
         lit(b) * (col("dl").cast("double") / avgdl)))
-    // the per-posting contribution is query-independent: compute it
-    // ONCE per (doc, term) before the query join, so the (query, doc,
-    // term) match stream — up to |queries|x larger — carries one
-    // precomputed decimal instead of redoing the formula per match
-    // weighted mode keeps _s as a double and applies qtf per match
+  }
+
+  /** The scoring half every BM25 face shares: `postings (term, idCol,
+    * tf, dl)` matched against a query side `(term, df, _n, _sumdl, _q)`
+    * — one row per query term, carrying its df and the corpus scalars
+    * as COLUMNS (literals would change the generated code with every
+    * layer generation) and in `_q` the `(q[, qtf])` of every query
+    * using it. The one-shot [[bm25TopK]] builds the query side
+    * in-plan and the layered faces resolve it on the driver
+    * ([[bm25Batch]]); the same rows reach the same plan, so the two
+    * serve bit-identical scores. The query side broadcasts (queries ≪
+    * corpus: the corpus never reshuffles for the match), and the
+    * per-(query, doc) agg shuffles candidate pairs only. */
+  private def bm25Score(postings: DataFrame, qside: DataFrame, k: Int,
+                        k1: Double, b: Double, idCol: String,
+                        queryIdCol: String,
+                        weighted: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // the contribution is query-independent: computed ONCE per posting,
+    // before `_q` explodes into the (query, doc, term) match stream —
+    // up to |queries|x larger — so each match carries one precomputed
+    // value. Weighted mode keeps it a double and applies qtf per match
     // BEFORE the decimal cast (a decimal×bigint product would widen
     // differently engine-to-engine; double-then-cast replays exactly)
-    val posting = tf
-      .join(dfT, Seq("term"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col(idCol),
-        (if (weighted) contrib
-         else contrib.cast("decimal(38,18)")).as("_s"))
+    val s = bm25Contrib(k1, b)
+    val matches = postings
+      .join(broadcast(qside), Seq("term"))
+      .select(col(idCol), col("_q"),
+        (if (weighted) s else s.cast("decimal(38,18)")).as("_s"))
+      .select(col(idCol), col("_s"), explode(col("_q")).as("_q"))
     val termSum =
       if (weighted)
-        sum((col("_s") * col("qtf").cast("double")).cast("decimal(38,18)"))
+        sum((col("_s") * col("_q.qtf").cast("double"))
+          .cast("decimal(38,18)"))
       else sum(col("_s"))
-    val scored = qt
-      .join(posting, Seq("term"))
-      .groupBy(col(queryIdCol), col(idCol))
+    val scored = matches
+      .groupBy(col("_q.q").as(queryIdCol), col(idCol))
       .agg(round(termSum.cast("double"), 6).as("score"))
     // Per-query top-k: logically a single rank window over the scored
     // stream, physically TWO-PHASE — Catalyst's InferWindowGroupLimit
@@ -339,55 +354,195 @@ object TextAnalysis {
     }
   }
 
-  /** Serve BM25 top-k from a standing [[bm25PostingsBatch]] layer:
-    * df/N/avgdl derive from the layer (stats partitions sum), and
-    * the scoring half is the SAME code path as [[bm25TopK]] — the
-    * layered index answers bit-identically to a from-scratch run
-    * over the union corpus (spec + oracle proven). This is the
-    * deployed shape the bm25 scaladoc promises: postings
-    * materialized once next to the corpus, queries never pay the
-    * tokenize/aggregate pass. */
+  /** Serve BM25 top-k from a standing [[bm25PostingsBatch]] layer,
+    * bit-identical to a from-scratch [[bm25TopK]] over the union
+    * corpus (spec + oracle proven): this is the deployed shape the
+    * bm25 scaladoc promises — postings materialized once next to the
+    * corpus, queries never pay the tokenize/aggregate pass.
+    *
+    * What runs on the driver, before the serve plans ([[bm25Batch]]):
+    * one projection collect brings back each query's tokens (no Spark
+    * job for a local query frame), deduplicated there into (query,
+    * term) rows; then two CONCURRENT jobs read N and Σdl from the
+    * stats rows and count the exact df of the batch's vocabulary in
+    * the postings. The results replant as ONE local relation (one
+    * row per query term: its df, N, Σdl and the queries using it),
+    * and one plan scores the vocabulary's postings against it — no
+    * df, stats or query-term stage of its own.
+    *
+    * Batch contract: `queries` is DRIVER-SIZED. More than 5e6 (query,
+    * term) rows fail fast naming the limit; split a larger query set
+    * into batches. Refuses a layer with a takedown swap pending. */
   def bm25TopKFromPostings(spark: org.apache.spark.sql.SparkSession,
                            indexDir: String, queries: DataFrame,
                            k: Int, k1: Double = 1.2, b: Double = 0.75,
                            textCol: String = "text",
                            idCol: String = "doc_id",
                            queryIdCol: String = "query_id")
-      : DataFrame = {
-    val (tf, stats) = bm25LayerFrames(spark, indexDir, idCol)
-    bm25ScoreOverPostings(tf, stats, queries, k, k1, b,
-      textCol, idCol, queryIdCol, weighted = false)
-  }
-
-  /** The standing-layer inputs every serve face starts from: the
-    * `(term, idCol, tf, dl)` postings relation and the 1-row
-    * `(_n, _sumdl)` stats aggregate — one resolution point so the
-    * set-query, bag-query and pruned serves read the SAME frames.
-    * Refuses a layer with a takedown swap pending. */
-  private def bm25LayerFrames(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, idCol: String)
-      : (DataFrame, DataFrame) = {
-    Swap.requireSettled(spark, indexDir)
-    (graft.Writes.readParquet(spark, s"$indexDir/postings")
-      .select(col(idCol), col("term"), col("tf"), col("dl")),
-    graft.Writes.readParquet(spark, s"$indexDir/stats")
-      .agg(sum(col("n_docs")).as("_n"),
-        sum(col("sum_dl")).as("_sumdl")))
-  }
+      : DataFrame =
+    bm25Batch(spark, indexDir, queries, textCol, idCol, queryIdCol)
+      .score(k, k1, b, idCol, queryIdCol, weighted = false)
 
   /** [[bm25TopKWeighted]] served from a standing [[bm25PostingsBatch]]
     * layer — the bag-query (qtf-weighted) twin of
-    * [[bm25TopKFromPostings]], bit-identical to the one-shot weighted
-    * form over the union corpus (the scoring half is the same shared
-    * code path). */
+    * [[bm25TopKFromPostings]], with the same driver-side resolution
+    * (qtf is counted on the driver) and the same batch contract;
+    * bit-identical to the one-shot weighted form over the union
+    * corpus. */
   def bm25TopKWeightedFromPostings(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queries: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75,
       textCol: String = "text", idCol: String = "doc_id",
-      queryIdCol: String = "query_id"): DataFrame = {
-    val (tf, stats) = bm25LayerFrames(spark, indexDir, idCol)
-    bm25ScoreOverPostings(tf, stats, queries, k, k1, b,
-      textCol, idCol, queryIdCol, weighted = true)
+      queryIdCol: String = "query_id"): DataFrame =
+    bm25Batch(spark, indexDir, queries, textCol, idCol, queryIdCol)
+      .score(k, k1, b, idCol, queryIdCol, weighted = true)
+
+  /** The most (query, term) rows a layered BM25 serve resolves on the
+    * driver. */
+  private val MaxQueryTerms = 5000000
+
+  private val TermSide = StructType(Seq(
+    StructField("term", StringType, nullable = false),
+    StructField("df", LongType, nullable = false),
+    StructField("_n", LongType), StructField("_sumdl", LongType)))
+
+  /** A standing layer's postings `(idCol, term, tf, dl)` with what a
+    * serve needs for one vocabulary, read on the driver: each term's
+    * exact df (a term the layer lacks has none) and N/Σdl (None when
+    * the stats dir holds no row). */
+  private final case class Bm25Layer(
+      spark: org.apache.spark.sql.SparkSession, postings: DataFrame,
+      df: Map[String, Long], n: Option[Long], sumdl: Option[Long]) {
+
+    private def held(terms: Seq[String]): Seq[String] =
+      terms.filter(df.contains).distinct.sorted
+
+    /** The postings of the `terms` the layer holds. */
+    def postingsOf(terms: Seq[String]): DataFrame =
+      postings.filter(col("term").isin(held(terms): _*))
+
+    /** `term`'s query-side scalar columns `(df, _n, _sumdl)`. */
+    def scalars(term: String): Seq[Any] =
+      Seq(df(term), n.map(Long.box).orNull, sumdl.map(Long.box).orNull)
+
+    /** Per-posting contributions `(term, idCol, _s, _sd, df)` of the
+      * `terms` the layer holds — what the impact slices rank. `_s` is
+      * the decimal(38,18) set-query term score, `_sd` the raw double
+      * the bag-query score multiplies by qtf; codegen CSE shares the
+      * one computation across both columns. */
+    def contribs(terms: Seq[String], k1: Double, b: Double,
+                 idCol: String): DataFrame = {
+      val side = spark.createDataFrame(java.util.Arrays.asList(
+        held(terms).map(t => Row.fromSeq(t +: scalars(t))): _*), TermSide)
+      val s = bm25Contrib(k1, b)
+      postingsOf(terms).join(broadcast(side), Seq("term"))
+        .select(col("term"), col(idCol),
+          s.cast("decimal(38,18)").as("_s"), s.as("_sd"), col("df"))
+    }
+  }
+
+  /** Resolve a standing layer for `vocab` ([[Bm25Layer]]). The df
+    * count (vocabulary only — the `isin` also skips parquet row
+    * groups) and the stats read (one row per batch, summed here: a
+    * 1-job collect, no shuffle) run as two concurrent jobs. Refuses
+    * a layer with a takedown swap pending. */
+  private def bm25Layer(spark: org.apache.spark.sql.SparkSession,
+                        indexDir: String, idCol: String,
+                        vocab: Seq[String]): Bm25Layer = {
+    Swap.requireSettled(spark, indexDir)
+    val postings = graft.Writes.readParquet(spark, s"$indexDir/postings")
+      .select(col(idCol), col("term"), col("tf"), col("dl"))
+    val terms = vocab.distinct.sorted
+    val Seq(dfRows, statRows) = graft.task.Fanout.all(spark, Seq(
+      () =>
+        if (terms.isEmpty) Array.empty[Row]
+        else postings.filter(col("term").isin(terms: _*))
+          .groupBy(col("term")).agg(count(lit(1))).collect(),
+      () => graft.Writes.readParquet(spark, s"$indexDir/stats")
+        .select(col("n_docs"), col("sum_dl")).collect()))
+    // null-skipping like SQL sum: no row sums to None
+    def total(i: Int): Option[Long] =
+      statRows.filterNot(_.isNullAt(i))
+        .map(_.getAs[Number](i).longValue).reduceOption(_ + _)
+    Bm25Layer(spark, postings,
+      dfRows.map(r => r.getString(0) -> r.getLong(1)).toMap,
+      total(0), total(1))
+  }
+
+  /** A layered BM25 serve's query batch, resolved on the driver: the
+    * distinct `(query, term)` rows with their in-query frequency, and
+    * the layer resolved for the batch's vocabulary. `keep` restricts
+    * a face to some of the batch's query ids. */
+  private final case class Bm25Batch(layer: Bm25Layer, qid: StructField,
+                                     qt: Seq[(Any, String, Long)]) {
+
+    def terms(keep: Any => Boolean): Seq[String] =
+      qt.collect { case (q, t, _) if keep(q) => t }.distinct
+
+    /** The kept queries' `(queryIdCol, term[, qtf])` rows as a local
+      * relation — what the impact-slice arm joins. */
+    def queryTerms(weighted: Boolean, keep: Any => Boolean): DataFrame = {
+      val schema = StructType(Seq(qid,
+        StructField("term", StringType, nullable = false)) ++
+        (if (weighted) Seq(StructField("qtf", LongType, nullable = false))
+         else Nil))
+      layer.spark.createDataFrame(java.util.Arrays.asList(
+        qt.collect { case (q, t, n) if keep(q) =>
+          if (weighted) Row(q, t, n) else Row(q, t) }: _*), schema)
+    }
+
+    /** [[bm25Score]]'s query side as a local relation: one `(term, df,
+      * _n, _sumdl, _q)` row per term the layer holds among the kept
+      * queries' terms, `_q` holding the `(q[, qtf])` of each kept query
+      * using it. */
+    def querySide(weighted: Boolean, keep: Any => Boolean): DataFrame = {
+      val use = StructType(Seq(StructField("q", qid.dataType, qid.nullable))
+        ++ (if (weighted) Seq(StructField("qtf", LongType, nullable = false))
+            else Nil))
+      val rows = qt.filter { case (q, t, _) => keep(q) && layer.df.contains(t) }
+        .groupBy(_._2).toSeq.sortBy(_._1).map { case (t, uses) =>
+          Row.fromSeq(t +: layer.scalars(t) :+ uses.map { case (q, _, n) =>
+            if (weighted) Row(q, n) else Row(q) })
+        }
+      layer.spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(TermSide.fields :+ StructField("_q",
+          ArrayType(use, containsNull = false), nullable = false)))
+    }
+
+    /** The kept queries' top-k through [[bm25Score]]. */
+    def score(k: Int, k1: Double, b: Double, idCol: String,
+              queryIdCol: String, weighted: Boolean,
+              keep: Any => Boolean = _ => true): DataFrame =
+      bm25Score(layer.postingsOf(terms(keep)), querySide(weighted, keep),
+        k, k1, b, idCol, queryIdCol, weighted)
+  }
+
+  /** Resolve a query batch on the driver ([[Bm25Batch]]): one
+    * projection collect returns each query's tokens, and the driver
+    * counts the (query, term) pairs — duplicate query-id rows merge,
+    * as they do in the one-shot plan's distinct/aggregate. Fails past
+    * [[MaxQueryTerms]] pairs. */
+  private def bm25Batch(spark: org.apache.spark.sql.SparkSession,
+                        indexDir: String, queries: DataFrame,
+                        textCol: String, idCol: String,
+                        queryIdCol: String): Bm25Batch = {
+    val toks = queries.select(col(queryIdCol), tokens(col(textCol)))
+    val qtf = scala.collection.mutable.LinkedHashMap
+      .empty[(Any, String), Long]
+    toks.collect().foreach { r =>
+      if (!r.isNullAt(1)) r.getSeq[String](1).foreach { t =>
+        val key = (r.get(0), t)
+        qtf(key) = qtf.getOrElse(key, 0L) + 1L
+      }
+      require(qtf.size <= MaxQueryTerms,
+        s"bm25 serve: the query batch holds more than $MaxQueryTerms " +
+          "(query, term) pairs. The layered BM25 serves resolve their " +
+          "query batch on the driver; split the query set into " +
+          "driver-sized batches")
+    }
+    Bm25Batch(bm25Layer(spark, indexDir, idCol, qtf.keys.map(_._2).toSeq),
+      toks.schema(0),
+      qtf.iterator.map { case ((q, t), n) => (q, t, n) }.toSeq)
   }
 
   /** Exact BM25 top-k over a standing [[bm25PostingsBatch]] layer
@@ -400,21 +555,21 @@ object TextAnalysis {
     * expressed here relationally, PROVE-OR-FALL-BACK so the result
     * is ALWAYS exactly the full scan's top-k):
     *
-    *  0. a COST-ROUTING pre-gate (one vocab-bounded df aggregate)
-    *     sends queries whose every matched term has df > sliceM
-    *     straight to the full scan: no term slice can cover its
-    *     posting list there, so the bound is a sum of near-top
-    *     contributions and the attempt would only ever fall back —
-    *     routing skips the doomed candidate machinery (both routes
-    *     are exact; this is a cost decision, never a correctness
-    *     one; in a deployed layer term->df lives in the dictionary
-    *     sidecar and the gate is free); a batch with NO prune-routed
-    *     query short-circuits to the plain full scan — the slice
-    *     machinery is never even planned;
+    *  0. a COST-ROUTING pre-gate (on the driver, over the term->df
+    *     dictionary sidecar's rows for the query vocabulary) sends
+    *     queries whose every matched term has df > sliceM straight
+    *     to the full scan: no term slice can cover its posting list
+    *     there, so the bound is a sum of near-top contributions and
+    *     the attempt would only ever fall back — routing skips the
+    *     doomed candidate machinery (both routes are exact; this is
+    *     a cost decision, never a correctness one); a batch with NO
+    *     prune-routed query short-circuits to the plain full scan —
+    *     the slice machinery is never even planned;
     *  1. posting contributions are computed only for the prune-routed
-    *     QUERY VOCABULARY (the distinct-term set broadcasts into the
-    *     postings scan — the full-scan path computes a contribution
-    *     for every posting row in the layer);
+    *     QUERY VOCABULARY (an `isin` on the postings scan), with the
+    *     exact df, N and Σdl the driver resolved for the batch — the
+    *     same resolution and batch contract as
+    *     [[bm25TopKFromPostings]];
     *  2. per term, the TOP-`sliceM` postings by contribution form
     *     the impact slice (a rank window WITH a `<= sliceM` filter —
     *     Catalyst's WindowGroupLimit keeps a stopword's billion-row
@@ -512,46 +667,18 @@ object TextAnalysis {
     bm25PrunedCore(spark, indexDir, queries, k, sliceM, k1, b,
       textCol, idCol, queryIdCol, weighted = true)._1
 
-  /** The query-vocabulary posting-contribution frame `(term, idCol,
-    * _s)` the pruned serve slices — package-private so PlanSpec can
-    * gate the un-persisted plan (the core persists it immediately). */
+  /** The query-vocabulary posting contributions `(term, idCol, _s,
+    * _sd, df)` the pruned serve slices, for a `(query, term)` frame
+    * `qt` whose distinct terms are collected on the driver —
+    * package-private so PlanSpec can gate the un-persisted plan (the
+    * core persists it immediately). */
   private[graft] def bm25QueryVocabPostings(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       qt: DataFrame, k1: Double, b: Double, idCol: String)
       : DataFrame = {
-    val (tf, stats) = bm25LayerFrames(spark, indexDir, idCol)
-    bm25QueryVocabPostingsFrom(tf, stats, qt, k1, b, idCol)
-  }
-
-  /** [[bm25QueryVocabPostings]] over already-resolved layer frames —
-    * the pruned core reads the layer once and shares the frames with
-    * its routing pre-gate. */
-  private def bm25QueryVocabPostingsFrom(
-      tf: DataFrame, stats: DataFrame,
-      qt: DataFrame, k1: Double, b: Double, idCol: String)
-      : DataFrame = {
-    // contributions for the QUERY VOCABULARY only — df per term is
-    // the same count whether aggregated over the full layer or the
-    // term's own restricted postings, so the restriction is free
-    val qterms = qt.select(col("term")).distinct()
-    val tfq = tf.join(broadcast(qterms), Seq("term"))
-    val dfT = tfq.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val avgdl = col("_sumdl").cast("double") / col("_n").cast("double")
-    val idf = log(lit(1.0) +
-      (col("_n").cast("double") - col("df").cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)))
-    val contrib = idf * (col("tf").cast("double") * (lit(k1) + lit(1.0))) /
-      (col("tf").cast("double") + lit(k1) * ((lit(1.0) - lit(b)) +
-        lit(b) * (col("dl").cast("double") / avgdl)))
-    // `_s` (decimal) drives the unweighted path verbatim; `_sd` (the
-    // raw double) drives the weighted path, whose score arithmetic
-    // multiplies by qtf BEFORE the decimal cast — codegen CSE shares
-    // the one contribution computation across both columns
-    tfq.join(dfT, Seq("term"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col(idCol),
-        contrib.cast("decimal(38,18)").as("_s"),
-        contrib.as("_sd"), col("df"))
+    val terms = qt.select(col("term")).distinct().collect()
+      .map(_.getString(0)).toSeq
+    bm25Layer(spark, indexDir, idCol, terms).contribs(terms, k1, b, idCol)
   }
 
   /** The per-term impact slice: rank-filtered TERM-partitioned
@@ -588,54 +715,23 @@ object TextAnalysis {
       weighted: Boolean = false)
       : (DataFrame, DataFrame) = {
     require(k >= 1, s"k must be >= 1 (got $k)")
-    // the layer frames resolve ONCE and feed the auto geometry, the
-    // routing pre-gate and the slice arm's contribution scan alike
-    val (tfL, statsL) = bm25LayerFrames(spark, indexDir, idCol)
-    // sliceM = 0 resolves to the corpus-derived geometry; the 1-row
-    // stats read is the same driver-side metadata touch every serve
-    // already pays for N/avgdl (null-guarded: a stats dir holding
-    // only empty partitions sums to null, which is an empty corpus)
+    // the query batch, N/Σdl and the exact df of its vocabulary
+    // resolve ONCE on the driver ([[bm25Batch]], the batch contract
+    // of the full-scan faces) and feed the auto geometry, the slice
+    // arm's contributions and the fallback alike; the query terms
+    // reach every arm as local relations (the r19 domainReweight
+    // move), so no subtree embeds a tokenize+aggregate plan
+    val batch = bm25Batch(spark, indexDir, queries, textCol, idCol,
+      queryIdCol)
+    // sliceM = 0 resolves to the corpus-derived geometry (a stats dir
+    // holding only empty partitions is an empty corpus)
     val sliceM =
       if (sliceM0 > 0) sliceM0
-      else bm25AutoSliceM(k,
-        Option(statsL.head.get(0))
-          .map(_.asInstanceOf[Number].longValue).getOrElse(0L))
+      else bm25AutoSliceM(k, batch.layer.n.getOrElse(0L))
     require(sliceM >= k,
       s"need sliceM >= k (got k=$k, sliceM=$sliceM): a slice smaller " +
         "than k could not even seed the top-k")
     import org.apache.spark.sql.expressions.Window
-    // bag-query mode carries the in-query term frequency; set-query
-    // mode is the distinct-term set — same split as the scoring path
-    val qtRaw = queries
-      .select(col(queryIdCol), explode(tokens(col(textCol))).as("term"))
-    val qtF =
-      if (weighted)
-        qtRaw.groupBy(col(queryIdCol), col("term"))
-          .agg(count(lit(1)).as("qtf"))
-      else qtRaw.distinct()
-    // the query-term relation is QUERY-BATCH-sized by construction
-    // (|queries| x |query terms|) and every arm of the serve reads it
-    // — collect ONCE and replant as a LocalRelation (the r19
-    // domainReweight move): downstream subtrees then embed a literal
-    // relation instead of the tokenize+aggregate plan, the
-    // persist/unpersist lifecycle disappears, and the slice arm's
-    // semi-joins against it broadcast a local frame. Eager at
-    // DataFrame-construction time, exactly like the routing collect
-    // below (this serve face routes on the driver by contract).
-    val qtRows = qtF.collect()
-    // DRIVER-SIZE GUARD (VERDICT r20 #9 / ADVICE): the replant is
-    // licensed by the serve's routing contract — query batches are
-    // driver-sized. |queries| x |query terms| beyond this cap means a
-    // caller handed a corpus-sized "query" set to the batch-serve
-    // face; fail fast with the contract named instead of OOMing the
-    // driver mid-collect chain.
-    require(qtRows.length <= 5000000,
-      s"bm25 pruned serve: query-term relation has ${qtRows.length} " +
-        "rows (> 5e6). This face routes query batches on the driver " +
-        "by contract; a corpus-sized query set belongs on the " +
-        "distributed full-scan face (bm25TopKFromPostings)")
-    val qt = spark.createDataFrame(
-      java.util.Arrays.asList(qtRows: _*), qtF.schema)
     // COST-ROUTING pre-gate (never a correctness decision — both
     // routes are exact), a HEURISTIC not a proof: a term whose slice
     // covers its WHOLE posting list (df <= sliceM) bounds its tail at
@@ -653,97 +749,60 @@ object TextAnalysis {
     // (attempt the prune whenever sliceM >= ratio * k — measured
     // provable on the planted heavy-tailed LlmSpec fixture, default
     // OFF because on the flat planted/stopword regimes the attempt
-    // is pure doomed-arm cost). Routing straight
-    // to the full scan costs one vocab-bounded df aggregate (map-side
-    // combined, no dl/contribution arithmetic, nothing persisted)
-    // instead of the match-stream-sized posting persist + slice +
-    // candidate scoring the doomed attempt would pay. At 100 TB the
-    // production form keeps term->df in the layer's dictionary
-    // sidecar and routes for free; here the aggregate stands in.
-    // Queries with NO matched terms route to the full scan too
-    // (empty either way). df comes from the layer's term-DICTIONARY
-    // sidecar when present (vocab-sized read — the gate is then free
-    // at any corpus size); layers predating the sidecar fall back to
-    // the match-stream aggregate. bm25Takedown debits the sidecar in
-    // its commit-marker swap, but routing df can still be partial on
-    // mixed-era layers (under-count) — any staleness is safe because
-    // routing is a cost decision only: the prune arm recomputes
-    // exact df and its bound check still proves or falls back per
-    // query.
-    val qterms = qt.select(col("term")).distinct()
+    // is pure doomed-arm cost). Queries with NO matched terms route
+    // to the full scan too (empty either way). Routing df comes from
+    // the layer's term-DICTIONARY sidecar when present (a vocab-sized
+    // read); layers predating the sidecar route on the exact df the
+    // batch resolution already holds. bm25Takedown debits the sidecar
+    // in its commit-marker swap, but routing df can still be partial
+    // on mixed-era layers (under-count) — any staleness is safe
+    // because routing is a cost decision only: the prune arm scores
+    // with exact df and its bound check still proves or falls back
+    // per query.
+    val terms = batch.terms(_ => true).sorted
     val termdfPath = new org.apache.hadoop.fs.Path(s"$indexDir/termdf")
-    val dfQ =
-      if (termdfPath.getFileSystem(
+    val routeDf =
+      if (terms.nonEmpty && termdfPath.getFileSystem(
           spark.sparkContext.hadoopConfiguration).exists(termdfPath))
         graft.Writes.readParquet(spark, s"$indexDir/termdf")
-          .join(broadcast(qterms), Seq("term"))
-          .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      else
-        tfL.join(broadcast(qterms), Seq("term"))
-          .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // the per-query min-df frame is QUERY-BATCH-sized (one row per
-    // query) — collect it and route ON THE DRIVER: one job covers the
-    // df aggregate, the route decisions AND the saturated-batch
-    // short-circuit, and the routes relation the slice arm semi-joins
-    // against becomes a broadcast-free LocalRelation instead of a
-    // persisted distributed frame with its own count() action
-    // opt-in looser routing (AttemptPruneRatioKey): attempt the prune
-    // on mindf-saturated queries too when sliceM >= ratio * k — a
-    // driver-side constant folded into the same predicate, zero extra
-    // jobs; queries with no matched terms still route to the full scan
+          .filter(col("term").isin(terms: _*))
+          .groupBy(col("term")).agg(sum(col("df")))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      else batch.layer.df
+    // per-query min df, routed ON THE DRIVER (one row per query). The
+    // opt-in looser routing (AttemptPruneRatioKey) folds in as a
+    // driver-side constant; queries with no matched terms still route
+    // to the full scan
     val attemptAnyway = {
       val r = attemptPruneRatio(spark)
       r > 0.0 && sliceM >= r * k
     }
-    val routesF = qt.select(col(queryIdCol), col("term"))
-      .join(dfQ, Seq("term"), "left")
-      .groupBy(col(queryIdCol))
-      .agg(min(col("df")).as("_mindf"))
-      .withColumn("_prune",
-        col("_mindf").isNotNull &&
-          (col("_mindf") <= sliceM || lit(attemptAnyway)))
-    val routesRows = routesF.collect()
-    val routes = spark.createDataFrame(
-      java.util.Arrays.asList(routesRows: _*), routesF.schema)
+    val pruneIds: Set[Any] = batch.qt
+      .flatMap { case (q, t, _) => routeDf.get(t).map(q -> _) }
+      .groupMapReduce(_._1)(_._2)(math.min)
+      .collect { case (q, d) if d <= sliceM || attemptAnyway => q }.toSet
+    // routed-to-full queries never enter the slice arm: their verdict
+    // row reports zero candidates and null theta/bound
+    val routed = spark.createDataFrame(java.util.Arrays.asList(
+      batch.qt.map(_._1).distinct.filterNot(pruneIds)
+        .map(q => Row(q, 0L, null, null, false)): _*),
+      StructType(Seq(batch.qid,
+        StructField("n_candidates", LongType, nullable = false),
+        StructField("theta", DoubleType), StructField("bound", DoubleType),
+        StructField("pruned", BooleanType, nullable = false))))
     // fully-saturated batches SHORT-CIRCUIT: when no query routes to
     // the prune arm, the entire slice machinery (posting persist,
     // slice window, candidate scoring, bound check — ~10 fixed job
     // launches at local scale) would only produce empty frames; skip
-    // it and serve the whole batch from the full scan. With the
-    // collected routes the decision is a free driver-side scan.
-    val pruneIdx = routesF.schema.fieldIndex("_prune")
-    val nPrune = routesRows.count(_.getBoolean(pruneIdx))
-    if (nPrune == 0) {
-      // the already-resolved layer frames serve the whole batch —
-      // same plan as the public face, minus a duplicate parquet
-      // resolution of the layer
-      val served = bm25ScoreOverPostings(tfL, statsL, queries,
-        k, k1, b, textCol, idCol, queryIdCol, weighted = weighted)
-      val verdictR = routes
-        .select(col(queryIdCol), lit(0L).as("n_candidates"),
-          lit(null).cast("double").as("theta"),
-          lit(null).cast("double").as("bound"),
-          lit(false).as("pruned"))
-      return (served, verdictR)
-    }
+    // it and serve the whole batch from the full scan, over the
+    // already-resolved batch
+    if (pruneIds.isEmpty)
+      return (batch.score(k, k1, b, idCol, queryIdCol, weighted), routed)
     // the slice arm sees ONLY prune-routed queries: their (smaller)
     // vocabulary restricts the contribution scan, and a routed
     // query's terms can never leak candidates into the arm
-    // qt and routes are both LOCAL rows — the prune-routed subset is
-    // a driver-side filter, planted as a LocalRelation like its
-    // parents (no semi-join job, no distributed qt in any subtree)
-    val qidIdx = qtF.schema.fieldIndex(queryIdCol)
-    // resolve the query-id position by NAME (ADVICE r20: a positional
-    // _.get(0) silently mis-routes under any schema reorder)
-    val routeQidIdx = routesF.schema.fieldIndex(queryIdCol)
-    val pruneIds = routesRows.filter(_.getBoolean(pruneIdx))
-      .map(_.get(routeQidIdx)).toSet
-    val qtP = spark.createDataFrame(
-      java.util.Arrays.asList(
-        qtRows.filter(r => pruneIds.contains(r.get(qidIdx))): _*),
-      qtF.schema)
-    val posting = bm25QueryVocabPostingsFrom(tfL, statsL,
-        qtP.select(col(queryIdCol), col("term")), k1, b, idCol)
+    val qtP = batch.queryTerms(weighted, pruneIds)
+    val posting = batch.layer.contribs(batch.terms(pruneIds), k1, b, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.cache.Pins.track(spark, new AutoCloseable {
       def close(): Unit = posting.unpersist(blocking = false)
@@ -813,44 +872,37 @@ object TextAnalysis {
       .groupBy(col(queryIdCol))
       .agg(round(sum(coalesce(termBound,
         lit(0).cast("decimal(38,18)"))).cast("double"), 6).as("_bound"))
-    // routed-to-full queries never entered the slice arm: their
-    // verdict row reports zero candidates and null theta/bound —
-    // `pruned = false` routes them into the fallback with the
-    // bound-failed queries
+    // routed-to-full queries join the verdict with `pruned = false`,
+    // which sends them into the fallback with the bound-failed ones
     val verdictF = boundQ.join(thetaN, Seq(queryIdCol), "left")
       .select(col(queryIdCol),
         coalesce(col("_ncand"), lit(0L)).as("n_candidates"),
         col("_theta").as("theta"), col("_bound").as("bound"),
         (col("_theta").isNotNull && col("_ncand") >= k &&
           col("_theta") > col("_bound")).as("pruned"))
-      .unionByName(routes.filter(!col("_prune"))
-        .select(col(queryIdCol), lit(0L).as("n_candidates"),
-          lit(null).cast("double").as("theta"),
-          lit(null).cast("double").as("bound"),
-          lit(false).as("pruned")))
+      .unionByName(routed)
     // the verdict is QUERY-BATCH-sized (exactly one row per query) —
-    // collect and replant it like qt/routes above: okQ/failQ become
-    // LocalRelations, so neither the served union nor the fallback
-    // embeds the whole slice-arm subtree through a semi-join key, the
-    // persist/unpersist pair disappears, and the one collect is the
-    // action that materializes the slice arm's persisted frames. The
-    // measured passes stay identical — this moves WHERE the
-    // batch-sized rows live, not what is computed.
+    // collect and replant it like the query terms: okQ becomes a
+    // LocalRelation and the fallback's query set a driver-side
+    // filter, so neither the served union nor the fallback embeds the
+    // whole slice-arm subtree through a semi-join key, and the one
+    // collect is the action that materializes the slice arm's
+    // persisted frames
     val verdictRows = verdictF.collect()
     val verdict = spark.createDataFrame(
       java.util.Arrays.asList(verdictRows: _*), verdictF.schema)
     val okQ = verdict.filter(col("pruned")).select(col(queryIdCol))
-    val failQ = verdict.filter(!col("pruned")).select(col(queryIdCol))
     val prunedPart = ranked
       .join(okQ, Seq(queryIdCol), "left_semi")
       .select(col(queryIdCol), col("rank"), col(idCol), col("score"))
-    // fallback: the full-scan path, restricted to the failed queries
-    // — served from the SAME resolved layer frames as the slice arm
-    // (identical plan to the public face, one layer resolution per
-    // serve instead of two)
-    val fallback = bm25ScoreOverPostings(tfL, statsL,
-      queries.join(failQ, Seq(queryIdCol), "left_semi"),
-      k, k1, b, textCol, idCol, queryIdCol, weighted = weighted)
+    // fallback: the full-scan path over the SAME resolved batch,
+    // restricted to the failed queries (the plan the public face runs)
+    val (qIdx, pIdx) = (verdictF.schema.fieldIndex(queryIdCol),
+      verdictF.schema.fieldIndex("pruned"))
+    val failIds = verdictRows.filterNot(_.getBoolean(pIdx))
+      .map(_.get(qIdx)).toSet
+    val fallback = batch.score(k, k1, b, idCol, queryIdCol, weighted,
+      failIds)
     (prunedPart.unionByName(fallback), verdict)
   }
 
