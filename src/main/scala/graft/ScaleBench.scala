@@ -1096,16 +1096,9 @@ object ScaleBench {
           graft.llm.Takedown.bm25Takedown(spark, bdir, ids))
         report("bm25_takedown", f, nDocs, brm, tbt)
       }
-      // single-scan pass-count proof (the r18 dataflow change): the
-      // termdf debit used to cost a SECOND postings scan over the
-      // affected batches. With the WHOLE layer one batch, that
-      // avoided scan is corpus-sized, so its cost is visible at
-      // scale. The probe times (a) exactly the avoided aggregate —
-      // read-only, run BEFORE the takedown mutates the layer — and
-      // (b) the shipped single-scan takedown; old-path cost =
-      // (a) + (b), so (a) is the measured per-takedown saving at
-      // each factor. ids stay first-copy-fixed so the only growing
-      // term is layer mass, not removed-doc mass.
+      // the WHOLE layer one batch, so the takedown's postings scan
+      // and rewrite are corpus-sized; ids stay first-copy-fixed so the
+      // only growing term is layer mass, not removed-doc mass.
       if (enabled("bm25_takedown_1b")) {
         val bdir = s"$scratch/bm25_takedown1b_$f"
         org.apache.commons.io.FileUtils.deleteQuietly(
@@ -1114,12 +1107,6 @@ object ScaleBench {
           batchId = 0L)
         val ids1 = docs0.filter(col("doc_id") % 10 === 3)
           .select("doc_id")
-        runProbe("bm25_takedown_1b_extra_scan", f, nDocs)(
-          spark.read.parquet(s"$bdir/postings")
-            .join(ids1, Seq("doc_id"), "left_semi")
-            .groupBy(col("ingest_batch").cast("long").as("_b"),
-              col("term"))
-            .agg(count(lit(1)).as("_df_rm")).count())
         val ((brm1, _), tb1) = timed(
           graft.llm.Takedown.bm25Takedown(spark, bdir, ids1))
         report("bm25_takedown_1batch", f, nDocs, brm1, tb1)

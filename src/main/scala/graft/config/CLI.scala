@@ -31,7 +31,8 @@ object CLI {
     * mis-bound path must not silently rm -rf an arbitrary directory.
     * Recognized children: the partition families the engine writes
     * (`ingest_batch=`/`cell_id=`/`pq_bucket=`), the bm25 split
-    * (`postings`/`stats`, each checked one level down), protocol
+    * (`postings`/`stats`, plus the `termdf` sidecar earlier builds
+    * wrote, each checked one level down), protocol
     * temp dirs and sidecars (underscore/dot names), and parquet part
     * files. Anything else fails fast with the offending entries. */
   private[graft] def deleteLayerDirGuarded(

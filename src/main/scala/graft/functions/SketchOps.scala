@@ -611,36 +611,6 @@ object SketchOps {
     if (n == 0) 0.0 else eq.toDouble / n
   }
 
-  /** EXACT |A ∩ B| (SET semantics — duplicates in either input are
-    * counted once) of two long arrays by per-row sort + linear merge
-    * over primitive copies, skipping equal-element runs — the
-    * unbounded form of [[setOverlapSortedBounded]], the verify kernel
-    * the exact Jaccard joins call. Equals
-    * `size(array_intersect(a, b))` on ARBITRARY inputs
-    * (order-insensitive, duplicate-insensitive), without the
-    * built-in's per-row hash-set build and boxing: the candidate
-    * verify stream is tens of millions of rows per slab at 64x
-    * (BASELINE.md r17) and the built-in's evaluation was its
-    * measured bottleneck. */
-  private[graft] def setOverlap(a: ArrayData, b: ArrayData): Long = {
-    val la = a.toLongArray()
-    val lb = b.toLongArray()
-    java.util.Arrays.sort(la)
-    java.util.Arrays.sort(lb)
-    var i = 0; var j = 0; var c = 0L
-    while (i < la.length && j < lb.length) {
-      val x = la(i); val y = lb(j)
-      if (x == y) {
-        c += 1L
-        do i += 1 while (i < la.length && la(i) == x)
-        do j += 1 while (j < lb.length && lb(j) == y)
-      }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
-  }
-
   /** α-bounded |A ∩ B| (SET semantics) over arrays that are ALREADY
     * SORTED ascending ([[shingleHashesSorted]]) — the similarity-
     * join verify fast path: no per-pair copies or sorts (reads

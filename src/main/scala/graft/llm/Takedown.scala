@@ -86,7 +86,8 @@ object Takedown {
     * recovery state the next maintenance entry will complete; an
     * UNCOMMITTED one is provably-untouched garbage), counts the
     * partition families (batch / cell / bucket, compact coverage),
-    * and reports sidecar presence and `_delta` depth. Pure directory
+    * and reports sidecar presence and `_delta` depth (and a BM25
+    * `termdf/` dir an earlier build left, unread). Pure directory
     * listings — no data is read and NOTHING is mutated, so it is
     * safe to run against a live layer; cost is O(#partitions)
     * driver-side, dashboard-sized at any corpus scale. One row per
@@ -173,6 +174,11 @@ object Takedown {
       .foreach { case (n, label) =>
         if (names.contains(n)) out += ((label, "present", n))
       }
+    if (names.contains("termdf"))
+      out += (("termdf-sidecar", "legacy-unread",
+        s"${new Path(root, "termdf")}: a BM25 term-df sidecar an " +
+          "earlier build wrote; nothing reads or maintains it, safe " +
+          "to delete"))
     if (out.isEmpty) out += (("layer", "empty", dir))
     out.toSeq.toDF("artifact", "state", "detail")
   }
@@ -340,21 +346,22 @@ object Takedown {
   /** Takedown over a [[TextAnalysis.bm25PostingsBatch]] layer: the
     * affected `postings/ingest_batch=` partitions lose the
     * taken-down docs' rows AND the matching `stats/ingest_batch=`
-    * partitions are debited by exactly those docs' (count, dl) mass
-    * AND any `termdf/ingest_batch=` sidecar partitions are debited
-    * by the removed docs' per-term presence — all swapped under ONE
-    * commit marker, so a crash can never leave the three subdirs
-    * disagreeing past recovery. Serving from the patched layer is
-    * bit-identical to a rebuild over `corpus MINUS ids`
-    * (oracle-proven), because postings are doc-local and stats /
-    * termdf are additive; the debited sidecar keeps the pruned
-    * serve's cost routing exact across compliance churn.
+    * partitions are debited by exactly those docs' (count, dl) mass —
+    * both swapped under ONE commit marker, so a crash can never leave
+    * the two subdirs disagreeing past recovery. Serving from the
+    * patched layer is bit-identical to a rebuild over `corpus MINUS
+    * ids` (oracle-proven), because postings are doc-local and stats
+    * are additive; every serve, the pruned serve's cost routing
+    * included, reads the exact df of its query vocabulary from the
+    * patched postings, so the takedown keeps no df bookkeeping of its
+    * own. A `termdf/` dir an earlier build left is neither read nor
+    * rewritten ([[layerDoctor]] names it).
     *
     * Requires a stats partition with the SAME id as every affected
     * postings partition — true by construction for
     * [[TextAnalysis.bm25PostingsBatch]] layers, and
-    * preserved by compaction when BOTH subdirs are compacted at the
-    * same watermark (the documented
+    * preserved by compaction of postings and stats at one watermark
+    * (the documented
     * [[graft.streaming.IngestStream.ingestLayerCompact]] usage);
     * fails fast otherwise.
     *
@@ -374,24 +381,13 @@ object Takedown {
     if (!fs.exists(new Path(postDir))) return (0L, 0L)
     val idsB = idFrame(ids, idCol)
     val post = graft.Writes.readParquet(spark, postDir)
-    // the removed docs' postings rows, computed ONCE and persisted:
-    // takedown-batch-sized by construction (|removed docs| x their
-    // terms), it feeds BOTH the per-batch debit rollup and the
-    // termdf sidecar debit below — without it the full postings
-    // table is scanned twice for the two aggregates, which at a
-    // 100 TB layer is a whole extra postings pass per takedown
-    val rm = post.join(idsB, Seq(idCol), "left_semi")
-      .select(col("ingest_batch").cast("long").as("_b"), col(idCol),
-        col("term"), col("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
     // per affected batch: the doc-count and doc-length mass leaving
     // it (dl is per-doc constant across its postings rows, so the
     // per-(batch, doc) rollup is exact) plus the postings row count
-    // for the audit — one aggregation chain, collected at ≤
-    // |affected batches| rows
-    val debits = rm
-      .groupBy(col("_b"), col(idCol))
+    // for the audit — one aggregation chain over the removed docs'
+    // postings rows, collected at ≤ |affected batches| rows
+    val debits = post.join(idsB, Seq(idCol), "left_semi")
+      .groupBy(col("ingest_batch").cast("long").as("_b"), col(idCol))
       .agg(count(lit(1)).as("_rows"), max(col("dl")).as("_dl"))
       .groupBy(col("_b"))
       .agg(sum(col("_rows")).as("n_rows"),
@@ -409,11 +405,10 @@ object Takedown {
           s"matching stats partition — compact postings/ and stats/ " +
           s"at the same watermark so the subdirs stay id-aligned")
     }
-    // the three tmp writes below (postings / stats / termdf) read
-    // disjoint live subdirs and write disjoint tmp subdirs, so they
-    // run as CONCURRENT Spark jobs (thread-safe on one session; rm
-    // is already materialized by the debits collect). The commit
-    // marker still lands only after ALL of them complete.
+    // the two tmp writes below (postings / stats) read disjoint live
+    // subdirs and write disjoint tmp subdirs, so they run as
+    // CONCURRENT Spark jobs (thread-safe on one session). The commit
+    // marker still lands only after BOTH of them complete.
     // fresh postings for every affected batch: ONE partition-keyed
     // anti-join write (an emptied batch writes no dir -> dropped)
     val postJob = (tmp: Path) => {
@@ -441,60 +436,17 @@ object Takedown {
         .write.partitionBy("ingest_batch")
         .parquet(new Path(tmp, "stats").toString)
     }
-    // fresh term-df dictionary sidecar: batch-partitioned and
-    // additive exactly like stats, so the removed docs' per-(batch,
-    // term) posting count IS the df debit (one postings row per
-    // (doc, term)); terms whose df reaches 0 drop out of the
-    // partition. Only batches that HAVE a sidecar partition are
-    // rewritten — mixed-era layers keep their documented under-count,
-    // still routing-safe. Without this debit every takedown would
-    // inflate sidecar df monotonically, silently degrading the pruned
-    // serve's cost routing toward always-full-scan on churned layers.
-    val tdBatches = batches.filter(b =>
-      fs.exists(new Path(root, s"termdf/ingest_batch=$b")))
-    val termdfJob = (tmp: Path) => {
-      if (tdBatches.nonEmpty) {
-        // from the persisted removed-rows subset — no second postings
-        // scan (one postings row per (doc, term), so count IS the df
-        // debit)
-        val tdDebit = rm
-          .filter(col("_b").isin(tdBatches: _*))
-          .groupBy(col("_b"), col("term"))
-          .agg(count(lit(1)).as("_df_rm"))
-        // per-(batch, term) SUM first: a compacted sidecar partition
-        // concatenates its source batches' rows, so a term can hold
-        // several additive rows — joining the debit row-wise would
-        // apply it once per row
-        graft.Writes.clusterByPartitions(
-            graft.Writes.readParquet(spark, s"$indexDir/termdf")
-              .filter(col("ingest_batch").cast("long")
-                .isin(tdBatches: _*))
-              .groupBy(col("ingest_batch").cast("long").as("_b"),
-                col("term"))
-              .agg(sum(col("df")).as("df"))
-              .join(tdDebit, Seq("_b", "term"), "left")
-              .select(col("term"),
-                (col("df") - coalesce(col("_df_rm"), lit(0L)))
-                  .cast("long").as("df"),
-                col("_b").as("ingest_batch"))
-              .filter(col("df") > 0L), "ingest_batch")
-          .write.partitionBy("ingest_batch")
-          .parquet(new Path(tmp, "termdf").toString)
-      }
-    }
     val rels = batches.map(b => s"postings/ingest_batch=$b") ++
-      batches.map(b => s"stats/ingest_batch=$b") ++
-      tdBatches.map(b => s"termdf/ingest_batch=$b")
+      batches.map(b => s"stats/ingest_batch=$b")
     // every write COMPLETES before any failure surfaces: a retried
     // takedown clears tmp before its stage, and an orphan writer
     // could otherwise land stale subdirs under the retry's tmp that
     // its marker then commits
     Swap.commit(spark, indexDir, rels.toSeq) { tmp =>
       graft.task.Fanout.all(spark,
-        Seq(postJob, statsJob, termdfJob).map(job => () => job(tmp)))
+        Seq(postJob, statsJob).map(job => () => job(tmp)))
     }
     (debits.map(_._2).sum, batches.length.toLong)
-    } finally rm.unpersist(blocking = false)
   }
 
   // ---------------------------------------------------------------

@@ -292,7 +292,10 @@ object TextAnalysis {
     * stats are additive, so the standing index is just the
     * concatenation + stat sum — no rebuild, and
     * [[graft.streaming.IngestStream.ingestLayerCompact]] applies to
-    * both subdirs verbatim. */
+    * both subdirs verbatim. The layer holds nothing else: every serve
+    * resolves the exact df of its query vocabulary from the postings
+    * ([[bm25Batch]]), routing included, so no term dictionary is
+    * kept beside them. */
   def bm25PostingsBatch(batch: DataFrame, indexDir: String,
                         batchId: Long, textCol: String = "text",
                         idCol: String = "doc_id"): Unit = {
@@ -303,13 +306,12 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
       .withColumn("dl",
         sum(col("tf")).over(Window.partitionBy(col(idCol))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the stats write scans `batch` independently of the postings
     // chain, so it runs as a CONCURRENT Spark job (thread-safe on one
     // session; idle cores at every scale — a batch publish's wall
-    // time is max(postings+termdf, stats), not their sum). The crash
-    // window is unchanged: a partial publish was already possible
-    // between the sequential writes and is repaired by the documented
+    // time is max(postings, stats), not their sum). The crash window
+    // is unchanged: a partial publish was already possible between
+    // the sequential writes and is repaired by the documented
     // at-least-once replay (each subdir write overwrites its own
     // ingest_batch partition).
     import scala.concurrent.{Await, Future}
@@ -323,21 +325,6 @@ object TextAnalysis {
     try {
       posting.write.mode("overwrite")
         .parquet(s"$indexDir/postings/ingest_batch=$batchId")
-      // term->df DICTIONARY sidecar (every lexical engine's term
-      // dictionary): vocab-sized, additive across doc-disjoint
-      // batches like the stats rows, and what makes the pruned
-      // serve's cost-routing gate a dictionary read instead of a
-      // match-stream aggregate. Consumers may ONLY use it for cost
-      // decisions: [[graft.llm.Takedown.bm25Takedown]] debits the
-      // sidecar under the same commit marker as stats, but a
-      // mixed-era layer (batches ingested pre-sidecar) under-counts
-      // and an interrupted-era layer could over-count — either
-      // direction can only mis-route a query, never corrupt a
-      // result. Runs AFTER the postings write so the persisted
-      // posting relation is materialized once, not raced.
-      posting.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/termdf/ingest_batch=$batchId")
       Await.result(statsJob, scala.concurrent.duration.Duration.Inf)
     } finally {
       // no write may remain in flight when the caller sees a failure:
@@ -350,7 +337,6 @@ object TextAnalysis {
       try Await.ready(statsJob, scala.concurrent.duration.Duration.Inf)
       catch { case _: InterruptedException =>
         Thread.currentThread().interrupt() }
-      posting.unpersist(blocking = false)
     }
   }
 
@@ -555,8 +541,8 @@ object TextAnalysis {
     * expressed here relationally, PROVE-OR-FALL-BACK so the result
     * is ALWAYS exactly the full scan's top-k):
     *
-    *  0. a COST-ROUTING pre-gate (on the driver, over the term->df
-    *     dictionary sidecar's rows for the query vocabulary) sends
+    *  0. a COST-ROUTING pre-gate (on the driver, over the exact df
+    *     the batch resolution holds for the query vocabulary) sends
     *     queries whose every matched term has df > sliceM straight
     *     to the full scan: no term slice can cover its posting list
     *     there, so the bound is a sum of near-top contributions and
@@ -704,9 +690,11 @@ object TextAnalysis {
     * from the impact slices with the bound PROVING exactness; `false`
     * rows fell back to the full scan (rows the routing pre-gate sent
     * straight to the full scan carry zero candidates and null
-    * theta/bound — the attempt was never made). Package-private: the
-    * verdicts are how the specs prove the live serve prunes or falls
-    * back. */
+    * theta/bound — the attempt was never made). The routing pre-gate
+    * reads the exact df of the batch's vocabulary that the batch
+    * resolution ([[bm25Batch]]) already holds, so routing and scoring
+    * see the same df. Package-private: the verdicts are how the specs
+    * prove the live serve prunes or falls back. */
   private[graft] def bm25PrunedCore(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queries: DataFrame, k: Int, sliceM0: Int = 0, k1: Double = 1.2,
@@ -750,25 +738,10 @@ object TextAnalysis {
     // provable on the planted heavy-tailed LlmSpec fixture, default
     // OFF because on the flat planted/stopword regimes the attempt
     // is pure doomed-arm cost). Queries with NO matched terms route
-    // to the full scan too (empty either way). Routing df comes from
-    // the layer's term-DICTIONARY sidecar when present (a vocab-sized
-    // read); layers predating the sidecar route on the exact df the
-    // batch resolution already holds. bm25Takedown debits the sidecar
-    // in its commit-marker swap, but routing df can still be partial
-    // on mixed-era layers (under-count) — any staleness is safe
-    // because routing is a cost decision only: the prune arm scores
-    // with exact df and its bound check still proves or falls back
-    // per query.
-    val terms = batch.terms(_ => true).sorted
-    val termdfPath = new org.apache.hadoop.fs.Path(s"$indexDir/termdf")
-    val routeDf =
-      if (terms.nonEmpty && termdfPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration).exists(termdfPath))
-        graft.Writes.readParquet(spark, s"$indexDir/termdf")
-          .filter(col("term").isin(terms: _*))
-          .groupBy(col("term")).agg(sum(col("df")))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      else batch.layer.df
+    // to the full scan too (empty either way). Routing uses the
+    // exact df the batch resolution already holds (`batch.layer.df`),
+    // so it costs no read of its own, and a takedown that lowers a
+    // term's df moves its route with it.
     // per-query min df, routed ON THE DRIVER (one row per query). The
     // opt-in looser routing (AttemptPruneRatioKey) folds in as a
     // driver-side constant; queries with no matched terms still route
@@ -778,7 +751,7 @@ object TextAnalysis {
       r > 0.0 && sliceM >= r * k
     }
     val pruneIds: Set[Any] = batch.qt
-      .flatMap { case (q, t, _) => routeDf.get(t).map(q -> _) }
+      .flatMap { case (q, t, _) => batch.layer.df.get(t).map(q -> _) }
       .groupMapReduce(_._1)(_._2)(math.min)
       .collect { case (q, d) if d <= sliceM || attemptAnyway => q }.toSet
     // routed-to-full queries never enter the slice arm: their verdict

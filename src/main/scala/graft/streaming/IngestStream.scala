@@ -500,7 +500,11 @@ object IngestStream {
     * (`ingest_batch =!= batchId` in [[ingestBatchWith]]) keeps working
     * because a compact partition's negative id never equals a batch
     * id. Size `targetFiles` from the layer's byte count over the
-    * shard-size target (the `writeShardedBalanced` rule). */
+    * shard-size target (the `writeShardedBalanced` rule). A BM25
+    * postings layer ([[graft.llm.TextAnalysis.bm25PostingsBatch]])
+    * compacts as postings and stats at one watermark — one call per
+    * subdir, the same `watermark` — so the two stay id-aligned for
+    * [[graft.llm.Takedown.bm25Takedown]]. */
   def ingestLayerCompact(spark: org.apache.spark.sql.SparkSession,
                          layerDir: String, watermark: Long,
                          targetFiles: Int = 1): Unit = {

@@ -44,14 +44,14 @@ class LayerReadSpec extends AnyFunSuite {
     assert(rows(read) == rows(inferred), s"${paths.mkString(",")} rows")
   }
 
-  test("BM25 postings / stats / termdf, with a compacted " +
-       "ingest_batch=-N partition: footer schema == inferred schema") {
+  test("BM25 postings / stats, compacted ingest_batch=-N: " +
+       "footer == inferred schema") {
     val base = scratch("bm25")
     (0L to 2L).foreach { b =>
       TextAnalysis.bm25PostingsBatch(
         docs.filter(col("doc_id") % 3 === b), base, batchId = b)
     }
-    Seq("postings", "stats", "termdf").foreach { sub =>
+    Seq("postings", "stats").foreach { sub =>
       graft.streaming.IngestStream.ingestLayerCompact(spark,
         s"$base/$sub", watermark = 1L)
       assert(new java.io.File(s"$base/$sub/ingest_batch=-2").exists())

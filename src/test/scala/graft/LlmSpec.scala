@@ -3670,48 +3670,35 @@ class LlmSpec extends AnyFunSuite {
     } finally spark.conf.unset(TextAnalysis.AttemptPruneRatioKey)
   }
 
-  test("bm25 term-df dictionary sidecar: additive across batches, " +
-       "drives the routing gate, and the serve is identical with " +
-       "and without it") {
+  test("bm25 pruned-serve routing verdicts on the exact batch df") {
     import spark.implicits._
-    val base = graft.Scratch.root + "/bm25termdf_spec"
+    val base = graft.Scratch.root + "/bm25route_spec"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val corpus = (0 until 200).map { i =>
       (i.toLong, s"the of and rare${i % 20} the of")
     }.toDF("doc_id", "text")
-    // two doc-disjoint batches: the sidecar must SUM to corpus df
+    // two doc-disjoint batches: routing must see the df summed over both
     TextAnalysis.bm25PostingsBatch(
       corpus.filter(col("doc_id") % 2 === 0), base, batchId = 0L)
     TextAnalysis.bm25PostingsBatch(
       corpus.filter(col("doc_id") % 2 =!= 0), base, batchId = 1L)
-    val df = spark.read.parquet(s"$base/termdf")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(df("the") == 200L && df("rare3") == 10L && df("of") == 200L,
-      s"additive dictionary df: $df")
     val qs = Seq((1L, "rare3 rare7"), (2L, "the of"),
       (3L, "absentterm")).toDF("query_id", "text")
-    def run() = {
-      val (served, stats) = TextAnalysis.bm25PrunedCore(
-        spark, base, qs, k = 5, sliceM0 = 16)
-      val s2 = (served.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getLong(2), r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq,
-        stats.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getBoolean(4))).sortBy(_._1).toSeq)
-      graft.cache.Pins.release(spark)
-      s2
-    }
-    val withSidecar = run()
-    // routing verdicts under the exact sidecar: rare query pruned,
-    // saturated + absent routed to the full scan
-    assert(withSidecar._2 == Seq((1L, 20L, true), (2L, 0L, false),
-      (3L, 0L, false)), s"${withSidecar._2}")
-    // a pre-sidecar layer (termdf removed) must serve the SAME rows
-    // and the SAME verdicts through the aggregate fallback
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$base/termdf"))
-    assert(run() == withSidecar,
-      "sidecar and aggregate routing must agree on fresh layers")
+    val (served, stats) = TextAnalysis.bm25PrunedCore(
+      spark, base, qs, k = 5, sliceM0 = 16)
+    val verdicts = stats.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getBoolean(4))).sortBy(_._1).toSeq
+    def tuples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
+    val got = tuples(served)
+    graft.cache.Pins.release(spark)
+    // rare3/rare7 have df 10 <= sliceM: pruned; the saturated query
+    // (df 200 > sliceM) and the absent one route to the full scan
+    assert(verdicts == Seq((1L, 20L, true), (2L, 0L, false),
+      (3L, 0L, false)), s"$verdicts")
+    assert(got == tuples(TextAnalysis.bm25TopKFromPostings(spark, base,
+      qs, k = 5)), "routed serve must equal the full scan")
   }
 
   test("bm25 impact pruning, WEIGHTED: pruned == weighted full scan " +

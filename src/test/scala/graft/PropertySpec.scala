@@ -131,16 +131,6 @@ object PropertySpec extends Properties("graft") {
       SketchOps.sigSim(a, a) == 1.0
     }
 
-  property("kernel.setOverlap-matches-set-intersection") =
-    forAll(Gen.listOf(Gen.choose(0L, 40L)),
-      Gen.listOf(Gen.choose(0L, 40L))) { (xs, ys) =>
-      // SET-semantics law on ARBITRARY inputs: duplicates in either
-      // array count once (the kernel skips equal-element runs), and
-      // order must not matter — feed raw unsorted lists, dups and all
-      val got = SketchOps.setOverlap(toArrayDataL(xs), toArrayDataL(ys))
-      got == xs.toSet.intersect(ys.toSet).size.toLong
-    }
-
   property("kernel.setOverlapSortedBounded: exact when the bound is " +
     "reachable, threshold-equivalent always") =
     forAll(Gen.listOf(Gen.choose(0L, 40L)),

@@ -265,7 +265,7 @@ class SwapSpec extends AnyFunSuite {
         docs.filter(col("doc_id") > 3L), dir, batchId = 1L)
     }, { dir =>
       Takedown.bm25Takedown(spark, dir, idsDf(Seq(2L, 5L), "doc_id"))
-    }, Seq("" -> Seq("postings", "stats", "termdf")), Some { dir =>
+    }, Seq("" -> Seq("postings", "stats")), Some { dir =>
       import spark.implicits._
       rows(TextAnalysis.bm25TopKFromPostings(spark, dir,
         Seq((100L, "red fox"), (101L, "blue car"), (102L, "hen sleeps"))

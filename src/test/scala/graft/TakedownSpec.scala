@@ -148,20 +148,6 @@ class TakedownSpec extends AnyFunSuite {
     assert((st.getLong(0), st.getLong(1)) == ((wantN, wantDl)),
       s"stats debit must be exact: ${(st.getLong(0), st.getLong(1))}" +
         s" vs ${(wantN, wantDl)}")
-    // termdf sidecar debited under the SAME commit marker: summed
-    // per-term df must equal the remaining corpus's exact df (the
-    // additivity spec's post-takedown twin), zero-df terms dropped —
-    // the routing gate stays precise across compliance churn
-    val sidecarDf = spark.read.parquet(s"$base/termdf")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exactDf = remaining
-      .select(explode(array_distinct(
-        TextAnalysis.tokens(col("text")))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(sidecarDf == exactDf,
-      "takedown must debit the termdf sidecar to exact corpus df")
     assert(Takedown.bm25Takedown(spark, base, takeIds) == ((0L, 0L)))
   }
 
@@ -178,13 +164,12 @@ class TakedownSpec extends AnyFunSuite {
       corpus.filter(col("doc_id") % 2 === 0), base, batchId = 0L)
     TextAnalysis.bm25PostingsBatch(
       corpus.filter(col("doc_id") % 2 =!= 0), base, batchId = 1L)
-    // the documented compaction usage: ALL subdirs at one watermark
+    // the documented compaction usage: postings and stats at one
+    // watermark
     graft.streaming.IngestStream.ingestLayerCompact(spark,
       s"$base/postings", watermark = 1L)
     graft.streaming.IngestStream.ingestLayerCompact(spark,
       s"$base/stats", watermark = 1L)
-    graft.streaming.IngestStream.ingestLayerCompact(spark,
-      s"$base/termdf", watermark = 1L)
     val takeIds = corpus.filter(col("doc_id") % 15 === 7)
       .select("doc_id")
     val (rm, parts) = Takedown.bm25Takedown(spark, base, takeIds)
@@ -202,18 +187,6 @@ class TakedownSpec extends AnyFunSuite {
       .agg(sum("n_docs"), sum("sum_dl")).collect()(0)
     assert(st.getLong(0) == remaining.count(),
       "stats debit must be exact on the compact partition")
-    // the co-compacted sidecar is debited too: id-aligned with the
-    // compact postings partition, so the same marker covers it
-    val sidecarDf = spark.read.parquet(s"$base/termdf")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exactDf = remaining
-      .select(explode(array_distinct(
-        TextAnalysis.tokens(col("text")))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(sidecarDf == exactDf,
-      "compacted sidecar must be debited to exact corpus df")
   }
 
   test("ivfTakedown: rows vanish from their cells, centroids/sidecar " +
