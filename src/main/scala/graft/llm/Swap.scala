@@ -5,9 +5,14 @@ import org.apache.spark.sql.SparkSession
 
 /** The one crash-safe swap protocol behind every in-place rewrite of
   * a standing layer: takedown scrubs ([[Takedown]]), delta folds
-  * ([[Similarity.ivfCompactDelta]] / [[Similarity.pqCompactDelta]])
-  * and centroid or codebook patches ([[Similarity.ivfPatchIndex]] /
-  * [[Similarity.pqPatchIndex]], model sidecar included).
+  * ([[Similarity.ivfCompactDelta]] / [[Similarity.pqCompactDelta]]),
+  * centroid or codebook patches ([[Similarity.ivfPatchIndex]] /
+  * [[Similarity.pqPatchIndex]], model sidecar included) and
+  * batch-layer compactions
+  * ([[graft.streaming.IngestStream.cmsCompact]] /
+  * [[graft.streaming.IngestStream.ingestLayerCompact]]: the fold is
+  * the target's fresh content, every other covered partition an entry
+  * without any).
   *
   * Protocol: fresh content for every replaced entry (a partition dir,
   * a subdir-qualified partition, a sidecar file) is written under an
@@ -20,8 +25,10 @@ import org.apache.spark.sql.SparkSession
   * an uncommitted one, so reruns converge from any crash point.
   * Entries not named in the marker keep their files byte-for-byte.
   * One tmp per root, so at most one swap is ever pending on a root.
-  * Serves never recover: they refuse a root with a committed swap
-  * pending ([[requireSettled]]).
+  * Roots may nest (a BM25 layer's root and its `postings` / `stats`
+  * compaction roots): a compaction refuses while its parent has a
+  * committed swap pending. Serves never recover: they refuse a root
+  * with a committed swap pending ([[requireSettled]]).
   */
 object Swap {
 
@@ -130,6 +137,6 @@ object Swap {
       if (fsOf(spark, root).exists(marker))
         throw new IllegalStateException(s"layer $dir has a committed " +
           s"swap pending ($marker); run Swap.completePending on $dir, " +
-          "or any maintenance entry on the layer, before serving it")
+          "or any maintenance entry on the layer, before reading it")
     }
 }

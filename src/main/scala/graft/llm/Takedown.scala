@@ -86,8 +86,11 @@ object Takedown {
     * recovery state the next maintenance entry will complete; an
     * UNCOMMITTED one is provably-untouched garbage), counts the
     * partition families (batch / cell / bucket, compact coverage),
-    * and reports sidecar presence and `_delta` depth (and a BM25
-    * `termdf/` dir an earlier build left, unread). Pure directory
+    * and reports sidecar presence and `_delta` depth. It also names
+    * what earlier builds left: a BM25 `termdf/` dir (unread), a
+    * `_compact_tmp_*` fold output, and a compact whose
+    * `_COMPACT_SOURCES` marker stands beside a partition it covers
+    * (compaction refuses that layer). Pure directory
     * listings — no data is read and NOTHING is mutated, so it is
     * safe to run against a live layer; cost is O(#partitions)
     * driver-side, dashboard-sized at any corpus scale. One row per
@@ -125,10 +128,16 @@ object Takedown {
     }
     names.filter(_.startsWith("_compact_tmp_")).foreach { n =>
       out += (("compaction-temp", "uncommitted-garbage",
-        s"$n: pre-rename fold output, cleared on the next compaction"))
+        s"$n: an earlier build's fold output, never renamed into the " +
+          "layer; the next compaction deletes it"))
     }
-    val batches = graft.streaming.IngestStream.batchPartitions(fs, root)
-      .map(_._2)
+    val parts = graft.streaming.IngestStream.batchPartitions(fs, root)
+    graft.streaming.IngestStream.legacyCompactLeftover(fs, parts)
+      .foreach { why =>
+        out += (("legacy-compact", "pending-committed",
+          s"$why; this build's compaction refuses the layer"))
+      }
+    val batches = parts.map(_._2)
     if (batches.nonEmpty) {
       val (compacts, live) = batches.partition(_ < 0)
       out += (("batch-partitions", "present",
@@ -137,21 +146,6 @@ object Takedown {
         (if (compacts.nonEmpty)
           s", ${compacts.size} compact (coverage <= ${
             compacts.map(c => -c - 1).max})" else "")))
-      if (compacts.nonEmpty) {
-        // each compact should carry the sources sidecar its fold
-        // consumed — a markerless (pre-upgrade) compact makes
-        // compaction refuse while covered live ids coexist
-        val markerless = compacts.filterNot(c => fs.exists(
-          new Path(new Path(root, s"ingest_batch=$c"),
-            graft.streaming.IngestStream.CompactSourcesMarker)))
-        out += (("compact-sources-markers",
-          if (markerless.isEmpty) "present" else "missing",
-          if (markerless.isEmpty)
-            "every compact records the sources its fold consumed"
-          else s"markerless compacts ${markerless.sorted.mkString(",")}" +
-            ": compaction refuses while covered live ids coexist — " +
-            "re-key or delete those live partitions manually"))
-      }
     }
     def partIds(prefix: String): Seq[Long] = names
       .filter(_.startsWith(prefix))
@@ -376,8 +370,10 @@ object Takedown {
     val root = new Path(indexDir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
-    Swap.completePending(spark, indexDir)
     val postDir = s"$indexDir/postings"
+    // the root's swap, then a crashed compaction's on either subdir
+    Seq(indexDir, postDir, s"$indexDir/stats")
+      .foreach(Swap.completePending(spark, _))
     if (!fs.exists(new Path(postDir))) return (0L, 0L)
     val idsB = idFrame(ids, idCol)
     val post = graft.Writes.readParquet(spark, postDir)
@@ -462,8 +458,8 @@ object Takedown {
     * (the only place their text still lives — run this BEFORE the
     * corpus-layer takedown), negated, and folded together with
     * every existing batch partition into one compact partition via
-    * the established [[graft.streaming.IngestStream.cmsCompact]]
-    * crash protocol (reserved negative id, rename-then-delete).
+    * the [[graft.streaming.IngestStream.cmsCompact]] fold (reserved
+    * negative id, one [[Swap]] commit).
     *
     * Fails fast (before any mutation) if any removed cell exceeds
     * its layer cell — the signature of ids that were never sketched
@@ -480,6 +476,7 @@ object Takedown {
     import graft.streaming.IngestStream
     val geom = IngestStream.cmsLayerGeometry(spark, sketchDir)
     if (geom.isEmpty) return 0L
+    Swap.completePending(spark, sketchDir)
     val (depth, width, seed) = geom.get
     val root = new Path(sketchDir)
     val fs = fsOf(spark, root)
@@ -504,13 +501,14 @@ object Takedown {
         s"these ids were never sketched into $sketchDir (wrong corpus " +
         s"dir or geometry era); refusing to subtract")
     // fold EVERYTHING (batches + prior compacts) minus the removed
-    // sketch into one compact partition; pick the watermark that
-    // covers every present partition, bumped past an already-present
-    // compact target so the fold actually runs
+    // sketch into one compact partition, at the watermark that covers
+    // every present partition; a layer that is that one compact
+    // already folds into the next id, since compaction skips a target
+    // that is the only partition it covers
     val idsPresent = IngestStream.batchPartitions(fs, root).map(_._2)
     if (idsPresent.isEmpty) return 0L
-    var wm = idsPresent.map(i => if (i >= 0) i else -i - 1).max
-    while (fs.exists(new Path(root, s"ingest_batch=${-(wm + 1)}"))) wm += 1
+    val top = idsPresent.map(i => if (i >= 0) i else -i - 1).max
+    val wm = if (idsPresent == Seq(-(top + 1))) top + 1 else top
     val neg = removedSketch.select(col("row"), col("bucket"),
       (-col("cnt")).as("cnt"))
     IngestStream.compactPartitions(spark, sketchDir, wm) { covered =>

@@ -309,35 +309,19 @@ object TextAnalysis {
     // the stats write scans `batch` independently of the postings
     // chain, so it runs as a CONCURRENT Spark job (thread-safe on one
     // session; idle cores at every scale — a batch publish's wall
-    // time is max(postings, stats), not their sum). The crash window
-    // is unchanged: a partial publish was already possible between
-    // the sequential writes and is repaired by the documented
-    // at-least-once replay (each subdir write overwrites its own
-    // ingest_batch partition).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val statsJob = Future {
+    // time is max(postings, stats), not their sum). Both writes
+    // complete before a failure surfaces: an at-least-once replay of
+    // this batch must not start a second overwrite writer on a path
+    // an orphaned write is still staging into. The crash window is
+    // unchanged: a partial publish is repaired by the replay (each
+    // subdir write overwrites its own ingest_batch partition).
+    graft.task.Fanout.pair(batch.sparkSession)(
+      posting.write.mode("overwrite")
+        .parquet(s"$indexDir/postings/ingest_batch=$batchId"),
       batch.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(size(toks).cast("long")), lit(0L)).as("sum_dl"))
         .write.mode("overwrite")
-        .parquet(s"$indexDir/stats/ingest_batch=$batchId")
-    }
-    try {
-      posting.write.mode("overwrite")
-        .parquet(s"$indexDir/postings/ingest_batch=$batchId")
-      Await.result(statsJob, scala.concurrent.duration.Duration.Inf)
-    } finally {
-      // no write may remain in flight when the caller sees a failure:
-      // an at-least-once replay of this batch would otherwise start a
-      // second overwrite writer against the SAME stats path while the
-      // orphaned Future is still staging files, and two concurrent
-      // overwrite writers on one parquet dir can delete each other's
-      // staged output. Await COMPLETION only (ready, not result) so
-      // the original exception — not the stats job's — propagates.
-      try Await.ready(statsJob, scala.concurrent.duration.Duration.Inf)
-      catch { case _: InterruptedException =>
-        Thread.currentThread().interrupt() }
-    }
+        .parquet(s"$indexDir/stats/ingest_batch=$batchId"))
   }
 
   /** Serve BM25 top-k from a standing [[bm25PostingsBatch]] layer,
@@ -358,7 +342,8 @@ object TextAnalysis {
     *
     * Batch contract: `queries` is DRIVER-SIZED. More than 5e6 (query,
     * term) rows fail fast naming the limit; split a larger query set
-    * into batches. Refuses a layer with a takedown swap pending. */
+    * into batches. Refuses a layer with a takedown or compaction
+    * swap pending. */
   def bm25TopKFromPostings(spark: org.apache.spark.sql.SparkSession,
                            indexDir: String, queries: DataFrame,
                            k: Int, k1: Double = 1.2, b: Double = 0.75,
@@ -431,11 +416,13 @@ object TextAnalysis {
     * count (vocabulary only — the `isin` also skips parquet row
     * groups) and the stats read (one row per batch, summed here: a
     * 1-job collect, no shuffle) run as two concurrent jobs. Refuses
-    * a layer with a takedown swap pending. */
+    * a layer with a swap pending on its root (a takedown) or on
+    * `postings` or `stats` (a compaction). */
   private def bm25Layer(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String, idCol: String,
                         vocab: Seq[String]): Bm25Layer = {
-    Swap.requireSettled(spark, indexDir)
+    Swap.requireSettled(spark, indexDir, s"$indexDir/postings",
+      s"$indexDir/stats")
     val postings = graft.Writes.readParquet(spark, s"$indexDir/postings")
       .select(col(idCol), col("term"), col("tf"), col("dl"))
     val terms = vocab.distinct.sorted

@@ -152,6 +152,9 @@ object IngestStream {
         s"(got ${batch.schema(idCol).dataType}); hash string ids to " +
         "int64 first (e.g. xxhash64)")
     val spark = batch.sparkSession
+    // a crashed compaction's committed swap lands before the layer
+    // join reads sigDir
+    Seq(corpusDir, sigDir).foreach(graft.llm.Swap.completePending(spark, _))
     val b = batch.withColumn(idCol, col(idCol).cast("long"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -436,9 +439,11 @@ object IngestStream {
   /** The standing sketch: cell-wise sum over every published batch
     * sketch — `(row, bucket, cnt)`, ≤ depth·width rows, ready for
     * [[graft.llm.HeavyHitters.cmsLookup]] point estimates. Empty
-    * (no published batches) reads as an empty sketch. */
+    * (no published batches) reads as an empty sketch. Refuses a
+    * layer with a compaction or takedown swap pending. */
   def cmsLayerRead(spark: org.apache.spark.sql.SparkSession,
-                   sketchDir: String): DataFrame =
+                   sketchDir: String): DataFrame = {
+    graft.llm.Swap.requireSettled(spark, sketchDir)
     layerReadable(spark, sketchDir) match {
       case Some(l) => l.groupBy(col("row"), col("bucket"))
         .agg(sum(col("cnt")).as("cnt"))
@@ -446,6 +451,7 @@ object IngestStream {
         import spark.implicits._
         Seq.empty[(Int, Long, Long)].toDF("row", "bucket", "cnt")
     }
+  }
 
   /** Compact a CMS layer: fold every batch sketch at or below the
     * `watermark` batch id (including earlier compaction results)
@@ -465,18 +471,12 @@ object IngestStream {
     * untouched here, so replay-after-compaction keeps the exact
     * overwrite idempotency of [[cmsBatch]].
     *
-    * CRASH SAFETY: the summed cells are written to an
-    * underscore-prefixed temp dir (invisible to parquet discovery),
-    * renamed into the reserved partition, and only then are the
-    * source partitions deleted. A crash before the rename leaves
-    * the layer exactly as it was (plus invisible garbage a rerun
-    * clears); a crash after it leaves a temporarily double-counting
-    * layer that the NEXT compaction repairs AT ANY WATERMARK — on
-    * entry, every partition covered by an existing compact partition
-    * is deleted first (the compact's existence is the proof its mass
-    * already landed), so a later scheduled call at a larger watermark
-    * folds each batch exactly once. Compaction is therefore
-    * idempotent and recovery needs no watermark bookkeeping.
+    * CRASH SAFETY: the fold commits through [[graft.llm.Swap]] (see
+    * [[compactPartitions]]): the summed cells stage invisibly, the
+    * marker commits, and only then do the target and its sources
+    * swap, so a crash at any point recovers to the layer before or
+    * after the fold, and [[cmsLayerRead]] refuses a half-swapped
+    * layer. A rerun at the same watermark is a no-op.
     *
     * Scale: the summed sketch is ≤ d·w rows — the fold's shuffle
     * moves at most that, and the driver materialization is the same
@@ -495,7 +495,7 @@ object IngestStream {
     * small-files problem at 100 TB): fold every batch partition at
     * or below `watermark` into ONE partition holding the SAME rows,
     * rewritten as `targetFiles` right-sized files. Same reserved
-    * negative partition id, same crash-safe rename protocol, same
+    * negative partition id, same [[graft.llm.Swap]] commit, same
     * replay contract — and the layer's replay guard
     * (`ingest_batch =!= batchId` in [[ingestBatchWith]]) keeps working
     * because a compact partition's negative id never equals a batch
@@ -504,7 +504,8 @@ object IngestStream {
     * postings layer ([[graft.llm.TextAnalysis.bm25PostingsBatch]])
     * compacts as postings and stats at one watermark — one call per
     * subdir, the same `watermark` — so the two stay id-aligned for
-    * [[graft.llm.Takedown.bm25Takedown]]. */
+    * [[graft.llm.Takedown.bm25Takedown]]; each call refuses while a
+    * takedown of the enclosing layer has a swap pending. */
   def ingestLayerCompact(spark: org.apache.spark.sql.SparkSession,
                          layerDir: String, watermark: Long,
                          targetFiles: Int = 1): Unit = {
@@ -542,13 +543,16 @@ object IngestStream {
     * horizon (`-(k+1)` with k > asOf) folded post-horizon mass
     * irreversibly — the call fails fast with the scheduling fix
     * (keep compaction watermarks at or behind every horizon you
-    * still need), the same alignment contract retention enforces. */
+    * still need), the same alignment contract retention enforces.
+    * Like every serve, it refuses a layer with a committed compaction
+    * swap pending ([[graft.llm.Swap.requireSettled]]). */
   def layerReadAsOf(spark: org.apache.spark.sql.SparkSession,
                     layerDir: String, asOf: Long): DataFrame = {
     require(asOf >= 0, s"asOf must be >= 0, got $asOf")
     val root = new org.apache.hadoop.fs.Path(layerDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"layerReadAsOf: $layerDir is absent")
+    graft.llm.Swap.requireSettled(spark, layerDir)
     val parts = batchPartitions(fs, root)
     parts.foreach { case (p, id) =>
       if (id < 0) require(-id - 1 <= asOf,
@@ -590,7 +594,10 @@ object IngestStream {
     * first, so compaction windows align with retention windows (the
     * schedule a retention-governed layer should run anyway).
     *
-    * Crash safety needs no protocol: deletes of whole partitions are
+    * Crash safety: the entry first lands a pending compaction swap
+    * ([[graft.llm.Swap.completePending]]), so the straddle guard sees
+    * a committed fold before its sources go, and no later recovery
+    * renames aged-out mass back in. Deletes of whole partitions are
     * idempotent, a rerun converges from any interruption point, and
     * the straddle guard re-evaluates on entry. Returns
     * (partitionsDropped, rowsDropped); (0, 0) when nothing is old
@@ -602,6 +609,7 @@ object IngestStream {
     val root = new org.apache.hadoop.fs.Path(layerDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root) || keepFrom == 0) return (0L, 0L)
+    graft.llm.Swap.completePending(spark, layerDir)
     val parts = batchPartitions(fs, root)
     parts.foreach { case (p, id) =>
       if (id < 0) {
@@ -626,86 +634,49 @@ object IngestStream {
     (drop.length.toLong, rows)
   }
 
-  private val compactLog =
-    org.slf4j.LoggerFactory.getLogger("graft.streaming.compact")
+  /** The sources marker an earlier build's rename-then-delete
+    * compaction put in each compact. Never written or parsed here. */
+  private val LegacySourcesMarker = "_COMPACT_SOURCES"
 
-  /** Name of the sidecar each compact partition carries recording the
-    * exact source partitions its fold consumed — one line per file,
-    * `dirName TAB relativePath TAB length` — so recovery can tell a
-    * true crash leftover (content matches what the fold read) from
-    * NEW mass that landed under a covered id afterwards (a batch
-    * later than an ahead-of-stream watermark, or a checkpoint reset
-    * reusing folded ids: parquet part-file names are per-job UUIDs,
-    * so reused ids never collide with the recorded listing).
-    * Underscore-prefixed, so parquet readers never see it; written
-    * into the invisible temp dir, it travels with the rename, atomic
-    * with the fold landing. */
-  private[graft] val CompactSourcesMarker = "_COMPACT_SOURCES"
+  /** That build's unsettled state among `parts`, if any: a compact
+    * holding [[LegacySourcesMarker]] beside a partition it covers,
+    * described with its fixes. One `exists` per compact. */
+  private[graft] def legacyCompactLeftover(
+      fs: org.apache.hadoop.fs.FileSystem,
+      parts: Seq[(org.apache.hadoop.fs.Path, Long)]): Option[String] =
+    parts.iterator.filter { case (cp, cid) => cid < 0 &&
+        fs.exists(new org.apache.hadoop.fs.Path(cp, LegacySourcesMarker)) }
+      .flatMap { case (cp, cid) =>
+        parts.collectFirst { case (p, id)
+          if id != cid && coverage(id) <= coverage(cid) =>
+          s"$cp holds an earlier build's $LegacySourcesMarker while $p, " +
+            "which it covers, still stands. That build left this " +
+            "state either when a crash cut its compaction short (the " +
+            "partition is already folded) or on purpose (a late batch " +
+            "under a covered id, not folded); this build cannot tell " +
+            "which. Compact once with that build at a watermark above " +
+            s"${coverage(cid)}, or check $p against the marker's file " +
+            "list and delete by hand the partition (listed) or the " +
+            "marker (not listed)"
+        }
+      }.nextOption()
 
-  /** Recursive (relativePath, length) listing of one partition dir —
-    * the content identity the marker records and recovery compares.
-    * Checksum shadows are already hidden by the FS layer. */
-  private def fileSig(fs: org.apache.hadoop.fs.FileSystem,
-                      dir: org.apache.hadoop.fs.Path)
-      : Set[(String, Long)] = {
-    val base = dir.toUri.getPath
-    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long)] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else Seq((st.getPath.toUri.getPath.stripPrefix(base)
-          .stripPrefix("/"), st.getLen))
-      }
-    walk(dir).toSet
-  }
+  /** The newest batch id a partition holds mass of. */
+  private def coverage(id: Long): Long = if (id >= 0) id else -id - 1
 
-  private def writeSourcesMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                 dir: org.apache.hadoop.fs.Path,
-                                 sources: Seq[(String, Set[(String, Long)])])
-      : Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(dir, CompactSourcesMarker), true)
-    try out.write(sources.sortBy(_._1).flatMap { case (name, sig) =>
-      sig.toSeq.sorted.map { case (rel, len) => s"$name\t$rel\t$len" }
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readSourcesMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: org.apache.hadoop.fs.Path)
-      : Option[Map[String, Set[(String, Long)]]] = {
-    val p = new org.apache.hadoop.fs.Path(dir, CompactSourcesMarker)
-    if (!fs.exists(p)) None
-    else Some(graft.Writes.readUtf8(fs, p).split("\n").toSeq
-      .filter(_.nonEmpty)
-      .map { line =>
-        val Array(name, rel, len) = line.split("\t", 3)
-        (name, (rel, len.toLong))
-      }.groupBy(_._1).map { case (n, xs) =>
-        n -> xs.map(_._2).toSet
-      })
-  }
-
-  /** The shared compaction machinery: list `ingest_batch=` partitions
-    * covered by the watermark (non-negative ids ≤ watermark, and
-    * prior compacts `-(id)-1 ≤ watermark`), apply `fold` to their
-    * union, land the result under the reserved id `-(watermark+1)`
-    * via write-to-invisible-temp → rename → delete-sources. The
-    * reserved partition's existence marks a completed fold, so a
-    * rerun only finishes the deletes — see [[cmsCompact]]'s crash
-    * matrix.
+  /** The shared compaction body: ONE [[graft.llm.Swap]] commit whose
+    * target `-(watermark+1)` gets `fold` of every partition the
+    * watermark covers (batch ids ≤ watermark, compacts
+    * `-(id)-1 ≤ watermark`, the target itself included) and whose
+    * other covered partitions go. No-op on an absent `dir` or when
+    * the target is the only covered partition; a batch landing late
+    * under a covered id folds at the next compaction.
     *
-    * Crash-leftover recovery is MARKER-EXACT: each compact partition
-    * carries a [[CompactSourcesMarker]] sidecar naming the source
-    * partitions its fold actually consumed, and recovery deletes
-    * exactly the still-present named ones. A live partition covered
-    * by a compact's watermark but absent from every marker is NOT a
-    * leftover — it landed after a compaction ran with a watermark
-    * ahead of it, or after a lost checkpoint restarted micro-batch
-    * ids — and it survives to be folded by a later compaction
-    * (reads stay correct throughout: serving unions compacts with
-    * live batches). The pre-marker scheme deleted every live id
-    * below the max coverage on entry, silently losing exactly that
-    * late-landing mass. */
+    * Refuses while `dir`'s parent has a committed swap pending (a
+    * BM25 subdir under a pending `bm25Takedown` would fold undebited
+    * stats that its recovery renames back in), and refuses an
+    * earlier build's unsettled compact ([[legacyCompactLeftover]]). That
+    * build's `_compact_tmp_*` dirs were never renamed in: deleted. */
   private[graft] def compactPartitions(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, watermark: Long)
@@ -714,75 +685,24 @@ object IngestStream {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
-    def covered(id: Long): Boolean =
-      if (id >= 0) id <= watermark else -id - 1 <= watermark
-    val targetId = -(watermark + 1)
-    val target = new org.apache.hadoop.fs.Path(root, s"$BatchPrefix$targetId")
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"_compact_tmp_$watermark")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // INVARIANT RESTORATION (crash between a fold's rename and its
-    // source deletes, at any earlier watermark): finish exactly the
-    // deletes each landed compact's marker records. Markerless
-    // (pre-upgrade) compacts coexisting with covered live partitions
-    // are ambiguous — refuse loudly rather than guess.
-    batchPartitions(fs, root).filter(_._2 < 0).foreach { case (cp, cid) =>
-        readSourcesMarker(fs, cp) match {
-          case Some(recorded) => recorded.foreach { case (n, sig) =>
-            val p = new org.apache.hadoop.fs.Path(root, n)
-            if (fs.exists(p)) {
-              if (fileSig(fs, p) == sig) fs.delete(p, true)
-              else compactLog.warn(
-                s"compactPartitions: $dir/$n is covered by " +
-                  s"${cp.getName} but its content differs from what " +
-                  "that fold consumed — treating it as NEW mass " +
-                  "(late landing or checkpoint-reset id reuse) and " +
-                  "keeping it live for a later fold")
-            }
-          }
-          case None =>
-            val jcov = -cid - 1
-            val ambiguous = batchPartitions(fs, root).collect {
-              case (p, id) if p.getName != cp.getName &&
-                  (if (id >= 0) id <= jcov else -id - 1 < jcov) => p.getName
-            }
-            require(ambiguous.isEmpty,
-              s"compactPartitions: $dir has a markerless compact " +
-                s"${cp.getName} coexisting with partitions it covers " +
-                s"(${ambiguous.mkString(", ")}) — cannot tell crash " +
-                "leftovers from late-landing batches; inspect with " +
-                "layerDoctor and delete or re-key them manually")
-        }
-      }
-    val (sources, sourceIds) = batchPartitions(fs, root)
-      .filter { case (_, id) => covered(id) && id != targetId }.unzip
-    if (fs.exists(target)) {
-      // a previous attempt already landed the fold — the marker
-      // restoration above finished its deletes; a markerless target
-      // is legacy, where every covered source was by construction
-      // consumed by the fold that produced it
-      if (readSourcesMarker(fs, target).isEmpty)
-        sources.foreach(fs.delete(_, true))
-    } else if (sources.nonEmpty) {
-      val maxLive = sourceIds.filter(_ >= 0).foldLeft(-1L)(math.max)
-      if (maxLive >= 0 && watermark > maxLive)
-        compactLog.warn(
-          s"compactPartitions: watermark $watermark is ahead of the " +
-            s"newest landed batch $maxLive in $dir — batches landing " +
-            s"in ($maxLive, $watermark] after this fold will stay " +
-            "live until a later compaction covers them (correct, but " +
-            "usually a scheduling bug)")
-      // snapshot the source content identities BEFORE the fold reads
-      // them — the marker must describe exactly what was consumed
-      val sourceSigs = sources.map(p => p.getName -> fileSig(fs, p))
-      fold(graft.Writes.readParquet(spark, sources.map(_.toString): _*))
-        .write.parquet(tmp.toString)
-      writeSourcesMarker(fs, tmp, sourceSigs)
-      require(fs.rename(tmp, target),
-        s"compaction rename $tmp -> $target failed")
-      sources.foreach(fs.delete(_, true))
+    Option(root.getParent).foreach(p =>
+      graft.llm.Swap.requireSettled(spark, p.toString))
+    graft.llm.Swap.completePending(spark, dir)
+    val parts = batchPartitions(fs, root)
+    legacyCompactLeftover(fs, parts).foreach { why =>
+      throw new IllegalStateException(s"compactPartitions: $why")
     }
-    spark.catalog.refreshByPath(dir)
+    fs.globStatus(new org.apache.hadoop.fs.Path(root, "_compact_tmp_*"))
+      .foreach(st => fs.delete(st.getPath, true))
+    val covered = parts.collect {
+      case (p, id) if coverage(id) <= watermark => p }
+    val target = s"$BatchPrefix${-(watermark + 1)}"
+    if (covered.forall(_.getName == target)) return
+    graft.llm.Swap.commit(spark, dir,
+        target +: covered.map(_.getName).filter(_ != target)) { tmp =>
+      fold(graft.Writes.readParquet(spark, covered.map(_.toString): _*))
+        .write.parquet(new org.apache.hadoop.fs.Path(tmp, target).toString)
+    }
   }
 
   /** Index-drift monitor: per micro-batch of embeddings, the

@@ -303,6 +303,52 @@ class CoreSpec extends AnyFunSuite {
       "q_b" -> "SELECT 1 AS id"))
   }
 
+  private def walk(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+  private def read(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+  // comment/scaladoc strip: block comments first (covers /** ... */),
+  // then line comments — string literals keep their text, which can
+  // only ever ADD witnesses (e.g. reflective dispatch tables), the
+  // safe direction for a liveness gate
+  private def strip(src: String): String = src
+    .replaceAll("(?s)/\\*.*?\\*/", " ")
+    .replaceAll("//[^\n]*", " ")
+
+  test("one commit protocol: no .rename( call in src/main outside " +
+       "llm/Swap.scala but the allowlisted create-once publishes") {
+    // a rename that replaces layer content belongs in Swap, the one
+    // crash-safe commit; each entry here is (file, enclosing member,
+    // "" for the whole file) with the reason it is not a replace
+    val allowed = Map(
+      ("cache/Memo.scala", "") ->
+        ("an atomic no-overwrite FileContext publish of a " +
+          "content-addressed cache entry"),
+      ("streaming/IngestStream.scala", "publishGeometry") ->
+        ("the CMS _geometry.json publish: create-once, first writer " +
+          "wins, not a replace; Swap's one tmp per root would let two " +
+          "first publishers clear each other's staging"))
+    val memberRe = "\n  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
+    val root = "src/main/scala/graft/"
+    val calls = walk(new java.io.File(root)).flatMap { f =>
+      val rel = f.getPath.stripPrefix(root)
+      val code = strip(read(f))
+      "\\.rename\\(".r.findAllMatchIn(code).map { m =>
+        (rel, memberRe.findAllMatchIn(code.take(m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse(""))
+      }
+    }
+    assert(calls.exists(_._1 == "llm/Swap.scala"))
+    val stray = calls.filterNot { case (rel, member) =>
+      rel == "llm/Swap.scala" || allowed.contains((rel, "")) ||
+        allowed.contains((rel, member))
+    }
+    assert(stray.isEmpty, "renames outside Swap (commit through " +
+      "graft.llm.Swap, or allowlist a create-once publish with its " +
+      "reason):\n" + stray.map { case (r, m) => s"$r: $m" }.mkString("\n"))
+  }
+
   test("no dark faces: every public operator face in graft main is " +
        "referenced by name, IN CODE, outside its defining file (a " +
        "face with zero external callers shipped unverified once — " +
@@ -323,18 +369,6 @@ class CoreSpec extends AnyFunSuite {
     // public face needs a use in shipped code — `src/main` or the
     // bench harness — or a mention in the README "Using" block, the
     // library's front door. A spec-only seam is `private[graft]`.
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    def read(f: java.io.File): String =
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    // comment/scaladoc strip: block comments first (covers /** ... */),
-    // then line comments — string literals keep their text, which can
-    // only ever ADD witnesses (e.g. reflective dispatch tables), the
-    // safe direction for a liveness gate
-    def strip(src: String): String = src
-      .replaceAll("(?s)/\\*.*?\\*/", " ")
-      .replaceAll("//[^\n]*", " ")
     val sources = walk(new java.io.File("src")).map(f => f.getPath -> read(f))
     val gated = sources.filter(_._1.contains("main/scala/graft/"))
     val stripped = sources.map { case (p, s) => p -> strip(s) }

@@ -949,12 +949,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(wideGeo((0L, "zz")) == ((8L, 0L)), s"$wideGeo")
   }
 
-  test("compaction crash recovery: covered sources left behind by a " +
-       "crash-after-rename are cleaned at ANY later watermark — " +
-       "never double-counted") {
+  test("an earlier build's compaction crash leftover (a compact " +
+       "holding _COMPACT_SOURCES beside a partition it covers) " +
+       "refuses compaction, naming both paths; once cleared, the " +
+       "marker is inert") {
     import graft.streaming.IngestStream
     import spark.implicits._
-    val base = graft.Scratch.root + "/cms_crash"
+    val base = graft.Scratch.root + "/cms_legacy_compact"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val dir = s"$base/sketch"
     IngestStream.cmsBatch(
@@ -973,9 +974,10 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.getName).filter(_.startsWith("ingest_batch="))
       .map(_.drop("ingest_batch=".length).toLong).toSet
     val want = cells()
-    // snapshot the to-be-compacted sources, compact, then RESTORE them
-    // — exactly the on-disk state after a crash between the rename and
-    // the source deletes
+    // the on-disk state an earlier build's rename-then-delete
+    // compaction left when it crashed between its rename and its
+    // source deletes: the fold, with its sources marker, beside the
+    // sources it consumed
     val side = new java.io.File(s"$base/side")
     Seq(0L, 1L).foreach { b =>
       org.apache.commons.io.FileUtils.copyDirectory(
@@ -988,15 +990,35 @@ class StreamingSpec extends AnyFunSuite {
         new java.io.File(side, s"ingest_batch=$b"),
         new java.io.File(s"$dir/ingest_batch=$b"))
     }
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/ingest_batch=-2/_COMPACT_SOURCES"),
+      "not parsed\n")
     spark.catalog.refreshByPath(dir)
     assert(partIds() == Set(-2L, 0L, 1L, 2L), s"crash state: ${partIds()}")
-    // the natural NEXT scheduled call uses a LARGER watermark — it must
-    // recognize the leftovers (covered by compact -2) and drop them
-    // before folding, not bake their mass in twice
+    val e = intercept[IllegalStateException] {
+      IngestStream.cmsCompact(spark, dir, watermark = 2L)
+    }
+    // the compact, and one of the sources it covers
+    def namesBoth(msg: String) = msg.contains("ingest_batch=-2 ") &&
+      Seq(0, 1).exists(b => msg.contains(s"ingest_batch=$b,"))
+    assert(namesBoth(e.getMessage) &&
+      e.getMessage.contains("earlier build"), e.getMessage)
+    assert(partIds() == Set(-2L, 0L, 1L, 2L), "the refusal deletes nothing")
+    val doctor = graft.llm.Takedown.layerDoctor(spark, dir).collect()
+      .filter(_.getString(0) == "legacy-compact")
+    assert(doctor.length == 1 && namesBoth(doctor.head.getString(2)),
+      doctor.toSeq)
+    // with the covered sources gone, a compact holding the marker is
+    // an ordinary compact: folded like any other, marker unread
+    Seq(0L, 1L).foreach(b => org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(s"$dir/ingest_batch=$b")))
+    spark.catalog.refreshByPath(dir)
+    assert(cells() == want)
+    assert(graft.llm.Takedown.layerDoctor(spark, dir).collect()
+      .forall(_.getString(0) != "legacy-compact"))
     IngestStream.cmsCompact(spark, dir, watermark = 2L)
     assert(partIds() == Set(-3L), s"got ${partIds()}")
-    assert(cells() == want,
-      "later-watermark compaction after a crash must not double-count")
+    assert(cells() == want, "the fold over the legacy compact is exact")
   }
 
   test("compaction keeps mass it did not fold: batches landing under " +
@@ -1027,12 +1049,12 @@ class StreamingSpec extends AnyFunSuite {
       Seq((3L, "d d")).toDF("doc_id", "text"), dir, batchId = 0L)
     spark.catalog.refreshByPath(dir)
     val want = cells()
-    // rerun at the SAME watermark (target exists): the old jmax sweep
-    // deleted both live batches here — they must survive untouched
+    // rerun at the SAME watermark (target exists): the late batches
+    // fold into the target with it, exactly once
     IngestStream.cmsCompact(spark, dir, watermark = 2L)
-    assert(partIds() == Set(-3L, 0L, 1L), s"got ${partIds()}")
-    assert(cells() == want, "recovery must not delete unfolded mass")
-    // entry at a LATER watermark must also keep them — and fold them
+    assert(partIds() == Set(-3L), s"got ${partIds()}")
+    assert(cells() == want, "compaction must not delete unfolded mass")
+    // a LATER watermark folds that compact in turn
     IngestStream.cmsCompact(spark, dir, watermark = 5L)
     assert(partIds() == Set(-6L), s"got ${partIds()}")
     assert(cells() == want,
@@ -1055,9 +1077,9 @@ class StreamingSpec extends AnyFunSuite {
       .select("row", "bucket", "cnt").collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val want = cells()
-    // the crash state: a fold's temp output exists (with or without
-    // its sources marker) but was never renamed — no live partition
-    // was touched, so it is garbage whatever it contains
+    // the crash state an earlier build's compaction left: a fold's
+    // temp output that was never renamed — no live partition was
+    // touched, so it is garbage whatever it contains
     val tmp = new java.io.File(s"$dir/_compact_tmp_1")
     tmp.mkdirs()
     java.nio.file.Files.writeString(
@@ -1069,29 +1091,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(parts == Set("ingest_batch=-2"), s"got $parts")
     assert(!tmp.exists(), "pre-commit garbage must be cleared")
     assert(cells() == want, "the refold must preserve every cell")
-  }
-
-  test("a markerless (legacy) compact coexisting with covered live " +
-       "ids refuses to compact instead of guessing") {
-    import graft.streaming.IngestStream
-    import spark.implicits._
-    val base = graft.Scratch.root + "/cms_markerless"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val dir = s"$base/sketch"
-    IngestStream.cmsBatch(
-      Seq((1L, "a b")).toDF("doc_id", "text"), dir, batchId = 0L)
-    IngestStream.cmsCompact(spark, dir, watermark = 0L)
-    // strip the sources marker — the pre-upgrade on-disk state
-    assert(new java.io.File(s"$dir/ingest_batch=-1/_COMPACT_SOURCES")
-      .delete())
-    IngestStream.cmsBatch(
-      Seq((2L, "c")).toDF("doc_id", "text"), dir, batchId = 0L)
-    val e = intercept[IllegalArgumentException] {
-      IngestStream.cmsCompact(spark, dir, watermark = 1L)
-    }
-    assert(e.getMessage.contains("markerless"), e.getMessage)
-    // nothing was deleted by the refused entry
-    assert(new java.io.File(s"$dir/ingest_batch=0").exists())
   }
 
   test("windowedTrending guards: oversized / unsummed sketch frames " +

@@ -1,6 +1,7 @@
 package graft
 
 import graft.llm._
+import graft.streaming.IngestStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,7 +86,7 @@ class SwapSpec extends AnyFunSuite {
     }
 
   private val protocolArtifacts =
-    Set("takedown-swap", "index-patch", "compaction-temp")
+    Set("takedown-swap", "index-patch", "compaction-temp", "legacy-compact")
 
   private def copy(from: String, to: String): Unit = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(to))
@@ -243,6 +244,25 @@ class SwapSpec extends AnyFunSuite {
     Similarity.pqPatchIndex(spark, dir, pqPts, pqBooks, newBooks,
       nBuckets = 4)
 
+  // batch 0 holds docs 1-3, batch 1 docs 4-6; `drop` leaves docs out
+  private def bm25Layer(drop: Long*)(dir: String): Unit = {
+    import spark.implicits._
+    val docs = Seq((1L, "red fox runs"), (2L, "blue fox sleeps"),
+      (3L, "red hen"), (4L, "old blue car"), (5L, "red car runs"),
+      (6L, "hen sleeps")).toDF("doc_id", "text")
+      .filter(!col("doc_id").isin(drop: _*))
+    TextAnalysis.bm25PostingsBatch(
+      docs.filter(col("doc_id") <= 3L), dir, batchId = 0L)
+    TextAnalysis.bm25PostingsBatch(
+      docs.filter(col("doc_id") > 3L), dir, batchId = 1L)
+  }
+  private def bm25Serve(dir: String): Seq[String] = {
+    import spark.implicits._
+    rows(TextAnalysis.bm25TopKFromPostings(spark, dir,
+      Seq((100L, "red fox"), (101L, "blue car"), (102L, "hen sleeps"))
+        .toDF("query_id", "text"), k = 6))
+  }
+
   private val ops = Seq(
     Op("layerTakedown", { dir =>
       import spark.implicits._
@@ -254,23 +274,26 @@ class SwapSpec extends AnyFunSuite {
       Takedown.layerTakedown(spark, dir, idsDf(Seq(2L, 3L), "doc_id"),
         "doc_id")
     }, Seq("" -> Seq("")), None),
-    Op("bm25Takedown", { dir =>
-      import spark.implicits._
-      val docs = Seq((1L, "red fox runs"), (2L, "blue fox sleeps"),
-        (3L, "red hen"), (4L, "old blue car"), (5L, "red car runs"),
-        (6L, "hen sleeps")).toDF("doc_id", "text")
-      TextAnalysis.bm25PostingsBatch(
-        docs.filter(col("doc_id") <= 3L), dir, batchId = 0L)
-      TextAnalysis.bm25PostingsBatch(
-        docs.filter(col("doc_id") > 3L), dir, batchId = 1L)
-    }, { dir =>
+    Op("bm25Takedown", bm25Layer(), { dir =>
       Takedown.bm25Takedown(spark, dir, idsDf(Seq(2L, 5L), "doc_id"))
-    }, Seq("" -> Seq("postings", "stats")), Some { dir =>
+    }, Seq("" -> Seq("postings", "stats")), Some(bm25Serve)),
+    Op("ingestLayerCompact", bm25Layer(), { dir =>
+      // postings batches 0 and 1 fold into ingest_batch=-2
+      IngestStream.ingestLayerCompact(spark,
+        s"$dir/postings", watermark = 1L)
+    }, Seq("postings" -> Seq("postings")), Some(bm25Serve)),
+    Op("cmsCompact", { dir =>
       import spark.implicits._
-      rows(TextAnalysis.bm25TopKFromPostings(spark, dir,
-        Seq((100L, "red fox"), (101L, "blue car"), (102L, "hen sleeps"))
-          .toDF("query_id", "text"), k = 6))
-    }),
+      Seq("a a b c", "b c d e", "f a").zipWithIndex.foreach {
+        case (text, b) => IngestStream.cmsBatch(
+          Seq((b.toLong, text)).toDF("doc_id", "text"), dir,
+          batchId = b.toLong)
+      }
+    }, { dir =>
+      // batches 0 and 1 fold into ingest_batch=-2, batch 2 stays
+      IngestStream.cmsCompact(spark, dir, watermark = 1L)
+    }, Seq("" -> Seq("")), Some(dir =>
+      rows(IngestStream.cmsLayerRead(spark, dir)))),
     Op("ivfTakedown", ivfIndex(withDelta = true), { dir =>
       // main cell 0 rewritten, cell 1 emptied, delta batch rewritten
       Takedown.ivfTakedown(spark, dir,
@@ -337,6 +360,46 @@ class SwapSpec extends AnyFunSuite {
       s"${op.name} ${ref.n} (serve refused $refused)"
     }.mkString("crash points: ", ", ", "") +
       f"; ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  test("a BM25 subdir compaction refuses while the enclosing layer " +
+       "has a committed takedown pending, naming it; once that lands, " +
+       "compaction and the serve equal a fresh rebuild") {
+    val dir = s"$base/nested_roots"
+    val done = s"$base/nested_roots_done"
+    val fresh = s"$base/nested_roots_fresh"
+    Seq(dir, done).foreach(bm25Layer())
+    bm25Layer(5L)(fresh)
+    Takedown.bm25Takedown(spark, done, idsDf(Seq(5L), "doc_id"))
+    // the state a crash leaves between the takedown's two swap steps:
+    // marker committed, postings/ingest_batch=1 swapped in, the debited
+    // stats/ingest_batch=1 still staged beside the live undebited one
+    copy(s"$done/postings/ingest_batch=1", s"$dir/postings/ingest_batch=1")
+    copy(s"$done/stats/ingest_batch=1",
+      s"$dir/_takedown_tmp/stats/ingest_batch=1")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dir/_takedown_tmp/_TAKEDOWN_COMMIT"),
+      "1 postings/ingest_batch=1\n1 stats/ingest_batch=1\n"
+        .getBytes("UTF-8"))
+    spark.catalog.refreshByPath(dir)
+    val e = intercept[IllegalStateException] {
+      IngestStream.ingestLayerCompact(spark,
+        s"$dir/stats", watermark = 1L)
+    }
+    assert(e.getMessage.contains(s"layer $dir has a committed swap"),
+      e.getMessage)
+    assert(new java.io.File(s"$dir/stats").list().toSet
+      .filter(_.startsWith("ingest_batch=")) ==
+      Set("ingest_batch=0", "ingest_batch=1"), "the refusal folds nothing")
+    Swap.completePending(spark, dir)
+    Seq("postings", "stats").foreach { sub =>
+      IngestStream.ingestLayerCompact(spark,
+        s"$dir/$sub", watermark = 1L)
+    }
+    def totals(d: String) = Writes.readParquet(spark, s"$d/stats")
+      .agg(sum("n_docs"), sum("sum_dl")).head().toSeq
+    assert(totals(dir) == totals(fresh), "n_docs and sum_dl count once")
+    assert(bm25Serve(dir) == bm25Serve(fresh))
   }
 
   test("a _patch_tmp left by an earlier build: the doctor says to " +

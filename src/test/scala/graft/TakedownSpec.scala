@@ -281,6 +281,14 @@ class TakedownSpec extends AnyFunSuite {
     assert(got == want,
       s"layer minus ids must equal sketch of remaining corpus:\n" +
         s"got  $got\nwant $want")
+    // the layer is now one compact: a second takedown still folds
+    assert(Takedown.cmsTakedown(spark, sketchDir, corpusDir,
+      idsDf(Seq(1L), "doc_id")) == 1L)
+    assert(cells(graft.streaming.IngestStream.cmsLayerRead(spark,
+        sketchDir)) == cells(HeavyHitters.cmsSketch(b1
+      .filter(col("doc_id") === 3L)
+      .select(explode(TextAnalysis.tokens(col("text"))).as("token")))),
+      "a takedown over a one-compact layer subtracts too")
     // a second takedown of the same ids is a no-op (the corpus layer
     // still holds them here — cmsTakedown is ordered BEFORE corpus
     // takedown — so guard with a fresh foreign-corpus dir instead)
@@ -331,6 +339,39 @@ class TakedownSpec extends AnyFunSuite {
       "surviving partitions keep their files byte-for-byte")
     assert(graft.streaming.IngestStream.layerRetention(spark, dir,
       keepFrom = 2L) == ((0L, 0L)), "rerun no-op")
+  }
+
+  test("layerRetention lands a committed compaction swap before it " +
+       "ages out, so no pre-cutoff mass comes back; layerReadAsOf " +
+       "refuses while that swap is pending") {
+    import spark.implicits._
+    val dir = scratch("retention_pending")
+    def part(b: Long, rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text")
+        .coalesce(1).write.parquet(s"$dir/ingest_batch=$b")
+    part(0L, Seq((1L, "a")))
+    part(1L, Seq((2L, "b"), (3L, "c")))
+    part(2L, Seq((4L, "d")))
+    // a compaction at watermark 1 that crashed after its commit point:
+    // the fold of batches 0-1 staged with its marker, sources still live
+    spark.read.parquet(s"$dir/ingest_batch=0", s"$dir/ingest_batch=1")
+      .coalesce(1).write
+      .parquet(s"$dir/_takedown_tmp/ingest_batch=-2")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/_takedown_tmp/_TAKEDOWN_COMMIT"),
+      "1 ingest_batch=-2\n0 ingest_batch=0\n0 ingest_batch=1\n")
+    val ex = intercept[IllegalStateException] {
+      graft.streaming.IngestStream.layerReadAsOf(spark, dir, asOf = 2L)
+    }
+    assert(ex.getMessage.contains(dir), ex.getMessage)
+    val (parts, rows) = graft.streaming.IngestStream
+      .layerRetention(spark, dir, keepFrom = 2L)
+    assert((parts, rows) == ((1L, 3L)), s"audit: $parts/$rows")
+    graft.llm.Swap.completePending(spark, dir)
+    spark.catalog.refreshByPath(dir)
+    assert(spark.read.parquet(dir).select("doc_id")
+      .collect().map(_.getLong(0)).toSet == Set(4L),
+      "no pre-cutoff mass survives the landed swap")
   }
 
   test("layerReadAsOf: horizon excludes later batches; a compact " +
@@ -408,11 +449,12 @@ class TakedownSpec extends AnyFunSuite {
     val batchDetail = report.find(_._1 == "batch-partitions").get._3
     assert(batchDetail.contains("1 live") &&
       batchDetail.contains("coverage <= 1"), batchDetail)
-    // the hand-built compact carries no sources sidecar — the doctor
-    // surfaces the compaction-refusal hazard
-    assert(byArtifact("compact-sources-markers") == "missing")
-    assert(report.find(_._1 == "compact-sources-markers").get._3
-      .contains("-2"))
+    assert(report.find(_._1 == "compaction-temp").get._3
+      .contains("earlier build"))
+    // a compact without a sources marker is this build's normal
+    // state: no finding about it
+    assert(!byArtifact.contains("compact-sources-markers"))
+    assert(!byArtifact.contains("legacy-compact"))
     // the doctor mutated NOTHING: the committed tmp is still there
     // for the next maintenance entry to complete
     assert(new java.io.File(s"$dir/_takedown_tmp").exists() &&
