@@ -921,7 +921,7 @@ object ScaleBench {
           emb.filter(col("vec_id") % 2 === 1), m = 4, k = 16,
           iters = 1)
         runProbe("pq_patch", f, nEmb)(
-          graft.llm.Similarity.pqPatchIndex(spark, idx, emb, books,
+          graft.llm.Similarity.pqPatchIndexAuto(spark, idx, emb,
             newBooks)._1)
       }
 
@@ -1256,7 +1256,7 @@ object ScaleBench {
           .select(col("vec_id").as("query_id"),
             col("embedding").as("query_vec"))
         val (fr, tft) = timed(graft.llm.Similarity.ivfTopKIndexedWhere(
-          spark, idir, cents, fq, k = 10,
+          spark, idir, fq, k = 10,
           predicate = col("grp") === 2).count())
         report("ivf_filtered_topk", f, nEmb, fr, tft)
       }

@@ -13,9 +13,10 @@ import java.time.Duration
   *
   * Architecture: single fetches are driver-side (config-sized payloads
   * — the reference uses HTTP for API documents, not bulk data);
-  * indexed fetches fan out on EXECUTORS via a parallelized URL
-  * dataset, so a thousand-URL sweep is cluster-parallel. Responses
-  * land as rows and flow into `spark.read.json`/csv like any layer.
+  * indexed fetches fan out on EXECUTORS through the `graft-http`
+  * DataSourceV2 ([[graft.sources.HttpDataSource]]), so a thousand-URL
+  * sweep is cluster-parallel. Responses land as `(rep_index, body,
+  * error)` rows and flow into `spark.read.json`/csv like any layer.
   */
 object Http {
 
@@ -68,29 +69,6 @@ object Http {
                conf: HttpConf = HttpConf()): DataFrame = {
     import spark.implicits._
     spark.read.json(spark.createDataset(Seq(fetch(url, conf))))
-  }
-
-  /** Indexed fetch: `{var}`-templated URL, one fetch per index,
-    * EXECUTOR-side (mapPartitions over a parallelized index set) —
-    * the scale path for API sweeps. Failures surface per-row as
-    * (idx, null, error) so one dead URL doesn't kill the sweep
-    * (the reference's tryLoadDataStream semantics, VFA:114-122). */
-  def fetchIndexed(spark: SparkSession, urlTemplate: String,
-                   varName: String, indices: Seq[String],
-                   conf: HttpConf = HttpConf(),
-                   parallelism: Int = 16): DataFrame = {
-    import spark.implicits._
-    val tmpl = graft.loc.LocTemplate(urlTemplate)
-    val urls = indices.map(i => i -> tmpl.splice(Map(varName -> i)).raw)
-    spark.createDataset(urls)
-      .repartition(math.min(parallelism, math.max(1, urls.size)))
-      .mapPartitions { it =>
-        it.map { case (idx, url) =>
-          try (idx, fetch(url, conf), null: String)
-          catch { case e: Exception => (idx, null: String, e.toString) }
-        }
-      }
-      .toDF("rep_index", "body", "error")
   }
 
   /** HTTP write side — the reference accessor's configurable

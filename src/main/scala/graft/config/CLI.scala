@@ -990,8 +990,12 @@ object CLI {
                   }
                   val r = Takedown.cmsTakedown(spark, sketchDir,
                     corpusDir, idSet)
-                  (r, 1L, IngestStream.cmsLayerRead(spark, sketchDir)
-                    .filter(col("cnt") > 0).count())
+                  // then the corpus layer, so a rerun finds no removed
+                  // text left to subtract again and audits (0, 0)
+                  Takedown.layerTakedown(spark, corpusDir, idSet, idCol)
+                  (r, if (r == 0L) 0L else 1L,
+                    IngestStream.cmsLayerRead(spark, sketchDir)
+                      .filter(col("cnt") > 0).count())
               }
               import spark.implicits._
               Seq((kind, rm, parts, left))
@@ -1314,18 +1318,9 @@ object CLI {
   def main(args: Array[String]): Unit = run(args, defaultSession())
 
   def defaultSession(): SparkSession =
-    graft.access.LocalFs.register(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    graft.Graft.builder(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(4))
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NTZ inference is off, so unannotated parquet timestamps are read
-      // as TIMESTAMP_LTZ — pin the session to UTC so their wall-clock
-      // rendering matches Graft.builder regardless of machine zone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
 
   /** Entry point, separated from `main` for tests (pass a session).
@@ -1391,9 +1386,8 @@ object CLI {
         // virtual-file location
         def readText(loc: String): String = {
           val p = new org.apache.hadoop.fs.Path(loc)
-          val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          val in = fs.open(p)
-          try new String(in.readAllBytes(), "UTF-8") finally in.close()
+          graft.Writes.readUtf8(
+            p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p)
         }
         val optVPath = VPath(s"/Options/$name")
         val fileLayers = spec.mappings.bindings.get(optVPath) match {

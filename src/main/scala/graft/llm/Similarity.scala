@@ -63,7 +63,7 @@ object Similarity {
     * dot products — the per-query cost model of [[bruteTopK]] with
     * k=1; no corpus shuffle beyond the per-eval top-1 TakeOrdered.
     * For repeated audits against a growing corpus, compose with the
-    * IVF index ([[ivfTopKIndexed]]) exactly as search does. */
+    * IVF index ([[ivfTopKIndexedAuto]]) exactly as search does. */
   def embedContamination(corpus: DataFrame, eval: DataFrame,
                          tau: Double = 0.4, idCol: String = "vec_id",
                          vecCol: String = "embedding"): DataFrame =
@@ -83,7 +83,7 @@ object Similarity {
     *
     * The full 100 TB ANN path composes quantization with cell pruning:
     * quantize corpus + queries (cast to array<double>), then run
-    * [[ivfTopKWith]]/[[ivfTopKIndexed]] over the quantized frames — a
+    * [[ivfTopKWith]]/[[ivfTopKIndexedAuto]] over the quantized frames — a
     * 4x-smaller index scanning nProbe/nCells of the data. LlmSpec
     * asserts the composed path's recall. */
   def bruteTopKQuantized(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -241,7 +241,7 @@ object Similarity {
     * of [[bruteTopK]] run both directions (the smaller side
     * broadcasts; only (id, id, cos) rows shuffle into the window
     * cuts). At corpus-x-corpus scale, feed both the pair stream and
-    * the k-NN sets from the IVF index ([[ivfTopKIndexed]]) — the
+    * the k-NN sets from the IVF index ([[ivfTopKIndexedAuto]]) — the
     * margin arithmetic is unchanged, which is why it is factored
     * over a scored pair set rather than fused into the scan. */
   def bitextMine(a: DataFrame, b: DataFrame, k: Int = 4,
@@ -708,33 +708,22 @@ object Similarity {
   /** Persist the IVF layout: the cell assignment written
     * `partitionBy(cell_id)` — the deployment path the scaladoc of
     * [[assignCells]] describes, as a one-liner. Build once per corpus
-    * version; [[ivfTopKIndexed]] then prunes unprobed cells at the
+    * version; [[ivfTopKIndexedAuto]] then prunes unprobed cells at the
     * parquet-partition level, so each query batch scans ~nProbe/C of
     * the corpus bytes instead of assigning cells over a full scan. */
   def ivfWriteIndex(corpus: DataFrame, centroids: Seq[Seq[Double]],
                     indexDir: String, idCol: String = "vec_id",
                     vecCol: String = "embedding",
-                    attrCols: Seq[String] = Nil): Unit = {
+                    attrCols: Seq[String] = Nil): Unit =
     // attrCols ride INSIDE the index files so filtered search
     // ([[ivfTopKIndexedWhere]]) can push its predicate into the
     // probed-cell parquet scan — row-group min/max + dictionary stats
     // skip non-matching pages without a join back to the corpus
-    graft.Writes.clusterByPartitions(
-        corpus.select((Seq(col(idCol), col(vecCol)) ++ attrCols.map(col))
-          :+ graft.functions.SketchExprs.nearestCell(col(vecCol),
-            centroids).as("cell_id"): _*), "cell_id")
-      .write.mode("overwrite").partitionBy("cell_id").parquet(indexDir)
-    // centroid sidecar (the cms _geometry.json move): serving an IVF
-    // layout with the WRONG centroid set probes wrong cells silently —
-    // publishing the authoritative set next to the partitions makes
-    // the safe path the easy path ([[ivfTopKIndexedAuto]])
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    writeModelSidecar(
-      root.getFileSystem(
-        corpus.sparkSession.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(root, CentroidSidecar),
-      centroids.zipWithIndex.map { case (v, i) => (0, i.toLong, v) })
-  }
+    writeLayout(
+      corpus.select((Seq(col(idCol), col(vecCol)) ++ attrCols.map(col))
+        :+ graft.functions.SketchExprs.nearestCell(col(vecCol),
+          centroids).as("cell_id"): _*),
+      IvfLayout, indexDir, Seq(centroids))
 
   /** The DEPLOYMENT build face: [[ivfWriteIndex]] with the cell count
     * derived from the corpus itself via [[ivfAutoCells]] — the default
@@ -770,68 +759,122 @@ object Similarity {
   private[llm] val CentroidSidecar = "_centroids.txt"
   private[llm] val BooksSidecar = "_books.txt"
 
+  /** A written dense index layout: the partition column its rows are
+    * keyed by, and the sidecar holding the model they were assigned
+    * or encoded under. A model is a sequence of groups of vectors: the
+    * PQ codebooks (one group per subspace), or the IVF centroid set as
+    * the one group 0. */
+  private[graft] final case class Layout(partCol: String, sidecar: String)
+  private[graft] val IvfLayout = Layout("cell_id", CentroidSidecar)
+  private[graft] val PqLayout = Layout("pq_bucket", BooksSidecar)
+
+  /** The one layout write behind [[ivfWriteIndex]] and
+    * [[pqWriteIndex]]: `rows` (partition column included) written
+    * `partitionBy` the layout's column over `indexDir`, then the model
+    * published as its sidecar next to the partitions — serving a
+    * layout under the WRONG model probes wrong cells or scores wrong
+    * codes silently, so every serve, patch and append reads the
+    * layout's own ([[layoutModel]]). */
+  private def writeLayout(rows: DataFrame, layout: Layout,
+                          indexDir: String,
+                          model: Seq[Seq[Seq[Double]]]): Unit = {
+    graft.Writes.clusterByPartitions(rows, layout.partCol)
+      .write.mode("overwrite").partitionBy(layout.partCol)
+      .parquet(indexDir)
+    val root = new org.apache.hadoop.fs.Path(indexDir)
+    writeModelSidecar(
+      root.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(root, layout.sidecar), model)
+  }
+
   private def writeModelSidecar(fs: org.apache.hadoop.fs.FileSystem,
                                 path: org.apache.hadoop.fs.Path,
-                                rows: Seq[(Int, Long, Seq[Double])])
-      : Unit = {
+                                model: Seq[Seq[Seq[Double]]]): Unit = {
     val out = fs.create(path, true)
-    try out.write(rows.map { case (g, i, v) =>
-      s"$g $i " + v.map(_.toString).mkString(" ")
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    try out.write((for {
+      (group, g) <- model.zipWithIndex
+      (v, i) <- group.zipWithIndex
+    } yield s"$g $i " + v.map(_.toString).mkString(" "))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
   }
 
-  private def readModelSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                               path: org.apache.hadoop.fs.Path)
-      : Option[Seq[(Int, Long, Seq[Double])]] =
-    if (!fs.exists(path)) None
-    else {
-      Some(graft.Writes.readUtf8(fs, path).split("\n").iterator
-        .map(_.trim).filter(_.nonEmpty)
-        .map { line =>
-          val parts = line.split(" ")
-          (parts(0).toInt, parts(1).toLong,
-            parts.drop(2).map(_.toDouble).toSeq)
-        }.toSeq)
-    }
-
-  /** Read the centroid set an [[ivfWriteIndex]] layout was built (or
-    * last patched) with, from its `_centroids.txt` sidecar. */
-  private[graft] def ivfIndexCentroids(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String)
-      : Option[Seq[Seq[Double]]] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    readModelSidecar(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(root, CentroidSidecar))
-      .map(_.sortBy(_._2).map(_._3))
+  /** The model a written layout was built (or last patched) with,
+    * read from its sidecar: the one reader of a model sidecar. Run it
+    * only once the entry has landed ([[Swap.completePending]]) or
+    * refused ([[servedModel]]) pending swaps: a patch's swap carries
+    * the sidecar as its last entry, so before that the file can be
+    * stale or missing. Fails naming the dir when it has no sidecar. */
+  private def layoutModel(spark: org.apache.spark.sql.SparkSession,
+                          indexDir: String, layout: Layout)
+      : Seq[Seq[Seq[Double]]] = {
+    val path = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(indexDir), layout.sidecar)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path))
+      throw new IllegalArgumentException(s"$indexDir has no " +
+        s"${layout.sidecar} sidecar — not an ivfWriteIndex or " +
+        "pqWriteIndex layout (rebuild it)")
+    graft.Writes.readUtf8(fs, path).split("\n").iterator
+      .map(_.trim).filter(_.nonEmpty)
+      .map { line =>
+        val parts = line.split(" ")
+        (parts(0).toInt, parts(1).toLong,
+          parts.drop(2).map(_.toDouble).toSeq)
+      }.toSeq
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3))
   }
 
-  /** The centroid set every sidecar-driven IVF operator (serve,
-    * append, fit monitor) runs under; fails naming the dir when it is
-    * not an [[ivfWriteIndex]] layout. */
-  private[graft] def sidecarCentroids(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String)
-      : Seq[Seq[Double]] =
-    ivfIndexCentroids(spark, indexDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"$indexDir has no $CentroidSidecar sidecar — not an " +
-          "ivfWriteIndex layout (rebuild it, or pass centroids " +
-          "explicitly to ivfTopKIndexed)"))
+  /** The model every read of a written layout (serve, fit monitor)
+    * runs under: refuses a half-swapped layout first
+    * ([[requireSettledIndex]]), then [[layoutModel]]. */
+  private[graft] def servedModel(spark: org.apache.spark.sql.SparkSession,
+                                 indexDir: String, layout: Layout)
+      : Seq[Seq[Seq[Double]]] = {
+    requireSettledIndex(spark, indexDir)
+    layoutModel(spark, indexDir, layout)
+  }
 
-  /** [[ivfTopKIndexed]] with the centroid set derived from the
-    * layout's own sidecar — serving cannot silently disagree with the
-    * set the index was built/patched with. */
+  /** IVF search over a persisted [[ivfWriteIndex]] layout, under the
+    * centroid set of the layout's own sidecar — serving cannot
+    * silently disagree with the set the index was built/patched with.
+    * The probed cell set ([[probedCells]], resolved on the driver)
+    * becomes a LITERAL `isin` partition filter, so unprobed `cell_id=`
+    * directories are pruned from the scan statically — no
+    * full-corpus read, no assignment recompute.
+    *
+    * Batch contract: `queries` is DRIVER-SIZED — its vectors are
+    * force-broadcast into the probed-cell scan. */
   def ivfTopKIndexedAuto(spark: org.apache.spark.sql.SparkSession,
                          indexDir: String, queries: DataFrame, k: Int,
                          nProbe: Int = 4, idCol: String = "vec_id",
                          vecCol: String = "embedding",
                          qIdCol: String = "query_id",
                          qVecCol: String = "query_vec"): DataFrame = {
-    // refuse a half-swapped layer before its sidecar reads as missing
-    requireSettledIndex(spark, indexDir)
-    ivfTopKIndexed(spark, indexDir, sidecarCentroids(spark, indexDir),
-      queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
+    val centroids = servedModel(spark, indexDir, IvfLayout).head
+    scoreProbedCells(
+      indexFrame(spark, indexDir, IvfLayout,
+        Some(probedCells(queries, centroids, nProbe, qVecCol))),
+      centroids, queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
+  }
+
+  /** The entry both patches share: land a pending swap on the layout
+    * root (a committed takedown must land before a patch reads the
+    * index, or the patch would re-assign rows destined for removal)
+    * and on its `_delta` segment, then refuse a standing delta — its
+    * rows hold assignments or codes under the CURRENT model, which
+    * patching around them would leave stale (served through wrong
+    * probes or scored as wrong codes); fold it first. A `_delta` a
+    * takedown emptied holds no batch and does not block. */
+  private def settleForPatch(spark: org.apache.spark.sql.SparkSession,
+                             indexDir: String, face: String,
+                             fold: String): Unit = {
+    Swap.completePending(spark, indexDir)
+    Swap.completePending(spark, deltaDir(indexDir).toString)
+    require(deltaBatches(spark, indexDir) == 0,
+      s"$face: $indexDir has a standing $DeltaDirName segment — run " +
+        s"$fold first, then patch")
   }
 
   /** Patch a persisted [[ivfWriteIndex]] layout IN PLACE after a
@@ -860,19 +903,7 @@ object Similarity {
                     vecCol: String = "embedding"): (Long, Long) = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a committed-but-unswapped takedown must land before this patch
-    // reads the index, or the patch would re-assign rows destined for
-    // removal
-    Swap.completePending(spark, indexDir)
-    // a standing delta segment holds assignments under the CURRENT
-    // sidecar; patching around it would leave those stale (served
-    // through wrong probes) — fold it first. A `_delta` a takedown
-    // emptied holds no batch and does not block; a tmp an earlier
-    // build's separate delta scrub left lands before the probe
-    Swap.completePending(spark, deltaDir(indexDir).toString)
-    require(deltaBatches(spark, indexDir) == 0,
-      s"ivfPatchIndex: $indexDir has a standing $DeltaDirName " +
-        "segment — run ivfCompactDelta first, then patch")
+    settleForPatch(spark, indexDir, "ivfPatchIndex", "ivfCompactDelta")
     val idx = graft.Writes.readParquet(spark, indexDir)
     // every stored column rides the rewrite (attribute-carrying
     // layouts — see ivfWriteIndex's attrCols — must not lose their
@@ -915,32 +946,11 @@ object Similarity {
             "cell_id")
           .write.partitionBy("cell_id").parquet(tmp.toString)
       writeModelSidecar(fs,
-        new org.apache.hadoop.fs.Path(tmp, CentroidSidecar),
-        newCents.zipWithIndex.map { case (v, i) => (0, i.toLong, v) })
+        new org.apache.hadoop.fs.Path(tmp, CentroidSidecar), Seq(newCents))
     }
     (moved, affected.length.toLong)
     } finally re.unpersist(blocking = false)
   }
-
-  /** IVF search over a persisted [[ivfWriteIndex]] layout. The probed
-    * cell set ([[probedCells]], resolved on the driver) becomes a
-    * LITERAL `isin` partition filter, so unprobed `cell_id=`
-    * directories are pruned from the scan statically — no full-corpus
-    * read, no assignment recompute. Centroids must be the set the
-    * index was built with.
-    *
-    * Batch contract: `queries` is DRIVER-SIZED — its vectors are
-    * force-broadcast into the probed-cell scan. */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String, centroids: Seq[Seq[Double]],
-                     queries: DataFrame, k: Int, nProbe: Int = 4,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     qIdCol: String = "query_id", qVecCol: String = "query_vec")
-      : DataFrame =
-    scoreProbedCells(
-      indexFrame(spark, indexDir, "cell_id",
-        Some(probedCells(queries, centroids, nProbe, qVecCol))),
-      centroids, queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
 
   /** The distinct cells a query batch probes, sorted: one projection
     * collect of each query's probe list (no Spark job for a local
@@ -965,11 +975,12 @@ object Similarity {
     * `isin` prunes them at the row level (the delta is small by
     * contract; the compactions fold it into partitions when it stops
     * being small). The PQ serve passes none: ADC scans every
-    * bucket. */
+    * bucket. The serve reads its model first ([[servedModel]]), which
+    * refuses a half-swapped layout. */
   private def indexFrame(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String, partCol: String,
+                         indexDir: String, layout: Layout,
                          probed: Option[Seq[Long]] = None): DataFrame = {
-    requireSettledIndex(spark, indexDir)
+    val partCol = layout.partCol
     def restrict(df: DataFrame) =
       probed.fold(df)(p => df.filter(col(partCol).isin(p: _*)))
     val main = restrict(graft.Writes.readParquet(spark, indexDir))
@@ -1009,7 +1020,6 @@ object Similarity {
                                   indexDir: String): Unit =
     Swap.requireSettled(spark, indexDir, s"$indexDir/$DeltaDirName")
 
-
   /** LSM-style APPEND ingest for a persisted [[ivfWriteIndex]] layout:
     * new vectors are assigned under the layout's own sidecar
     * centroids and published as a batch-keyed `_delta` side segment —
@@ -1027,20 +1037,34 @@ object Similarity {
     * Returns the appended row count, counted on the write itself. */
   def ivfAppendBatch(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String, rows: DataFrame, batchId: Long,
-                     vecCol: String = "embedding"): Long = {
+                     vecCol: String = "embedding"): Long =
+    appendDelta(spark, indexDir, IvfLayout, batchId) { model =>
+      // column parity with the main layout: the same carried columns
+      // (id, vector, any attributes) must ride every delta row, so a
+      // later compaction unions cleanly and filtered search sees its
+      // attribute on both sides
+      val carried = graft.Writes.readParquet(spark, indexDir).columns
+        .filterNot(_ == "cell_id").toSeq
+      rows.select(carried.map(col) :+
+        graft.functions.SketchExprs.nearestCell(col(vecCol), model.head)
+          .as("cell_id"): _*)
+    }
+
+  /** The one `_delta` append behind [[ivfAppendBatch]] and
+    * [[pqAppendBatch]]: lands a pending swap on the layout root, reads
+    * the layout's model and writes `encode(model)` (partition column
+    * included) as batch `batchId` of the `_delta` segment — overwrite,
+    * so a replayed batch replaces. Returns the appended row count,
+    * counted on the write itself. */
+  private def appendDelta(spark: org.apache.spark.sql.SparkSession,
+                          indexDir: String, layout: Layout,
+                          batchId: Long)(
+      encode: Seq[Seq[Seq[Double]]] => DataFrame): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     Swap.completePending(spark, indexDir)
-    val cents = sidecarCentroids(spark, indexDir)
-    // column parity with the main layout: the same carried columns
-    // (id, vector, any attributes) must ride every delta row, so a
-    // later compaction unions cleanly and filtered search sees its
-    // attribute on both sides
-    val carried = graft.Writes.readParquet(spark, indexDir).columns
-      .filterNot(_ == "cell_id").toSeq
-    val dest = s"$indexDir/$DeltaDirName/ingest_batch=$batchId"
-    val n = graft.Writes.writeCounted(rows.select(carried.map(col) :+
-        graft.functions.SketchExprs.nearestCell(col(vecCol), cents)
-          .as("cell_id"): _*))(_.write.mode("overwrite").parquet(dest))
+    val rows = encode(layoutModel(spark, indexDir, layout))
+    val n = graft.Writes.writeCounted(rows)(_.write.mode("overwrite")
+      .parquet(s"$indexDir/$DeltaDirName/ingest_batch=$batchId"))
     spark.catalog.refreshByPath(indexDir)
     n
   }
@@ -1056,7 +1080,7 @@ object Similarity {
     * Returns (rowsMerged, cellsRewritten); (0, 0) with no delta. */
   def ivfCompactDelta(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): (Long, Long) =
-    compactDeltaInto(spark, indexDir, "cell_id")
+    compactDeltaInto(spark, indexDir, IvfLayout.partCol)
 
   /** [[ivfCompactDelta]] / [[pqCompactDelta]] shared machinery: fold
     * the `_delta` segment into the `partCol=` partitions it touches,
@@ -1136,7 +1160,7 @@ object Similarity {
   }
 
   /** PQ distortion gauge — [[indexFitReport]]'s codebook sibling,
-    * the RETRAIN TRIGGER for [[pqPatchIndex]]: per batch, the
+    * the RETRAIN TRIGGER for [[pqPatchIndexAuto]]: per batch, the
     * quantization error a vector would suffer under the standing
     * books (Σ over subspaces of squared L2 to the nearest codeword —
     * exactly the ADC approximation loss), folded to one row
@@ -1166,7 +1190,7 @@ object Similarity {
   }
 
   /** FILTERED vector search over an attribute-carrying
-    * [[ivfWriteIndex]] layout: [[ivfTopKIndexed]] with a metadata
+    * [[ivfWriteIndex]] layout: [[ivfTopKIndexedAuto]] with a metadata
     * `predicate` over the index's stored attribute columns ("top-k
     * neighbors among docs WHERE lang = 'en'", the
     * retrieval-with-access-control / faceted-RAG shape). The
@@ -1185,21 +1209,22 @@ object Similarity {
     * within the probed cells is unchanged — scores are exact cosines
     * over the filtered candidates. */
   def ivfTopKIndexedWhere(spark: org.apache.spark.sql.SparkSession,
-                          indexDir: String, centroids: Seq[Seq[Double]],
-                          queries: DataFrame, k: Int,
+                          indexDir: String, queries: DataFrame, k: Int,
                           predicate: org.apache.spark.sql.Column,
                           nProbe: Int = 4,
                           idCol: String = "vec_id",
                           vecCol: String = "embedding",
                           qIdCol: String = "query_id",
-                          qVecCol: String = "query_vec"): DataFrame =
+                          qVecCol: String = "query_vec"): DataFrame = {
+    val centroids = servedModel(spark, indexDir, IvfLayout).head
     // the predicate rides BELOW the main∪delta union — Catalyst
     // pushes it through Union into each branch's parquet reader
     scoreProbedCells(
-      indexFrame(spark, indexDir, "cell_id",
+      indexFrame(spark, indexDir, IvfLayout,
           Some(probedCells(queries, centroids, nProbe, qVecCol)))
         .filter(predicate),
       centroids, queries, k, nProbe, idCol, vecCol, qIdCol, qVecCol)
+  }
 
   /** Seeded gaussian hyperplanes, quantized to 6 decimals. Each
     * component is exactly n/1e6 for an integer n, so a SQL oracle can
@@ -1726,14 +1751,17 @@ object Similarity {
     * only. */
   private[graft] def pqEncode(
       corpus: DataFrame, books: Seq[Seq[Seq[Double]]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = books.length
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    corpus.select(col(idCol), pqCodes(col(vecCol), books).as("codes"))
+
+  /** A vector's codes under `books`: per subspace, the nearest
+    * sub-centroid of its slice. */
+  private def pqCodes(vec: Column, books: Seq[Seq[Seq[Double]]]): Column = {
     val sub = books.head.head.length
-    corpus.select(col(idCol),
-      array((0 until m).map { s =>
-        graft.functions.SketchExprs.nearestCell(
-          slice(col(vecCol), s * sub + 1, sub), books(s))
-      }: _*).as("codes"))
+    array(books.indices.map { s =>
+      graft.functions.SketchExprs.nearestCell(
+        slice(vec, s * sub + 1, sub), books(s))
+    }: _*)
   }
 
   /** PQ/ADC top-k: queries broadcast with a per-query lookup table of
@@ -1765,94 +1793,45 @@ object Similarity {
   def pqWriteIndex(corpus: DataFrame, books: Seq[Seq[Seq[Double]]],
                    indexDir: String, idCol: String = "vec_id",
                    vecCol: String = "embedding",
-                   nBuckets: Int = 16): Unit = {
-    graft.Writes.clusterByPartitions(
-        pqEncode(corpus, books, idCol, vecCol)
-          // stable id-hash buckets: the rewrite unit for
-          // [[pqPatchIndex]] (bucket membership never moves with a
-          // codebook refresh, so an unaffected bucket's files survive
-          // the patch byte-for-byte)
-          .withColumn("pq_bucket",
-            pmod(col(idCol), lit(nBuckets.toLong))), "pq_bucket")
-      .write.mode("overwrite").partitionBy("pq_bucket").parquet(indexDir)
-    // codebook sidecar: codes are meaningless without the books they
-    // were encoded with — publish the authoritative set next to them
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    writeModelSidecar(
-      root.getFileSystem(
-        corpus.sparkSession.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(root, BooksSidecar),
-      booksRows(books))
-  }
+                   nBuckets: Int = 16): Unit =
+    // stable id-hash buckets: the rewrite unit for [[pqPatchIndexAuto]]
+    // (bucket membership never moves with a codebook refresh, so an
+    // unaffected bucket's files survive the patch byte-for-byte); the
+    // codebook sidecar goes next to them — codes are meaningless
+    // without the books they were encoded with
+    writeLayout(
+      pqEncode(corpus, books, idCol, vecCol)
+        .withColumn("pq_bucket", pmod(col(idCol), lit(nBuckets.toLong))),
+      PqLayout, indexDir, books)
 
-  private def booksRows(books: Seq[Seq[Seq[Double]]])
-      : Seq[(Int, Long, Seq[Double])] =
-    for {
-      (book, sIdx) <- books.zipWithIndex
-      (cv, c) <- book.zipWithIndex
-    } yield (sIdx, c.toLong, cv)
-
-  /** Read the codebooks a [[pqWriteIndex]] table was built (or last
-    * patched) with, from its `_books.txt` sidecar. */
-  private[graft] def pqIndexBooks(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String)
-      : Option[Seq[Seq[Seq[Double]]]] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    readModelSidecar(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(root, BooksSidecar))
-      .map(_.groupBy(_._1).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_._2).map(_._3)))
-  }
-
-  /** The codebooks every sidecar-driven PQ operator (serve, patch,
-    * append, fit monitor) runs under; fails naming the dir when it is
-    * not a [[pqWriteIndex]] table. */
-  private[graft] def sidecarBooks(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String)
-      : Seq[Seq[Seq[Double]]] =
-    pqIndexBooks(spark, indexDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"$indexDir has no $BooksSidecar sidecar — not a " +
-          "pqWriteIndex table (rebuild it, or pass books explicitly " +
-          "to pqTopKIndexed)"))
-
-  /** [[pqTopKIndexed]] with the codebooks derived from the table's own
-    * sidecar — ADC scoring cannot silently disagree with the books the
-    * codes were produced under. */
+  /** ADC top-k over a persisted [[pqWriteIndex]] code table, under the
+    * codebooks of the table's own sidecar — ADC scoring cannot
+    * silently disagree with the books the codes were produced under.
+    * No vector read, no encode recompute: the scan is the code-width
+    * parquet. Serves main ∪ `_delta` when a [[pqAppendBatch]] segment
+    * stands (delta codes were encoded under the same sidecar books). */
   def pqTopKIndexedAuto(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String, queries: DataFrame, k: Int,
                         idCol: String = "vec_id",
                         qIdCol: String = "query_id",
                         qVecCol: String = "query_vec"): DataFrame = {
-    // refuse a half-swapped layer before its sidecar reads as missing
-    requireSettledIndex(spark, indexDir)
-    pqTopKIndexed(spark, indexDir, sidecarBooks(spark, indexDir),
-      queries, k, idCol, qIdCol, qVecCol)
+    val books = servedModel(spark, indexDir, PqLayout)
+    pqTopKFromCodes(indexFrame(spark, indexDir, PqLayout), queries,
+      books, k, idCol, qIdCol, qVecCol)
   }
-
-  /** [[pqPatchIndex]] with the OLD books derived from the sidecar (the
-    * set the standing codes were actually produced under — passing a
-    * stale/wrong old set would mis-detect the changed rows). */
-  def pqPatchIndexAuto(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, corpus: DataFrame,
-                       newBooks: Seq[Seq[Seq[Double]]],
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       nBuckets: Int = 16): (Long, Long) =
-    pqPatchIndex(spark, indexDir, corpus, sidecarBooks(spark, indexDir),
-      newBooks, idCol, vecCol, nBuckets)
 
   /** Patch a persisted [[pqWriteIndex]] code table IN PLACE after a
     * codebook refresh — the PQ half of the [[ivfPatchIndex]] story.
-    * One narrow `(id, vector)` corpus scan encodes each row under
-    * BOTH books; only buckets containing a row whose codes changed
-    * are rewritten (all their rows re-encoded under `newBooks` —
-    * the parquet partition is the rewrite unit), through the SAME
-    * commit-marker swap protocol as [[ivfPatchIndex]], so a crash at
-    * any point is recovered on the next entry and untouched buckets
-    * keep their files byte-for-byte. Returns
-    * `(rowsChanged, bucketsRewritten)`.
+    * The OLD books are the sidecar's (the set the standing codes were
+    * actually produced under), read once any pending swap has landed:
+    * a stale old set would mis-detect the changed rows. One narrow
+    * `(id, vector)` corpus scan encodes each row under BOTH books;
+    * only buckets containing a row whose codes changed are rewritten
+    * (all their rows re-encoded under `newBooks` — the parquet
+    * partition is the rewrite unit), through the SAME commit-marker
+    * swap protocol as [[ivfPatchIndex]], so a crash at any point is
+    * recovered on the next entry and untouched buckets keep their
+    * files byte-for-byte. Returns `(rowsChanged, bucketsRewritten)`.
     *
     * Unlike IVF (whose index stores the vectors), a PQ refresh MUST
     * read vectors to re-encode — the honest 100 TB cost is one
@@ -1870,34 +1849,17 @@ object Similarity {
     * uncovered row could neither be re-checked for movement nor
     * rewritten — it would serve stale codes under the advanced
     * sidecar), or the patch fails fast before touching anything. */
-  def pqPatchIndex(spark: org.apache.spark.sql.SparkSession,
-                   indexDir: String, corpus: DataFrame,
-                   oldBooks: Seq[Seq[Seq[Double]]],
-                   newBooks: Seq[Seq[Seq[Double]]],
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding",
-                   nBuckets: Int = 16): (Long, Long) = {
+  def pqPatchIndexAuto(spark: org.apache.spark.sql.SparkSession,
+                       indexDir: String, corpus: DataFrame,
+                       newBooks: Seq[Seq[Seq[Double]]],
+                       idCol: String = "vec_id",
+                       vecCol: String = "embedding",
+                       nBuckets: Int = 16): (Long, Long) = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a committed-but-unswapped takedown must land before this patch
-    // reads the index, or the patch would re-encode rows destined for
-    // removal
-    Swap.completePending(spark, indexDir)
-    // a standing delta was encoded under the CURRENT sidecar books;
-    // patching around it would leave stale codes served — fold first
-    // (same probe and same pending-tmp landing as ivfPatchIndex)
-    Swap.completePending(spark, deltaDir(indexDir).toString)
-    require(deltaBatches(spark, indexDir) == 0,
-      s"pqPatchIndex: $indexDir has a standing $DeltaDirName " +
-        "segment — run pqCompactDelta first, then patch")
+    settleForPatch(spark, indexDir, "pqPatchIndexAuto", "pqCompactDelta")
+    val oldBooks = layoutModel(spark, indexDir, PqLayout)
     if (oldBooks == newBooks) return (0L, 0L)
-    def enc(books: Seq[Seq[Seq[Double]]]) = {
-      val sub = books.head.head.length
-      array(books.indices.map { s =>
-        graft.functions.SketchExprs.nearestCell(
-          slice(col(vecCol), s * sub + 1, sub), books(s))
-      }: _*)
-    }
     // the patch re-encodes the STANDING membership, not whatever the
     // caller handed us: a corpus row absent from the index (taken
     // down, or never appended) must not resurrect into an affected
@@ -1907,7 +1869,8 @@ object Similarity {
       .select(col(idCol), col("pq_bucket").cast("long").as("_ib"))
     val re = corpus.select(col(idCol),
         pmod(col(idCol), lit(nBuckets.toLong)).as("pq_bucket"),
-        enc(oldBooks).as("_old"), enc(newBooks).as("_new"))
+        pqCodes(col(vecCol), oldBooks).as("_old"),
+        pqCodes(col(vecCol), newBooks).as("_new"))
       .join(idxIds.select(col(idCol)), Seq(idCol), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1921,7 +1884,7 @@ object Similarity {
     val uncovered = idxIds
       .join(re.select(col(idCol)), Seq(idCol), "left_anti").count()
     require(uncovered == 0L,
-      s"pqPatchIndex: $uncovered index rows of $indexDir are " +
+      s"pqPatchIndexAuto: $uncovered index rows of $indexDir are " +
         "missing from the supplied corpus — their codes could " +
         "neither be re-checked nor rewritten under the new books; " +
         "pass a corpus covering the index's current membership")
@@ -1946,26 +1909,11 @@ object Similarity {
                 col("pq_bucket")), "pq_bucket")
           .write.partitionBy("pq_bucket").parquet(tmp.toString)
       writeModelSidecar(fs,
-        new org.apache.hadoop.fs.Path(tmp, BooksSidecar),
-        booksRows(newBooks))
+        new org.apache.hadoop.fs.Path(tmp, BooksSidecar), newBooks)
     }
     (moved, affected.length.toLong)
     } finally re.unpersist(blocking = false)
   }
-
-  /** ADC top-k over a persisted [[pqWriteIndex]] code table: no
-    * vector read, no encode recompute — the scan is the code-width
-    * parquet. Books must be the set the index was encoded with.
-    * Serves main ∪ `_delta` when a [[pqAppendBatch]] segment stands
-    * (delta codes were encoded under the same sidecar books). */
-  def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                    indexDir: String, books: Seq[Seq[Seq[Double]]],
-                    queries: DataFrame, k: Int,
-                    idCol: String = "vec_id",
-                    qIdCol: String = "query_id",
-                    qVecCol: String = "query_vec"): DataFrame =
-    pqTopKFromCodes(indexFrame(spark, indexDir, "pq_bucket"), queries,
-      books, k, idCol, qIdCol, qVecCol)
 
   /** [[ivfAppendBatch]]'s PQ sibling: encode the new vectors under
     * the table's own sidecar books and publish them as a batch-keyed
@@ -1978,26 +1926,20 @@ object Similarity {
                     indexDir: String, rows: DataFrame, batchId: Long,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
-                    nBuckets: Int = 16): Long = {
-    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    Swap.completePending(spark, indexDir)
-    val books = sidecarBooks(spark, indexDir)
-    val dest = s"$indexDir/$DeltaDirName/ingest_batch=$batchId"
-    val n = graft.Writes.writeCounted(pqEncode(rows, books, idCol, vecCol)
-        .withColumn("pq_bucket", pmod(col(idCol), lit(nBuckets.toLong))))(
-      _.write.mode("overwrite").parquet(dest))
-    spark.catalog.refreshByPath(indexDir)
-    n
-  }
+                    nBuckets: Int = 16): Long =
+    appendDelta(spark, indexDir, PqLayout, batchId) { books =>
+      pqEncode(rows, books, idCol, vecCol)
+        .withColumn("pq_bucket", pmod(col(idCol), lit(nBuckets.toLong)))
+    }
 
   /** Fold a [[pqAppendBatch]] `_delta` segment into its `pq_bucket=`
     * partitions — [[ivfCompactDelta]]'s protocol on the code table. */
   def pqCompactDelta(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String): (Long, Long) =
-    compactDeltaInto(spark, indexDir, "pq_bucket")
+    compactDeltaInto(spark, indexDir, PqLayout.partCol)
 
   /** The ADC scoring core shared by [[pqTopK]] (inline encode) and
-    * [[pqTopKIndexed]] (persisted codes): `codes` is any
+    * [[pqTopKIndexedAuto]] (persisted codes): `codes` is any
     * `(id, codes array<long>)` relation. */
   private def pqTopKFromCodes(codes: DataFrame, queries: DataFrame,
                               books: Seq[Seq[Seq[Double]]], k: Int,

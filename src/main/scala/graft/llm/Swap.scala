@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * a standing layer: takedown scrubs ([[Takedown]]), delta folds
   * ([[Similarity.ivfCompactDelta]] / [[Similarity.pqCompactDelta]]),
   * centroid or codebook patches ([[Similarity.ivfPatchIndex]] /
-  * [[Similarity.pqPatchIndex]], model sidecar included) and
+  * [[Similarity.pqPatchIndexAuto]], model sidecar included) and
   * batch-layer compactions
   * ([[graft.streaming.IngestStream.cmsCompact]] /
   * [[graft.streaming.IngestStream.ingestLayerCompact]]: the fold is

@@ -13,24 +13,6 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType,
   */
 object TextAnalysis {
 
-  /** Conf key (session conf or system property, double, default 0 =
-    * off) loosening the pruned serve's cost-routing gate: when > 0, a
-    * query whose min-df heuristic would route it straight to the full
-    * scan still ATTEMPTS the prune iff `sliceM >= ratio * k` (the
-    * cheap "k << sliceM" condition). Never a correctness knob — the
-    * bound check still decides per query, both routes stay exact; it
-    * trades slice-arm work on saturated batches for recall of
-    * provable queries on heavy-tailed postings (steep in-slice decay
-    * with no fully-covered term — the regime the min-df signal
-    * misses; LlmSpec plants exactly that fixture). */
-  val AttemptPruneRatioKey = "spark.graft.bm25.attemptPruneRatio"
-
-  private def attemptPruneRatio(
-      spark: org.apache.spark.sql.SparkSession): Double =
-    spark.conf.getOption(AttemptPruneRatioKey)
-      .orElse(sys.props.get(AttemptPruneRatioKey))
-      .flatMap(_.toDoubleOption).getOrElse(0.0)
-
   /** Non-empty whitespace tokens. */
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), t => t =!= "")
@@ -719,28 +701,16 @@ object TextAnalysis {
     // HEAVY-TAILED real text a steep in-slice decay CAN put theta
     // above a minima-built bound with no fully-covered term, so this
     // gate trades those (rarer) provable queries for never paying the
-    // doomed-attempt cost on saturated ones; a deployment tuning for
-    // recall of prunable queries opts in via AttemptPruneRatioKey
-    // (attempt the prune whenever sliceM >= ratio * k — measured
-    // provable on the planted heavy-tailed LlmSpec fixture, default
-    // OFF because on the flat planted/stopword regimes the attempt
-    // is pure doomed-arm cost). Queries with NO matched terms route
-    // to the full scan too (empty either way). Routing uses the
-    // exact df the batch resolution already holds (`batch.layer.df`),
-    // so it costs no read of its own, and a takedown that lowers a
-    // term's df moves its route with it.
-    // per-query min df, routed ON THE DRIVER (one row per query). The
-    // opt-in looser routing (AttemptPruneRatioKey) folds in as a
-    // driver-side constant; queries with no matched terms still route
-    // to the full scan
-    val attemptAnyway = {
-      val r = attemptPruneRatio(spark)
-      r > 0.0 && sliceM >= r * k
-    }
+    // doomed-attempt cost on saturated ones. Queries with NO matched
+    // terms route to the full scan too (empty either way). Routing
+    // uses the exact df the batch resolution already holds
+    // (`batch.layer.df`), so it costs no read of its own, and a
+    // takedown that lowers a term's df moves its route with it.
+    // per-query min df, routed ON THE DRIVER (one row per query)
     val pruneIds: Set[Any] = batch.qt
       .flatMap { case (q, t, _) => batch.layer.df.get(t).map(q -> _) }
       .groupMapReduce(_._1)(_._2)(math.min)
-      .collect { case (q, d) if d <= sliceM || attemptAnyway => q }.toSet
+      .collect { case (q, d) if d <= sliceM => q }.toSet
     // routed-to-full queries never enter the slice arm: their verdict
     // row reports zero candidates and null theta/bound
     val routed = spark.createDataFrame(java.util.Arrays.asList(

@@ -737,7 +737,7 @@ object LlmQueries {
       Similarity.ivfWriteIndex(emb, cents, idxDir)
       Similarity.ivfPatchIndex(s, idxDir, newC)
       val q = queryVecs(emb)
-      Similarity.ivfTopKIndexed(s, idxDir, newC, q, k = 10,
+      Similarity.ivfTopKIndexedAuto(s, idxDir, q, k = 10,
           nProbe = 4)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -764,7 +764,7 @@ object LlmQueries {
       Takedown.ivfTakedown(s, idxDir,
         emb.filter(col("vec_id") % 9 === 4).select("vec_id"))
       val q = queryVecs(emb)
-      Similarity.ivfTopKIndexed(s, idxDir, cents, q, k = 10,
+      Similarity.ivfTopKIndexedAuto(s, idxDir, q, k = 10,
           nProbe = 4)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -789,7 +789,7 @@ object LlmQueries {
       Similarity.ivfAppendBatch(s, idxDir,
         emb.filter(col("vec_id") % 2 =!= 0), batchId = 0L)
       val q = queryVecs(emb)
-      Similarity.ivfTopKIndexed(s, idxDir, cents, q, k = 10,
+      Similarity.ivfTopKIndexedAuto(s, idxDir, q, k = 10,
           nProbe = 4)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -814,7 +814,7 @@ object LlmQueries {
         emb.withColumn("grp", col("vec_id") % 5), cents, idxDir,
         attrCols = Seq("grp"))
       val q = queryVecs(emb)
-      Similarity.ivfTopKIndexedWhere(s, idxDir, cents, q, k = 10,
+      Similarity.ivfTopKIndexedWhere(s, idxDir, q, k = 10,
           predicate = col("grp") === 2, nProbe = 4)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -956,9 +956,9 @@ object LlmQueries {
         emb.filter(col("vec_id") % 2 === 1), m = 4, k = 16, iters = 2)
       val idxDir = scratchPath("pqpatch", dir)
       Similarity.pqWriteIndex(emb, books, idxDir)
-      Similarity.pqPatchIndex(s, idxDir, emb, books, newBooks)
+      Similarity.pqPatchIndexAuto(s, idxDir, emb, newBooks)
       val q = queryVecs(emb)
-      Similarity.pqTopKIndexed(s, idxDir, newBooks, q, k = 10)
+      Similarity.pqTopKIndexedAuto(s, idxDir, q, k = 10)
         .orderBy(col("query_id"), col("rank"))
     },
       pqOracle(m = 4, kk = 16, iters = 2, sub = 16,
@@ -978,7 +978,7 @@ object LlmQueries {
       Takedown.pqTakedown(s, idxDir,
         emb.filter(col("vec_id") % 11 === 3).select("vec_id"))
       val q = queryVecs(emb)
-      Similarity.pqTopKIndexed(s, idxDir, books, q, k = 10)
+      Similarity.pqTopKIndexedAuto(s, idxDir, q, k = 10)
         .orderBy(col("query_id"), col("rank"))
     },
       pqOracle(m = 4, kk = 16, iters = 2, sub = 16,
@@ -1000,7 +1000,7 @@ object LlmQueries {
       Similarity.pqAppendBatch(s, idxDir,
         emb.filter(col("vec_id") % 2 =!= 0), batchId = 0L)
       val q = queryVecs(emb)
-      Similarity.pqTopKIndexed(s, idxDir, books, q, k = 10)
+      Similarity.pqTopKIndexedAuto(s, idxDir, q, k = 10)
         .orderBy(col("query_id"), col("rank"))
     },
       pqOracle(m = 4, kk = 16, iters = 2, sub = 16,

@@ -161,10 +161,7 @@ object Formats {
           fs.listStatus(p).toSeq.map(_.getPath).filterNot(f =>
             f.getName.startsWith("_") || f.getName.startsWith("."))
         else Seq(p)
-      files.map { f =>
-        val in = fs.open(f)
-        try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      }
+      files.map(graft.Writes.readUtf8(fs, _))
     }
 
     def read(s: SparkSession, paths: Seq[String], schema: Option[StructType]) = {

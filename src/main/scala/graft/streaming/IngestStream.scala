@@ -422,10 +422,7 @@ object IngestStream {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val txt = graft.Writes.readUtf8(fs, p)
       def field(k: String): Long = {
         val m = java.util.regex.Pattern.compile(s""""$k":(-?\\d+)""")
           .matcher(txt)
@@ -721,8 +718,8 @@ object IngestStream {
                     trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
     microBatches(vectors, reportDir, checkpointDir, trigger) { (batch, bid) =>
-      val cents = graft.llm.Similarity.sidecarCentroids(batch.sparkSession,
-        indexDir)
+      val cents = graft.llm.Similarity.servedModel(batch.sparkSession,
+        indexDir, graft.llm.Similarity.IvfLayout).head
       graft.llm.Similarity.indexFitReport(batch, cents, tau, vecCol)
         .write.mode("overwrite")
         .parquet(s"$reportDir/ingest_batch=$bid")
@@ -735,7 +732,7 @@ object IngestStream {
     * layout's `_books.txt` sidecar, published batch-keyed (overwrite
     * ⇒ replay replaces). Rising `mean_qerr` / `frac_beyond` is the
     * measured signal to retrain books and run
-    * [[graft.llm.Similarity.pqPatchIndex]] BEFORE ADC ranking
+    * [[graft.llm.Similarity.pqPatchIndexAuto]] BEFORE ADC ranking
     * quality degrades. Pure observation — never retrains, never
     * touches the code table; one narrow pass per batch, one row of
     * state each. */
@@ -746,8 +743,8 @@ object IngestStream {
                    trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
     microBatches(vectors, reportDir, checkpointDir, trigger) { (batch, bid) =>
-      val books = graft.llm.Similarity.sidecarBooks(batch.sparkSession,
-        indexDir)
+      val books = graft.llm.Similarity.servedModel(batch.sparkSession,
+        indexDir, graft.llm.Similarity.PqLayout)
       graft.llm.Similarity.pqFitReport(batch, books, tau, vecCol)
         .write.mode("overwrite")
         .parquet(s"$reportDir/ingest_batch=$bid")

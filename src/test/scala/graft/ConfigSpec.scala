@@ -908,8 +908,8 @@ class ConfigSpec extends AnyFunSuite {
     val autoCells = graft.llm.Similarity.ivfAutoCells(
       spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .count())
-    val sidecarN = graft.llm.Similarity
-      .ivfIndexCentroids(spark, ivfLayer).get.length
+    val sidecarN = graft.llm.Similarity.servedModel(spark, ivfLayer,
+      graft.llm.Similarity.IvfLayout).head.length
     assert(sidecarN <= autoCells && sidecarN >= 2,
       s"ivf auto geometry: sidecar $sidecarN vs auto $autoCells")
     // pq kind: build -> bucket patch -> ADC serve over the code table
@@ -1054,8 +1054,17 @@ class ConfigSpec extends AnyFunSuite {
     CLI.run(Array("takedown", "run", specFile, "-o", "kind=cms",
       "--loc", s"/Index/layer=$base/cms_layer",
       "--loc", s"/Outputs/audit=$base/cms_audit.parquet"), spark)
-    val (_, rmC, _, _) = audit(s"$base/cms_audit.parquet")
+    val (_, rmC, _, leftC) = audit(s"$base/cms_audit.parquet")
     assert(rmC == nIds, s"cms audit must count removed docs: $rmC")
+    // the corpus layer beside the sketch lost the removed docs too, so
+    // a build=false rerun finds nothing left to subtract: (0, 0)
+    CLI.run(Array("takedown", "run", specFile, "-o", "kind=cms",
+      "-o", "build=false",
+      "--loc", s"/Index/layer=$base/cms_layer",
+      "--loc", s"/Outputs/audit=$base/cms_audit.parquet"), spark)
+    val (_, rmC2, partsC2, leftC2) = audit(s"$base/cms_audit.parquet")
+    assert(rmC2 == 0L && partsC2 == 0L && leftC2 == leftC,
+      s"cms rerun must audit a no-op: ${(rmC2, partsC2, leftC2)}")
     graft.cache.Pins.release(spark)
   }
 

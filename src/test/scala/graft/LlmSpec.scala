@@ -610,7 +610,7 @@ class LlmSpec extends AnyFunSuite {
     Similarity.ivfWriteIndex(emb, cents, indexDir)
     val queries = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    val fromIndex = Similarity.ivfTopKIndexed(spark, indexDir, cents,
+    val fromIndex = Similarity.ivfTopKIndexedAuto(spark, indexDir,
       queries, k = 10, nProbe = 4)
     val inMemory = Similarity.ivfTopKWith(cents, emb, queries, k = 10,
       nProbe = 4)
@@ -671,7 +671,7 @@ class LlmSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"))
-    val fromIndex = Similarity.pqTopKIndexed(spark, indexDir, books,
+    val fromIndex = Similarity.pqTopKIndexedAuto(spark, indexDir,
       queries, k = 10)
     val inline = Similarity.pqTopK(emb, queries, books, k = 10)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -2923,10 +2923,11 @@ class LlmSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cells(s"$base/patched") == cells(s"$base/rebuilt"),
       "patched index must be indistinguishable from a rebuild")
-    // the centroid sidecar advanced with the patch: serving through
-    // the Auto overload (sidecar-derived set) == explicit newC
-    assert(Similarity.ivfIndexCentroids(spark, s"$base/patched")
-      .contains(newC), "sidecar must carry the refreshed set exactly")
+    // the centroid sidecar advanced with the patch: the layout serves
+    // under newC, as in-memory IVF over the corpus does
+    assert(Similarity.servedModel(spark, s"$base/patched",
+      Similarity.IvfLayout) == Seq(newC),
+      "sidecar must carry the refreshed set exactly")
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"))
@@ -2935,8 +2936,8 @@ class LlmSpec extends AnyFunSuite {
         ((r.getLong(2), r.getDouble(3)))).toMap
     assert(srv(Similarity.ivfTopKIndexedAuto(spark, s"$base/patched",
         q, k = 5)) ==
-      srv(Similarity.ivfTopKIndexed(spark, s"$base/patched", newC, q,
-        k = 5)), "Auto serve must equal the explicit-centroids serve")
+      srv(Similarity.ivfTopKWith(newC, emb, q, k = 5)),
+      "the patched layout must serve as in-memory IVF under newC")
     // convergence: a second patch with the same centroids moves nothing
     assert(Similarity.ivfPatchIndex(spark, s"$base/patched", newC) ==
       ((0L, 0L)))
@@ -2983,7 +2984,7 @@ class LlmSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     val filtered = srv(Similarity.ivfTopKIndexedWhere(spark, base,
-      cents, q, k = 5, predicate = col("grp") === 2))
+      q, k = 5, predicate = col("grp") === 2))
     // reference: the same probe path over a corpus PRE-restricted to
     // the predicate — filtered search must equal filter-then-search
     // within the probed cells
@@ -2993,10 +2994,6 @@ class LlmSpec extends AnyFunSuite {
       "filtered search must equal filter-then-search")
     assert(filtered.forall(_._3 % 5 == 2),
       "every returned neighbor honors the predicate")
-    // the layout's own sidecar centroids serve identically
-    def sidecar = Similarity.ivfIndexCentroids(spark, base).get
-    assert(srv(Similarity.ivfTopKIndexedWhere(spark, base, sidecar, q,
-      k = 5, predicate = col("grp") === 2)) == filtered)
     // a patch rewrite must CARRY the attribute columns: patch to a
     // refreshed set, then filtered search still works and every row
     // of the index still has its grp
@@ -3009,7 +3006,7 @@ class LlmSpec extends AnyFunSuite {
       idx.filter(col("grp") =!= col("vec_id") % 5).count() == 0,
       "attribute columns must survive the patch rewrite intact")
     val afterPatch = srv(Similarity.ivfTopKIndexedWhere(spark,
-      base, sidecar, q, k = 5, predicate = col("grp") === 2))
+      base, q, k = 5, predicate = col("grp") === 2))
     val wantPatched = srv(Similarity.ivfTopKWith(newC,
       emb.filter(col("vec_id") % 5 === 2), q, k = 5))
     assert(afterPatch == wantPatched,
@@ -3382,8 +3379,8 @@ class LlmSpec extends AnyFunSuite {
     val newBooks = Similarity.pqCodebooks(
       emb.filter(col("vec_id") % 2 === 1), m = 4, k = 16, iters = 2)
     Similarity.pqWriteIndex(emb, books, s"$base/patched")
-    val (moved, rewritten) = Similarity.pqPatchIndex(spark,
-      s"$base/patched", emb, books, newBooks)
+    val (moved, rewritten) = Similarity.pqPatchIndexAuto(spark,
+      s"$base/patched", emb, newBooks)
     assert(moved > 0 && rewritten > 0,
       "the odd-half retrain must re-code something on real data")
     Similarity.pqWriteIndex(emb, newBooks, s"$base/rebuilt")
@@ -3392,31 +3389,24 @@ class LlmSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(codes(s"$base/patched") == codes(s"$base/rebuilt"),
       "patched code table must be indistinguishable from a rebuild")
-    // the books sidecar advanced with the patch: Auto overloads need
-    // no explicit model and must agree with the explicit paths
-    assert(Similarity.pqIndexBooks(spark, s"$base/patched")
-      .contains(newBooks), "sidecar must carry the refreshed books")
-    // convergence: re-running the same patch moves nothing; the Auto
-    // variant derives the old books from the sidecar
+    // the books sidecar advanced with the patch, so the serve and a
+    // later patch run under the refreshed books
+    assert(Similarity.servedModel(spark, s"$base/patched",
+      Similarity.PqLayout) == newBooks,
+      "sidecar must carry the refreshed books")
+    // convergence: re-running the same patch moves nothing (the old
+    // books, read from the sidecar, already equal the new ones)
     assert(Similarity.pqPatchIndexAuto(spark, s"$base/patched", emb,
       newBooks) == ((0L, 0L)))
-    assert(Similarity.pqPatchIndex(spark, s"$base/patched", emb,
-      newBooks, newBooks) == ((0L, 0L)))
     // served results from the patched table == from the rebuilt one
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"))
-    def serve(dir: String) = Similarity.pqTopKIndexed(spark, dir,
-        newBooks, q, k = 5).collect()
+    def serve(dir: String) = Similarity.pqTopKIndexedAuto(spark, dir,
+        q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getDouble(3)))).toMap
     assert(serve(s"$base/patched") == serve(s"$base/rebuilt"))
-    assert(Similarity.pqTopKIndexedAuto(spark, s"$base/patched", q,
-        k = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getDouble(3)))).toMap ==
-      serve(s"$base/patched"),
-      "Auto serve (sidecar books) must equal the explicit serve")
     // --- planted: one sub-centroid shift re-codes ONE row; only its
     // bucket is rewritten, the other buckets keep their files
     val oldP = Seq(Seq(Seq(0.0, 0.0), Seq(10.0, 0.0)),
@@ -3434,8 +3424,8 @@ class LlmSpec extends AnyFunSuite {
       .map(_.map(f => (f.getName, f.length, f.lastModified))
         .sortBy(_._1).toSeq)
     val (b1Before, b3Before) = (listing(1L), listing(3L))
-    val (m2, r2) = Similarity.pqPatchIndex(spark, s"$base/planted",
-      pts, oldP, newP, nBuckets = 4)
+    val (m2, r2) = Similarity.pqPatchIndexAuto(spark, s"$base/planted",
+      pts, newP, nBuckets = 4)
     assert(m2 == 1L && r2 == 1L, s"expected 1 row / 1 bucket: $m2 $r2")
     assert(listing(1L) == b1Before && listing(3L) == b3Before,
       "untouched buckets must keep their files byte-for-byte")
@@ -3493,7 +3483,8 @@ class LlmSpec extends AnyFunSuite {
     assert(cellMap() == Map(1L -> 0L, 2L -> 0L, 3L -> 2L),
       "recovery must land row 2 in cell 0 — not lose it")
     assert(!new java.io.File(tmp).exists(), "tmp cleared after recovery")
-    assert(Similarity.ivfIndexCentroids(spark, dir).contains(newP),
+    assert(Similarity.servedModel(spark, dir, Similarity.IvfLayout)
+        == Seq(newP),
       "recovery must finalize the staged centroid sidecar too")
     // an UNCOMMITTED tmp (write crashed before the marker) never
     // touched the live index — it is garbage, discarded on entry
@@ -3605,69 +3596,6 @@ class LlmSpec extends AnyFunSuite {
       s"every rare-token query must be slice-answered on the " +
         s"salted testdata corpus: $st2")
     graft.cache.Pins.release(spark)
-  }
-
-  test("bm25 routing flag (attemptPruneRatio): heavy-tailed postings " +
-       "with NO fully-covered term route to full scan by default, but " +
-       "the opted-in attempt PROVES its bound and serves identically") {
-    import spark.implicits._
-    val base = graft.Scratch.root + "/bm25route_flag_spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    // planted HEAVY-TAILED corpus — the regime the min-df heuristic
-    // misses by construction: 5 "hot" docs carry every query term at
-    // tf=10; each term additionally lives in 26 long filler docs at
-    // tf=1 (df = 31 > sliceM = 16, so NO term is fully covered and
-    // min(df) says saturated), yet in-slice contribution decays
-    // steeply hot -> filler, so theta (hot-doc scores, ~4 high terms)
-    // clears a bound built purely from slice minima (~4 low tails)
-    val hot = (0 until 5).map(i =>
-      (i.toLong, Seq.fill(10)("h0 h1 h2 h3").mkString(" ")))
-    val fillerWords = (0 until 30).map(j => s"f$j").mkString(" ")
-    val tailDocs = for { t <- 0 until 4; j <- 0 until 26 } yield
-      ((100 + t * 26 + j).toLong, s"h$t $fillerWords")
-    TextAnalysis.bm25PostingsBatch((hot ++ tailDocs).toDF("doc_id", "text"),
-      base, batchId = 0L)
-    val qs = Seq((1L, "h0 h1 h2 h3")).toDF("query_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    // default routing: every matched term has df (31) > sliceM (16)
-    // -> straight to the full scan, the attempt is never made
-    val stOff = TextAnalysis.bm25PrunedCore(spark, base, qs,
-        k = 2, sliceM0 = 16)._2
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2),
-        r.getBoolean(4))).toSeq
-    graft.cache.Pins.release(spark)
-    assert(stOff == Seq((1L, 0L, true, false)),
-      s"min-df heuristic must route the heavy-tailed query to the " +
-        s"full scan when the flag is off: $stOff")
-    spark.conf.set(TextAnalysis.AttemptPruneRatioKey, "4")
-    try {
-      // ratio 4, k=2: sliceM (16) >= 8 -> attempt; the bound PROVES
-      // the slice answer exact and the serve matches the full scan
-      val (served, stats) = TextAnalysis.bm25PrunedCore(
-        spark, base, qs, k = 2, sliceM0 = 16)
-      val got = rows(served)
-      val st = stats.collect()
-        .map(r => (r.getLong(0), r.getBoolean(4))).toSeq
-      graft.cache.Pins.release(spark)
-      assert(st == Seq((1L, true)),
-        s"opted-in attempt must PROVE its bound on the heavy tail: $st")
-      val full = rows(TextAnalysis.bm25TopKFromPostings(
-        spark, base, qs, k = 2))
-      graft.cache.Pins.release(spark)
-      assert(got == full && got.map(_._3) == Seq(0L, 1L),
-        s"flagged prune must reproduce the full scan exactly: $got")
-      // the cheap condition itself: ratio 4, k=5 -> sliceM (16) < 20,
-      // no attempt even with the flag on (saturated routing preserved)
-      val stTight = TextAnalysis.bm25PrunedCore(spark, base, qs,
-          k = 5, sliceM0 = 16)._2
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          r.isNullAt(2), r.getBoolean(4))).toSeq
-      graft.cache.Pins.release(spark)
-      assert(stTight == Seq((1L, 0L, true, false)),
-        s"sliceM < ratio*k must keep the saturated route: $stTight")
-    } finally spark.conf.unset(TextAnalysis.AttemptPruneRatioKey)
   }
 
   test("bm25 pruned-serve routing verdicts on the exact batch df") {

@@ -978,7 +978,7 @@ class PlanSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("query_vec"))
-    val res = Similarity.ivfTopKIndexedWhere(spark, dir, cents, q,
+    val res = Similarity.ivfTopKIndexedWhere(spark, dir, q,
       k = 5, predicate = col("grp") === 2, nProbe = 2)
     val plan = planOf(res)
     assert(plan.contains("EqualTo(grp,2)") &&

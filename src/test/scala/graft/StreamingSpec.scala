@@ -705,7 +705,8 @@ class StreamingSpec extends AnyFunSuite {
       s"beyond-tau mass must flag the drifted batch: $fit vs $drift")
     // streamed rows == the batch gauge on the same frames, with the
     // books READ BACK from the sidecar (the monitor's own source)
-    val sideBooks = Similarity.pqIndexBooks(spark, s"$base/idx").get
+    val sideBooks =
+      Similarity.servedModel(spark, s"$base/idx", Similarity.PqLayout)
     assert(reports.toSet ==
       (rep(Similarity.pqFitReport(emb0, sideBooks, tau)) ++
         rep(Similarity.pqFitReport(drifted, sideBooks, tau))).toSet,

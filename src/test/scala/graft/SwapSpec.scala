@@ -241,7 +241,7 @@ class SwapSpec extends AnyFunSuite {
   }
   private def pqPatch(newBooks: Seq[Seq[Seq[Double]]])(dir: String)
       : Unit =
-    Similarity.pqPatchIndex(spark, dir, pqPts, pqBooks, newBooks,
+    Similarity.pqPatchIndexAuto(spark, dir, pqPts, newBooks,
       nBuckets = 4)
 
   // batch 0 holds docs 1-3, batch 1 docs 4-6; `drop` leaves docs out
@@ -313,7 +313,7 @@ class SwapSpec extends AnyFunSuite {
         Similarity.ivfPatchIndex(spark, dir, Seq(pad(Seq(0.0, 0.0)),
           pad(Seq(10.0, 0.0)), pad(Seq(100.0, 101.0))))
     }, Seq(ivfRoot), Some(ivfServe)),
-    Op("pqPatchIndex", pqIndex, pqPatch(Seq(
+    Op("pqPatchIndexAuto", pqIndex, pqPatch(Seq(
       // every codeword pair swapped: every row re-codes
       Seq(Seq(8.0, 0.0), Seq(0.0, 0.0)),
       Seq(Seq(0.0, 8.0), Seq(0.0, 0.0)))),
@@ -323,7 +323,7 @@ class SwapSpec extends AnyFunSuite {
       Takedown.pqTakedown(spark, dir, idsDf(Seq(2L, 5L), "vec_id"))
     }, Seq("" -> Seq("", "_books.txt"), "_delta" -> Seq("_delta")),
       Some(pqServe)),
-    Op("pqPatchIndex_sidecar_only", pqIndex, pqPatch(Seq(
+    Op("pqPatchIndexAuto_sidecar_only", pqIndex, pqPatch(Seq(
       // codewords nudged, no row's codes change
       Seq(Seq(0.0, 0.0), Seq(8.0, 1.0)),
       Seq(Seq(0.0, 0.0), Seq(0.0, 9.0)))),
@@ -360,6 +360,41 @@ class SwapSpec extends AnyFunSuite {
       s"${op.name} ${ref.n} (serve refused $refused)"
     }.mkString("crash points: ", ", ", "") +
       f"; ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  test("a pqPatchIndexAuto after a patch that crashed between its " +
+       "bucket renames and its _books.txt entry diffs against the " +
+       "books the buckets hold: it equals a fresh build") {
+    // every row re-codes from pqBooks to b2 and from b2 to b3; no row
+    // re-codes from pqBooks to b3
+    val b2 = Seq(Seq(Seq(8.0, 0.0), Seq(0.0, 0.0)),
+      Seq(Seq(0.0, 8.0), Seq(0.0, 0.0)))
+    val b3 = Seq(Seq(Seq(0.0, 0.0), Seq(8.0, 1.0)),
+      Seq(Seq(0.0, 0.0), Seq(0.0, 9.0)))
+    val dir = s"$base/pq_patch_after_crash"
+    val (ref, fresh) = (s"$dir-ref", s"$dir-fresh")
+    Seq(dir, ref).foreach(d => pqIndex(live(d)))
+    Similarity.pqWriteIndex(pqPts, b3, live(fresh), nBuckets = 4)
+    // the uncrashed patch's last three mutating calls are the live
+    // _books.txt delete, the staged one's rename in and the tmp delete
+    CrashFileSystem.arm("pq-after-crash-ref", Long.MaxValue)
+    pqPatch(b2)(CrashFileSystem.uri("pq-after-crash-ref", ref))
+    CrashFileSystem.arm("pq-after-crash",
+      CrashFileSystem.calls("pq-after-crash-ref") - 2)
+    intercept[Exception] {
+      pqPatch(b2)(CrashFileSystem.uri("pq-after-crash", dir))
+    }
+    assert(CrashFileSystem.crashed("pq-after-crash"))
+    val staged = new java.io.File(s"$dir/_takedown_tmp").list().toSet
+    assert(staged("_TAKEDOWN_COMMIT") && staged("_books.txt") &&
+      !staged.exists(_.startsWith("pq_bucket=")),
+      s"every bucket renamed in, the books entry still staged: $staged")
+    pqPatch(b3)(live(dir))
+    assert(component(live(dir), "") == component(live(fresh), ""),
+      "every bucket holds its codes under b3")
+    assert(component(live(dir), "_books.txt") ==
+      component(live(fresh), "_books.txt"))
+    assert(pqServe(live(dir)) == pqServe(live(fresh)))
   }
 
   test("a BM25 subdir compaction refuses while the enclosing layer " +

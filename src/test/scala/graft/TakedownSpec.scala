@@ -211,7 +211,8 @@ class TakedownSpec extends AnyFunSuite {
       "cell 1 lost its only row and must disappear")
     assert(listing(s"$base/cell_id=2") == c2Before,
       "unaffected cells keep their files byte-for-byte")
-    assert(Similarity.ivfIndexCentroids(spark, base).contains(cents),
+    assert(Similarity.servedModel(spark, base, Similarity.IvfLayout)
+        == Seq(cents),
       "takedown must not touch the centroid sidecar")
     val q = Seq((7L, v2.map(_.toDouble).map(_.toFloat)))
       .toDF("query_id", "query_vec")
@@ -512,8 +513,8 @@ class TakedownSpec extends AnyFunSuite {
       idsDf(Seq(2L), "vec_id")) == ((1L, 1L)))
     // the caller still holds the pre-takedown corpus snapshot: the
     // rewrite must follow the INDEX's membership, not the corpus's
-    val (moved, parts) = Similarity.pqPatchIndex(spark, base, pqPts,
-      pqBooks, pqBooksSwapped, nBuckets = 4)
+    val (moved, parts) = Similarity.pqPatchIndexAuto(spark, base, pqPts,
+      pqBooksSwapped, nBuckets = 4)
     assert(moved == 2L && parts == 2L,
       s"only standing rows re-encode, got ($moved, $parts)")
     val left = spark.read.parquet(base).select("vec_id")
@@ -528,9 +529,8 @@ class TakedownSpec extends AnyFunSuite {
     Similarity.pqWriteIndex(pqPts, pqBooks, base, nBuckets = 4)
     val before = listing(s"$base/pq_bucket=3")
     val e = intercept[IllegalArgumentException] {
-      Similarity.pqPatchIndex(spark, base,
-        pqPts.filter($"vec_id" =!= 3L), pqBooks, pqBooksSwapped,
-        nBuckets = 4)
+      Similarity.pqPatchIndexAuto(spark, base,
+        pqPts.filter($"vec_id" =!= 3L), pqBooksSwapped, nBuckets = 4)
     }
     assert(e.getMessage.contains("missing from the supplied corpus"))
     assert(listing(s"$base/pq_bucket=3") == before,
